@@ -23,6 +23,13 @@ TOOLS = ["search", "python", "browser"]
 TURNS = 50
 EPOCH_S = 1_735_689_600  # 2025-01-01T00:00:00Z
 DIRTY = "  \tx\x01y  "  # control chars and runs of blanks for normalisation
+# The traffic mix is the repository's own change-event generator's
+# (cdc/generator.py): its default op ratios and its one-in-five share
+# of dirty text. HOT_CONVS is the skewed key set the workloads name.
+UPDATE_RATIO, DELETE_RATIO = 0.30, 0.05
+DIRTY_SHARE = 0.2
+HOT_CONVS = 4
+STAGE_FILES = 4  # one scan task per core
 
 SCHEMA = pa.schema(
     [
@@ -53,17 +60,14 @@ def make_events(
     n_convs: int,
     *,
     hot_fraction: float = 0.0,
-    hot_convs: int = 4,
     malformed: float = 0.0,
-    update: float = 0.35,
-    delete: float = 0.05,
     inserts_only: bool = False,
 ) -> pa.Table:
     """``n`` events with LSNs ``start_lsn .. start_lsn + n - 1``.
 
     ``inserts_only`` gives every key of the ``n_convs x TURNS`` key space
     exactly once (a pre-load); otherwise keys are drawn at random, with
-    ``hot_fraction`` of the events on ``hot_convs`` conversations and
+    ``hot_fraction`` of the events on ``HOT_CONVS`` conversations and
     ``malformed`` of them broken in one of three ways the engine must
     dead-letter (null conv_id, the string ``"null"``, turn_idx -1).
     The same arguments always give the same table."""
@@ -77,10 +81,12 @@ def make_events(
         op = np.full(n, "I")
     else:
         hot = rng.random(n) < hot_fraction
-        conv = np.where(hot, rng.integers(0, hot_convs, n), rng.integers(0, n_convs, n))
+        conv = np.where(hot, rng.integers(0, HOT_CONVS, n), rng.integers(0, n_convs, n))
         turn = rng.integers(0, TURNS, n)
         draw = rng.random(n)
-        op = np.where(draw < delete, "D", np.where(draw < delete + update, "U", "I"))
+        op = np.where(
+            draw < DELETE_RATIO, "D", np.where(draw < DELETE_RATIO + UPDATE_RATIO, "U", "I")
+        )
     turn = turn.astype(np.int32)
     is_del = pa.array(op == "D")
 
@@ -89,7 +95,7 @@ def make_events(
     text = pc.binary_join_element_wise(
         "turn ", turn_s, " of conv ", conv_s, " rev ", _strs(lsn), ""
     )
-    dirty = pa.array(rng.random(n) < 0.2)
+    dirty = pa.array(rng.random(n) < DIRTY_SHARE)
     text = pc.if_else(dirty, pc.binary_join_element_wise(text, DIRTY, ""), text)
     role = pa.array(ROLES).take(pa.array(turn % 4))
     tool = pc.if_else(
@@ -128,13 +134,12 @@ def make_events(
     )
 
 
-def stage(table: pa.Table, path: str, files: int = 4, row_group: int | None = None) -> int:
-    """Write ``table`` as ``files`` parquet files under ``path`` (one scan
-    task per core), in row groups of ``row_group`` rows; return the
-    bytes written."""
+def stage(table: pa.Table, path: str, row_group: int | None = None) -> int:
+    """Write ``table`` as ``STAGE_FILES`` parquet files under ``path``, in
+    row groups of ``row_group`` rows; return the bytes written."""
     os.makedirs(path, exist_ok=True)
-    step = -(-table.num_rows // files)
-    for i in range(files):
+    step = -(-table.num_rows // STAGE_FILES)
+    for i in range(STAGE_FILES):
         pq.write_table(
             table.slice(i * step, step),
             os.path.join(path, f"part-{i:03d}.parquet"),

@@ -33,7 +33,6 @@ def per_layer(tr, m) -> dict:
     dlq_stages = tr.stages(applies)
     rows_in = sum(x.get("rows_in") or 0 for x in m.merge_metrics)
     winners = sum(x.get("winners") or 0 for x in m.merge_metrics)
-    compacted = sum(len(x.get("buckets_compacted") or []) for x in m.merge_metrics)
     cdf_tasks = [
         max((st["tasks"] for st in tr.stages([s])), default=0) for s in tr.named("cdf.read")
     ]
@@ -45,7 +44,6 @@ def per_layer(tr, m) -> dict:
         "cdc.dead_letter_rows": (m.dead_letter_rows, "count"),
         "merge.self_s": (_median([tr.self_seconds(s) for s in tr.named("merge.merge_into")]), "s"),
         "merge.winners_per_row_in": (winners / rows_in if rows_in else 0.0, "ratio"),
-        "merge.buckets_compacted": (compacted, "count"),
         "merge.optimize_s": (_median([s.seconds for s in optimize]), "s"),
         "merge.optimize_bytes_rewritten": (m.optimize_bytes, "bytes"),
         "table.write_delta_s": (_median([s.seconds for s in tr.named("table.write_delta")]), "s"),

@@ -4,12 +4,13 @@
 
 Run from the root of a checkout of the repository. The run stages its
 seeded inputs, starts a Spark session with the library's defaults on
-``local[<cores>]``, sets the workload's table up, runs epochs for at
-least ``--seconds`` seconds and at least three epochs, checks every
-output against the DuckDB oracle, and prints one JSON object as the
-last line of standard output: the end-to-end metrics with
-``--trace 0``, the per-layer metrics with ``--trace 1``. Everything it writes lives under one temporary directory
-in the checkout, deleted at the end. See cdcbench/README.md.
+``local[<cores>]``, warms the measured table up, times three fresh
+set-ups, runs epochs for at least ``--seconds`` seconds and at least
+three epochs, checks every output against the DuckDB oracle, and prints
+one JSON object as the last line of standard output: the end-to-end
+metrics with ``--trace 0``, the per-layer metrics with ``--trace 1``.
+Everything it writes lives under one temporary directory in the
+checkout, deleted at the end. See cdcbench/README.md.
 """
 
 from __future__ import annotations
@@ -17,7 +18,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import resource
 import shutil
 import statistics
 import sys
@@ -95,22 +95,42 @@ def cpu_control_s() -> float:
     return statistics.median(times)
 
 
-def memory_mb(spark) -> dict:
-    """This process's peak resident memory, the JVM's peak resident memory,
-    and the JVM's footprint: heap still live after a full collection
-    plus non-heap memory in use (class metadata, compiled code)."""
-    pid = spark.sparkContext._gateway.proc.pid
-    with open(f"/proc/{pid}/status") as f:
-        jvm_rss = next(int(line.split()[1]) for line in f if line.startswith("VmHWM:"))
+def _pids(spark) -> list[int]:
+    """This process and the Spark JVM it drives."""
+    return [os.getpid(), spark.sparkContext._gateway.proc.pid]
+
+
+def reset_peaks(spark) -> None:
+    """Start a new measuring window for peak memory: collect the JVM's
+    garbage (a full collection also gives unused heap back to the
+    system), then reset the peak resident set of this process and of
+    the JVM, and the peak usage of the JVM's memory pools."""
     jvm = spark.sparkContext._jvm
     jvm.java.lang.System.gc()
-    mx = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
-    live = mx.getHeapMemoryUsage().getUsed() + mx.getNonHeapMemoryUsage().getUsed()
-    return {
-        "python_peak_rss": resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024,
-        "jvm_peak_rss": jvm_rss / 1024,
-        "jvm_live": live / 2**20,
-    }
+    for pid in _pids(spark):
+        with open(f"/proc/{pid}/clear_refs", "w") as f:
+            f.write("5")
+    for pool in jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans():
+        pool.resetPeakUsage()
+
+
+def memory_mb(spark) -> dict:
+    """Peak resident memory of this process and of the JVM since
+    :func:`reset_peaks`, and the JVM heap's peak use in that window."""
+
+    def hwm_mb(pid: int) -> float:
+        with open(f"/proc/{pid}/status") as f:
+            return next(int(line.split()[1]) for line in f if line.startswith("VmHWM:")) / 1024
+
+    python_pid, jvm_pid = _pids(spark)
+    jvm = spark.sparkContext._jvm
+    heap = sum(
+        pool.getPeakUsage().getUsed()
+        for pool in jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans()
+        if pool.getType().toString() == "Heap memory"
+    )
+    return {"python_peak_rss": hwm_mb(python_pid), "jvm_peak_rss": hwm_mb(jvm_pid),
+            "jvm_heap_peak": heap / 2**20}
 
 
 def start_spark(tmp: str):
@@ -156,9 +176,8 @@ def stop_spark(spark) -> None:
             proc.wait()
 
 
-def end_to_end(m, spark) -> tuple[dict, dict]:
+def end_to_end(m, mem: dict) -> tuple[dict, dict]:
     med = statistics.median
-    mem = memory_mb(spark)
     values = {
         "setup_s": (med(m.setup_s), "s"),
         "events_per_s": (m.events_written / sum(m.commit_s), "events/s"),
@@ -166,7 +185,7 @@ def end_to_end(m, spark) -> tuple[dict, dict]:
         "feed_lag_p50_s": (med(m.feed_lag_s), "s"),
         "cdf_read_p50_s": (med(m.cdf_read_s), "s"),
         "lookup_p50_s": (med(m.lookup_s), "s"),
-        "footprint_mb": (mem["python_peak_rss"] + mem["jvm_live"], "MB"),
+        "peak_rss_mb": (mem["python_peak_rss"] + mem["jvm_peak_rss"], "MB"),
         "ops_ok_frac": ((m.attempted - m.failed) / m.attempted, "frac"),
     }
     # a tail needs ten samples beyond its percentile; a run has three,
@@ -232,11 +251,12 @@ def main() -> int:
 
         tracer = Tracer(spark, run_id) if args.trace else NullTracer()
         cycle = wl.Cycle(spark, tracer, tmp, args.seed, args.workload, paths)
-        cycle.setup()
-        phase("setup")
         cycle.warm_up()
         phase("warm_up")
+        cycle.setup()
+        phase("setup")
         tracer.install()
+        reset_peaks(spark)
         try:
             m = cycle.run(args.seconds)
             correct = True
@@ -248,7 +268,7 @@ def main() -> int:
             if args.trace:
                 tracer.uninstall()
         phase("run")
-        e2e, notes = end_to_end(m, spark)
+        e2e, notes = end_to_end(m, memory_mb(spark))
         host = {
             "steal_jiffies": steal_jiffies() - steal0,
             "cpu_pressure_frac": (cpu_pressure_us() - psi0) / 1e6 / (time.perf_counter() - t0)
@@ -258,6 +278,7 @@ def main() -> int:
             "jvm_heap": JVM_HEAP,
             "phases_s": phases,
             "setup_reps_s": m.setup_s,
+            "warm_up_s": cycle.warmup_s,
         }
         if args.trace:
             from layers import per_layer, span_summary

@@ -27,22 +27,24 @@ the last).
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from dataclasses import dataclass, field
 
 import events as ev
 from oracle import Oracle, OracleMismatch
+from spans import NullTracer
 
 SLICE = 5_000  # events per commit or sink append
-MIN_EPOCHS = 3
 KEY_CONVS = 500  # pre-load: KEY_CONVS x 50 turns = 25k live keys
 BUCKETS = 4  # one bucket per core
-SETUP_REPS = 3
-WARMUP_READS = 3
-MAX_EPOCHS = 8
-HOT_FRACTION, HOT_CONVS = 0.2, 4
 PRELOAD = KEY_CONVS * ev.TURNS
-STREAM_EVENTS = MAX_EPOCHS * SLICE
+SETUP_REPS = 3  # timed set-ups: setup_s is their median
+WARMUP_EPOCHS = 1  # untimed epochs on the measured table
+MIN_EPOCHS = 3
+MAX_EPOCHS = 8
+HOT_FRACTION = 0.2
+STREAM_EVENTS = (WARMUP_EPOCHS + MAX_EPOCHS) * SLICE
 TABLE_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "_op", "_lsn"]
 
 
@@ -77,8 +79,7 @@ def stage_inputs(root: str, seed: int, workload: str) -> dict:
     """Generate and stage the run's events before anything is timed."""
     pre = ev.make_events(seed, 0, PRELOAD, KEY_CONVS, inserts_only=True)
     stream = ev.make_events(
-        seed, PRELOAD, STREAM_EVENTS, KEY_CONVS,
-        hot_fraction=HOT_FRACTION, hot_convs=HOT_CONVS,
+        seed, PRELOAD, STREAM_EVENTS, KEY_CONVS, hot_fraction=HOT_FRACTION,
         # the sink has no dead-letter split: it is fed clean events
         malformed=MALFORMED if workload == "replay_micro" else 0.0,
     )
@@ -90,7 +91,8 @@ def stage_inputs(root: str, seed: int, workload: str) -> dict:
 
 
 class Cycle:
-    """One run of a workload: set-up, then epochs until time is up."""
+    """One run of a workload: warm-up, timed set-ups, then epochs until
+    time is up."""
 
     def __init__(self, spark, tracer, root: str, seed: int, workload: str, paths: dict):
         from pyspark.sql import functions as F
@@ -105,57 +107,65 @@ class Cycle:
                               os.path.join(paths["stream"], "*.parquet")])
         self.m = Measured()
         self.next_lsn = PRELOAD
-        self.hot = [f"conv-{i}" for i in range(HOT_CONVS)]
+        self.hot = [f"conv-{i}" for i in range(ev.HOT_CONVS)]
 
     # ---------- set-up ----------
 
-    def _config(self, rep: int):
-        from picsure_dictionary_etl_spark.cdc import RunnerConfig
+    def _runner(self, name: str):
+        from picsure_dictionary_etl_spark.cdc import CdcRunner, RunnerConfig
 
-        return RunnerConfig(
-            table_root=os.path.join(self.root, f"table{rep}"),
-            dead_letter_dir=os.path.join(self.root, f"dlq{rep}") if self.replay else None,
+        return CdcRunner(self.spark, RunnerConfig(
+            table_root=os.path.join(self.root, name, "table"),
+            dead_letter_dir=os.path.join(self.root, name, "dlq") if self.replay else None,
             bucket_count=BUCKETS,
-        )
+        ))
 
-    def setup(self) -> None:
-        """Create a fresh table and pre-load it through the workload's
-        write path, ``SETUP_REPS`` times; the last table is the one the
-        epochs run on. The first repetition pays the JVM's warm-up."""
-        from picsure_dictionary_etl_spark.cdc import CdcRunner
-
-        for rep in range(SETUP_REPS):
-            t = time.perf_counter()
-            runner = CdcRunner(self.spark, self._config(rep))
-            if self.replay:
-                res = runner.replay(self.pre, lsn_step=PRELOAD, max_lsn=PRELOAD - 1)
-                if len(res) != 1:
-                    raise RuntimeError(f"pre-load made {len(res)} commits, planned 1")
-            else:
-                self._sink_append(runner.table.root, self.pre)
-            self.m.setup_s.append(time.perf_counter() - t)
-        self.runner, self.table = runner, runner.table
+    def _preload(self, runner) -> None:
+        """Load the 25k pre-load keys into a fresh table in one commit
+        through the workload's write path."""
+        if self.replay:
+            res = runner.replay(self.pre, lsn_step=PRELOAD, max_lsn=PRELOAD - 1)
+            if len(res) != 1:
+                raise RuntimeError(f"pre-load made {len(res)} commits, planned 1")
+        else:
+            self._sink_append(runner.table.root, self.pre)
 
     def warm_up(self) -> None:
-        """Untimed reads of the pre-load, ``WARMUP_READS`` of each kind
-        (its change feed, its ``lake_cdf`` span, a lookup), so that the
-        measured epochs do not pay the read paths' one-off start-up
-        (Python data-source workers, code generation) and the JIT's
-        first passes over them."""
+        """Untimed: create and pre-load the measured table, then run
+        ``WARMUP_EPOCHS`` epochs on it, so that the JVM's first passes
+        over the write and read paths (code generation, Python
+        data-source workers, the JIT) are paid before anything is
+        timed."""
         from picsure_dictionary_etl_spark.lake.consume import ChangeFeedConsumer
 
-        v = self.table.current_version()
-        for i in range(WARMUP_READS):
-            # the last consumer is the one the epochs poll
-            self.consumer = ChangeFeedConsumer(
-                self.table, os.path.join(self.root, f"consumer{i}", "ckpt"), start_version=v - 1
-            )
-            batch = self.consumer.poll()
-            self.oracle.check_diff(batch.df.toArrow(), -1, PRELOAD - 1)
-            batch.ack()
-            self.oracle.check_diff(self._cdf(v - 1, v), -1, PRELOAD - 1)
-            conv = self.hot[i % HOT_CONVS]
-            self.oracle.check_rows(self.runner.conversation(conv).toArrow(), PRELOAD - 1, conv)
+        t = time.perf_counter()
+        self.runner = self._runner("measured")
+        self.table = self.runner.table
+        self._preload(self.runner)
+        self.warmup_s = {"preload": time.perf_counter() - t}
+        t = time.perf_counter()
+        self.consumer = ChangeFeedConsumer(
+            self.table, os.path.join(self.root, "measured", "consumer"),
+            start_version=self.table.current_version(),
+        )
+        # the warm-up epochs are neither counted nor traced
+        kept = self.m, self.tracer
+        self.m, self.tracer = Measured(), NullTracer()
+        for _ in range(WARMUP_EPOCHS):
+            self.epoch()
+        self.m, self.tracer = kept
+        self.warmup_s["epochs"] = time.perf_counter() - t
+
+    def setup(self) -> None:
+        """``SETUP_REPS`` timed set-ups, each the same as the measured
+        table's: a fresh table, pre-loaded. Each table is deleted after
+        it is timed."""
+        for rep in range(SETUP_REPS):
+            t = time.perf_counter()
+            runner = self._runner(f"setup{rep}")
+            self._preload(runner)
+            self.m.setup_s.append(time.perf_counter() - t)
+            shutil.rmtree(os.path.join(self.root, f"setup{rep}"))
 
     # ---------- operations ----------
 
@@ -168,71 +178,79 @@ class Cycle:
             .option("startversion", start).option("endversion", end).load().toArrow()
         )
 
-    def _write(self, lo: int, hi: int) -> None:
+    def _write(self, tracer, lo: int, hi: int) -> dict | None:
         F = self.F
         if self.replay:
-            with self.tracer.span("cdc.replay"):
+            with tracer.span("cdc.replay"):
                 res = self.runner.replay(self.stream, lsn_step=SLICE, max_lsn=hi)
             if len(res) != 1:
                 raise RuntimeError(f"slice ({lo}, {hi}] made {len(res)} commits, planned 1")
-            self.m.merge_metrics.append(res[0].metrics)
-            self.m.dead_letter_rows += int(res[0].metrics.get("dead_letter_rows") or 0)
-        else:
-            batch = self.stream.filter((F.col("_lsn") >= lo) & (F.col("_lsn") <= hi))
-            with self.tracer.span("sink.save"):
-                self._sink_append(self.table.root, batch)
-
-    def _op(self, fn, *args):
-        self.m.attempted += 1
-        return fn(*args)
+            return res[0].metrics
+        batch = self.stream.filter((F.col("_lsn") >= lo) & (F.col("_lsn") <= hi))
+        with tracer.span("sink.save"):
+            self._sink_append(self.table.root, batch)
+        return None
 
     def epoch(self) -> None:
         """One write, then the change feed, the ``lake_cdf`` read and a
         lookup; the checks run after the timed calls."""
-        m = self.m
+        m, tr = self.m, self.tracer
+
+        def op(fn, *args):
+            m.attempted += 1
+            return fn(*args)
+
         v0 = self.table.current_version()
-        files0 = set(self._files(v0))
+        files0 = set(self._files(v0)) if tr.enabled else set()
         lo, hi = self.next_lsn, self.next_lsn + SLICE - 1
         t_start = time.perf_counter()
-        self._op(self._write, lo, hi)
+        metrics = op(self._write, tr, lo, hi)
         m.commit_s.append(time.perf_counter() - t_start)
         m.events_written += SLICE
         self.next_lsn = hi + 1
 
         def poll():
             batch = self.consumer.poll()
-            with self.tracer.span("consume.materialize"):
+            with tr.span("consume.materialize"):
                 return batch, batch.df.toArrow()
 
-        batch, diff = self._op(poll)
+        batch, diff = op(poll)
         m.feed_lag_s.append(time.perf_counter() - t_start)
         batch.ack()
         v1 = batch.to_version
 
         t = time.perf_counter()
-        with self.tracer.span("cdf.read"):
-            feed = self._op(self._cdf, v0, v1)
+        with tr.span("cdf.read"):
+            feed = op(self._cdf, v0, v1)
         m.cdf_read_s.append(time.perf_counter() - t)
 
         # hot and cold conversations take turns
+        k = m.epochs
         conv = (
-            self.hot[m.epochs // 2 % HOT_CONVS] if m.epochs % 2 == 0
-            else f"conv-{HOT_CONVS + (self.seed * 7919 + m.epochs * 104_729) % (KEY_CONVS - HOT_CONVS)}"
+            self.hot[k // 2 % ev.HOT_CONVS] if k % 2 == 0
+            else f"conv-{ev.HOT_CONVS + (self.seed * 7919 + k * 104_729) % (KEY_CONVS - ev.HOT_CONVS)}"
         )
         t = time.perf_counter()
-        with self.tracer.span("runner.conversation"):
-            rows = self._op(lambda: self.runner.conversation(conv).toArrow())
+        with tr.span("runner.conversation"):
+            rows = op(lambda: self.runner.conversation(conv).toArrow())
         m.lookup_s.append(time.perf_counter() - t)
-        m.epochs += 1
 
         self.oracle.check_diff(diff, lo - 1, hi)
         self.oracle.check_diff(feed, lo - 1, hi)
         self.oracle.check_rows(rows, hi, conv)
-        snap = self.table.snapshot(v1)
-        m.files_live.append(sum(len(f) for f in snap.files.values()))
-        m.files_per_epoch.append(len(set(self._files(v1)) - files0))
-        if self.tracer.enabled:
+        if metrics is not None:
+            m.merge_metrics.append(metrics)
+            m.dead_letter_rows += int(metrics.get("dead_letter_rows") or 0)
+            want = self.oracle.malformed(lo, hi)
+            if int(metrics.get("dead_letter_rows") or 0) != want:
+                raise OracleMismatch(f"{metrics.get('dead_letter_rows')} dead letters "
+                                     f"in ({lo - 1}, {hi}], oracle has {want}")
+        if tr.enabled:
+            snap = self.table.snapshot(v1)
+            m.files_live.append(sum(len(f) for f in snap.files.values()))
+            m.files_per_epoch.append(len(set(self._files(v1)) - files0))
             m.bucket_files_per_lookup.append(len(snap.files.get(str(self._bucket(conv)), [])))
+        m.epochs += 1
 
     def _files(self, version: int) -> list[str]:
         return [f for fl in self.table.snapshot(version).files.values() for f in fl]
@@ -262,10 +280,6 @@ class Cycle:
             self._optimize()
             # optimize must leave the live state as it was
             self.oracle.check_rows(self.runner.state().toArrow(), hi)
-        if self.replay:
-            want = self.oracle.malformed(PRELOAD, hi)
-            if m.dead_letter_rows != want:
-                raise OracleMismatch(f"{m.dead_letter_rows} dead letters, oracle has {want}")
         return m
 
     def _optimize(self) -> None:
