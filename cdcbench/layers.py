@@ -1,6 +1,7 @@
 """Per-layer metrics of a traced run, from its spans, from the Spark
-status store (stages charged to the span whose job group started them)
-and from the table's manifests.
+status store (stages charged to the span whose job group started them),
+from the table's manifests, and from the driver's and the JVM's peak
+resident memory over the measured epochs.
 
 Conventions: ``*_s`` from spans is the median per call; ``spark.*`` is
 the mean per write (one commit or one sink append); counts are totals
@@ -21,7 +22,7 @@ def _mean(xs) -> float:
     return sum(xs) / len(xs) if xs else 0.0
 
 
-def per_layer(tr, m) -> dict:
+def per_layer(tr, m, mem: dict) -> dict:
     writes = tr.named("cdc.replay") + tr.named("sink.save")
     n_writes = max(len(writes), 1)
     write_stages = tr.stages([s for w in writes for s in tr.subtree(w)])
@@ -74,6 +75,7 @@ def per_layer(tr, m) -> dict:
             _median([s.seconds for s in tr.named("consume.materialize")]), "s"),
         "lookup.conversation_s": (
             _median([s.seconds for s in tr.named("runner.conversation")]), "s"),
+        "memory.peak_rss_mb": (mem["python_peak_rss"] + mem["jvm_peak_rss"], "MB"),
         "trace.bookkeeping_s_per_epoch": (tr.bookkeeping_s / max(m.epochs, 1), "s"),
         "trace.spans": (len(tr.spans), "count"),
     }

@@ -185,11 +185,11 @@ def end_to_end(m, mem: dict) -> tuple[dict, dict]:
         "feed_lag_p50_s": (med(m.feed_lag_s), "s"),
         "cdf_read_p50_s": (med(m.cdf_read_s), "s"),
         "lookup_p50_s": (med(m.lookup_s), "s"),
-        "peak_rss_mb": (mem["python_peak_rss"] + mem["jvm_peak_rss"], "MB"),
         "ops_ok_frac": ((m.attempted - m.failed) / m.attempted, "frac"),
     }
-    # a tail needs ten samples beyond its percentile; a run has three,
-    # so only the sample counts and maxima are reported, here
+    # a tail needs ten samples beyond its percentile; a run has three
+    # writes and six lookups, so only the sample counts and maxima are
+    # reported, here
     notes = {
         "commits": len(m.commit_s),
         "commit_max_s": max(m.commit_s),
@@ -268,7 +268,8 @@ def main() -> int:
             if args.trace:
                 tracer.uninstall()
         phase("run")
-        e2e, notes = end_to_end(m, memory_mb(spark))
+        mem = memory_mb(spark)
+        e2e, notes = end_to_end(m, mem)
         host = {
             "steal_jiffies": steal_jiffies() - steal0,
             "cpu_pressure_frac": (cpu_pressure_us() - psi0) / 1e6 / (time.perf_counter() - t0)
@@ -283,7 +284,7 @@ def main() -> int:
         if args.trace:
             from layers import per_layer, span_summary
 
-            metrics = per_layer(tracer, m)
+            metrics = per_layer(tracer, m, mem)
             notes["spans"] = span_summary(tracer)
             if args.spans_out:
                 with open(args.spans_out, "w") as f:

@@ -16,9 +16,9 @@ in the write path, so a change to one path shows against the other:
 
 One epoch is one slice write, then the reads a downstream user makes:
 a checkpointed ``ChangeFeedConsumer.poll()`` whose diff is
-materialised, a ``lake_cdf`` batch read of the same span, and one
-``CdcRunner.conversation()`` point lookup (hot and cold conversations
-take turns). A write-side change that leaves more files behind shows
+materialised, a ``lake_cdf`` batch read of the same span, and two
+``CdcRunner.conversation()`` point lookups, of a hot and of a cold
+conversation. A write-side change that leaves more files behind shows
 up as slower reads. Epochs repeat until the run's seconds are spent and
 ``MIN_EPOCHS`` are done (closed loop: one client, each call waits for
 the last).
@@ -192,8 +192,8 @@ class Cycle:
         return None
 
     def epoch(self) -> None:
-        """One write, then the change feed, the ``lake_cdf`` read and a
-        lookup; the checks run after the timed calls."""
+        """One write, then the change feed, the ``lake_cdf`` read and two
+        lookups; the checks run after the timed calls."""
         m, tr = self.m, self.tracer
 
         def op(fn, *args):
@@ -224,20 +224,20 @@ class Cycle:
             feed = op(self._cdf, v0, v1)
         m.cdf_read_s.append(time.perf_counter() - t)
 
-        # hot and cold conversations take turns
+        # one hot and one cold conversation
         k = m.epochs
-        conv = (
-            self.hot[k // 2 % ev.HOT_CONVS] if k % 2 == 0
-            else f"conv-{ev.HOT_CONVS + (self.seed * 7919 + k * 104_729) % (KEY_CONVS - ev.HOT_CONVS)}"
-        )
-        t = time.perf_counter()
-        with tr.span("runner.conversation"):
-            rows = op(lambda: self.runner.conversation(conv).toArrow())
-        m.lookup_s.append(time.perf_counter() - t)
+        cold = ev.HOT_CONVS + (self.seed * 7919 + k * 104_729) % (KEY_CONVS - ev.HOT_CONVS)
+        lookups = {self.hot[k % ev.HOT_CONVS]: None, f"conv-{cold}": None}
+        for conv in lookups:
+            t = time.perf_counter()
+            with tr.span("runner.conversation"):
+                lookups[conv] = op(lambda: self.runner.conversation(conv).toArrow())
+            m.lookup_s.append(time.perf_counter() - t)
 
         self.oracle.check_diff(diff, lo - 1, hi)
         self.oracle.check_diff(feed, lo - 1, hi)
-        self.oracle.check_rows(rows, hi, conv)
+        for conv, rows in lookups.items():
+            self.oracle.check_rows(rows, hi, conv)
         if metrics is not None:
             m.merge_metrics.append(metrics)
             m.dead_letter_rows += int(metrics.get("dead_letter_rows") or 0)
@@ -249,7 +249,8 @@ class Cycle:
             snap = self.table.snapshot(v1)
             m.files_live.append(sum(len(f) for f in snap.files.values()))
             m.files_per_epoch.append(len(set(self._files(v1)) - files0))
-            m.bucket_files_per_lookup.append(len(snap.files.get(str(self._bucket(conv)), [])))
+            for conv in lookups:
+                m.bucket_files_per_lookup.append(len(snap.files.get(str(self._bucket(conv)), [])))
         m.epochs += 1
 
     def _files(self, version: int) -> list[str]:
