@@ -206,8 +206,8 @@ def _lsn_order(payload_cols: list[str], schema: T.StructType | None = None) -> F
     on every run/replay — content-determined, never encounter-order.
     Map-typed payload columns enter the hash as their canonical
     key-sorted entry arrays (:func:`_canon_col` — ``F.xxhash64`` rejects
-    raw MapType); the Python twin (cdf_source ``_hash_value``) mirrors
-    that exact shape bit-equal."""
+    raw MapType); the executor-side hash (``xxhash_vec``, via
+    ``_canon_map_arrow``) hashes that exact shape bit-equal."""
     by_name = {f.name: f.dataType for f in schema.fields} if schema is not None else {}
     cols = [
         _canon_col(F.col(c), by_name[c]) if c in by_name else F.col(c)

@@ -1532,6 +1532,9 @@ class _ArithEncoder:
         # final data bytes, only if nonzero (trailing zeros are implied;
         # the & 0xFF below drops the already-consumed carry bit)
         if self.c & 0x7FFF800:
+            while self.zc:  # pending 0x00 bytes precede the final bytes
+                self.out.append(0x00)
+                self.zc -= 1
             b = (self.c >> 19) & 0xFF
             self.out.append(b)
             if b == 0xFF:

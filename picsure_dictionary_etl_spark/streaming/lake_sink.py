@@ -24,10 +24,10 @@ Semantics — an append-only CDC ingest (the MOR fast path):
   column (add it JVM-side with :func:`with_bucket` — also enables the
   one-shuffle-per-epoch repartition), the sink trusts it; otherwise
   each executor computes ``pmod(xxhash64(bucket_by), bucket_count)``
-  with the engine's bit-equal VECTORIZED numpy twin
-  (:mod:`.xxhash_vec` — whole-column ufunc passes, scale-safe). Only
-  exotic bucket-key types fall back to per-row Python, with a loud
-  one-time warning.
+  with the engine's bit-equal VECTORIZED numpy XXH64
+  (:mod:`.xxhash_vec` — whole-column ufunc passes, scale-safe, nested
+  key types included). A bucket-key type outside its surface fails
+  typed when the writer is planned.
 * **Exactly-once on the resolved state** (the engine's standard
   model): executors drop rows at-or-below the table's committed
   watermark (read per task from the manifest, version-cached per
@@ -259,12 +259,28 @@ class _LakeSinkWriter(DataSourceStreamArrowWriter):
         self.bucket_by = snap.bucket_by
         self.bucket_count = snap.bucket_count
         self.bucket_dtypes = [want[c] for c in snap.bucket_by]
+        if not self.has_bucket:
+            from picsure_dictionary_etl_spark.streaming.xxhash_vec import (
+                UnsupportedVectorType,
+                _type_supported,
+            )
+
+            bad = [
+                f"{c}:{ty}"
+                for c, ty in zip(self.bucket_by, self.bucket_dtypes)
+                if not _type_supported(ty)
+            ]
+            if bad:
+                raise UnsupportedVectorType(
+                    f"lake sink: no xxhash64 path for bucket_by column(s) "
+                    f"{bad}; precompute {BUCKET_COL} JVM-side with "
+                    "with_bucket()"
+                )
         # per-query suffix: restarted queries get a fresh writer (and
         # suffix), so a replayed epoch is deduped by the WATERMARK
         # guard, not the batch id; the id dedups same-run commit
         # retries. .option("sinkid", ...) pins it across restarts.
         self.sinkid = options.get("sinkid") or uuid.uuid4().hex[:8]
-        self._scalar_hash_fallback = False
         # opt-in inline maintenance: every N non-empty epochs, compact
         # qualifying buckets (same count+bytes trigger as merge/
         # optimize) right in the commit worker — see _auto_optimize
@@ -281,55 +297,21 @@ class _LakeSinkWriter(DataSourceStreamArrowWriter):
 
     def _bucket_ids(self, batch):
         """int64 numpy bucket id per row: trust a precomputed _bucket,
-        else the engine's bit-equal hash twin. The default (no
-        ``with_bucket``) path is VECTORIZED — whole-column numpy
-        XXH64 (:mod:`.xxhash_vec`), bit-equal to ``bucket_expr``'s
-        ``pmod(xxhash64(...), n)``, so a naive
-        ``df.writeStream.format("lake")`` is scale-safe. Only exotic
-        bucket-key types (nested arrays/structs) fall back to the
-        per-row scalar twin, with a one-time per-writer warning."""
-        import numpy as np
+        else whole-column numpy XXH64 (:mod:`.xxhash_vec`), bit-equal to
+        ``bucket_expr``'s ``pmod(xxhash64(...), n)``, so a naive
+        ``df.writeStream.format("lake")`` is scale-safe. The bucket-key
+        types were checked when the writer was planned."""
+        from picsure_dictionary_etl_spark.streaming.xxhash_vec import (
+            pmod_buckets,
+            spark_xxhash64_vec,
+        )
 
         if self.has_bucket:
             arr = batch.column(batch.schema.names.index(BUCKET_COL))
             return arr.to_numpy(zero_copy_only=False).astype("int64")
-        n = self.bucket_count
         cols = [batch.column(batch.schema.names.index(c)) for c in self.bucket_by]
-        if not self._scalar_hash_fallback:
-            from picsure_dictionary_etl_spark.streaming.xxhash_vec import (
-                UnsupportedVectorType,
-                pmod_buckets,
-                spark_xxhash64_vec,
-            )
-
-            try:
-                return pmod_buckets(
-                    spark_xxhash64_vec(cols, self.bucket_dtypes), n
-                )
-            except UnsupportedVectorType as e:
-                self._scalar_hash_fallback = True
-                import warnings
-
-                warnings.warn(
-                    f"lake sink: {e}; falling back to per-row Python "
-                    f"bucket hashing for bucket_by={self.bucket_by} — "
-                    "precompute _bucket with with_bucket() to stay "
-                    "JVM-side at scale",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-        from picsure_dictionary_etl_spark.streaming.cdf_source import (
-            spark_xxhash64,
-        )
-
-        pycols = [c.to_pylist() for c in cols]
-        return np.fromiter(
-            (
-                ((spark_xxhash64(vals, self.bucket_dtypes) % n) + n) % n
-                for vals in zip(*pycols)
-            ),
-            dtype="int64",
-            count=batch.num_rows,
+        return pmod_buckets(
+            spark_xxhash64_vec(cols, self.bucket_dtypes), self.bucket_count
         )
 
     def _write_parquet(self, rel: str, tbl) -> int:

@@ -1,44 +1,50 @@
-"""Vectorized (numpy) twin of Spark's ``F.xxhash64`` over pyarrow
-columns — the scale-safe replacement for per-row
-:func:`~.cdf_source.spark_xxhash64` calls on executor hot paths.
-
-The scalar twin in :mod:`.cdf_source` is bit-equal to Spark's XxHash64
-and stays the reference implementation (and the fallback for exotic
-types). This module re-expresses the same algorithm column-wise:
+"""Spark's ``F.xxhash64`` over whole pyarrow columns (numpy XXH64) —
+the one Python implementation of the hash. The lake sink places rows
+with it (``pmod(xxhash64(bucket_by), n)``) and the ``lake_cdf`` reader
+breaks equal-LSN ties with it (``xxhash64(payload..., _op)``); both
+must match the engine bit for bit.
 
 * one uint64 numpy array carries the running seed-chained hash for
-  EVERY row at once; each bucket/key column updates it in a handful of
+  EVERY row at once; each column updates it in a handful of
   whole-column ufunc passes (C speed, no Python per row);
 * fixed-width types (long/int/boolean/timestamp/date/double/float/
   decimal(p<=18)) are single-shot: grab the arrow values buffer, apply
   the 5-instruction XXH64 long/int round;
-* var-length types (string/binary) group rows by BYTE LENGTH and hash
+* var-length types (string/binary, decimal(p>18) as Java's minimal
+  ``BigInteger.toByteArray`` bytes) group rows by BYTE LENGTH and hash
   each group as an (n_rows, L) uint8 matrix — the XXH64 stripe/word/
-  tail loops run over L (tiny, data-independent) while every numpy op
-  spans all rows of the group. Real key columns (ids, codes) have a
-  handful of distinct lengths, so this is effectively O(distinct
-  lengths) vector passes;
-* nulls leave the running hash unchanged (Spark's rule), applied as a
-  boolean mask per column.
+  tail loops run over L while every numpy op spans all rows of the
+  group;
+* arrays walk element positions ``j = 0..max_len-1`` over the list
+  offsets: element ``j`` of every row that has one chains into its own
+  row's running hash, in one vector pass per position;
+* structs chain field by field (declared order) on the rows where the
+  struct is valid;
+* maps hash as their canonical key-sorted ``list<struct<key,value>>``
+  (:func:`_canon_map_arrow`) — the engine's ``_canon_col`` form, since
+  ``F.xxhash64`` rejects raw MapType;
+* nulls — whole values, array elements, struct fields — leave the
+  running hash unchanged (Spark's rule), applied as a boolean mask.
 
-Bit-equality with ``F.xxhash64`` (and hence with the scalar twin) is
-pinned by tests/test_xxhash_vec.py across every supported type,
-including the edges that broke naive ports: NaN canonicalization,
--0.0/-0.0f, empty strings, >=32-byte strings (multi-stripe), 32-bit
-truncation of int-family values, and null-skip chaining.
+This module also owns the Spark simpleString type grammar
+(:func:`_parse_type`) and the supported surface (:func:`_type_supported`);
+types outside it raise :class:`UnsupportedVectorType` — callers check
+at plan time. Bit-equality with ``F.xxhash64`` is pinned by
+tests/test_xxhash_vec.py and tests/test_cdf_stream_source.py across
+every supported type, including the edges that broke naive ports: NaN
+canonicalization, -0.0/-0.0f, empty strings, >=32-byte strings
+(multi-stripe), 32-bit truncation of int-family values, BigInteger
+byte lengths, null-skip chaining and sliced inputs.
 
-Unsupported-here types (arrays, structs) raise
-:class:`UnsupportedVectorType` at PLAN time so callers can fall back
-to the scalar twin explicitly — never silently slower. Decimals at
-ANY precision are vectorized (p<=18 unscaled-long; p>18 the Java
-minimal BigInteger byte-array form, grouped by byte length).
-
-All arithmetic is uint64 numpy ARRAY ops (C wraparound semantics ==
-the scalar twin's ``& _M`` masking); no scalar numpy temporaries, so
-no overflow warnings and no Python-int boxing.
+All arithmetic is uint64 numpy ARRAY ops (C wraparound semantics); no
+scalar numpy temporaries, so no overflow warnings and no Python-int
+boxing.
 """
 
 from __future__ import annotations
+
+import re
+from functools import lru_cache
 
 import numpy as np
 import pyarrow as pa
@@ -58,7 +64,163 @@ _P5_4 = np.uint64(0x27D4EB2F165667C5 + 4)
 
 
 class UnsupportedVectorType(TypeError):
-    """The column type has no vectorized path — use the scalar twin."""
+    """The column type is outside the hash's supported surface."""
+
+
+# The scalar types the hash (and the lake_cdf executor path built on
+# it) supports, at the top level and inside array/struct/map nesting.
+SUPPORTED_TYPES = frozenset(
+    {
+        "string",
+        "long",
+        "bigint",
+        "integer",
+        "int",
+        "short",
+        "smallint",
+        "byte",
+        "tinyint",
+        "boolean",
+        "timestamp",
+        "timestamp_ntz",
+        "double",
+        "float",
+        "date",
+        "binary",
+    }
+)
+
+_DECIMAL_RE = re.compile(r"^decimal\((\d+),(\d+)\)$")
+
+
+def _split_top(s: str) -> list[str]:
+    """Split a simpleString field list on TOP-LEVEL commas only
+    (nested ``array<struct<a:int,b:int>>`` commas don't count; neither
+    does the comma inside ``decimal(16,2)`` — parens nest too)."""
+    parts, depth, cur = [], 0, []
+    for ch in s:
+        if ch in "<(":
+            depth += 1
+        elif ch in ">)":
+            depth -= 1
+        if ch == "," and depth == 0:
+            parts.append("".join(cur))
+            cur = []
+        else:
+            cur.append(ch)
+    if cur:
+        parts.append("".join(cur))
+    return parts
+
+
+@lru_cache(maxsize=None)
+def _parse_type(t: str):
+    """Spark simpleString -> type descriptor tree:
+    ('scalar', name) | ('decimal', p, s) | ('array', elem_td) |
+    ('map', key_td, value_td) |
+    ('struct', ((field_name, field_td), ...)) | ('other', raw)."""
+    t = t.strip()
+    m = _DECIMAL_RE.match(t)
+    if m:
+        return ("decimal", int(m.group(1)), int(m.group(2)))
+    if t.startswith("array<") and t.endswith(">"):
+        return ("array", _parse_type(t[6:-1]))
+    if t.startswith("map<") and t.endswith(">"):
+        kt, vt = _split_top(t[4:-1])
+        return ("map", _parse_type(kt), _parse_type(vt))
+    if t.startswith("struct<") and t.endswith(">"):
+        fields = []
+        for part in _split_top(t[7:-1]):
+            name, sub = part.split(":", 1)
+            fields.append((name, _parse_type(sub)))
+        return ("struct", tuple(fields))
+    if "<" in t:  # array-of-array etc. handled by recursion above
+        return ("other", t)
+    return ("scalar", t)
+
+
+def _td_supported(td) -> bool:
+    kind = td[0]
+    if kind == "decimal":
+        return True  # any precision: p<=18 unscaled-long, p>18 byte-array
+    if kind == "scalar":
+        return td[1] in SUPPORTED_TYPES
+    if kind == "array":
+        return _td_supported(td[1])
+    if kind == "map":
+        # keys must be SCALAR (sortable — the canonical form key-sorts
+        # the entries; Spark itself guarantees non-null deduped keys);
+        # values recurse over the full nested surface.
+        return td[1][0] in ("scalar", "decimal") and _td_supported(
+            td[1]
+        ) and _td_supported(td[2])
+    if kind == "struct":
+        return len(td[1]) > 0 and all(_td_supported(ft) for _, ft in td[1])
+    return False  # udt, ...
+
+
+def _type_supported(t: str) -> bool:
+    """Whitelist predicate over Spark simpleString type names: all
+    :data:`SUPPORTED_TYPES` scalars, ``decimal(p,s)`` at ANY precision,
+    plus ``array<...>`` / ``struct<...>`` / ``map<scalar,...>`` at ANY
+    nesting depth over that scalar set. What's left out: map KEYS that
+    are themselves nested (unsortable) and UDTs."""
+    return _td_supported(_parse_type(t))
+
+
+def _canon_map_arrow(a):
+    """Arrow MapArray -> plain ``list<struct<key,value>>`` with entries
+    KEY-SORTED per row — the arrow form of the engine's
+    ``_canon_col`` canonical form (``array_sort(map_entries(m))``). The
+    map hash chains entries in this order, so it must be Spark's key
+    order: arrow's ascending sort matches it on every supported key
+    type (byte order for strings and binary, false < true, NaN above
+    every number; -0.0 and 0.0 never coexist as keys because Spark
+    normalizes them at map creation). One C++ ``pc.sort_indices`` over
+    (parent row, key) reorders the flattened entries — arrow's native
+    multi-key sort stays vectorized for STRING/binary/decimal keys
+    where a numpy argsort would fall back to O(n log n) Python-object
+    comparisons (BENCH/map_diff_bench.py). Null rows keep their
+    validity."""
+    if pa.types.is_map(a.type):
+        # list_flatten/list_parent_indices have no map kernels: view the
+        # identical physical layout as list<struct<key,value>> first
+        a = a.cast(
+            pa.list_(
+                pa.struct(
+                    [
+                        pa.field("key", a.type.key_type, nullable=False),
+                        pa.field("value", a.type.item_type),
+                    ]
+                )
+            )
+        )
+    flat = pc.list_flatten(a)  # struct<key,value>; slice-/null-row-safe
+    n = len(a)
+    parent = pc.list_parent_indices(a).to_numpy(zero_copy_only=False)
+    lens = (
+        np.bincount(parent, minlength=n).astype(np.int64)
+        if len(parent)
+        else np.zeros(n, dtype=np.int64)
+    )
+    if len(parent):
+        order = pc.sort_indices(
+            pa.table({"p": pa.array(parent), "k": flat.field("key")}),
+            sort_keys=[("p", "ascending"), ("k", "ascending")],
+        )
+        flat = pc.take(flat, order)
+    offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
+    mask = pc.is_null(a).to_numpy(zero_copy_only=False)
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, type=pa.int32()),
+        flat,
+        mask=pa.array(mask) if mask.any() else None,
+    )
+
+
+def _map_entries_td(td):
+    """Type descriptor of :func:`_canon_map_arrow`'s output."""
+    return ("array", ("struct", (("key", td[1]), ("value", td[2]))))
 
 
 def _rotl(x: np.ndarray, r: int) -> np.ndarray:
@@ -75,8 +237,7 @@ def _fmix(h: np.ndarray) -> np.ndarray:
 
 
 def _hash_long_vec(v: np.ndarray, seed: np.ndarray) -> np.ndarray:
-    """XXH64 of one 8-byte little-endian long per row (uint64 in, the
-    exact vector form of the scalar ``_hash_long``)."""
+    """XXH64 of one 8-byte little-endian long per row (uint64 in)."""
     h = seed + _P5_8
     h = h ^ (_rotl(v * _P2, 31) * _P1)
     h = _rotl(h, 27) * _P1 + _P4
@@ -110,8 +271,7 @@ def _word32(m: np.ndarray, i: int) -> np.ndarray:
 def _hash_bytes_fixed(m: np.ndarray, seed: np.ndarray) -> np.ndarray:
     """XXH64 over an (n_rows, L) uint8 matrix — every row has the SAME
     length L, so the stripe/word/tail structure is data-independent and
-    each step is one whole-column numpy op (the vector form of the
-    scalar ``_hash_bytes``)."""
+    each step is one whole-column numpy op."""
     n_rows, L = m.shape
     i = 0
     if L >= 32:
@@ -256,32 +416,64 @@ def _hash_wide_decimal(arr: pa.Array, h: np.ndarray, valid: np.ndarray) -> np.nd
 _INT_FAMILY = {"integer", "int", "short", "smallint", "byte", "tinyint"}
 
 
-def _hash_column(arr: pa.Array, dtype: str, h: np.ndarray) -> np.ndarray:
+def _hash_list(arr: pa.Array, elem_td, h: np.ndarray, valid: np.ndarray) -> np.ndarray:
+    """array column: one pass per element position ``j``. The rows
+    with more than ``j`` elements (a prefix of the rows sorted by
+    length) chain their ``j``-th element into their running hash; the
+    element pass's own null mask skips null elements."""
+    offsets = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    starts = offsets[:-1]
+    lens = np.where(valid, offsets[1:] - starts, 0)
+    order = np.argsort(-lens, kind="stable")
+    counts = np.bincount(lens)[::-1].cumsum()[::-1]  # counts[j] = #(len >= j)
+    values = arr.values
+    out = h.copy()
+    for j in range(1, len(counts)):
+        rows = order[: counts[j]]
+        elems = values.take(pa.array(starts[rows] + (j - 1)))
+        out[rows] = _hash_column(elems, elem_td, out[rows])
+    return out
+
+
+def _hash_column(arr: pa.Array, td, h: np.ndarray) -> np.ndarray:
     """Chain one column into the running per-row hash ``h`` (uint64
-    array), exactly as Spark's seed-chained XxHash64 does. ``dtype`` is
-    the Spark simpleString name."""
+    array), exactly as Spark's seed-chained XxHash64 does. ``td`` is
+    the :func:`_parse_type` descriptor of the column's Spark type."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     n = len(arr)
     if arr.null_count == n:
         return h  # all-null column leaves every row's hash unchanged
+    kind = td[0]
+    if kind == "map":
+        return _hash_column(_canon_map_arrow(arr), _map_entries_td(td), h)
     valid = (
         np.ones(n, dtype=bool)
         if arr.null_count == 0
         else arr.is_valid().to_numpy(zero_copy_only=False)
     )
-    t = dtype.strip()
-    if t in ("string", "binary"):
+    t = td[1] if kind == "scalar" else None
+    if kind == "array":
+        return _hash_list(arr, td[1], h, valid)
+    if kind == "struct":
+        new = h
+        for i, (_, ftd) in enumerate(td[1]):
+            new = _hash_column(arr.field(i), ftd, new)
+    elif kind == "decimal" and td[1] <= 18:
+        new = _hash_long_vec(_decimal_low64(arr).view(np.uint64), h)
+    elif kind == "decimal":
+        return _hash_wide_decimal(arr, h, valid)
+    elif t in ("string", "binary"):
         if pa.types.is_fixed_size_binary(arr.type):
             # normalize to var-binary so one matrix path serves both
             arr = arr.cast(pa.binary())
         return _hash_varlen(arr, h, valid)
-    if t in ("long", "bigint"):
+    elif t in ("long", "bigint"):
         v = _fixed_values(arr, np.int64).view(np.uint64)
         new = _hash_long_vec(v, h)
     elif t in _INT_FAMILY:
-        # scalar twin: int(v) & 0xFFFFFFFF — the 32-bit two's-complement
-        # pattern zero-extended (NOT sign-extended) to 64 bits
+        # the 32-bit two's-complement pattern zero-extended (NOT
+        # sign-extended) to 64 bits
         if pa.types.is_int8(arr.type) or pa.types.is_int16(arr.type):
             v32 = _fixed_values(
                 arr, np.int8 if pa.types.is_int8(arr.type) else np.int16
@@ -322,18 +514,7 @@ def _hash_column(arr: pa.Array, dtype: str, h: np.ndarray) -> np.ndarray:
         bits[np.isnan(f)] = np.uint32(_NAN32)
         new = _hash_int_vec(bits.astype(np.uint64), h)
     else:
-        from picsure_dictionary_etl_spark.streaming.cdf_source import _parse_type
-
-        td = _parse_type(t)
-        if td[0] == "decimal" and td[1] <= 18:
-            new = _hash_long_vec(_decimal_low64(arr).view(np.uint64), h)
-        elif td[0] == "decimal":
-            return _hash_wide_decimal(arr, h, valid)
-        else:
-            raise UnsupportedVectorType(
-                f"no vectorized xxhash64 path for type {t!r}; use the "
-                "scalar spark_xxhash64 twin"
-            )
+        raise UnsupportedVectorType(f"no xxhash64 path for type {td!r}")
     if arr.null_count == 0:
         return new
     return np.where(valid, new, h)
@@ -344,17 +525,22 @@ def spark_xxhash64_vec(
 ) -> np.ndarray:
     """``F.xxhash64(c1, c2, ...)`` for whole pyarrow columns at once:
     returns a SIGNED int64 numpy array, bit-equal to Spark's result per
-    row (and to the scalar :func:`~.cdf_source.spark_xxhash64` twin).
+    row. ``dtypes`` are Spark simpleString type names ('string',
+    'bigint', 'decimal(30,4)', 'array<bigint>',
+    'struct<a:string,b:int>', 'map<string,bigint>', ...); map columns
+    hash as the engine's canonical key-sorted entry arrays.
 
     Raises :class:`UnsupportedVectorType` (a ``TypeError``) before any
-    work when a column type has no vector path — callers catch it and
-    take the scalar fallback once, at plan time."""
+    work when a column type is outside :func:`_type_supported`."""
     if not arrays:
         raise ValueError("spark_xxhash64_vec needs at least one column")
+    bad = [t for t in dtypes if not _type_supported(t)]
+    if bad:
+        raise UnsupportedVectorType(f"no xxhash64 path for types {bad}")
     n = len(arrays[0])
     h = np.full(n, np.uint64(seed), dtype=np.uint64)
     for arr, t in zip(arrays, dtypes):
-        h = _hash_column(arr, t, h)
+        h = _hash_column(arr, _parse_type(t), h)
     return h.view(np.int64)
 
 

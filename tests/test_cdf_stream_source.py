@@ -13,8 +13,8 @@ from picsure_dictionary_etl_spark.lake.table import LakeTable
 from picsure_dictionary_etl_spark.streaming.cdf_source import (
     LakeChangeFeedDataSource,
     _resolve_live_pd,
-    spark_xxhash64,
 )
+from picsure_dictionary_etl_spark.streaming.xxhash_vec import spark_xxhash64_vec
 
 TS = datetime.datetime(2024, 1, 1, 12, 0, 0)
 COLS = ["_change", "conv_id", "turn_idx", "role", "text", "tool", "ts", "_lsn"]
@@ -100,10 +100,24 @@ def test_stream_matches_batch_cdf_and_resumes(spark, tmp_path):
     assert _collect_stream(spark, root, ckpt, out) == set()
 
 
-def test_python_xxhash64_matches_spark(spark):
+def _assert_vec_hash(df, spark_hash, types):
+    """``spark_xxhash64_vec`` over ``df``'s columns (the arrow batch
+    Spark hands out) equals the Spark-computed ``spark_hash`` on every
+    row."""
+    import numpy as np
+
+    tbl = df.select(*df.columns, spark_hash.alias("_h")).toArrow()
+    got = spark_xxhash64_vec([tbl.column(c) for c in df.columns], types)
+    want = tbl.column("_h").to_numpy(zero_copy_only=False).astype(np.int64)
+    for i in np.flatnonzero(got != want):
+        raise AssertionError(tbl.slice(int(i), 1).to_pylist())
+    return got
+
+
+def test_xxhash64_matches_spark(spark):
     """The streaming reader's LWW tie-break must be the engine's: the
-    pure-python XXH64 twin is bit-equal to F.xxhash64 across the
-    payload type surface (string lengths straddling every block
+    numpy XXH64 is bit-equal to F.xxhash64 across the payload type
+    surface (string lengths straddling every block
     boundary, ints/longs at extremes, timestamps incl. pre-epoch,
     doubles incl. -0.0, nulls interleaved)."""
     from pyspark.sql import functions as F
@@ -123,11 +137,9 @@ def test_python_xxhash64_matches_spark(spark):
         T.StructField("s", T.StringType()), T.StructField("i", T.IntegerType()),
         T.StructField("l", T.LongType()), T.StructField("b", T.BooleanType()),
     ])
-    got = spark.createDataFrame(rows, schema).select(
-        F.xxhash64("s", "i", "l", "b").alias("h")).collect()
-    for r, g in zip(rows, got):
-        assert spark_xxhash64(list(r), ["string", "integer", "long", "boolean"]) \
-            == g["h"], r
+    _assert_vec_hash(spark.createDataFrame(rows, schema),
+                     F.xxhash64("s", "i", "l", "b"),
+                     ["string", "integer", "long", "boolean"])
 
     rows2 = [(datetime.datetime(2024, 5, 1, 12, 30, 15, 123456), 3.14159),
              (datetime.datetime(1969, 12, 31, 23, 59, 59), -0.0),
@@ -135,10 +147,8 @@ def test_python_xxhash64_matches_spark(spark):
              (None, float("nan"))]  # NaN is a VALUE for doubles in Spark
     schema2 = T.StructType([T.StructField("t", T.TimestampType()),
                             T.StructField("d", T.DoubleType())])
-    got2 = spark.createDataFrame(rows2, schema2).select(
-        F.xxhash64("t", "d").alias("h")).collect()
-    for r, g in zip(rows2, got2):
-        assert spark_xxhash64(list(r), ["timestamp", "double"]) == g["h"], r
+    _assert_vec_hash(spark.createDataFrame(rows2, schema2),
+                     F.xxhash64("t", "d"), ["timestamp", "double"])
 
     # r6 surface widening: float (incl. -0.0f/NaN), date (pre-epoch),
     # binary (block-boundary lengths, non-UTF-8), decimal(p<=18),
@@ -162,11 +172,9 @@ def test_python_xxhash64_matches_spark(spark):
         T.StructField("dec", T.DecimalType(16, 2)),
         T.StructField("tn", T.TimestampNTZType()),
     ])
-    got3 = spark.createDataFrame(rows3, schema3).select(
-        F.xxhash64("f", "dt", "bin", "dec", "tn").alias("h")).collect()
     types3 = ["float", "date", "binary", "decimal(16,2)", "timestamp_ntz"]
-    for r, g in zip(rows3, got3):
-        assert spark_xxhash64(list(r), types3) == g["h"], r
+    _assert_vec_hash(spark.createDataFrame(rows3, schema3),
+                     F.xxhash64("f", "dt", "bin", "dec", "tn"), types3)
 
     # late-r6 nested surface: arrays element-chain with null elements
     # SKIPPED ([1,null,2] == [1,2]; []/NULL leave the hash unchanged),
@@ -197,14 +205,12 @@ def test_python_xxhash64_matches_spark(spark):
         T.StructField("ts", T.ArrayType(T.TimestampType())),
     ])
     types4 = [f.dataType.simpleString() for f in schema4.fields]
-    got4 = spark.createDataFrame(rows4, schema4).select(
-        F.xxhash64(*[f.name for f in schema4.fields]).alias("h")).collect()
-    for r, g in zip(rows4, got4):
-        assert spark_xxhash64(list(r), types4) == g["h"], r
+    _assert_vec_hash(spark.createDataFrame(rows4, schema4),
+                     F.xxhash64(*[f.name for f in schema4.fields]), types4)
 
     # depth-unbounded nesting (late r6): array<array<long>>,
     # array<struct<..array..>>, struct<struct<..>, array<..>> — the
-    # twin recurses with the same null-skip at every level
+    # hash recurses with the same null-skip at every level
     rows5 = [
         ([[1, 2], [], None, [3, None]],
          [{"k": "a", "vs": [1.5, float("nan")]}, None],
@@ -225,10 +231,8 @@ def test_python_xxhash64_matches_spark(spark):
             T.StructField("tags", T.ArrayType(T.StringType()))])),
     ])
     types5 = [f.dataType.simpleString() for f in schema5.fields]
-    got5 = spark.createDataFrame(rows5, schema5).select(
-        F.xxhash64(*[f.name for f in schema5.fields]).alias("h")).collect()
-    for r, g in zip(rows5, got5):
-        assert spark_xxhash64(list(r), types5) == g["h"], r
+    _assert_vec_hash(spark.createDataFrame(rows5, schema5),
+                     F.xxhash64(*[f.name for f in schema5.fields]), types5)
 
     # r7 (judge ADVICE, high): BigInteger.toByteArray byte-LENGTH edges.
     # Unscaled values exactly -2^(8k-1) (-128, -32768, -2^31, -2^63,
@@ -243,10 +247,8 @@ def test_python_xxhash64_matches_spark(spark):
                           2 ** k8, 2 ** k8 - 1]
     rows6 = [(_dec.Decimal(u).scaleb(-2),) for u in edge_unscaled]
     schema6 = T.StructType([T.StructField("wd2", T.DecimalType(38, 2))])
-    got6 = spark.createDataFrame(rows6, schema6).select(
-        F.xxhash64("wd2").alias("h")).collect()
-    for r, g in zip(rows6, got6):
-        assert spark_xxhash64(list(r), ["decimal(38,2)"]) == g["h"], r
+    _assert_vec_hash(spark.createDataFrame(rows6, schema6),
+                     F.xxhash64("wd2"), ["decimal(38,2)"])
 
     # r7: decimal INSIDE struct/array — `struct<a:decimal(16,2),b:..>`
     # was false-rejected before the _split_top paren fix (the comma in
@@ -264,14 +266,12 @@ def test_python_xxhash64_matches_spark(spark):
         T.StructField("ad", T.ArrayType(T.DecimalType(16, 2))),
     ])
     types7 = [f.dataType.simpleString() for f in schema7.fields]
-    got7 = spark.createDataFrame(rows7, schema7).select(
-        F.xxhash64(*[f.name for f in schema7.fields]).alias("h")).collect()
-    for r, g in zip(rows7, got7):
-        assert spark_xxhash64(list(r), types7) == g["h"], r
+    _assert_vec_hash(spark.createDataFrame(rows7, schema7),
+                     F.xxhash64(*[f.name for f in schema7.fields]), types7)
 
 
-def test_python_xxhash64_matches_spark_on_canonical_maps(spark):
-    """r7 map surface: the Python twin's map branch (key-sorted entry
+def test_xxhash64_matches_spark_on_canonical_maps(spark):
+    """r7 map surface: the numpy hash's map branch (key-sorted entry
     chaining) must be bit-equal to the ENGINE's hash of the canonical
     form — ``F.xxhash64(_canon_col(col))``, i.e. the key-sorted
     ``array_sort(map_entries(...))`` rewrite the Spark-side tie-break
@@ -311,14 +311,11 @@ def test_python_xxhash64_matches_spark_on_canonical_maps(spark):
     ])
     df = spark.createDataFrame(rows, schema)
     canon = [_canon_col(F.col(f.name), f.dataType) for f in schema.fields]
-    got = df.select(F.xxhash64(*canon).alias("h")).collect()
     types = [f.dataType.simpleString() for f in schema.fields]
-    for r, g in zip(rows, got):
-        assert spark_xxhash64(list(r), types) == g["h"], r
+    _assert_vec_hash(df, F.xxhash64(*canon), types)
     # entry-order insensitivity: rows 0 and 1 share m1 content
-    h0 = spark_xxhash64([rows[0][0]], [types[0]])
-    h1 = spark_xxhash64([rows[1][0]], [types[0]])
-    assert h0 == h1
+    h = _assert_vec_hash(df.select("m1"), F.xxhash64(canon[0]), types[:1])
+    assert h[0] == h[1]
 
     # scalar key types beyond string/double: date, decimal, binary,
     # boolean, timestamp — each sorted by natural value in both planes
@@ -339,10 +336,8 @@ def test_python_xxhash64_matches_spark_on_canonical_maps(spark):
     ])
     df2 = spark.createDataFrame(rows2, schema2)
     canon2 = [_canon_col(F.col(f.name), f.dataType) for f in schema2.fields]
-    got2 = df2.select(F.xxhash64(*canon2).alias("h")).collect()
     types2 = [f.dataType.simpleString() for f in schema2.fields]
-    for r, g in zip(rows2, got2):
-        assert spark_xxhash64(list(r), types2) == g["h"], r
+    _assert_vec_hash(df2, F.xxhash64(*canon2), types2)
 
     # maps buried INSIDE arrays and structs (any depth)
     rows3 = [
@@ -359,18 +354,17 @@ def test_python_xxhash64_matches_spark_on_canonical_maps(spark):
     ])
     df3 = spark.createDataFrame(rows3, schema3)
     canon3 = [_canon_col(F.col(f.name), f.dataType) for f in schema3.fields]
-    got3 = df3.select(F.xxhash64(*canon3).alias("h")).collect()
     types3 = [f.dataType.simpleString() for f in schema3.fields]
-    for r, g in zip(rows3, got3):
-        assert spark_xxhash64(list(r), types3) == g["h"], r
+    _assert_vec_hash(df3, F.xxhash64(*canon3), types3)
 
 
 def test_map_hash_property_hypothesis(spark):
     """Property (r7): for ANY map content — random string/long keys,
-    nullable long / nested array values, extreme ints — the Python
-    twin's map hash is (a) bit-equal to the engine's
+    nullable long / nested array values, extreme ints — the numpy
+    map hash is (a) bit-equal to the engine's
     ``F.xxhash64(_canon_col(...))`` and (b) invariant under entry
     PERMUTATION (the physical order a writer happened to emit)."""
+    import pyarrow as pa
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
     from pyspark.sql import functions as F
@@ -394,25 +388,26 @@ def test_map_hash_property_hypothesis(spark):
     ])
     types = [f.dataType.simpleString() for f in schema.fields]
     canon = [_canon_col(F.col(f.name), f.dataType) for f in schema.fields]
+    arrow_types = [pa.map_(pa.string(), pa.int64()),
+                   pa.map_(pa.int64(), pa.list_(pa.int64()))]
 
     @given(st.lists(row, min_size=1, max_size=6), st.randoms())
     @settings(max_examples=12, deadline=None,
               suppress_health_check=[HealthCheck.too_slow])
     def check(rows, rnd):
         df = spark.createDataFrame(rows, schema)
-        got = df.select(F.xxhash64(*canon).alias("h")).collect()
-        for r, g in zip(rows, got):
-            assert spark_xxhash64(list(r), types) == g["h"], r
-            # permutation invariance: shuffle each map's entry list
-            shuf = []
-            for v in r:
-                if v is None:
-                    shuf.append(None)
-                else:
-                    items = list(v.items())
+        got = _assert_vec_hash(df, F.xxhash64(*canon), types)
+        # permutation invariance: shuffle each map's entry list
+        shuf = []
+        for j, typ in enumerate(arrow_types):
+            col = []
+            for r in rows:
+                items = None if r[j] is None else list(r[j].items())
+                if items:
                     rnd.shuffle(items)
-                    shuf.append(items)  # twin accepts entry lists
-            assert spark_xxhash64(shuf, types) == g["h"], r
+                col.append(items)
+            shuf.append(pa.array(col, typ))
+        assert list(spark_xxhash64_vec(shuf, types)) == list(got), rows
 
     check()
 
@@ -845,7 +840,7 @@ def test_exotic_payload_types_stream_matches_batch_cdf(spark, tmp_path):
     under cast('string') (b'\\xff' vs b'\\xfe' must classify as a
     CHANGE in both planes), -0.0f vs 0.0f (a change), NaN->NaN float
     (unchanged), and an equal-LSN tie whose winner is picked by the
-    xxhash64 twin ACROSS these types."""
+    xxhash64 ACROSS these types."""
     import math
 
     from pyspark.sql import types as T
@@ -938,7 +933,7 @@ def test_nested_payload_types_stream_matches_batch_cdf(spark, tmp_path):
     change in both planes; [] vs NULL array is a change; a NaN element
     re-asserted is NOT a change; 0.0 -> -0.0 inside an array is; a
     struct field nulling out is; and an equal-LSN tie on a fresh key
-    picks the winner via the nested xxhash64 twin."""
+    picks the winner via the nested xxhash64."""
     import decimal as _dec
 
     from pyspark.sql import types as T
@@ -1043,7 +1038,7 @@ def test_deep_nested_payloads_stream_matches_batch_cdf(spark, tmp_path):
     stream bit-equal to table_changes — inner-level ambiguity
     ([['a, b']] -> [['a','b']]) classifies as a change, a deep NaN
     re-assert does NOT, a deep [] vs NULL does, and an equal-LSN tie
-    resolves via the recursive hash twin identically in both planes."""
+    resolves via the recursive hash identically in both planes."""
     from pyspark.sql import types as T
 
     from picsure_dictionary_etl_spark.lake.merge import merge_into
@@ -1640,7 +1635,7 @@ def test_startingtimestamp_resolves_to_version_base(spark, tmp_path):
 
 def test_unsupported_seams_are_typed_plan_time_errors(spark, tmp_path):
     """Remaining v1 seams fail at PLAN time with typed errors: payload
-    types outside the xxhash64 twin's surface, unresolvable root
+    types outside the xxhash64 surface, unresolvable root
     schemes, and a caller-reordered schema (which would silently flip
     the equal-LSN tie-break hash order)."""
     from pyspark.sql import types as T

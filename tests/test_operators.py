@@ -789,7 +789,7 @@ def test_codec_property_roundtrips():
     constant-8x8-block image exactly under the all-ones quant table
     (the certification invariant the integer oracle rests on)."""
     import numpy as np
-    from hypothesis import given, settings
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
     from picsure_dictionary_etl_spark.operators import jpeg_codec as jc
@@ -820,6 +820,8 @@ def test_codec_property_roundtrips():
         st.integers(1, 3), st.integers(1, 3),
         st.lists(st.integers(0, 255), min_size=9, max_size=9),
     )
+    # the last code bytes must follow pending 0x00 bytes (D.1.8 flush)
+    @example(2, 3, [135, 71, 183, 183, 71, 165, 0, 0, 0])
     @settings(max_examples=15, deadline=None)
     def jpeg_arith_constant_blocks(bh, bw, vals):
         blocks = np.array(vals[: bh * bw], dtype=np.uint8).reshape(bh, bw)

@@ -1,12 +1,9 @@
-"""The equal-LSN tie-break hash in the executor resolve
-(`_tie_col`) is VECTORIZED (numpy XXH64 twin) for flat payload types —
-a mass-redelivery batch can make every row of a bucket a tie, so the
-per-row scalar twin cannot be the only path. Parity: the vectorized
-result must be bit-identical to the scalar twin (which is itself
-bit-equal to F.xxhash64 — tests/test_cdf_stream_source.py); nested
-payloads (array/struct/map) take the scalar fallback unchanged.
-
-No Spark session needed — both twins are pure Python/numpy.
+"""The equal-LSN tie-break hash in the executor resolve (`_tie_col`)
+runs column-wise through the numpy XXH64 (streaming/xxhash_vec.py) for
+every payload type, nested ones included — a mass-redelivery batch can
+make every row of a bucket a tie. Parity: the result must be
+bit-identical to the engine's ``F.xxhash64(payload..., _op)`` (maps as
+their canonical ``_canon_col`` entry arrays) on the same rows.
 """
 
 import datetime
@@ -14,11 +11,11 @@ import decimal
 
 import numpy as np
 import pandas as pd
-import pytest
+import pyarrow as pa
 
 from picsure_dictionary_etl_spark.streaming.cdf_source import (
+    _read_bucket,
     _tie_col,
-    spark_xxhash64,
 )
 
 KEYS = ["id"]
@@ -76,25 +73,37 @@ DTYPES = {"id": "string", "s": "string", "l": "bigint", "d": "double",
 PAYLOAD = ["s", "l", "d", "b", "dt", "ts", "bin", "dec", "wdec"]
 
 
-def _scalar_tie(df, payload, dtypes):
-    tie = df.duplicated(subset=KEYS + ["_lsn"], keep=False)
-    ptypes = [dtypes[c] for c in payload] + ["string"]
-    out = pd.Series(0, index=df.index, dtype="int64")
-    out.loc[tie] = [
-        spark_xxhash64([df.at[i, c] for c in payload] + [df.at[i, "_op"]],
-                       ptypes)
-        for i in df.index[tie]
-    ]
-    return out
+def _spark_tie(spark, tbl, hash_cols):
+    """The engine's tie hash, ``F.xxhash64(payload..., _op)``, over an
+    arrow table of the same rows (row order kept)."""
+    from pyspark.sql import functions as F
+
+    idx = pa.array(np.arange(tbl.num_rows))
+    df = spark.createDataFrame(tbl.append_column("_i", idx))
+    return pd.Series(
+        df.orderBy("_i").select(F.xxhash64(*hash_cols).alias("h"))
+        .toArrow().column("h").to_numpy(zero_copy_only=False)
+        .astype(np.int64)
+    )
 
 
-def test_vectorized_tie_hash_is_bit_equal_to_scalar_twin():
+def test_vectorized_tie_hash_is_bit_equal_to_scalar_twin(spark):
+    """Every flat payload type, all rows tied: `_tie_col` (pandas ->
+    arrow -> numpy hash) equals F.xxhash64 on the same values."""
     df = _frame()
     vec = _tie_col(df, KEYS, PAYLOAD, DTYPES)
-    scal = _scalar_tie(df, PAYLOAD, DTYPES)
     tie = df.duplicated(subset=KEYS + ["_lsn"], keep=False)
     assert int(tie.sum()) == len(df)  # the frame is ALL ties by design
-    pd.testing.assert_series_equal(vec, scal)
+    schema = pa.schema([
+        ("s", pa.string()), ("l", pa.int64()), ("d", pa.float64()),
+        ("b", pa.bool_()), ("dt", pa.date32()), ("ts", pa.timestamp("us")),
+        ("bin", pa.binary()), ("dec", pa.decimal128(16, 2)),
+        ("wdec", pa.decimal128(30, 4)), ("_op", pa.string()),
+    ])
+    tbl = pa.Table.from_pandas(df[PAYLOAD + ["_op"]], schema=schema,
+                               preserve_index=False)
+    want = _spark_tie(spark, tbl, PAYLOAD + ["_op"])
+    pd.testing.assert_series_equal(vec, want, check_names=False)
 
 
 def test_no_ties_pays_no_hash():
@@ -104,46 +113,48 @@ def test_no_ties_pays_no_hash():
     assert (out == 0).all()
 
 
-def test_nested_payload_falls_back_to_scalar_twin():
-    """A map payload column has no vector path: `_tie_col` must land on
-    the scalar fallback and still match it exactly."""
-    import pyarrow as pa
+def test_nested_payload_falls_back_to_scalar_twin(spark, tmp_path):
+    """Nested payloads take the same vector path — no scalar fallback
+    is left. A map column hashes as the engine's canonical key-sorted
+    entry array; a nested column that only post-evolution files carry
+    (so `_read_bucket` fills it with an all-None object column) hashes
+    as null."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from picsure_dictionary_etl_spark.lake.merge import _canon_col
 
     n = 60
     typ = pa.map_(pa.string(), pa.int64())
+    # entries built in DESCENDING key order: the hash must sort them
     maps = pa.array(
-        [None if i % 9 == 0 else [(f"k{j}", i + j) for j in range(i % 4)]
+        [None if i % 9 == 0 else [(f"k{j}", i + j) for j in range(i % 4)][::-1]
          for i in range(n)], type=typ)
-    df = pd.DataFrame({
+    tbl = pa.table({
         "id": [f"k{i % 20}" for i in range(n)],
-        "_lsn": pd.array([(i // 20) % 2 for i in range(n)], dtype="Int64"),
+        "_lsn": pa.array([(i // 20) % 2 for i in range(n)], pa.int64()),
         "s": [f"v{i}" for i in range(n)],
-        "m": pd.Series(pd.arrays.ArrowExtensionArray(maps),
-                       dtype=pd.ArrowDtype(typ)),
+        "m": maps,
         "_op": ["I"] * n,
     })
+    pq.write_table(tbl, str(tmp_path / "pre.parquet"))
+    late = "array<struct<x:bigint>>"
     dtypes = {"id": "string", "s": "string", "m": "map<string,bigint>",
-              "_lsn": "bigint"}
+              "a": late, "_lsn": "bigint"}
+    cols = ["id", "s", "m", "a", "_op", "_lsn"]
+    df = _read_bucket(str(tmp_path), ["pre.parquet"], cols, dtypes)
+    assert df["a"].isna().all()  # the evolution fill
+
+    sdf_types = spark.createDataFrame(tbl.select(["m"])).schema
+    want = _spark_tie(spark, tbl.select(["s", "m", "_op"]), [
+        "s", _canon_col(F.col("m"), sdf_types["m"].dataType),
+        F.lit(None).cast(late), "_op"])
+
+    tie = df.duplicated(subset=KEYS + ["_lsn"], keep=False)
+    assert 0 < int(tie.sum()) < n
+    want = want.where(tie, 0)  # rows outside tie groups pay no hash
+
     vec = _tie_col(df, KEYS, ["s", "m"], dtypes)
-    scal = _scalar_tie(df, ["s", "m"], dtypes)
-    pd.testing.assert_series_equal(vec, scal)
-    assert (vec != 0).any()
-
-
-def test_vectorized_tie_hash_beats_scalar_on_a_tied_bucket():
-    """Throughput guard: on an all-ties 200k-row frame the vectorized
-    path must be well clear of the scalar loop (the whole point);
-    asserted loosely (>=5x) to stay robust to host steal."""
-    import time
-
-    df = _frame(n=200_000)
-    t0 = time.perf_counter()
-    _tie_col(df, KEYS, PAYLOAD, DTYPES)
-    vec_s = time.perf_counter() - t0
-    sl = df.iloc[:20_000]
-    t0 = time.perf_counter()
-    _scalar_tie(sl, PAYLOAD, DTYPES)
-    scal_s = (time.perf_counter() - t0) * 10  # extrapolate to 200k
-    if scal_s < 5 * vec_s:
-        pytest.fail(f"vectorized tie hash not clearly faster: "
-                    f"vec={vec_s:.3f}s scalar_est={scal_s:.3f}s")
+    pd.testing.assert_series_equal(vec, want, check_names=False)
+    vec_late = _tie_col(df, KEYS, ["s", "m", "a"], dtypes)
+    pd.testing.assert_series_equal(vec_late, want, check_names=False)

@@ -1,9 +1,11 @@
-"""The vectorized numpy XXH64 twin (streaming/xxhash_vec.py) — the
-scale-safe default bucket-hash path for the lake sink. Bit-equality is
-pinned three ways: vs the scalar python twin (randomized, every type,
-all the known edge families), vs Spark's F.xxhash64 itself (one
-round-trip over a multi-column mix), and via the sink placement test in
-test_lake_sink.py (prebucket=False now exercises this path)."""
+"""The numpy XXH64 (streaming/xxhash_vec.py) — the one Python
+implementation of Spark's ``F.xxhash64``: the lake sink's default
+bucket-hash path and the lake_cdf tie-break. Bit-equality is pinned
+against ``F.xxhash64`` itself, row by row, on randomized columns of
+every supported type (all the known edge families, nested arrays,
+structs and maps included, sliced inputs too), and via the sink
+placement test in test_lake_sink.py (prebucket=False exercises this
+path)."""
 
 import datetime
 import decimal
@@ -14,7 +16,6 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from picsure_dictionary_etl_spark.streaming.cdf_source import spark_xxhash64
 from picsure_dictionary_etl_spark.streaming.xxhash_vec import (
     UnsupportedVectorType,
     pmod_buckets,
@@ -22,15 +23,32 @@ from picsure_dictionary_etl_spark.streaming.xxhash_vec import (
 )
 
 
-def _assert_parity(arrays, dtypes, pyvals):
+def _assert_parity(spark, arrays, dtypes):
+    """``spark_xxhash64_vec`` == ``F.xxhash64`` on the same columns,
+    row by row. Map columns enter Spark's hash as the engine's
+    canonical key-sorted entry arrays (``_canon_col`` — raw MapType is
+    unhashable), the form the tie-break hashes."""
+    from pyspark.sql import functions as F
+
+    from picsure_dictionary_etl_spark.lake.merge import _canon_col
+
     got = spark_xxhash64_vec(arrays, dtypes)
-    want = np.array(
-        [spark_xxhash64(list(row), dtypes) for row in zip(*pyvals)],
-        dtype=np.int64,
+    names = [f"c{i}" for i in range(len(arrays))]
+    # Spark gets unsliced copies (its arrow import rejects sliced
+    # nested arrays); the vector path above hashed the inputs as given
+    idx = pa.array(np.arange(len(got)))
+    tbl = pa.table(dict(zip(names, [a.take(idx) for a in arrays]), _i=idx))
+    df = spark.createDataFrame(tbl)
+    by_name = {f.name: f.dataType for f in df.schema.fields}
+    canon = [_canon_col(F.col(c), by_name[c]) for c in names]
+    want = (
+        df.orderBy("_i").select(F.xxhash64(*canon).alias("h")).toArrow()
+        .column("h").to_numpy(zero_copy_only=False).astype(np.int64)
     )
     bad = np.flatnonzero(got != want)
     assert len(bad) == 0, (
-        f"rows {bad[:5]}: " + repr([[pv[i] for pv in pyvals] for i in bad[:3]])
+        f"rows {bad[:5]}: "
+        + repr([[a[int(i)].as_py() for a in arrays] for i in bad[:3]])
     )
 
 
@@ -41,7 +59,7 @@ def _nullable(rng, gen, n, p=0.12):
 N = 1500
 
 
-def test_scalar_parity_per_type():
+def test_scalar_parity_per_type(spark):
     rng = random.Random(20260818)
     # strings: empty, short, >=32B multi-stripe, utf-8 multibyte,
     # realistic id shapes (few distinct lengths — the grouped fast case)
@@ -58,22 +76,22 @@ def test_scalar_parity_per_type():
         ),
         N,
     )
-    _assert_parity([pa.array(strs, pa.string())], ["string"], [strs])
+    _assert_parity(spark, [pa.array(strs, pa.string())], ["string"])
 
     longs = _nullable(rng, lambda: rng.randrange(-(2**63), 2**63), N)
-    _assert_parity([pa.array(longs, pa.int64())], ["long"], [longs])
+    _assert_parity(spark, [pa.array(longs, pa.int64())], ["long"])
 
     ints = _nullable(rng, lambda: rng.randrange(-(2**31), 2**31), N)
-    _assert_parity([pa.array(ints, pa.int32())], ["integer"], [ints])
+    _assert_parity(spark, [pa.array(ints, pa.int32())], ["integer"])
 
     shorts = _nullable(rng, lambda: rng.randrange(-(2**15), 2**15), N)
-    _assert_parity([pa.array(shorts, pa.int16())], ["short"], [shorts])
+    _assert_parity(spark, [pa.array(shorts, pa.int16())], ["short"])
 
     tiny = _nullable(rng, lambda: rng.randrange(-128, 128), N)
-    _assert_parity([pa.array(tiny, pa.int8())], ["byte"], [tiny])
+    _assert_parity(spark, [pa.array(tiny, pa.int8())], ["byte"])
 
     bools = _nullable(rng, lambda: rng.random() < 0.5, N)
-    _assert_parity([pa.array(bools, pa.bool_())], ["boolean"], [bools])
+    _assert_parity(spark, [pa.array(bools, pa.bool_())], ["boolean"])
 
     # doubles: -0.0 normalization, NaN collapse, infinities
     dbls = _nullable(
@@ -84,7 +102,7 @@ def test_scalar_parity_per_type():
         ),
         N,
     )
-    _assert_parity([pa.array(dbls, pa.float64())], ["double"], [dbls])
+    _assert_parity(spark, [pa.array(dbls, pa.float64())], ["double"])
 
     flts = [
         None if v is None else struct.unpack("<f", struct.pack("<f", v))[0]
@@ -96,14 +114,14 @@ def test_scalar_parity_per_type():
             N,
         )
     ]
-    _assert_parity([pa.array(flts, pa.float32())], ["float"], [flts])
+    _assert_parity(spark, [pa.array(flts, pa.float32())], ["float"])
 
     bins = _nullable(
         rng,
         lambda: bytes(rng.randrange(256) for _ in range(rng.randrange(0, 70))),
         N,
     )
-    _assert_parity([pa.array(bins, pa.binary())], ["binary"], [bins])
+    _assert_parity(spark, [pa.array(bins, pa.binary())], ["binary"])
 
     import pandas as pd
 
@@ -113,7 +131,7 @@ def test_scalar_parity_per_type():
         N,
     )
     _assert_parity(
-        [pa.array(tss, pa.timestamp("us", tz="UTC"))], ["timestamp"], [tss]
+        spark, [pa.array(tss, pa.timestamp("us", tz="UTC"))], ["timestamp"]
     )
 
     dates = _nullable(
@@ -122,7 +140,7 @@ def test_scalar_parity_per_type():
         + datetime.timedelta(days=rng.randrange(-25000, 25000)),
         N,
     )
-    _assert_parity([pa.array(dates, pa.date32())], ["date"], [dates])
+    _assert_parity(spark, [pa.array(dates, pa.date32())], ["date"])
 
     decs = _nullable(
         rng,
@@ -130,11 +148,11 @@ def test_scalar_parity_per_type():
         N,
     )
     _assert_parity(
-        [pa.array(decs, pa.decimal128(18, 2))], ["decimal(18,2)"], [decs]
+        spark, [pa.array(decs, pa.decimal128(18, 2))], ["decimal(18,2)"]
     )
 
 
-def test_scalar_parity_chained_and_sliced():
+def test_scalar_parity_chained_and_sliced(spark):
     """Multi-column seed chaining with interleaved nulls (the null-skip
     rule), plus sliced arrays (nonzero arrow offsets on offsets/values/
     validity buffers)."""
@@ -148,13 +166,78 @@ def test_scalar_parity_chained_and_sliced():
         pa.array(ints, pa.int32()),
     ]
     dtypes = ["string", "long", "integer"]
-    _assert_parity(arrays, dtypes, [strs, longs, ints])
+    _assert_parity(spark, arrays, dtypes)
     lo, hi = 113, 1113
-    _assert_parity(
-        [a.slice(lo, hi - lo) for a in arrays],
-        dtypes,
-        [strs[lo:hi], longs[lo:hi], ints[lo:hi]],
-    )
+    _assert_parity(spark, [a.slice(lo, hi - lo) for a in arrays], dtypes)
+
+
+def test_nested_parity(spark):
+    """array / struct / map at depth: element chaining with null
+    elements skipped, empty vs null values, struct fields under null
+    rows, map entries in arbitrary physical order (the hash chains
+    them key-sorted), map-in-map and maps inside arrays — whole and
+    sliced."""
+    rng = random.Random(424242)
+    n = 600
+
+    def lng():
+        return rng.choice([rng.randrange(-(2**63), 2**63), rng.randrange(-3, 3)])
+
+    def lst(gen, k=5):
+        return [gen() for _ in range(rng.randrange(k))]
+
+    def entries(kgen, vgen, k=5):
+        # dict dedups keys (Spark maps never repeat one); list order
+        # stays the generator's, not sorted
+        return list({kgen(): vgen() for _ in range(rng.randrange(k))}.items())
+
+    def nl(gen, p=0.15):
+        return lambda: None if rng.random() < p else gen()
+
+    def text():
+        return rng.choice(["", "k", "é漢", "x" * rng.randrange(1, 40)])
+
+    nan = float("nan")
+    cols = [
+        (pa.list_(pa.int64()), "array<bigint>",
+         nl(lambda: lst(nl(lng)))),
+        (pa.list_(pa.string()), "array<string>",
+         nl(lambda: lst(nl(text)))),
+        (pa.list_(pa.list_(pa.int64())), "array<array<bigint>>",
+         nl(lambda: lst(nl(lambda: lst(nl(lng)))))),
+        (pa.struct([("a", pa.string()), ("b", pa.int32()),
+                    ("c", pa.list_(pa.float64()))]),
+         "struct<a:string,b:int,c:array<double>>",
+         nl(lambda: {"a": nl(text)(),
+                     "b": nl(lambda: rng.randrange(-(2**31), 2**31))(),
+                     "c": nl(lambda: lst(nl(lambda: rng.choice(
+                         [0.0, -0.0, nan, rng.uniform(-1e6, 1e6)]))))()})),
+        (pa.map_(pa.string(), pa.int64()), "map<string,bigint>",
+         nl(lambda: entries(text, nl(lng)))),
+        (pa.map_(pa.float64(), pa.string()), "map<double,string>",
+         nl(lambda: entries(lambda: rng.choice([nan, 0.0, 1.5, -2.0, 1e300]),
+                            nl(text)))),
+        (pa.map_(pa.int64(), pa.list_(pa.int64())),
+         "map<bigint,array<bigint>>",
+         nl(lambda: entries(lng, nl(lambda: lst(nl(lng)))))),
+        (pa.map_(pa.string(), pa.map_(pa.string(), pa.int64())),
+         "map<string,map<string,bigint>>",
+         nl(lambda: entries(text, nl(lambda: entries(text, nl(lng)))))),
+        (pa.list_(pa.map_(pa.decimal128(16, 2), pa.int64())),
+         "array<map<decimal(16,2),bigint>>",
+         nl(lambda: lst(nl(lambda: entries(
+             lambda: decimal.Decimal(rng.randrange(-999, 999)).scaleb(-2),
+             nl(lng)))))),
+    ]
+    for typ, dtype, gen in cols:
+        arr = pa.array([gen() for _ in range(n)], typ)
+        _assert_parity(spark, [arr], [dtype])
+        _assert_parity(spark, [arr.slice(37, 400)], [dtype])
+    # every nested family chained in one hash, sliced together
+    arrays = [pa.array([gen() for _ in range(n)], typ) for typ, _, gen in cols]
+    dtypes = [d for _, d, _ in cols]
+    _assert_parity(spark, arrays, dtypes)
+    _assert_parity(spark, [a.slice(101, 333) for a in arrays], dtypes)
 
 
 def test_all_null_column_leaves_hash_unchanged():
@@ -169,12 +252,15 @@ def test_all_null_column_leaves_hash_unchanged():
 
 
 def test_unsupported_type_raises_typed():
-    arr2 = pa.array([[1, 2]], pa.list_(pa.int64()))
+    """Map keys must be scalar: the canonical form key-sorts entries."""
+    arr = pa.array(
+        [[([1, 2], 3)]], pa.map_(pa.list_(pa.int64()), pa.int64())
+    )
     with pytest.raises(UnsupportedVectorType):
-        spark_xxhash64_vec([arr2], ["array<bigint>"])
+        spark_xxhash64_vec([arr], ["map<array<bigint>,bigint>"])
 
 
-def test_wide_decimal_parity():
+def test_wide_decimal_parity(spark):
     """decimal(p>18): the vector path hashes Java's minimal
     BigInteger.toByteArray() form — parity incl. the -2^(8k-1) family
     (Java bitLength drops a byte there), its neighbours, the +2^(8k-1)
@@ -191,18 +277,18 @@ def test_wide_decimal_parity():
         600,
     )
     _assert_parity(
-        [pa.array(vals, pa.decimal128(38, 2))], ["decimal(38,2)"], [vals]
+        spark, [pa.array(vals, pa.decimal128(38, 2))], ["decimal(38,2)"]
     )
     # sliced + a second wide precision (different scale)
     arr = pa.array(vals, pa.decimal128(38, 2)).slice(7, 500)
-    _assert_parity([arr], ["decimal(38,2)"], [vals[7:507]])
+    _assert_parity(spark, [arr], ["decimal(38,2)"])
     v30 = _nullable(
         rng,
         lambda: decimal.Decimal(rng.randrange(-(10**26), 10**26)).scaleb(-4),
         400,
     )
     _assert_parity(
-        [pa.array(v30, pa.decimal128(30, 4))], ["decimal(30,4)"], [v30]
+        spark, [pa.array(v30, pa.decimal128(30, 4))], ["decimal(30,4)"]
     )
 
 
