@@ -7,7 +7,7 @@ per-row Python. The bench hashes N (conv_id string, turn_idx long)
 pairs and reports warm best-of rows/sec. Bit-equality with
 ``F.xxhash64`` is pinned by tests/test_xxhash_vec.py, not here.
 
-Usage: python BENCH/bucket_hash_bench.py [--rows 1000000] [--repeat 5]
+Usage: python BENCH/bucket_hash_bench.py [--rows 1000000]
 Writes BENCH/bucket_hash_bench_results.json.
 """
 
@@ -38,7 +38,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=1_000_000)
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--repeat", type=int, default=5)
     args = ap.parse_args()
     rng = random.Random(42)
     n = args.rows
@@ -51,7 +50,7 @@ def main() -> None:
     # the repo-wide rule: report warm best-of, never a cold run 1)
     spark_xxhash64_vec([a.slice(0, 10_000) for a in arrays], dtypes)
     vec_s = float("inf")
-    for _ in range(args.repeat):
+    for _ in range(3):
         t0 = time.perf_counter()
         bv = pmod_buckets(spark_xxhash64_vec(arrays, dtypes), args.buckets)
         vec_s = min(vec_s, time.perf_counter() - t0)
@@ -59,7 +58,6 @@ def main() -> None:
     res = {
         "rows": n,
         "buckets": args.buckets,
-        "repeat": args.repeat,
         "vector_sec": round(vec_s, 4),
         "vector_rows_per_s": round(n / vec_s),
         "distinct_buckets": int(len(np.unique(bv))),

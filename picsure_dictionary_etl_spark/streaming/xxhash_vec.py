@@ -420,7 +420,16 @@ def _hash_list(arr: pa.Array, elem_td, h: np.ndarray, valid: np.ndarray) -> np.n
     """array column: one pass per element position ``j``. The rows
     with more than ``j`` elements (a prefix of the rows sorted by
     length) chain their ``j``-th element into their running hash; the
-    element pass's own null mask skips null elements."""
+    element pass's own null mask skips null elements.
+
+    Cost is one pass per position up to the LONGEST array, ~60 us a
+    pass however few rows are left, and nesting multiplies the passes
+    (outer x inner length). Skewed columns pay for it: on a 4-core
+    Xeon, 1k ``array<bigint>`` rows where one holds 100k elements take
+    ~6.2 s here against ~0.5 s for a per-row Python XXH64 loop, and
+    1k ``array<array<bigint>>`` rows where one is 300 x 300 take
+    ~6.8 s against ~0.3 s. Short arrays are ~10x faster than that loop
+    (1k rows of up to 20 x 20: 0.05 s against 0.43 s)."""
     offsets = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
     starts = offsets[:-1]
     lens = np.where(valid, offsets[1:] - starts, 0)
@@ -506,15 +515,15 @@ def _hash_column(arr: pa.Array, td, h: np.ndarray) -> np.ndarray:
             bits[f == 0.0] = np.uint64(0)  # -0.0 normalizes to +0.0
         bits[np.isnan(f)] = _NAN64  # every NaN collapses (Java rule)
         new = _hash_long_vec(bits, h)
-    elif t == "float":
+    else:
+        # spark_xxhash64_vec's _type_supported check admits nothing else
+        assert t == "float", td
         f = _fixed_values(arr, np.float32)
         bits = f.view(np.uint32).copy()
         with np.errstate(invalid="ignore"):
             bits[f == np.float32(0.0)] = np.uint32(0)
         bits[np.isnan(f)] = np.uint32(_NAN32)
         new = _hash_int_vec(bits.astype(np.uint64), h)
-    else:
-        raise UnsupportedVectorType(f"no xxhash64 path for type {td!r}")
     if arr.null_count == 0:
         return new
     return np.where(valid, new, h)

@@ -15,6 +15,7 @@ from picsure_dictionary_etl_spark.streaming.cdf_source import (
     _resolve_live_pd,
 )
 from picsure_dictionary_etl_spark.streaming.xxhash_vec import spark_xxhash64_vec
+from tests.hash_parity import assert_xxhash64_parity
 
 TS = datetime.datetime(2024, 1, 1, 12, 0, 0)
 COLS = ["_change", "conv_id", "turn_idx", "role", "text", "tool", "ts", "_lsn"]
@@ -100,27 +101,12 @@ def test_stream_matches_batch_cdf_and_resumes(spark, tmp_path):
     assert _collect_stream(spark, root, ckpt, out) == set()
 
 
-def _assert_vec_hash(df, spark_hash, types):
-    """``spark_xxhash64_vec`` over ``df``'s columns (the arrow batch
-    Spark hands out) equals the Spark-computed ``spark_hash`` on every
-    row."""
-    import numpy as np
-
-    tbl = df.select(*df.columns, spark_hash.alias("_h")).toArrow()
-    got = spark_xxhash64_vec([tbl.column(c) for c in df.columns], types)
-    want = tbl.column("_h").to_numpy(zero_copy_only=False).astype(np.int64)
-    for i in np.flatnonzero(got != want):
-        raise AssertionError(tbl.slice(int(i), 1).to_pylist())
-    return got
-
-
 def test_xxhash64_matches_spark(spark):
     """The streaming reader's LWW tie-break must be the engine's: the
     numpy XXH64 is bit-equal to F.xxhash64 across the payload type
     surface (string lengths straddling every block
     boundary, ints/longs at extremes, timestamps incl. pre-epoch,
     doubles incl. -0.0, nulls interleaved)."""
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     rows = [
@@ -137,9 +123,9 @@ def test_xxhash64_matches_spark(spark):
         T.StructField("s", T.StringType()), T.StructField("i", T.IntegerType()),
         T.StructField("l", T.LongType()), T.StructField("b", T.BooleanType()),
     ])
-    _assert_vec_hash(spark.createDataFrame(rows, schema),
-                     F.xxhash64("s", "i", "l", "b"),
-                     ["string", "integer", "long", "boolean"])
+    assert_xxhash64_parity(
+        spark, spark.createDataFrame(rows, schema).toArrow().columns,
+        ["string", "integer", "long", "boolean"])
 
     rows2 = [(datetime.datetime(2024, 5, 1, 12, 30, 15, 123456), 3.14159),
              (datetime.datetime(1969, 12, 31, 23, 59, 59), -0.0),
@@ -147,8 +133,9 @@ def test_xxhash64_matches_spark(spark):
              (None, float("nan"))]  # NaN is a VALUE for doubles in Spark
     schema2 = T.StructType([T.StructField("t", T.TimestampType()),
                             T.StructField("d", T.DoubleType())])
-    _assert_vec_hash(spark.createDataFrame(rows2, schema2),
-                     F.xxhash64("t", "d"), ["timestamp", "double"])
+    assert_xxhash64_parity(
+        spark, spark.createDataFrame(rows2, schema2).toArrow().columns,
+        ["timestamp", "double"])
 
     # r6 surface widening: float (incl. -0.0f/NaN), date (pre-epoch),
     # binary (block-boundary lengths, non-UTF-8), decimal(p<=18),
@@ -173,8 +160,9 @@ def test_xxhash64_matches_spark(spark):
         T.StructField("tn", T.TimestampNTZType()),
     ])
     types3 = ["float", "date", "binary", "decimal(16,2)", "timestamp_ntz"]
-    _assert_vec_hash(spark.createDataFrame(rows3, schema3),
-                     F.xxhash64("f", "dt", "bin", "dec", "tn"), types3)
+    assert_xxhash64_parity(
+        spark, spark.createDataFrame(rows3, schema3).toArrow().columns,
+        types3)
 
     # late-r6 nested surface: arrays element-chain with null elements
     # SKIPPED ([1,null,2] == [1,2]; []/NULL leave the hash unchanged),
@@ -205,8 +193,9 @@ def test_xxhash64_matches_spark(spark):
         T.StructField("ts", T.ArrayType(T.TimestampType())),
     ])
     types4 = [f.dataType.simpleString() for f in schema4.fields]
-    _assert_vec_hash(spark.createDataFrame(rows4, schema4),
-                     F.xxhash64(*[f.name for f in schema4.fields]), types4)
+    assert_xxhash64_parity(
+        spark, spark.createDataFrame(rows4, schema4).toArrow().columns,
+        types4)
 
     # depth-unbounded nesting (late r6): array<array<long>>,
     # array<struct<..array..>>, struct<struct<..>, array<..>> — the
@@ -231,8 +220,9 @@ def test_xxhash64_matches_spark(spark):
             T.StructField("tags", T.ArrayType(T.StringType()))])),
     ])
     types5 = [f.dataType.simpleString() for f in schema5.fields]
-    _assert_vec_hash(spark.createDataFrame(rows5, schema5),
-                     F.xxhash64(*[f.name for f in schema5.fields]), types5)
+    assert_xxhash64_parity(
+        spark, spark.createDataFrame(rows5, schema5).toArrow().columns,
+        types5)
 
     # r7 (judge ADVICE, high): BigInteger.toByteArray byte-LENGTH edges.
     # Unscaled values exactly -2^(8k-1) (-128, -32768, -2^31, -2^63,
@@ -247,8 +237,9 @@ def test_xxhash64_matches_spark(spark):
                           2 ** k8, 2 ** k8 - 1]
     rows6 = [(_dec.Decimal(u).scaleb(-2),) for u in edge_unscaled]
     schema6 = T.StructType([T.StructField("wd2", T.DecimalType(38, 2))])
-    _assert_vec_hash(spark.createDataFrame(rows6, schema6),
-                     F.xxhash64("wd2"), ["decimal(38,2)"])
+    assert_xxhash64_parity(
+        spark, spark.createDataFrame(rows6, schema6).toArrow().columns,
+        ["decimal(38,2)"])
 
     # r7: decimal INSIDE struct/array — `struct<a:decimal(16,2),b:..>`
     # was false-rejected before the _split_top paren fix (the comma in
@@ -266,8 +257,9 @@ def test_xxhash64_matches_spark(spark):
         T.StructField("ad", T.ArrayType(T.DecimalType(16, 2))),
     ])
     types7 = [f.dataType.simpleString() for f in schema7.fields]
-    _assert_vec_hash(spark.createDataFrame(rows7, schema7),
-                     F.xxhash64(*[f.name for f in schema7.fields]), types7)
+    assert_xxhash64_parity(
+        spark, spark.createDataFrame(rows7, schema7).toArrow().columns,
+        types7)
 
 
 def test_xxhash64_matches_spark_on_canonical_maps(spark):
@@ -284,10 +276,7 @@ def test_xxhash64_matches_spark_on_canonical_maps(spark):
     import datetime as _dt
     import decimal as _dec
 
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
-
-    from picsure_dictionary_etl_spark.lake.merge import _canon_col
 
     nan = float("nan")
     rows = [
@@ -309,12 +298,11 @@ def test_xxhash64_matches_spark_on_canonical_maps(spark):
         T.StructField("mm", T.MapType(T.StringType(), T.MapType(
             T.StringType(), T.LongType()))),
     ])
-    df = spark.createDataFrame(rows, schema)
-    canon = [_canon_col(F.col(f.name), f.dataType) for f in schema.fields]
+    tbl = spark.createDataFrame(rows, schema).toArrow()
     types = [f.dataType.simpleString() for f in schema.fields]
-    _assert_vec_hash(df, F.xxhash64(*canon), types)
+    assert_xxhash64_parity(spark, tbl.columns, types)
     # entry-order insensitivity: rows 0 and 1 share m1 content
-    h = _assert_vec_hash(df.select("m1"), F.xxhash64(canon[0]), types[:1])
+    h = assert_xxhash64_parity(spark, [tbl.column("m1")], types[:1])
     assert h[0] == h[1]
 
     # scalar key types beyond string/double: date, decimal, binary,
@@ -334,10 +322,10 @@ def test_xxhash64_matches_spark_on_canonical_maps(spark):
         T.StructField("ko", T.MapType(T.BooleanType(), T.StringType())),
         T.StructField("kt", T.MapType(T.TimestampType(), T.LongType())),
     ])
-    df2 = spark.createDataFrame(rows2, schema2)
-    canon2 = [_canon_col(F.col(f.name), f.dataType) for f in schema2.fields]
     types2 = [f.dataType.simpleString() for f in schema2.fields]
-    _assert_vec_hash(df2, F.xxhash64(*canon2), types2)
+    assert_xxhash64_parity(
+        spark, spark.createDataFrame(rows2, schema2).toArrow().columns,
+        types2)
 
     # maps buried INSIDE arrays and structs (any depth)
     rows3 = [
@@ -352,10 +340,10 @@ def test_xxhash64_matches_spark_on_canonical_maps(spark):
             T.StructField("m", T.MapType(T.StringType(), T.DoubleType())),
             T.StructField("tag", T.StringType())])),
     ])
-    df3 = spark.createDataFrame(rows3, schema3)
-    canon3 = [_canon_col(F.col(f.name), f.dataType) for f in schema3.fields]
     types3 = [f.dataType.simpleString() for f in schema3.fields]
-    _assert_vec_hash(df3, F.xxhash64(*canon3), types3)
+    assert_xxhash64_parity(
+        spark, spark.createDataFrame(rows3, schema3).toArrow().columns,
+        types3)
 
 
 def test_map_hash_property_hypothesis(spark):
@@ -367,10 +355,6 @@ def test_map_hash_property_hypothesis(spark):
     import pyarrow as pa
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from picsure_dictionary_etl_spark.lake.merge import _canon_col
 
     longs = st.one_of(
         st.integers(-(2 ** 63), 2 ** 63 - 1), st.integers(-5, 5))
@@ -381,13 +365,7 @@ def test_map_hash_property_hypothesis(spark):
         max_size=4)
     row = st.tuples(st.one_of(st.none(), m1), st.one_of(st.none(), m2))
 
-    schema = T.StructType([
-        T.StructField("m1", T.MapType(T.StringType(), T.LongType())),
-        T.StructField("m2", T.MapType(
-            T.LongType(), T.ArrayType(T.LongType()))),
-    ])
-    types = [f.dataType.simpleString() for f in schema.fields]
-    canon = [_canon_col(F.col(f.name), f.dataType) for f in schema.fields]
+    types = ["map<string,bigint>", "map<bigint,array<bigint>>"]
     arrow_types = [pa.map_(pa.string(), pa.int64()),
                    pa.map_(pa.int64(), pa.list_(pa.int64()))]
 
@@ -395,18 +373,17 @@ def test_map_hash_property_hypothesis(spark):
     @settings(max_examples=12, deadline=None,
               suppress_health_check=[HealthCheck.too_slow])
     def check(rows, rnd):
-        df = spark.createDataFrame(rows, schema)
-        got = _assert_vec_hash(df, F.xxhash64(*canon), types)
+        entries = [[None if r[j] is None else list(r[j].items()) for r in rows]
+                   for j in range(len(arrow_types))]
+        got = assert_xxhash64_parity(
+            spark, [pa.array(c, t) for c, t in zip(entries, arrow_types)],
+            types)
         # permutation invariance: shuffle each map's entry list
-        shuf = []
-        for j, typ in enumerate(arrow_types):
-            col = []
-            for r in rows:
-                items = None if r[j] is None else list(r[j].items())
+        for col in entries:
+            for items in col:
                 if items:
                     rnd.shuffle(items)
-                col.append(items)
-            shuf.append(pa.array(col, typ))
+        shuf = [pa.array(c, t) for c, t in zip(entries, arrow_types)]
         assert list(spark_xxhash64_vec(shuf, types)) == list(got), rows
 
     check()

@@ -17,6 +17,7 @@ from picsure_dictionary_etl_spark.streaming.cdf_source import (
     _read_bucket,
     _tie_col,
 )
+from tests.hash_parity import assert_xxhash64_parity
 
 KEYS = ["id"]
 
@@ -73,20 +74,6 @@ DTYPES = {"id": "string", "s": "string", "l": "bigint", "d": "double",
 PAYLOAD = ["s", "l", "d", "b", "dt", "ts", "bin", "dec", "wdec"]
 
 
-def _spark_tie(spark, tbl, hash_cols):
-    """The engine's tie hash, ``F.xxhash64(payload..., _op)``, over an
-    arrow table of the same rows (row order kept)."""
-    from pyspark.sql import functions as F
-
-    idx = pa.array(np.arange(tbl.num_rows))
-    df = spark.createDataFrame(tbl.append_column("_i", idx))
-    return pd.Series(
-        df.orderBy("_i").select(F.xxhash64(*hash_cols).alias("h"))
-        .toArrow().column("h").to_numpy(zero_copy_only=False)
-        .astype(np.int64)
-    )
-
-
 def test_vectorized_tie_hash_is_bit_equal_to_scalar_twin(spark):
     """Every flat payload type, all rows tied: `_tie_col` (pandas ->
     arrow -> numpy hash) equals F.xxhash64 on the same values."""
@@ -102,8 +89,9 @@ def test_vectorized_tie_hash_is_bit_equal_to_scalar_twin(spark):
     ])
     tbl = pa.Table.from_pandas(df[PAYLOAD + ["_op"]], schema=schema,
                                preserve_index=False)
-    want = _spark_tie(spark, tbl, PAYLOAD + ["_op"])
-    pd.testing.assert_series_equal(vec, want, check_names=False)
+    want = assert_xxhash64_parity(
+        spark, tbl.columns, [DTYPES[c] for c in PAYLOAD] + ["string"])
+    pd.testing.assert_series_equal(vec, pd.Series(want), check_names=False)
 
 
 def test_no_ties_pays_no_hash():
@@ -120,9 +108,6 @@ def test_nested_payload_falls_back_to_scalar_twin(spark, tmp_path):
     (so `_read_bucket` fills it with an all-None object column) hashes
     as null."""
     import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from picsure_dictionary_etl_spark.lake.merge import _canon_col
 
     n = 60
     typ = pa.map_(pa.string(), pa.int64())
@@ -145,10 +130,10 @@ def test_nested_payload_falls_back_to_scalar_twin(spark, tmp_path):
     df = _read_bucket(str(tmp_path), ["pre.parquet"], cols, dtypes)
     assert df["a"].isna().all()  # the evolution fill
 
-    sdf_types = spark.createDataFrame(tbl.select(["m"])).schema
-    want = _spark_tie(spark, tbl.select(["s", "m", "_op"]), [
-        "s", _canon_col(F.col("m"), sdf_types["m"].dataType),
-        F.lit(None).cast(late), "_op"])
+    late_nulls = pa.nulls(n, pa.list_(pa.struct([("x", pa.int64())])))
+    want = pd.Series(assert_xxhash64_parity(
+        spark, [tbl["s"], tbl["m"], late_nulls, tbl["_op"]],
+        ["string", dtypes["m"], late, "string"]))
 
     tie = df.duplicated(subset=KEYS + ["_lsn"], keep=False)
     assert 0 < int(tie.sum()) < n

@@ -21,35 +21,7 @@ from picsure_dictionary_etl_spark.streaming.xxhash_vec import (
     pmod_buckets,
     spark_xxhash64_vec,
 )
-
-
-def _assert_parity(spark, arrays, dtypes):
-    """``spark_xxhash64_vec`` == ``F.xxhash64`` on the same columns,
-    row by row. Map columns enter Spark's hash as the engine's
-    canonical key-sorted entry arrays (``_canon_col`` — raw MapType is
-    unhashable), the form the tie-break hashes."""
-    from pyspark.sql import functions as F
-
-    from picsure_dictionary_etl_spark.lake.merge import _canon_col
-
-    got = spark_xxhash64_vec(arrays, dtypes)
-    names = [f"c{i}" for i in range(len(arrays))]
-    # Spark gets unsliced copies (its arrow import rejects sliced
-    # nested arrays); the vector path above hashed the inputs as given
-    idx = pa.array(np.arange(len(got)))
-    tbl = pa.table(dict(zip(names, [a.take(idx) for a in arrays]), _i=idx))
-    df = spark.createDataFrame(tbl)
-    by_name = {f.name: f.dataType for f in df.schema.fields}
-    canon = [_canon_col(F.col(c), by_name[c]) for c in names]
-    want = (
-        df.orderBy("_i").select(F.xxhash64(*canon).alias("h")).toArrow()
-        .column("h").to_numpy(zero_copy_only=False).astype(np.int64)
-    )
-    bad = np.flatnonzero(got != want)
-    assert len(bad) == 0, (
-        f"rows {bad[:5]}: "
-        + repr([[a[int(i)].as_py() for a in arrays] for i in bad[:3]])
-    )
+from tests.hash_parity import assert_xxhash64_parity
 
 
 def _nullable(rng, gen, n, p=0.12):
@@ -76,22 +48,22 @@ def test_scalar_parity_per_type(spark):
         ),
         N,
     )
-    _assert_parity(spark, [pa.array(strs, pa.string())], ["string"])
+    assert_xxhash64_parity(spark, [pa.array(strs, pa.string())], ["string"])
 
     longs = _nullable(rng, lambda: rng.randrange(-(2**63), 2**63), N)
-    _assert_parity(spark, [pa.array(longs, pa.int64())], ["long"])
+    assert_xxhash64_parity(spark, [pa.array(longs, pa.int64())], ["long"])
 
     ints = _nullable(rng, lambda: rng.randrange(-(2**31), 2**31), N)
-    _assert_parity(spark, [pa.array(ints, pa.int32())], ["integer"])
+    assert_xxhash64_parity(spark, [pa.array(ints, pa.int32())], ["integer"])
 
     shorts = _nullable(rng, lambda: rng.randrange(-(2**15), 2**15), N)
-    _assert_parity(spark, [pa.array(shorts, pa.int16())], ["short"])
+    assert_xxhash64_parity(spark, [pa.array(shorts, pa.int16())], ["short"])
 
     tiny = _nullable(rng, lambda: rng.randrange(-128, 128), N)
-    _assert_parity(spark, [pa.array(tiny, pa.int8())], ["byte"])
+    assert_xxhash64_parity(spark, [pa.array(tiny, pa.int8())], ["byte"])
 
     bools = _nullable(rng, lambda: rng.random() < 0.5, N)
-    _assert_parity(spark, [pa.array(bools, pa.bool_())], ["boolean"])
+    assert_xxhash64_parity(spark, [pa.array(bools, pa.bool_())], ["boolean"])
 
     # doubles: -0.0 normalization, NaN collapse, infinities
     dbls = _nullable(
@@ -102,7 +74,7 @@ def test_scalar_parity_per_type(spark):
         ),
         N,
     )
-    _assert_parity(spark, [pa.array(dbls, pa.float64())], ["double"])
+    assert_xxhash64_parity(spark, [pa.array(dbls, pa.float64())], ["double"])
 
     flts = [
         None if v is None else struct.unpack("<f", struct.pack("<f", v))[0]
@@ -114,14 +86,14 @@ def test_scalar_parity_per_type(spark):
             N,
         )
     ]
-    _assert_parity(spark, [pa.array(flts, pa.float32())], ["float"])
+    assert_xxhash64_parity(spark, [pa.array(flts, pa.float32())], ["float"])
 
     bins = _nullable(
         rng,
         lambda: bytes(rng.randrange(256) for _ in range(rng.randrange(0, 70))),
         N,
     )
-    _assert_parity(spark, [pa.array(bins, pa.binary())], ["binary"])
+    assert_xxhash64_parity(spark, [pa.array(bins, pa.binary())], ["binary"])
 
     import pandas as pd
 
@@ -130,7 +102,7 @@ def test_scalar_parity_per_type(spark):
         lambda: pd.Timestamp(rng.randrange(0, 2**41), unit="us", tz="UTC"),
         N,
     )
-    _assert_parity(
+    assert_xxhash64_parity(
         spark, [pa.array(tss, pa.timestamp("us", tz="UTC"))], ["timestamp"]
     )
 
@@ -140,14 +112,14 @@ def test_scalar_parity_per_type(spark):
         + datetime.timedelta(days=rng.randrange(-25000, 25000)),
         N,
     )
-    _assert_parity(spark, [pa.array(dates, pa.date32())], ["date"])
+    assert_xxhash64_parity(spark, [pa.array(dates, pa.date32())], ["date"])
 
     decs = _nullable(
         rng,
         lambda: decimal.Decimal(rng.randrange(-(10**17), 10**17)).scaleb(-2),
         N,
     )
-    _assert_parity(
+    assert_xxhash64_parity(
         spark, [pa.array(decs, pa.decimal128(18, 2))], ["decimal(18,2)"]
     )
 
@@ -166,9 +138,10 @@ def test_scalar_parity_chained_and_sliced(spark):
         pa.array(ints, pa.int32()),
     ]
     dtypes = ["string", "long", "integer"]
-    _assert_parity(spark, arrays, dtypes)
+    assert_xxhash64_parity(spark, arrays, dtypes)
     lo, hi = 113, 1113
-    _assert_parity(spark, [a.slice(lo, hi - lo) for a in arrays], dtypes)
+    assert_xxhash64_parity(
+        spark, [a.slice(lo, hi - lo) for a in arrays], dtypes)
 
 
 def test_nested_parity(spark):
@@ -231,13 +204,14 @@ def test_nested_parity(spark):
     ]
     for typ, dtype, gen in cols:
         arr = pa.array([gen() for _ in range(n)], typ)
-        _assert_parity(spark, [arr], [dtype])
-        _assert_parity(spark, [arr.slice(37, 400)], [dtype])
+        assert_xxhash64_parity(spark, [arr], [dtype])
+        assert_xxhash64_parity(spark, [arr.slice(37, 400)], [dtype])
     # every nested family chained in one hash, sliced together
     arrays = [pa.array([gen() for _ in range(n)], typ) for typ, _, gen in cols]
     dtypes = [d for _, d, _ in cols]
-    _assert_parity(spark, arrays, dtypes)
-    _assert_parity(spark, [a.slice(101, 333) for a in arrays], dtypes)
+    assert_xxhash64_parity(spark, arrays, dtypes)
+    assert_xxhash64_parity(
+        spark, [a.slice(101, 333) for a in arrays], dtypes)
 
 
 def test_all_null_column_leaves_hash_unchanged():
@@ -276,18 +250,18 @@ def test_wide_decimal_parity(spark):
         lambda: decimal.Decimal(rng.randrange(-(10**35), 10**35)).scaleb(-2),
         600,
     )
-    _assert_parity(
+    assert_xxhash64_parity(
         spark, [pa.array(vals, pa.decimal128(38, 2))], ["decimal(38,2)"]
     )
     # sliced + a second wide precision (different scale)
     arr = pa.array(vals, pa.decimal128(38, 2)).slice(7, 500)
-    _assert_parity(spark, [arr], ["decimal(38,2)"])
+    assert_xxhash64_parity(spark, [arr], ["decimal(38,2)"])
     v30 = _nullable(
         rng,
         lambda: decimal.Decimal(rng.randrange(-(10**26), 10**26)).scaleb(-4),
         400,
     )
-    _assert_parity(
+    assert_xxhash64_parity(
         spark, [pa.array(v30, pa.decimal128(30, 4))], ["decimal(30,4)"]
     )
 
