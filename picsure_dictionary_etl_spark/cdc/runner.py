@@ -274,7 +274,7 @@ class CdcRunner:
         Merge-on-read resolution: LWW across base+delta files, tombstones
         dropped — idempotent on copy-on-write/compacted data. Tables
         holding field-wise (``_pu``-tagged) deltas resolve with the
-        mixed field-wise reduce under the committed ``update_policy``."""
+        mixed field-wise reduce."""
         snap = self.table.current()
         keys = snap.key_cols
         from picsure_dictionary_etl_spark.lake.merge import (
@@ -285,10 +285,7 @@ class CdcRunner:
 
         payload = _payload_cols(snap)
         raw = _read_raw(self.table, snap, keys, payload, rel_files=snap.all_files())
-        live = resolve_live(
-            raw, keys, payload,
-            policy=snap.properties.get("update_policy", "row"), schema=snap.schema,
-        )
+        live = resolve_live(raw, keys, payload, schema=snap.schema)
         return live.select(*keys, *payload)
 
     def conversation(self, conv_id: str) -> DataFrame:
@@ -307,10 +304,7 @@ class CdcRunner:
             self.table, snap, snap.key_cols, payload,
             df=self.table.read_keys([conv_id], snap),
         )
-        live = resolve_live(
-            raw, snap.key_cols, payload,
-            policy=snap.properties.get("update_policy", "row"), schema=snap.schema,
-        )
+        live = resolve_live(raw, snap.key_cols, payload, schema=snap.schema)
         return live.select(*snap.key_cols, *payload).orderBy("turn_idx")
 
     # ---------- internals ----------

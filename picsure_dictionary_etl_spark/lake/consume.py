@@ -5,14 +5,17 @@ incremental consumer reads only what changed).
 
 A :class:`ChangeFeedConsumer` tails a LakeTable's committed snapshots:
 each :meth:`poll` returns the classified diff (``_change ∈ I/U/D``,
-via :func:`~.merge.table_changes` — O(changed buckets), never
-O(table)) between the last ACKNOWLEDGED version and the current one.
-The consumer acks AFTER durably applying the batch; a crash between
-poll and ack simply re-delivers the same deterministic diff
-(at-least-once delivery, idempotent by construction: the diff between
-two fixed versions is a pure function of the manifests, and applying a
-state diff as a patch is idempotent — see
-tests/test_table_changes.py::test_state_diff_patch_property).
+via :func:`~.merge.table_changes` — the ``lake_cdf`` executor kernel,
+O(changed buckets), never O(table)) between the last ACKNOWLEDGED
+version and the current one; a first poll whose base is vacuumed
+bootstraps from the empty table (the full live state as ``I`` rows).
+D rows carry the deleted row's preimage ``_lsn`` (see
+``table_changes``). The consumer acks AFTER durably applying the
+batch; a crash between poll and ack simply re-delivers the same
+deterministic diff (at-least-once delivery, idempotent by
+construction: the diff between two fixed versions is a pure function
+of the manifests, and applying a state diff as a patch is idempotent —
+see tests/test_table_changes.py::test_state_diff_patch_property).
 
 The checkpoint is one small text object behind the same
 :class:`~.metadata_io.MetadataIO` protocol as the table's commit point
@@ -26,14 +29,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-from pyspark.sql import functions as F
-
-from picsure_dictionary_etl_spark.lake.merge import (
-    LSN_COL,
-    _payload_cols,
-    resolve_live,
-    table_changes,
-)
+from picsure_dictionary_etl_spark.lake.merge import table_changes
 from picsure_dictionary_etl_spark.lake.metadata_io import MetadataIO
 from picsure_dictionary_etl_spark.lake.table import LakeTable
 
@@ -117,30 +113,18 @@ class ChangeFeedConsumer:
         cur = self.table.current_version()
         if cur <= last:
             return None
+        base = last
         try:
             self.table.snapshot(last)
         except FileNotFoundError:
-            if last == self.start_version == 0:
-                return ChangeBatch(self, self._bootstrap_df(), last, cur)
-            raise ChangeFeedRetentionError(
-                f"acked version {last} of {self.table.root} is beyond snapshot "
-                f"retention (oldest manifests vacuumed); re-bootstrap with a "
-                f"fresh checkpoint or raise vacuum keep_snapshots"
-            ) from None
-        return ChangeBatch(self, table_changes(self.table, last, cur), last, cur)
-
-    def _bootstrap_df(self):
-        """Full live state classified as inserts — schema-identical to
-        a :func:`~.merge.table_changes` diff from the empty table."""
-        snap = self.table.current()
-        keys, payload = snap.key_cols, _payload_cols(snap)
-        live = resolve_live(
-            self.table.read(), keys, payload,
-            policy=snap.properties.get("update_policy", "row"), schema=snap.schema,
-        )
-        return live.select(
-            F.lit("I").alias("_change"), *keys, *payload, F.col(LSN_COL)
-        )
+            if not last == self.start_version == 0:
+                raise ChangeFeedRetentionError(
+                    f"acked version {last} of {self.table.root} is beyond snapshot "
+                    f"retention (oldest manifests vacuumed); re-bootstrap with a "
+                    f"fresh checkpoint or raise vacuum keep_snapshots"
+                ) from None
+            base = -1  # nothing applied yet: bootstrap from the empty table
+        return ChangeBatch(self, table_changes(self.table, base, cur), last, cur)
 
     def consume(self, apply_fn, max_batches: int | None = None) -> int:
         """Drain loop: poll → ``apply_fn(df, from_v, to_v)`` → ack,

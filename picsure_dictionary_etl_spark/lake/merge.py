@@ -223,7 +223,6 @@ def resolve_live(
     df: DataFrame,
     key_cols: list[str],
     payload_cols: list[str],
-    policy: str = "row",
     schema=None,
 ) -> DataFrame:
     """Merge-on-read resolution: LWW across base+delta rows, tombstones
@@ -241,9 +240,8 @@ def resolve_live(
     stored, so a blank string found in a stored partial delta was
     SPECIFIED by a coalesce batch and must stay specified even if the
     table's latest batch policy is blank_preserve (otherwise an older
-    value resurrects over the committed blank). ``policy`` stays in the
-    signature for callers that thread table properties through; it no
-    longer alters the read-time rule."""
+    value resurrects over the committed blank). The table's
+    ``update_policy`` property therefore plays no part in reads."""
     if PU_COL in df.columns:
         out = lww_winners_fieldwise(
             df, key_cols, payload_cols,
@@ -448,12 +446,6 @@ def merge_into(
             snap = table.evolve_schema(need)
     keys = snap.key_cols
     payload = _payload_cols(snap)
-    # read-time resolution policy: the latest non-row policy sticks
-    resolve_policy = (
-        update_policy
-        if update_policy != "row"
-        else snap.properties.get("update_policy", "row")
-    )
 
     src_cols = set(source.columns)
     aligned = source.select(
@@ -534,13 +526,11 @@ def merge_into(
         appends, replaces, compacted = _cow_write(
             table, snap, winners, keys, payload, salt, version,
             update_policy=update_policy, matched_only=matched_only,
-            resolve_policy=resolve_policy,
         )
     elif mode == "mor":
         appends, replaces, compacted, sizes_hint = _mor_write(
             table, snap, winners, keys, payload, salt, version, compact_threshold,
             write_repartition=bool(salt) or combine_first,
-            resolve_policy=resolve_policy,
             compact_target_bytes=compact_target_bytes,
         )
     else:
@@ -616,7 +606,7 @@ def _read_raw(table, snap, keys, payload, rel_files=None, bucket_ids=None, df=No
 
 def _cow_write(
     table, snap, winners, keys, payload, salt, version,
-    update_policy="row", matched_only=False, resolve_policy="row",
+    update_policy="row", matched_only=False,
 ):
     """Copy-on-write: union touched buckets with winners, re-reduce,
     rewrite those buckets.
@@ -642,9 +632,7 @@ def _cow_write(
     target = _read_raw(table, snap, keys, payload, bucket_ids=changed)
     src = winners.drop(BUCKET_COL)
     if matched_only:
-        live_keys = resolve_live(
-            target, keys, payload, policy=resolve_policy, schema=snap.schema
-        ).select(*keys)
+        live_keys = resolve_live(target, keys, payload, schema=snap.schema).select(*keys)
         src = src.join(live_keys, keys, "left_semi")
     fieldwise = update_policy != "row" or PU_COL in target.columns
     if fieldwise:
@@ -660,9 +648,7 @@ def _cow_write(
                     F.lit(update_policy != "row" if c == PU_COL else None).cast(dtype),
                 )
     combined = target.unionByName(src)
-    live = resolve_live(
-        combined, keys, payload, policy=resolve_policy, schema=snap.schema
-    )
+    live = resolve_live(combined, keys, payload, schema=snap.schema)
     live = live.withColumn(BUCKET_COL, bucket_expr(snap.bucket_by, snap.bucket_count))
     # every CHANGED bucket must be replaced even when it resolved to
     # ZERO live rows (a batch that deletes a bucket's last keys): the
@@ -747,7 +733,7 @@ def _bucket_file_bytes(
 
 def _mor_write(
     table, snap, winners, keys, payload, salt, version, threshold,
-    write_repartition=False, resolve_policy="row",
+    write_repartition=False,
     compact_target_bytes: int = 64 * 1024 * 1024,
 ):
     """Merge-on-read: ONE pass over the batch — winner rows (including
@@ -803,7 +789,7 @@ def _mor_write(
         rel_files += [f for b in to_compact for f in appends[str(b)]]
         base = _read_raw(table, snap, keys, payload, rel_files=rel_files)
         live = (
-            resolve_live(base, keys, payload, policy=resolve_policy, schema=snap.schema)
+            resolve_live(base, keys, payload, schema=snap.schema)
             .withColumn(BUCKET_COL, bucket_expr(snap.bucket_by, snap.bucket_count))
         )
         # same zero-live-rows guard as the COW path: a compacted bucket
@@ -925,10 +911,9 @@ def optimize(
         return None
     rel_files = [f for b in to_compact for f in snap.files[str(b)]]
     raw = _read_raw(table, snap, keys, payload, rel_files=rel_files)
-    live = resolve_live(
-        raw, keys, payload,
-        policy=snap.properties.get("update_policy", "row"), schema=snap.schema,
-    ).withColumn(BUCKET_COL, bucket_expr(snap.bucket_by, snap.bucket_count))
+    live = resolve_live(raw, keys, payload, schema=snap.schema).withColumn(
+        BUCKET_COL, bucket_expr(snap.bucket_by, snap.bucket_count)
+    )
     version = snap.version + 1
     replaces = {str(b): [] for b in to_compact}
     replaces.update(
@@ -970,10 +955,9 @@ def rebucket(table: LakeTable, new_bucket_count: int) -> "Snapshot":
         raise ValueError(f"bucket_count must be >= 1, got {new_bucket_count}")
     keys, payload = snap.key_cols, _payload_cols(snap)
     raw = _read_raw(table, snap, keys, payload, rel_files=snap.all_files())
-    live = resolve_live(
-        raw, keys, payload,
-        policy=snap.properties.get("update_policy", "row"), schema=snap.schema,
-    ).withColumn(BUCKET_COL, bucket_expr(snap.bucket_by, new_bucket_count))
+    live = resolve_live(raw, keys, payload, schema=snap.schema).withColumn(
+        BUCKET_COL, bucket_expr(snap.bucket_by, new_bucket_count)
+    )
     version = snap.version + 1
     replaces = {b: [] for b in snap.files}
     replaces.update(
@@ -1001,7 +985,9 @@ def table_changes(
     analog): one row per key whose live state differs, classified
     ``_change ∈ I/U/D``, carrying the new row for I/U and the old key
     for D. Downstream consumers chain incremental pipelines off this
-    instead of re-reading the table.
+    instead of re-reading the table. ``from_version=-1`` is the empty
+    table: the feed is then the full live state at ``to_version`` as
+    ``I`` rows (a consumer's bootstrap).
 
     D rows carry the DELETED row's last live ``_lsn`` (the preimage,
     Delta-style) — the tombstone's own LSN is not in the live state.
@@ -1013,58 +999,32 @@ def table_changes(
     follows, so an equal-LSN D is necessarily the logically-later
     change. (Exercised end to end by BENCH/stream_soak.py.)
 
-    Plan shape — O(change), not O(table): data files are immutable and
-    keys can never move buckets (bucket id is a pure hash of the
-    bucket_by columns and bucket_count is commit-invariant), so a
-    bucket's resolved live state can only differ between two versions
-    if its manifest FILE LIST differs. The changed-bucket set therefore
-    falls out of a metadata-only manifest diff; both sides then resolve
-    and full-outer-join ONLY those buckets' files. A commit that touched
-    1 of 1024 buckets on a 10^9-row table diffs 1 bucket, not the table.
-    Unchanged buckets are no-ops by construction and are never read.
-    Additive schema evolution is change-free for untouched buckets: the
-    added column reads null on BOTH sides of the diff. The one
-    resolution input that isn't per-bucket is the table's update_policy
-    property — if it differs between the versions the same bytes may
-    resolve differently, so that (rare, config-level) case falls back
-    to diffing every bucket."""
-    snap_from = table.snapshot(from_version)
-    snap_to = table.snapshot(to_version)
-    keys = snap_to.key_cols
-    payload = _payload_cols(snap_to)
-
-    pol_from = snap_from.properties.get("update_policy", "row")
-    pol_to = snap_to.properties.get("update_policy", "row")
-    same_layout = (
-        snap_from.bucket_count == snap_to.bucket_count
-        and snap_from.bucket_by == snap_to.bucket_by
+    Runs on the ``lake_cdf`` executor kernel (``streaming/cdf_source``),
+    the one change-feed implementation, through ``mapInArrow``. Both
+    manifests load through the table's own MetadataIO. Planning is
+    metadata-only: data files are immutable and keys never move buckets
+    within a layout, so only buckets whose manifest FILE LIST differs
+    become tasks; a span across a rebucket collapses to ONE global task.
+    Columns added by schema evolution read null on the older side.
+    Unsupported column types and map-typed keys fail typed here."""
+    from picsure_dictionary_etl_spark.streaming.cdf_source import (
+        _plan_cols,
+        _read_span_partition,
+        _span_tasks,
     )
-    if pol_from == pol_to and same_layout:
-        changed = sorted(
-            b
-            for b in set(snap_from.files) | set(snap_to.files)
-            if snap_from.files.get(b) != snap_to.files.get(b)
-        )
-    else:
-        # resolution policy or bucket layout differs across the span
-        # (rebucket writes all-new files so the metadata diff would
-        # already flag everything — this guard makes it an invariant,
-        # not a coincidence)
-        changed = sorted(set(snap_from.files) | set(snap_to.files))
 
-    def live(snap, policy: str) -> DataFrame:
-        names = {f.name for f in snap.schema.fields}
-        present = [c for c in payload if c in names]
-        rel = [f for b in changed for f in snap.files.get(b, [])]
-        df = _read_raw(table, snap, keys, present, rel_files=rel)
-        # columns added by later (additive) schema evolution read as
-        # null in the older snapshot — diff-able by definition
-        for c in payload:
-            if c not in names:
-                df = df.withColumn(c, F.lit(None).cast(snap_to.schema[c].dataType))
-        return resolve_live(df, keys, payload, policy=policy, schema=snap_to.schema)
+    snap_to = table.snapshot(to_version)
+    snap_from = None if from_version < 0 else table.snapshot(from_version)
+    keys, payload, dtypes, out_schema = _plan_cols(snap_to)
+    tasks = _span_tasks(table.root, keys, payload, dtypes, snap_from, snap_to)
 
-    return state_diff(live(snap_from, pol_from), live(snap_to, pol_to), keys, payload)
+    def run(batches):
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                yield from _read_span_partition(tasks[i], out_schema)
+
+    n = len(tasks)
+    return table.spark.range(n, numPartitions=max(n, 1)).mapInArrow(run, out_schema)
 
 
 def state_diff(
@@ -1073,8 +1033,9 @@ def state_diff(
     """Classify the difference between two resolved live states (one
     row per key, ``_lsn`` carried): one full outer join on the keys,
     ``_change ∈ I/U/D`` from null-sides and a per-row payload-hash
-    comparison — no window, no collect. The reusable half of
-    :func:`table_changes` (also exposed as a driver-oracled query)."""
+    comparison — no window, no collect. Diffs plain DataFrames (the
+    ``cdc_change_feed`` driver query uses it); table feeds run on
+    :func:`table_changes`' executor kernel."""
 
     def digest(col, dt) -> "F.Column":
         # one 32-char md5 per value, '-' for null (md5 hex never

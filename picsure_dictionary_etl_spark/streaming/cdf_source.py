@@ -1,86 +1,53 @@
-"""Structured-Streaming source for the lake's change data feed.
+"""The lake's change-feed kernel, and the ``lake_cdf`` data source on it.
 
-Registers a PySpark 4 Python DataSource (``lake_cdf``) so the change
-feed is a FIRST-CLASS stream — checkpointed offsets, triggers,
-``availableNow`` catch-up — instead of the hand-rolled poll/ack loop of
-:class:`~picsure_dictionary_etl_spark.lake.consume.ChangeFeedConsumer`::
+One implementation serves every feed reader: :func:`_span_tasks` plans
+a change span and :func:`_read_span_partition` resolves and diffs one
+task in a Python worker. :func:`~..lake.merge.table_changes` (and the
+:class:`~..lake.consume.ChangeFeedConsumer` on it) runs the tasks
+through ``mapInArrow``; the PySpark 4 Python DataSource ``lake_cdf``
+runs them as a stream (checkpointed offsets, triggers, pacing) or as a
+bounded batch read::
 
     spark.dataSource.register(LakeChangeFeedDataSource)
     (spark.readStream.format("lake_cdf").option("path", table_root).load()
           .writeStream...)
 
-Scale design (mirrors :func:`~..lake.merge.table_changes` exactly):
+* **Offsets are table versions**; planning is metadata-only: only
+  buckets whose manifest FILE LISTS differ become tasks (a commit
+  touching 1 of 1024 buckets plans 1 task). A span across a rebucket
+  collapses to one global task.
+* **Each task reads only its bucket's files** (old + new list) with
+  pyarrow, resolves both sides and diffs them vectorized (pandas/numpy
+  masks over an index-only key join), and yields ``pyarrow.RecordBatch``
+  chunks — a columnar pipeline end to end, no driver collects.
+* **LWW parity is bit-exact**: rows order by ``(_lsn, xxhash64(payload
+  ..., _op))`` with :mod:`.xxhash_vec`'s XXH64, hashed only inside
+  equal-LSN tie groups, so ties pick the winner the engine's merge and
+  compaction pick. Field-wise (``_pu``) tables resolve with the
+  full-row marker rules of :func:`~..lake.merge.lww_winners_fieldwise`.
+* **Nested (array/struct) keys** sort, group and join as their
+  :func:`~.xxhash_vec._order_rank` code (Spark's ordering) and are
+  emitted as stored. Map-typed keys, which Spark cannot group either,
+  and types outside :func:`~.xxhash_vec._type_supported` fail typed at
+  plan time.
+* **Value semantics match ``state_diff``**: NaN is a value (NaN==NaN
+  unchanged, NULL<->NaN a change), maps compare as their canonical
+  key-sorted entry arrays, arrays and structs element- and field-wise.
+* **Roots**: plain paths read POSIX; URI roots read through
+  ``pyarrow.fs`` (the workers have no JVM); unresolvable schemes fail
+  typed at plan time. ``table_changes`` loads its manifests through the
+  table's own MetadataIO, so any commit point has a feed.
+* **Bootstrap**: ``.option("initialsnapshot", "true")`` (or
+  ``table_changes(t, -1, v)``) diffs from the EMPTY table, so the first
+  span is the full resolved state as ``I`` rows — the only sound start
+  for a table whose early history is vacuumed. It is never paced:
+  ``diff(EMPTY, v_k)`` is right at any first-span end ``k``.
+* **D rows carry the deleted row's preimage ``_lsn``** (the contract on
+  ``table_changes``): a consumer folding the feed lets D win equal-LSN
+  ties.
 
-* **Offsets are table versions** — tiny dict checkpoints, replayable.
-* **Planning is metadata-only** — ``partitions(start, end)`` diffs the
-  two manifests' per-bucket FILE LISTS; only buckets whose lists differ
-  become input partitions. A commit touching 1 of 1024 buckets streams
-  1 partition, not the table.
-* **Executors read only that bucket's files** (old + new list) via
-  pyarrow — no Spark-in-Spark, no driver collects; per-bucket work is
-  bounded by bucket sizing exactly like the batch CDF.
-* **The resolve AND the diff are vectorized** (pandas/numpy column
-  masks, no per-row Python), and ``read()`` yields
-  ``pyarrow.RecordBatch`` chunks — the worker forwards them to the JVM
-  without the tuple-at-a-time conversion path, so a hot bucket with
-  millions of resolved rows stays a columnar pipeline end to end.
-* **LWW parity is bit-exact**: the per-bucket resolve orders rows by
-  ``(_lsn, xxhash64(payload..., _op))`` using the column-wise numpy
-  XXH64 of :mod:`.xxhash_vec` (verified against ``F.xxhash64`` in
-  tests), so equal-LSN ties pick the SAME winner the engine does —
-  never bare-LSN ordering (the r3 determinism rule). The tie hash runs
-  only inside equal-LSN tie groups.
-* **NaN is a value, null is null** for double payloads, end to end: the
-  bucket read materializes pandas *nullable* dtypes (parquet NULL ->
-  ``pd.NA`` mask, stored NaN stays a float value), the diff compares
-  NaN==NaN as unchanged and NULL<->NaN as a change, and the arrow
-  output batch carries the NaN through — matching both
-  ``F.xxhash64``'s NaN-is-a-value convention and ``state_diff``'s
-  string-cast comparison (``'NaN' != NULL``).
-* **URI roots stream too**: metadata and bucket reads route through
-  ``pyarrow.fs`` (``file:``/``s3:``/``hdfs:``... — whatever
-  ``FileSystem.from_uri`` resolves) because datasource callbacks run in
-  plain Python workers with no JVM for Hadoop FileSystems; plain paths
-  keep the POSIX fast path. Unresolvable schemes raise a typed
-  NotImplementedError at plan time.
-* **Initial-snapshot bootstrap**: ``.option("initialsnapshot",
-  "true")`` makes the first micro-batch deliver the table's full
-  resolved state as ``I`` rows (old side = EMPTY) and subsequent
-  batches stream incrementally — the Delta initial-snapshot analog,
-  and the only sound way to bootstrap a consumer of a table whose
-  early history is vacuumed (``startversion=0`` raises
-  ChangeFeedRetentionError; the oldest RETAINED version would silently
-  miss keys last touched before it). The bootstrap span is never
-  paced: intermediate versions may not exist, and ``diff(EMPTY, v_k)``
-  is the full state at whatever ``k`` the first trigger picks.
-* **Field-wise (``_pu``) tables resolve natively**: the pandas twin of
-  :func:`~..lake.merge.lww_winners_fieldwise` applies the full-row
-  marker rules (full rows specify EVERY field at their LSN, nulls
-  included; partial rows only their non-null fields; tombstones reset
-  the field clock via ``_del_lsn``) so ``partial_update_*`` tables get
-  the same streaming surface as row-policy ones.
-
-Remaining v1 seams (typed errors at PLAN time, never silent
-wrongness): payload/key column types outside the xxhash64 surface
-(:func:`~.xxhash_vec._type_supported`) — that surface includes float,
-date, binary, ``decimal(p,s)`` at ANY precision (p<=18 hashes the
-unscaled LONG, wider the ``BigInteger.toByteArray`` twos-complement
-bytes — both Spark-bit-equal), ``timestamp_ntz``, and
-``array``/``struct``/``map`` nesting at ANY depth over the FULL scalar
-set (element-chained hashing with null-skip, recursive vectorized
-element-wise diff; maps hash/compare as their canonical KEY-SORTED
-entry arrays — the engine's ``_canon_col`` rewrite, since Spark's raw
-``xxhash64`` rejects MapType) alongside the original
-string/int/long/bool/timestamp/double — so what's left is map KEYS
-that are themselves nested (the canonical entry sort needs a scalar
-ordering) and nested KEY columns (the key join factorizes scalar
-values) — rejected when the stream is planned; and a
-caller-supplied ``.schema(...)`` must match the source schema exactly
-(a reordered payload would silently change the equal-LSN tie-break
-hash order). Non-UTF-8 BINARY payloads diff correctly in both planes:
-the batch ``state_diff`` hashes binary columns natively (a
-``cast('string')`` comparison would collapse distinct non-UTF-8
-payloads to one replacement-char string).
+A caller-supplied ``.schema(...)`` must match the source schema exactly
+(payload order pins the tie-break hash order).
 
 Reference analog: the reference's consumers re-read whole Postgres
 tables after every load (README.md:247-260); this streams only the
@@ -101,11 +68,15 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from picsure_dictionary_etl_spark.lake.fs import arrow_fs_and_base
+from picsure_dictionary_etl_spark.lake.merge import _payload_cols, _system_extras
 from picsure_dictionary_etl_spark.lake.table import META_DIR, VERSION_FILE, Snapshot
 from picsure_dictionary_etl_spark.streaming.xxhash_vec import (
     SUPPORTED_TYPES,
     _canon_map_arrow,
     _map_entries_td,
+    _order_rank,
+    _orderable,
     _parse_type,
     _type_supported,
     spark_xxhash64_vec,
@@ -118,25 +89,8 @@ from picsure_dictionary_etl_spark.streaming.xxhash_vec import (
 # ---------------------------------------------------------------------------
 
 
-def _fs_and_base(root: str):
-    """(pyarrow FileSystem or None, base path). None = plain local path
-    (POSIX fast path, no pyarrow.fs indirection). Resolution lives in
-    ONE place — :func:`~..lake.fs.arrow_fs_and_base` — so the source,
-    the sink, and the JVM-less data plane map a root identically; this
-    wrapper only adds the lake_cdf fallback hint to the typed seam."""
-    from picsure_dictionary_etl_spark.lake.fs import arrow_fs_and_base
-
-    try:
-        return arrow_fs_and_base(root)
-    except NotImplementedError as e:
-        raise NotImplementedError(
-            f"lake_cdf: {e}; use ChangeFeedConsumer/table_changes on "
-            "this scheme"
-        ) from None
-
-
 def _read_text(root: str, *rel: str) -> str:
-    fs, base = _fs_and_base(root)
+    fs, base = arrow_fs_and_base(root)
     if fs is None:
         # local plane rides the engine's MetadataIO (never bare open()
         # under _meta — CLAUDE.md rule)
@@ -200,7 +154,7 @@ def _read_bucket(root: str, rel_files: list[str], cols: list[str], dtypes):
         ):
             return pd.ArrowDtype(t)
         return None
-    fs, base = _fs_and_base(root)
+    fs, base = arrow_fs_and_base(root)
     frames = []
     for rel in rel_files:
         if fs is None:
@@ -252,6 +206,19 @@ def _tie_arrow(s, t: str):
     return pa.array(s, type=flat[td[1]])
 
 
+def _key_codes(df, keys: list[str], dtypes):
+    """``(df, sort_keys)``: the frame with one int64 ``_order_rank``
+    code column per nested (array/struct) key, and the key names to
+    sort, group and deduplicate on — the code stands in for the nested
+    key, whose original column is still what gets emitted."""
+    tds = {k: _parse_type(dtypes.get(k, "string")) for k in keys}
+    nested = [k for k in keys if tds[k][0] in ("array", "struct")]
+    if not nested:
+        return df, keys
+    codes = {f"_rk_{k}": _order_rank(_as_arrow(df[k], None), tds[k]) for k in nested}
+    return df.assign(**codes), [f"_rk_{k}" if k in nested else k for k in keys]
+
+
 def _tie_col(df, keys: list[str], payload: list[str], dtypes):
     """int64 Series: xxhash64(payload..., _op) for rows inside
     (keys,_lsn)-duplicated tie groups, 0 elsewhere — the deterministic
@@ -282,11 +249,11 @@ def _resolve_live_pd(df, keys: list[str], payload: list[str], dtypes,
     out_cols = keys + payload + ["_lsn"] + (["_op"] if keep_op else [])
     if df.empty:
         return df.iloc[0:0].reindex(columns=out_cols)
-    df = df.reset_index(drop=True)
-    df = df.assign(_tie=_tie_col(df, keys, payload, dtypes)).sort_values(
-        keys + ["_lsn", "_tie"], kind="stable"
+    df, sk = _key_codes(df.reset_index(drop=True), keys, dtypes)
+    df = df.assign(_tie=_tie_col(df, sk, payload, dtypes)).sort_values(
+        sk + ["_lsn", "_tie"], kind="stable"
     )
-    win = df.groupby(keys, as_index=False, sort=False, dropna=False).tail(1)
+    win = df.groupby(sk, as_index=False, sort=False, dropna=False).tail(1)
     live = win[win["_op"] != "D"]
     return live[out_cols].reset_index(drop=True)
 
@@ -312,11 +279,11 @@ def _resolve_live_pd_fieldwise(df, keys: list[str], payload: list[str], dtypes,
     out_cols = keys + payload + ["_lsn"] + (["_op"] if keep_op else [])
     if df.empty:
         return df.iloc[0:0].reindex(columns=out_cols)
-    df = df.reset_index(drop=True)
-    s = df.assign(_tie=_tie_col(df, keys, payload, dtypes)).sort_values(
-        keys + ["_lsn", "_tie"], kind="stable"
+    df, sk = _key_codes(df.reset_index(drop=True), keys, dtypes)
+    s = df.assign(_tie=_tie_col(df, sk, payload, dtypes)).sort_values(
+        sk + ["_lsn", "_tie"], kind="stable"
     ).reset_index(drop=True)
-    gid = s.groupby(keys, sort=False, dropna=False).ngroup().to_numpy()
+    gid = s.groupby(sk, sort=False, dropna=False).ngroup().to_numpy()
     n = len(s)
     seq = np.arange(n, dtype=np.int64)
     starts = np.flatnonzero(np.r_[True, gid[1:] != gid[:-1]])
@@ -406,12 +373,6 @@ def _arrow_elem_same(vo, vn, td):
     return (eno & enn) | (~eno & ~enn & eq)
 
 
-def _nested_col_same(o, n, td, pa_type):
-    """Vectorized 'unchanged' mask for nested (array/struct) pandas
-    columns: unwrap to arrow, then :func:`_arrow_nested_same`."""
-    return _arrow_nested_same(_as_arrow(o, pa_type), _as_arrow(n, pa_type), td)
-
-
 def _arrow_nested_same(ao, an, td):
     """Vectorized 'unchanged' mask for nested arrow arrays, ANY depth
     (mutual recursion with :func:`_arrow_elem_same`).
@@ -429,7 +390,7 @@ def _arrow_nested_same(ao, an, td):
 
     if td[0] == "map":
         return _arrow_nested_same(
-            _canon_map_arrow(ao), _canon_map_arrow(an), _map_entries_td(td)
+            _canon_map_arrow(ao, td), _canon_map_arrow(an, td), _map_entries_td(td)
         )
     na_o = pc.is_null(ao).to_numpy(zero_copy_only=False)
     na_n = pc.is_null(an).to_numpy(zero_copy_only=False)
@@ -483,7 +444,7 @@ def _col_same(o, n, t: str, pa_type=None):
 
     td = _parse_type(t)
     if td[0] in ("array", "struct", "map"):
-        return _nested_col_same(o, n, td, pa_type)
+        return _arrow_nested_same(_as_arrow(o, pa_type), _as_arrow(n, pa_type), td)
     na_o = o.isna().to_numpy(dtype=bool)
     na_n = n.isna().to_numpy(dtype=bool)
     if t in ("double", "float"):
@@ -499,11 +460,12 @@ def _col_same(o, n, t: str, pa_type=None):
     return (na_o & na_n) | (~na_o & ~na_n & np.asarray(eq, dtype=bool))
 
 
-def _merge_indices(old, new, keys: list[str]):
+def _merge_indices(old, new, keys: list[str], dtypes):
     """Outer-join the two states on the key columns, returning only
     POSITIONAL indices (io, i_n; -1 = absent on that side). The join
-    runs on ONE packed int64 code column (factorize over both sides),
-    so no payload column is ever copied into a merged frame — output
+    runs on ONE packed int64 code column (factorize over both sides;
+    a nested key enters as its ``_order_rank`` over both sides), so no
+    payload column is ever copied into a merged frame — output
     materialization later is O(changes), not O(rows). Falls back to a
     direct multi-column key merge on the (astronomically rare) bucket
     whose per-key code-space product overflows int64."""
@@ -511,11 +473,15 @@ def _merge_indices(old, new, keys: list[str]):
     import pandas as pd
 
     n_o, n_n = len(old), len(new)
+    both_sides, keys = _key_codes(
+        pd.concat([old[keys], new[keys]], ignore_index=True), keys, dtypes
+    )
+    old, new = both_sides.iloc[:n_o], both_sides.iloc[n_o:]
     ko = np.zeros(n_o, dtype=np.int64)
     kn = np.zeros(n_n, dtype=np.int64)
     space = 1
     for k in keys:
-        both = pd.concat([old[k], new[k]], ignore_index=True)
+        both = both_sides[k]
         # use_na_sentinel=False: a null key is a regular code, so NA
         # keys match each other — same as pandas' merge-on-keys
         codes, uniques = pd.factorize(both, use_na_sentinel=False)
@@ -565,7 +531,7 @@ def _diff_states_pd(
         out["_lsn"] = old["_lsn"].reset_index(drop=True)
         return out[out_cols]
 
-    io, i_n = _merge_indices(old, new, keys)
+    io, i_n = _merge_indices(old, new, keys, dtypes)
     has_o, has_n = io >= 0, i_n >= 0
     safe_o, safe_n = np.where(has_o, io, 0), np.where(has_n, i_n, 0)
     same = np.ones(len(io), dtype=bool)
@@ -723,10 +689,11 @@ def _version_at_or_before(root: str, ts) -> int:
 
 
 def _check_supported(root: str, snap: Snapshot) -> None:
-    """Typed plan-time seams: unresolvable root schemes and payload/key
-    types outside the executor path's surface fail at stream start —
-    never mid-batch on the first equal-LSN tie (r5 advice)."""
-    _fs_and_base(root)  # raises NotImplementedError on unknown schemes
+    """Typed plan-time checks: unresolvable root schemes, column types
+    outside the hash's surface and unorderable (map-typed) keys fail
+    when the feed is planned — never mid-batch on the first equal-LSN
+    tie."""
+    arrow_fs_and_base(root)  # raises NotImplementedError on unknown schemes
     bad = [
         f"{f.name}:{f.dataType.simpleString()}"
         for f in snap.schema.fields
@@ -735,45 +702,45 @@ def _check_supported(root: str, snap: Snapshot) -> None:
     ]
     if bad:
         raise NotImplementedError(
-            f"lake_cdf supports column types {sorted(SUPPORTED_TYPES)}, "
+            f"change feed supports column types {sorted(SUPPORTED_TYPES)}, "
             f"decimal(p,s) at any precision, and array/struct/map nesting "
-            f"at any depth over those (map KEYS must be scalar — the "
-            f"canonical entry sort needs an ordering); table {root} "
-            f"carries unsupported column(s) {bad} — use "
-            f"table_changes()/ChangeFeedConsumer for this table"
+            f"at any depth over those (map KEYS must not contain a map); "
+            f"table {root} carries unsupported column(s) {bad}"
         )
     by_name = {f.name: f.dataType.simpleString() for f in snap.schema.fields}
-    nested_keys = [
+    map_keys = [
         f"{k}:{by_name[k]}"
         for k in snap.key_cols
-        if _parse_type(by_name[k])[0] in ("array", "struct", "map")
+        if not _orderable(_parse_type(by_name[k]))
     ]
-    if nested_keys:
+    if map_keys:
         raise NotImplementedError(
-            f"lake_cdf: KEY columns must be scalar (the key join "
-            f"factorizes values); table {root} keys on {nested_keys}"
+            f"change feed: KEY columns must be orderable (Spark cannot "
+            f"group on maps); table {root} keys on {map_keys}"
         )
 
 
-def _extras(snap: Snapshot) -> list[str]:
-    """_system_extras twin: system columns beyond (_op,_lsn) in this
-    snapshot's schema. '_pu' present <=> field-wise resolve."""
-    names = {f.name for f in snap.schema.fields}
-    return [c for c in ("_del_lsn", "_pu") if c in names]
+def _plan_cols(snap: Snapshot):
+    """``(keys, payload, dtypes, out_schema)`` of a feed read against
+    ``snap``: payload in schema order (it pins the equal-LSN tie-break
+    hash order), spark dtypes by column, and :func:`_output_schema`."""
+    dtypes = {f.name: f.dataType.simpleString() for f in snap.schema.fields}
+    dtypes.setdefault("_op", "string")
+    dtypes.setdefault("_lsn", "bigint")
+    return snap.key_cols, _payload_cols(snap), dtypes, _output_schema(snap)
 
 
 def _pin_plan(root: str, schema):
     """Pin the read plan from the table's CURRENT snapshot (shared by
-    the stream and batch readers): supported-surface check, key/payload
-    column split, spark dtypes, and the output schema. A caller-supplied
-    ``.schema(...)`` must match the source schema exactly — payload
-    ORDER pins the equal-LSN tie-break hash order (r5 advice), so a
-    reordered schema would silently flip tie winners. Returns
-    ``(keys, payload, dtypes, out_schema)``."""
+    the stream and batch readers): supported-surface check and
+    :func:`_plan_cols`. A caller-supplied ``.schema(...)`` must match
+    the source schema exactly — payload ORDER pins the equal-LSN
+    tie-break hash order, so a reordered schema would silently flip tie
+    winners."""
     snap = _load_snapshot(root, _current_version(root))
     _check_supported(root, snap)
-    keys = snap.key_cols
-    expected = _output_schema(snap)
+    plan = _plan_cols(snap)
+    expected = plan[3]
     if schema is not None and [f.name for f in schema.fields] != [
         f.name for f in expected.fields
     ]:
@@ -783,57 +750,38 @@ def _pin_plan(root: str, schema):
             f"schema {[f.name for f in expected.fields]} exactly (column "
             f"order pins the LWW tie-break hash order)"
         )
-    payload = [
-        f.name
-        for f in expected.fields
-        if f.name not in set(keys) and f.name not in ("_change", "_lsn")
-    ]
-    dtypes = {f.name: f.dataType.simpleString() for f in snap.schema.fields}
-    dtypes.setdefault("_op", "string")
-    dtypes.setdefault("_lsn", "bigint")
-    return keys, payload, dtypes, expected
+    return plan
 
 
-def _span_tasks(root, keys, payload, dtypes, sv: int, ev: int):
-    """Input partitions for the change span ``(sv, ev]`` — the shared
-    planning core of the stream's ``partitions()`` and the batch
-    reader. Metadata-only: diffs the two manifests' per-bucket file
-    lists; only buckets whose lists differ become tasks. ``sv == -1``
-    is the full-state bootstrap (old side EMPTY — every live row
-    emits as ``I``)."""
-    if ev < 0:  # pre-snapshot replay (restart before first commit)
-        return []
-    snap_to = _load_snapshot(root, ev)
-    if sv < 0:
-        # initial-snapshot bootstrap: the old side is EMPTY, so the
-        # span's diff IS the full resolved state at ev as 'I' rows
+def _span_tasks(root, keys, payload, dtypes, snap_from, snap_to):
+    """Input partitions for the change span ``snap_from -> snap_to`` —
+    the one planning core of ``table_changes``, the change-feed
+    consumer and both ``lake_cdf`` readers. Metadata-only: diffs the
+    two manifests' per-bucket file lists; only buckets whose lists
+    differ become tasks. ``snap_from=None`` is the full-state bootstrap
+    (old side EMPTY — every live row emits as ``I``)."""
+    if snap_from is None:
         import dataclasses as _dc
 
         snap_from = _dc.replace(snap_to, files={}, file_sizes={})
-    else:
-        snap_from = _load_snapshot(root, sv)
     _check_supported(root, snap_to)
     same_layout = (
         snap_from.bucket_count == snap_to.bucket_count
         and snap_from.bucket_by == snap_to.bucket_by
     )
-    same_policy = snap_from.properties.get(
-        "update_policy", "row"
-    ) == snap_to.properties.get("update_policy", "row")
     common = dict(
         root=root,
         keys=keys,
         payload=payload,
         dtypes=dtypes,
-        old_extras=_extras(snap_from),
-        new_extras=_extras(snap_to),
+        old_extras=_system_extras(snap_from),
+        new_extras=_system_extras(snap_to),
     )
-    if not (same_layout and same_policy):
-        # a rebucket inside the span moves keys across buckets (and
-        # a policy flip can re-resolve identical bytes): a
-        # per-bucket diff would emit spurious changes. Collapse to
-        # ONE global-diff task — exactly table_changes' fallback.
-        # Rare one-time maintenance; the next span fans back out.
+    if not same_layout:
+        # a rebucket inside the span moves keys across buckets: a
+        # per-bucket diff would emit spurious changes. Collapse to ONE
+        # global-diff task. Rare one-time maintenance; the next span
+        # fans back out.
         return [
             _BucketTask(
                 old_files=snap_from.all_files(),
@@ -866,8 +814,9 @@ def _resolve_side(p: _BucketTask, rel_files, extras):
 
 
 def _read_span_partition(partition: _BucketTask, out_schema):
-    """Executor read of one span task (shared by both readers): resolve
-    each side's live state, vectorized diff, yield arrow RecordBatches."""
+    """Executor read of one span task (shared by every feed reader):
+    resolve each side's live state, vectorized diff, yield arrow
+    RecordBatches."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     old = _resolve_side(partition, partition.old_files, partition.old_extras)
@@ -1056,8 +1005,12 @@ class _CdfStreamReader(DataSourceStreamReader):
         # first (fresh runner process); keep the pace cursor monotone
         if self._last_end is None or ev > self._last_end:
             self._last_end = ev
+        if ev < 0:  # pre-snapshot replay (restart before first commit)
+            return []
         return _span_tasks(
-            self.root, self.keys, self.payload, self.dtypes, sv, ev
+            self.root, self.keys, self.payload, self.dtypes,
+            None if sv < 0 else _load_snapshot(self.root, sv),
+            _load_snapshot(self.root, ev),
         )
 
     def read(self, partition: _BucketTask):
@@ -1151,12 +1104,14 @@ class _CdfBatchReader(DataSourceReader):
         )
         if self.start >= 0:
             # fail on a vacuumed BASE at plan time (the end snapshot is
-            # validated inside _span_tasks/_pin_plan)
+            # validated inside _pin_plan/partitions)
             _load_snapshot(self.root, self.start)
 
     def partitions(self):
         tasks = _span_tasks(
-            self.root, self.keys, self.payload, self.dtypes, self.start, self.end
+            self.root, self.keys, self.payload, self.dtypes,
+            None if self.start < 0 else _load_snapshot(self.root, self.start),
+            _load_snapshot(self.root, self.end),
         )
         if not tasks:
             # a change-free span (or an empty table's bootstrap) is a
@@ -1207,9 +1162,7 @@ class LakeChangeFeedDataSource(DataSource):
         root = self.options.get("path")
         if not root:
             raise ValueError("lake_cdf requires .option('path', <table_root>)")
-        snap = _load_snapshot(root, _current_version(root))
-        _check_supported(root, snap)
-        return _output_schema(snap)
+        return _pin_plan(root, None)[3]
 
     def streamReader(self, schema):
         return _CdfStreamReader(self.options, schema)

@@ -44,17 +44,21 @@ Semantics — an append-only CDC ingest (the MOR fast path):
   ``table_changes`` and a downstream ``lake_cdf`` stream see exactly
   the resolved-state diff.
 
+* **Field-wise tables** (``update_policy`` other than ``row``): the
+  sink synthesizes the ``_pu``/``_del_lsn`` markers exactly as
+  ``merge_into``'s MOR deltas carry them, so readers resolve its
+  appends field-wise.
+
 Roots: plain local paths take the pure-POSIX fast path; URI roots run
 the ``lake_cdf`` pattern — executors write parquet and read the
 watermark through ``pyarrow.fs`` (scheme-generic), and the JVM-less
 driver commit runs on POSIX syscalls for ``file:`` roots (a file: URI
 IS a POSIX path — same atomic claim/swap the chaos harness certifies,
-see ``BENCH/sink_chaos.py --uri``). Remaining typed seams at plan
-time: non-file URI schemes (the commit point needs a conditional-PUT /
+see ``BENCH/sink_chaos.py --uri``). Typed errors at plan time:
+non-file URI schemes (the commit point needs a conditional-PUT /
 catalog CAS that a datasource option string cannot carry — use
-``foreachBatch`` + ``merge_into`` with an injected MetadataIO),
-row-policy tables only (field-wise ``_pu`` deltas carry marker
-semantics the sink does not synthesize), append mode only.
+``foreachBatch`` + ``merge_into`` with an injected MetadataIO), and
+any mode but append.
 
 Reference analog: the reference's core is exactly this sink — JDBC
 ``ON CONFLICT`` upserts (``loading/service/ColumnMetaMapper.java``) —
@@ -322,11 +326,9 @@ class _LakeSinkWriter(DataSourceStreamArrowWriter):
         if self.is_uri:
             import posixpath
 
-            from picsure_dictionary_etl_spark.streaming.cdf_source import (
-                _fs_and_base,
-            )
+            from picsure_dictionary_etl_spark.lake.fs import arrow_fs_and_base
 
-            afs, abase = _fs_and_base(self.root)
+            afs, abase = arrow_fs_and_base(self.root)
             full = posixpath.join(abase, rel)
             afs.create_dir(posixpath.dirname(full), recursive=True)
             pq.write_table(tbl, full, filesystem=afs, compression="zstd")
@@ -618,11 +620,9 @@ class _LakeSinkWriter(DataSourceStreamArrowWriter):
         if self.is_uri:
             import posixpath
 
-            from picsure_dictionary_etl_spark.streaming.cdf_source import (
-                _fs_and_base,
-            )
+            from picsure_dictionary_etl_spark.lake.fs import arrow_fs_and_base
 
-            afs, abase = _fs_and_base(self.root)
+            afs, abase = arrow_fs_and_base(self.root)
 
             def _rm(rel):
                 afs.delete_file(posixpath.join(abase, rel))

@@ -148,12 +148,10 @@ def _td_supported(td) -> bool:
     if kind == "array":
         return _td_supported(td[1])
     if kind == "map":
-        # keys must be SCALAR (sortable — the canonical form key-sorts
-        # the entries; Spark itself guarantees non-null deduped keys);
-        # values recurse over the full nested surface.
-        return td[1][0] in ("scalar", "decimal") and _td_supported(
-            td[1]
-        ) and _td_supported(td[2])
+        # keys must be ORDERABLE (the canonical form key-sorts the
+        # entries; Spark itself rejects map-typed keys and guarantees
+        # non-null deduped ones); values recurse over the full surface.
+        return _orderable(td[1]) and _td_supported(td[1]) and _td_supported(td[2])
     if kind == "struct":
         return len(td[1]) > 0 and all(_td_supported(ft) for _, ft in td[1])
     return False  # udt, ...
@@ -162,26 +160,85 @@ def _td_supported(td) -> bool:
 def _type_supported(t: str) -> bool:
     """Whitelist predicate over Spark simpleString type names: all
     :data:`SUPPORTED_TYPES` scalars, ``decimal(p,s)`` at ANY precision,
-    plus ``array<...>`` / ``struct<...>`` / ``map<scalar,...>`` at ANY
-    nesting depth over that scalar set. What's left out: map KEYS that
-    are themselves nested (unsortable) and UDTs."""
+    plus ``array<...>`` / ``struct<...>`` / ``map<...>`` at ANY nesting
+    depth over that scalar set. What's left out: map KEYS that contain
+    a map (Spark cannot order them either), variants and UDTs."""
     return _td_supported(_parse_type(t))
 
 
-def _canon_map_arrow(a):
-    """Arrow MapArray -> plain ``list<struct<key,value>>`` with entries
-    KEY-SORTED per row — the arrow form of the engine's
-    ``_canon_col`` canonical form (``array_sort(map_entries(m))``). The
-    map hash chains entries in this order, so it must be Spark's key
-    order: arrow's ascending sort matches it on every supported key
-    type (byte order for strings and binary, false < true, NaN above
-    every number; -0.0 and 0.0 never coexist as keys because Spark
-    normalizes them at map creation). One C++ ``pc.sort_indices`` over
-    (parent row, key) reorders the flattened entries — arrow's native
-    multi-key sort stays vectorized for STRING/binary/decimal keys
-    where a numpy argsort would fall back to O(n log n) Python-object
-    comparisons (BENCH/map_diff_bench.py). Null rows keep their
-    validity."""
+def _orderable(td) -> bool:
+    """Spark sorts, groups and joins on every type but maps, at any depth."""
+    if td[0] == "array":
+        return _orderable(td[1])
+    if td[0] == "struct":
+        return all(_orderable(ft) for _, ft in td[1])
+    return td[0] != "map"
+
+
+def _dense(code: np.ndarray) -> np.ndarray:
+    return np.unique(code, return_inverse=True)[1].reshape(-1).astype(np.int64)
+
+
+def _order_rank(arr, td) -> np.ndarray:
+    """Dense int64 rank of every row in Spark's ordering: null ranks 0,
+    values 1.. with equal values equal. Scalars rank through
+    ``pc.rank`` (-0.0 first mapped to 0.0, NaN above every number);
+    structs compare field by field, arrays element by element with a
+    null element lowest and a shorter prefix first — the orderings
+    ``array_sort`` applies to nested elements. Nested key columns
+    enter every sort, group and join as this code."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    n = len(arr)
+    out = np.zeros(n, dtype=np.int64)
+    if n == 0:
+        # also sidesteps pyarrow 16's bad child offsets on empty structs
+        return out
+    valid = arr.is_valid().to_numpy(zero_copy_only=False)
+    kind = td[0]
+    if kind == "struct":
+        code = out
+        for i, (_, ftd) in enumerate(td[1]):
+            r = _order_rank(arr.field(i), ftd)  # .field honours slices
+            code = _dense(code * (int(r.max()) + 1) + r)
+    elif kind == "array":
+        offsets = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+        starts = offsets[:-1]
+        lens = np.where(valid, offsets[1:] - starts, 0)
+        elem = _order_rank(arr.values, td[1]) + 1  # 0 = past the end
+        code = out
+        for j in range(int(lens.max())):
+            has = lens > j
+            col = np.zeros(n, dtype=np.int64)
+            col[has] = elem[starts[has] + j]
+            code = _dense(code * (int(elem.max()) + 1) + col)
+    elif kind in ("scalar", "decimal"):
+        if pa.types.is_floating(arr.type):
+            arr = pc.if_else(pc.equal(arr, 0), pa.scalar(0, arr.type), arr)
+        code = pc.rank(
+            arr, sort_keys="ascending", null_placement="at_end", tiebreaker="dense"
+        ).to_numpy(zero_copy_only=False).astype(np.int64)
+    else:
+        raise UnsupportedVectorType(f"no ordering for type {td}")
+    out[valid] = _dense(code[valid]) + 1
+    return out
+
+
+def _canon_map_arrow(a, td):
+    """Arrow MapArray (Spark type descriptor ``td``) -> plain
+    ``list<struct<key,value>>`` with entries KEY-SORTED per row — the
+    arrow form of the engine's ``_canon_col`` canonical form
+    (``array_sort(map_entries(m))``). The map hash chains entries in
+    this order, so it must be Spark's key order: arrow's ascending sort
+    matches it on every scalar key type (byte order for strings and
+    binary, false < true, NaN above every number; -0.0 and 0.0 never
+    coexist as keys because Spark normalizes them at map creation);
+    nested (array/struct) keys sort by their :func:`_order_rank`. One
+    C++ ``pc.sort_indices`` over (parent row, key) reorders the
+    flattened entries — arrow's native multi-key sort stays vectorized
+    for STRING/binary/decimal keys where a numpy argsort would fall
+    back to O(n log n) Python-object comparisons
+    (BENCH/map_diff_bench.py). Null rows keep their validity."""
     if pa.types.is_map(a.type):
         # list_flatten/list_parent_indices have no map kernels: view the
         # identical physical layout as list<struct<key,value>> first
@@ -204,8 +261,11 @@ def _canon_map_arrow(a):
         else np.zeros(n, dtype=np.int64)
     )
     if len(parent):
+        key = flat.field("key")
+        if td[1][0] in ("array", "struct"):
+            key = pa.array(_order_rank(key, td[1]))
         order = pc.sort_indices(
-            pa.table({"p": pa.array(parent), "k": flat.field("key")}),
+            pa.table({"p": pa.array(parent), "k": key}),
             sort_keys=[("p", "ascending"), ("k", "ascending")],
         )
         flat = pc.take(flat, order)
@@ -455,7 +515,7 @@ def _hash_column(arr: pa.Array, td, h: np.ndarray) -> np.ndarray:
         return h  # all-null column leaves every row's hash unchanged
     kind = td[0]
     if kind == "map":
-        return _hash_column(_canon_map_arrow(arr), _map_entries_td(td), h)
+        return _hash_column(_canon_map_arrow(arr, td), _map_entries_td(td), h)
     valid = (
         np.ones(n, dtype=bool)
         if arr.null_count == 0

@@ -1,5 +1,5 @@
 """Batch change-feed reads through the lake_cdf DataSource:
-``spark.read.format("lake_cdf")`` == ``table_changes`` over the same
+``spark.read.format("lake_cdf")`` == ``spark_plane_changes`` over the same
 span, with version/timestamp bounds, the initial-snapshot full-state
 read, and typed plan-time errors for bad bounds — the Delta batch
 ``readChangeFeed`` analog over the SAME vectorized executor path the
@@ -12,11 +12,11 @@ import pytest
 from picsure_dictionary_etl_spark.cdc.envelope import change_event_schema
 from picsure_dictionary_etl_spark.cdc.runner import CdcRunner, RunnerConfig
 from picsure_dictionary_etl_spark.lake.consume import ChangeFeedRetentionError
-from picsure_dictionary_etl_spark.lake.merge import table_changes
 from picsure_dictionary_etl_spark.lake.table import LakeTable
 from picsure_dictionary_etl_spark.streaming.cdf_source import (
     LakeChangeFeedDataSource,
 )
+from tests.cdf_oracle import spark_plane_changes
 
 TS = datetime.datetime(2024, 1, 1, 12, 0, 0)
 COLS = ["_change", "conv_id", "turn_idx", "role", "text", "tool", "ts", "_lsn"]
@@ -57,19 +57,19 @@ def _read(spark, root, **opts):
 
 def test_batch_read_matches_table_changes(spark, tmp_path):
     """Version bounds: startversion is the EXCLUSIVE base and endversion
-    the inclusive end — exactly table_changes(t, start, end); the
+    the inclusive end — exactly spark_plane_changes(t, start, end); the
     default span is (0, current]."""
     spark.dataSource.register(LakeChangeFeedDataSource)
     root, t = _table(spark, tmp_path)
     cur = t.current_version()
     assert cur >= 3
 
-    assert _rows(_read(spark, root)) == _rows(table_changes(t, 0, cur))
+    assert _rows(_read(spark, root)) == _rows(spark_plane_changes(t, 0, cur))
     for sv in range(cur):
         got = _rows(_read(spark, root, startversion=sv))
-        assert got == _rows(table_changes(t, sv, cur)), f"sv={sv}"
+        assert got == _rows(spark_plane_changes(t, sv, cur)), f"sv={sv}"
     got = _rows(_read(spark, root, startversion=1, endversion=2))
-    assert got == _rows(table_changes(t, 1, 2))
+    assert got == _rows(spark_plane_changes(t, 1, 2))
     # the planner fans out per changed bucket, not per table
     assert _read(spark, root, startversion=cur - 1).rdd.getNumPartitions() \
         <= 4
@@ -85,16 +85,16 @@ def test_batch_read_timestamp_bounds(spark, tmp_path):
     ts = [t.snapshot(v).committed_at for v in range(cur + 1)]
 
     got = _rows(_read(spark, root, startingtimestamp=ts[2]))
-    assert got == _rows(table_changes(t, 1, cur))
+    assert got == _rows(spark_plane_changes(t, 1, cur))
     got = _rows(_read(spark, root, endingtimestamp=ts[2]))
-    assert got == _rows(table_changes(t, 0, 2))
+    assert got == _rows(spark_plane_changes(t, 0, 2))
     got = _rows(_read(spark, root,
                       startingtimestamp=ts[2], endingtimestamp=ts[2]))
-    assert got == _rows(table_changes(t, 1, 2))
+    assert got == _rows(spark_plane_changes(t, 1, 2))
     iso = datetime.datetime.fromtimestamp(
         ts[2] / 1e6, datetime.timezone.utc).isoformat()
     assert _rows(_read(spark, root, startingtimestamp=iso)) == \
-        _rows(table_changes(t, 1, cur))
+        _rows(spark_plane_changes(t, 1, cur))
     # an ending cut before all history is a typed empty-feed error
     with pytest.raises(Exception, match="predates every commit"):
         _read(spark, root, endingtimestamp=ts[0] - 1).collect()
@@ -176,13 +176,13 @@ def test_batch_read_bad_bounds_fail_typed_at_plan_time(spark, tmp_path):
 def test_batch_read_on_file_uri_root(spark, tmp_path):
     """URI table roots batch-read through the same pyarrow.fs plane the
     stream uses (datasource callbacks have no JVM): a file:-URI root
-    matches table_changes span-for-span."""
+    matches spark_plane_changes span-for-span."""
     spark.dataSource.register(LakeChangeFeedDataSource)
     root, t = _table(spark, tmp_path)
     cur = t.current_version()
     uri = "file://" + root
     got = _rows(_read(spark, uri, startversion=1))
-    assert got == _rows(table_changes(t, 1, cur))
+    assert got == _rows(spark_plane_changes(t, 1, cur))
     snap = _read(spark, uri, initialsnapshot="true")
     assert snap.count() == 2 and \
         {r["_change"] for r in snap.select("_change").collect()} == {"I"}

@@ -14,6 +14,7 @@ from picsure_dictionary_etl_spark.streaming.mirror import (
     apply_feed_batch,
     mirror_table,
 )
+from tests.cdf_oracle import spark_plane_changes
 
 TS = datetime.datetime(2024, 1, 1, 12, 0, 0)
 PAYLOAD = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
@@ -29,7 +30,7 @@ def _live(spark, root):
     t = LakeTable.load(spark, root)
     return {
         tuple(r)
-        for r in table_changes(t, 0, t.current_version())
+        for r in spark_plane_changes(t, 0, t.current_version())
         .select(*PAYLOAD)
         .collect()
     }

@@ -1,6 +1,6 @@
 """The lake_cdf Structured-Streaming source: offset/partition planning,
-executor-side pyarrow resolve, and bit-exact parity with the engine's
-batch change feed (table_changes)."""
+executor-side pyarrow resolve, and bit-exact parity with the
+Spark-plane change-feed oracle (tests/cdf_oracle.py)."""
 
 import datetime
 
@@ -8,13 +8,13 @@ import pytest
 
 from picsure_dictionary_etl_spark.cdc.envelope import change_event_schema
 from picsure_dictionary_etl_spark.cdc.runner import CdcRunner, RunnerConfig
-from picsure_dictionary_etl_spark.lake.merge import table_changes
 from picsure_dictionary_etl_spark.lake.table import LakeTable
 from picsure_dictionary_etl_spark.streaming.cdf_source import (
     LakeChangeFeedDataSource,
     _resolve_live_pd,
 )
 from picsure_dictionary_etl_spark.streaming.xxhash_vec import spark_xxhash64_vec
+from tests.cdf_oracle import spark_plane_changes
 from tests.hash_parity import assert_xxhash64_parity
 
 TS = datetime.datetime(2024, 1, 1, 12, 0, 0)
@@ -63,7 +63,7 @@ def _collect_stream(spark, root, ckpt, out_dir):
 
 
 def test_stream_matches_batch_cdf_and_resumes(spark, tmp_path):
-    """One availableNow pass == table_changes(0, current); a SECOND pass
+    """One availableNow pass == spark_plane_changes(0, current); a SECOND pass
     from the same checkpoint delivers ONLY the new versions' diff —
     Spark's offset log replaces the hand-rolled ack loop."""
     spark.dataSource.register(LakeChangeFeedDataSource)
@@ -83,7 +83,7 @@ def test_stream_matches_batch_cdf_and_resumes(spark, tmp_path):
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
     got = _collect_stream(spark, root, ckpt, out)
     want = {tuple(r) for r in
-            table_changes(t, 0, t.current_version()).select(*COLS).collect()}
+            spark_plane_changes(t, 0, t.current_version()).select(*COLS).collect()}
     assert got == want and len(got) == 3
 
     # advance the table; the SAME checkpoint must deliver only the delta
@@ -93,7 +93,7 @@ def test_stream_matches_batch_cdf_and_resumes(spark, tmp_path):
         (8, "D", "c1", 1, None, None, None, None)]), "b3")
     got2 = _collect_stream(spark, root, ckpt, out)
     want2 = {tuple(r) for r in
-             table_changes(t, v_before, t.current_version())
+             spark_plane_changes(t, v_before, t.current_version())
              .select(*COLS).collect()}
     assert got2 == want2 and {r[0] for r in got2} == {"U", "D"}
 
@@ -434,7 +434,7 @@ def test_pandas_resolve_matches_engine_on_equal_lsn_ties(spark):
 def test_stream_rebucket_span_matches_batch_cdf(spark, tmp_path):
     """A rebucket inside the offset span moves keys across buckets: a
     per-bucket diff would fabricate D+I for every moved key. The source
-    must collapse to one global-diff task and match table_changes
+    must collapse to one global-diff task and match spark_plane_changes
     exactly (review finding r5)."""
     from picsure_dictionary_etl_spark.lake.merge import rebucket
     from picsure_dictionary_etl_spark.streaming.cdf_source import _CdfStreamReader
@@ -463,7 +463,7 @@ def test_stream_rebucket_span_matches_batch_cdf(spark, tmp_path):
 
     got = _reader_rows(rd, parts)
     want = {tuple(r) for r in
-            table_changes(t, v_before, t.current_version())
+            spark_plane_changes(t, v_before, t.current_version())
             .select(*COLS).collect()}
     assert got == want  # ONLY the real edit; no phantom D+I from moves
     assert {row[0] for row in got} == {"U"}
@@ -490,7 +490,7 @@ def test_vacuumed_offset_is_typed_retention_error(spark, tmp_path):
 def test_randomized_spans_match_batch_cdf(spark, tmp_path):
     """Seeded random workload (inserts/updates/deletes over a small hot
     key space, shuffled arrival order): for EVERY version span the
-    reader's union-of-partitions output must equal table_changes —
+    reader's union-of-partitions output must equal spark_plane_changes —
     the streaming source's core contract under arbitrary histories."""
     import random
 
@@ -523,13 +523,13 @@ def test_randomized_spans_match_batch_cdf(spark, tmp_path):
             got = _reader_rows(
                 rd, rd.partitions({"version": sv}, {"version": ev_}))
             want = {tuple(r) for r in
-                    table_changes(t, sv, ev_).select(*COLS).collect()}
+                    spark_plane_changes(t, sv, ev_).select(*COLS).collect()}
             assert got == want, f"span {sv}->{ev_}"
 
 
 def test_fieldwise_table_stream_matches_batch_cdf(spark, tmp_path):
     """Field-wise (_pu) tables stream natively: the pandas twin of
-    lww_winners_fieldwise must match table_changes on EVERY span of a
+    lww_winners_fieldwise must match spark_plane_changes on EVERY span of a
     partial-update history — full-row-marker rules, delete boundaries,
     and equal-LSN ties included (r5 verdict item 4)."""
     from picsure_dictionary_etl_spark.streaming.cdf_source import _CdfStreamReader
@@ -559,13 +559,13 @@ def test_fieldwise_table_stream_matches_batch_cdf(spark, tmp_path):
             got = _reader_rows(
                 rd, rd.partitions({"version": sv}, {"version": ev_}))
             want = {tuple(r) for r in
-                    table_changes(t, sv, ev_).select(*COLS).collect()}
+                    spark_plane_changes(t, sv, ev_).select(*COLS).collect()}
             assert got == want, f"span {sv}->{ev_}"
 
 
 def test_file_uri_root_stream_matches_batch_cdf(spark, tmp_path):
     """URI-rooted tables stream through pyarrow.fs (the datasource
-    callbacks have no JVM) — reader output must equal table_changes,
+    callbacks have no JVM) — reader output must equal spark_plane_changes,
     and a registered availableNow pass must deliver the same rows
     (r5 verdict item 3)."""
     from picsure_dictionary_etl_spark.streaming.cdf_source import _CdfStreamReader
@@ -586,7 +586,7 @@ def test_file_uri_root_stream_matches_batch_cdf(spark, tmp_path):
     got = _reader_rows(
         rd, rd.partitions({"version": 0}, {"version": t.current_version()}))
     want = {tuple(r) for r in
-            table_changes(t, 0, t.current_version()).select(*COLS).collect()}
+            spark_plane_changes(t, 0, t.current_version()).select(*COLS).collect()}
     assert got == want and len(got) == 1  # c1 insert+update folds; c2 I+D folds
 
     got_stream = _collect_stream(spark, root,
@@ -597,7 +597,7 @@ def test_file_uri_root_stream_matches_batch_cdf(spark, tmp_path):
 def test_nan_vs_null_doubles_match_batch_cdf(spark, tmp_path):
     """A stored NaN double is a VALUE, not NULL (r5 advice): NaN->NaN
     must classify unchanged, NULL->NaN must classify as an update, and
-    the streamed row must carry the NaN — exactly like table_changes'
+    the streamed row must carry the NaN — exactly like the oracle's
     string-cast compare ('NaN' != NULL)."""
     import math
 
@@ -640,7 +640,7 @@ def test_nan_vs_null_doubles_match_batch_cdf(spark, tmp_path):
             for row in batch.to_pylist():
                 got[(row["_change"], row["id"])] = row["score"]
     want = {}
-    for r in table_changes(t, v1, v2).collect():
+    for r in spark_plane_changes(t, v1, v2).collect():
         want[(r["_change"], r["id"])] = r["score"]
     assert set(got) == set(want) == {("U", "b"), ("U", "c")}
     assert math.isnan(got[("U", "b")]) and math.isnan(want[("U", "b")])
@@ -687,7 +687,7 @@ def test_max_versions_per_batch_paces_catchup(spark, tmp_path):
     want = set()
     for sv, ev_ in spans:
         want |= {tuple(r) for r in
-                 table_changes(t, sv, ev_).select(*COLS).collect()}
+                 spark_plane_changes(t, sv, ev_).select(*COLS).collect()}
     assert rows == want
     texts = {r[4] for r in rows if r[1] == "c1"}
     assert texts == {"v1", "v3"}  # intermediate state delivered
@@ -742,11 +742,11 @@ def test_max_versions_per_batch_paces_catchup(spark, tmp_path):
     # delivered rows == the union of per-span batch change feeds over
     # the ACTUAL checkpointed spans (pacing may split one fold into
     # several, legitimately turning a folded I into I-then-U — so the
-    # oracle is span-wise table_changes, not a single 0->cur fold)
+    # oracle is the span-wise oracle, not a single 0->cur fold)
     want_e2e = set()
     for sv, ev_ in zip([0] + ends, ends):
         want_e2e |= {tuple(r) for r in
-                     table_changes(t, sv, ev_).select(*COLS).collect()}
+                     spark_plane_changes(t, sv, ev_).select(*COLS).collect()}
     assert got == want_e2e
 
 
@@ -800,7 +800,7 @@ def test_max_bytes_per_batch_paces_by_manifest_sizes(spark, tmp_path):
         want = set()
         for sv, ev_ in spans:
             want |= {tuple(r) for r in
-                     table_changes(t, sv, ev_).select(*COLS).collect()}
+                     spark_plane_changes(t, sv, ev_).select(*COLS).collect()}
         assert rows == want
 
     # the budget walk matches the manifests: version 1's new-file bytes
@@ -812,7 +812,7 @@ def test_max_bytes_per_batch_paces_by_manifest_sizes(spark, tmp_path):
 def test_exotic_payload_types_stream_matches_batch_cdf(spark, tmp_path):
     """r6 type-surface widening, end to end: a table whose payload mixes
     float / date / binary / decimal(16,2) / timestamp_ntz streams
-    bit-equal to table_changes — including the adversarial cases that
+    bit-equal to spark_plane_changes — including the adversarial cases that
     motivated the per-type code: non-UTF-8 binary pairs that collapse
     under cast('string') (b'\\xff' vs b'\\xfe' must classify as a
     CHANGE in both planes), -0.0f vs 0.0f (a change), NaN->NaN float
@@ -873,7 +873,7 @@ def test_exotic_payload_types_stream_matches_batch_cdf(spark, tmp_path):
     for sv, ev_ in [(v1, v2), (0, v2)]:
         got = _reader_rows(rd, rd.partitions({"version": sv}, {"version": ev_}))
         want = {tuple(r) for r in
-                table_changes(t, sv, ev_).select(*cols).collect()}
+                spark_plane_changes(t, sv, ev_).select(*cols).collect()}
         # NaN != NaN breaks set equality — compare via repr-normalized
         norm = lambda rows: {tuple("NaN" if isinstance(v, float)
                                    and math.isnan(v) else v for v in r)
@@ -904,7 +904,7 @@ def _canon(v):
 def test_nested_payload_types_stream_matches_batch_cdf(spark, tmp_path):
     """r6 nested-surface widening, end to end: array<string> /
     array<double> / struct<k,v> / decimal(30,4) payloads stream
-    bit-equal to table_changes — including the adversarial cases that
+    bit-equal to spark_plane_changes — including the adversarial cases that
     motivated the element-wise code: ['a, b'] -> ['a','b'] renders
     identically under cast('string') ('[a, b]') but MUST classify as a
     change in both planes; [] vs NULL array is a change; a NaN element
@@ -980,7 +980,7 @@ def test_nested_payload_types_stream_matches_batch_cdf(spark, tmp_path):
                     got.add(tuple(_canon(row[c]) for c in cols))
         want = {
             tuple(_canon(r.asDict(recursive=True)[c]) for c in cols)
-            for r in table_changes(t, sv, ev_).select(*cols).collect()
+            for r in spark_plane_changes(t, sv, ev_).select(*cols).collect()
         }
         assert got == want, f"span {sv}->{ev_}"
     span_keys = set()
@@ -1004,7 +1004,7 @@ def test_nested_payload_types_stream_matches_batch_cdf(spark, tmp_path):
     }
     want_full = {
         tuple(_canon(r.asDict(recursive=True)[c]) for c in cols)
-        for r in table_changes(t, 0, v2).select(*cols).collect()
+        for r in spark_plane_changes(t, 0, v2).select(*cols).collect()
     }
     assert got_stream == want_full
 
@@ -1012,7 +1012,7 @@ def test_nested_payload_types_stream_matches_batch_cdf(spark, tmp_path):
 def test_deep_nested_payloads_stream_matches_batch_cdf(spark, tmp_path):
     """Depth-unbounded nesting end to end (late r6): array<array<long>>,
     array<struct<..,array<double>>> and struct<struct,array> payloads
-    stream bit-equal to table_changes — inner-level ambiguity
+    stream bit-equal to spark_plane_changes — inner-level ambiguity
     ([['a, b']] -> [['a','b']]) classifies as a change, a deep NaN
     re-assert does NOT, a deep [] vs NULL does, and an equal-LSN tie
     resolves via the recursive hash identically in both planes."""
@@ -1077,7 +1077,7 @@ def test_deep_nested_payloads_stream_matches_batch_cdf(spark, tmp_path):
                     got.add(tuple(_canon(row[c]) for c in cols))
         want = {
             tuple(_canon(r.asDict(recursive=True)[c]) for c in cols)
-            for r in table_changes(t, sv, ev_).select(*cols).collect()
+            for r in spark_plane_changes(t, sv, ev_).select(*cols).collect()
         }
         assert got == want, f"span {sv}->{ev_}"
     span_keys = set()
@@ -1090,7 +1090,7 @@ def test_deep_nested_payloads_stream_matches_batch_cdf(spark, tmp_path):
 def test_map_payload_types_stream_matches_batch_cdf(spark, tmp_path):
     """r7 map surface, end to end: map<string,bigint> /
     array<map<...>> / map-in-map payloads stream bit-equal to
-    table_changes — including THE map-defining case: the same content
+    spark_plane_changes — including THE map-defining case: the same content
     re-asserted with a different physical ENTRY ORDER ({a:1,b:2} vs
     {b:2,a:1}) must classify as NOT a change in both planes (map
     equality is set-of-entries, not entry-sequence); {} vs NULL map IS
@@ -1173,7 +1173,7 @@ def test_map_payload_types_stream_matches_batch_cdf(spark, tmp_path):
         want = {
             tuple(canon.get(c, lambda x: x)(r.asDict(recursive=True)[c])
                   for c in cols)
-            for r in table_changes(t, sv, ev_).select(*cols).collect()
+            for r in spark_plane_changes(t, sv, ev_).select(*cols).collect()
         }
         assert got == want, f"span {sv}->{ev_}"
     span_keys = set()
@@ -1200,7 +1200,7 @@ def test_map_payload_types_stream_matches_batch_cdf(spark, tmp_path):
     want_full = {
         tuple(canon.get(c, lambda x: x)(r.asDict(recursive=True)[c])
               for c in cols)
-        for r in table_changes(t, 0, v2).select(*cols).collect()
+        for r in spark_plane_changes(t, 0, v2).select(*cols).collect()
     }
     assert got_stream == want_full
 
@@ -1208,7 +1208,7 @@ def test_map_payload_types_stream_matches_batch_cdf(spark, tmp_path):
 def test_fieldwise_table_with_array_column_streams(spark, tmp_path):
     """Field-wise (_pu) resolve over a nested column: a partial update
     that leaves the array unspecified must keep the older array value
-    (coalesce read), and the stream must match table_changes."""
+    (coalesce read), and the stream must match spark_plane_changes."""
     import decimal as _dec
 
     from pyspark.sql import types as T
@@ -1248,14 +1248,23 @@ def test_fieldwise_table_with_array_column_streams(spark, tmp_path):
 
     cols = ["_change", "id", "tags", "note", "_lsn"]
     rd = _CdfStreamReader({"path": root})
+    parts = rd.partitions({"version": v1}, {"version": v2})
+    # the span flips the table's update_policy, which reads never
+    # consult (they dispatch on _pu): it plans only the changed buckets
+    s1, s2 = t.snapshot(v1), t.snapshot(v2)
+    assert s1.properties.get("update_policy", "row") == "row"
+    assert s2.properties["update_policy"] == "coalesce"
+    changed = [b for b in sorted(set(s1.files) | set(s2.files))
+               if s1.files.get(b) != s2.files.get(b)]
+    assert [p.new_files for p in parts] == [s2.files[b] for b in changed]
     got = set()
-    for p in rd.partitions({"version": v1}, {"version": v2}):
+    for p in parts:
         for batch in rd.read(p):
             for row in batch.to_pylist():
                 got.add(tuple(_canon(row[c]) for c in cols))
     want = {
         tuple(_canon(r.asDict(recursive=True)[c]) for c in cols)
-        for r in table_changes(t, v1, v2).select(*cols).collect()
+        for r in spark_plane_changes(t, v1, v2).select(*cols).collect()
     }
     assert got == want
     by_id = {r[1]: r for r in got}
@@ -1270,7 +1279,7 @@ def test_fieldwise_table_with_map_column_streams(spark, tmp_path):
     update that leaves the map unspecified keeps the older map value
     (coalesce read), a specified map replaces WHOLE-VALUE (field-wise
     granularity is per COLUMN, never per map entry), and the stream
-    must match table_changes — exercising the pandas fieldwise twin's
+    must match spark_plane_changes — exercising the pandas fieldwise twin's
     take/where path on an ArrowDtype map column."""
     from pyspark.sql import types as T
 
@@ -1324,7 +1333,7 @@ def test_fieldwise_table_with_map_column_streams(spark, tmp_path):
     want = {
         tuple(cmap(r.asDict(recursive=True)[c]) if c == "attrs" else
               r.asDict(recursive=True)[c] for c in cols)
-        for r in table_changes(t, v1, v2).select(*cols).collect()
+        for r in spark_plane_changes(t, v1, v2).select(*cols).collect()
     }
     assert got == want
     by_id = {r[1]: r for r in got}
@@ -1341,7 +1350,7 @@ def test_stream_across_additive_schema_evolution(spark, tmp_path):
     column classifies as unchanged; a reader planned AFTER (the
     restart path — Structured Streaming re-creates sources on
     restart) reads spans straddling the boundary with the new column
-    null-filled from pre-evolution files, matching table_changes. A
+    null-filled from pre-evolution files, matching spark_plane_changes. A
     checkpointed engine-level restart across the boundary resumes
     cleanly and delivers the widened rows."""
     from pyspark.sql import types as T
@@ -1396,7 +1405,7 @@ def test_stream_across_additive_schema_evolution(spark, tmp_path):
     assert all(len(g) == len(COLS) for g in got_narrow)
 
     # wide reader (the restart path): both rows, model null-filled
-    # where pre-evolution files lack it — bit-equal to table_changes
+    # where pre-evolution files lack it — bit-equal to spark_plane_changes
     rd_wide = _CdfStreamReader({"path": root})
     wcols = COLS[:-1] + ["model", "_lsn"]
     got_wide = set()
@@ -1408,7 +1417,7 @@ def test_stream_across_additive_schema_evolution(spark, tmp_path):
                     if isinstance(v, datetime.datetime) else v
                     for v in (row[c] for c in wcols)))
     want = {tuple(r) for r in
-            table_changes(t, v1, v2).select(*wcols).collect()}
+            spark_plane_changes(t, v1, v2).select(*wcols).collect()}
     assert got_wide == want
     assert {(g[1], g[7]) for g in got_wide} == {("c1", None), ("c2", "m-1")}
 
@@ -1423,7 +1432,7 @@ def test_stream_across_additive_schema_evolution(spark, tmp_path):
                     if isinstance(v, datetime.datetime) else v
                     for v in (row[c] for c in wcols)))
     want_full = {tuple(r) for r in
-                 table_changes(t, 0, v2).select(*wcols).collect()}
+                 spark_plane_changes(t, 0, v2).select(*wcols).collect()}
     assert got_full == want_full
 
     # engine-level restart across the boundary: same checkpoint, the
@@ -1499,7 +1508,7 @@ def test_initial_snapshot_bootstraps_vacuumed_history(spark, tmp_path):
     got2 = _collect_stream_opts(spark, root, ckpt, out,
                                 {"initialsnapshot": "true"})
     want2 = {tuple(r) for r in
-             table_changes(t, v_before, t.current_version())
+             spark_plane_changes(t, v_before, t.current_version())
              .select(*COLS).collect()}
     assert got2 == want2 and {r[0] for r in got2} == {"U", "D"}
 
@@ -1583,7 +1592,7 @@ def test_startingtimestamp_resolves_to_version_base(spark, tmp_path):
     # end to end through readStream: int-micros and ISO forms
     import datetime as dt
     want = {tuple(x) for x in
-            table_changes(t, 1, cur).select(*COLS).collect()}
+            spark_plane_changes(t, 1, cur).select(*COLS).collect()}
     got = _collect_stream_opts(spark, root, str(tmp_path / "ck1"),
                                str(tmp_path / "o1"),
                                {"startingtimestamp": str(ts[2])})
@@ -1610,13 +1619,50 @@ def test_startingtimestamp_resolves_to_version_base(spark, tmp_path):
 
 
 
+def _arrow_feed(df, cols):
+    """A feed DataFrame as a set of hashable rows, read through Arrow:
+    maps whose keys are arrays or structs have no Python dict form."""
+    def c(v):
+        if isinstance(v, datetime.datetime):
+            return v.replace(tzinfo=None)
+        if isinstance(v, dict):
+            return tuple(sorted(((k, c(x)) for k, x in v.items()), key=repr))
+        if isinstance(v, (list, tuple)):
+            items = tuple(c(x) for x in v)
+            # a map reads as a list of (key, value) tuples: order-free
+            is_map = isinstance(v, list) and v and isinstance(v[0], tuple)
+            return tuple(sorted(items, key=repr)) if is_map else items
+        return v
+
+    return {tuple(c(v) for v in r.values())
+            for r in df.select(*cols).toArrow().to_pylist()}
+
+
+def _assert_feeds_match_oracle(spark, t, spans, cols):
+    """table_changes and the lake_cdf batch read equal the Spark-plane
+    oracle on every span."""
+    from picsure_dictionary_etl_spark.lake.merge import table_changes
+
+    spark.dataSource.register(LakeChangeFeedDataSource)
+    for sv, ev_ in spans:
+        want = _arrow_feed(spark_plane_changes(t, sv, ev_), cols)
+        assert _arrow_feed(table_changes(t, sv, ev_), cols) == want, (sv, ev_)
+        opts = ({"initialsnapshot": "true"} if sv < 0
+                else {"startversion": str(sv)})
+        rd = (spark.read.format("lake_cdf").option("path", t.root)
+              .option("endversion", str(ev_)).options(**opts).load())
+        assert _arrow_feed(rd, cols) == want, (sv, ev_)
+
+
 def test_unsupported_seams_are_typed_plan_time_errors(spark, tmp_path):
-    """Remaining v1 seams fail at PLAN time with typed errors: payload
-    types outside the xxhash64 surface, unresolvable root
-    schemes, and a caller-reordered schema (which would silently flip
-    the equal-LSN tie-break hash order)."""
+    """Plan-time checks fail typed: payload types outside the xxhash64
+    surface, map-typed keys, unresolvable root schemes, and a
+    caller-reordered schema (which would silently flip the equal-LSN
+    tie-break hash order). Nested map keys and array keys plan, and
+    their feeds equal the Spark-plane oracle."""
     from pyspark.sql import types as T
 
+    from picsure_dictionary_etl_spark.lake.merge import merge_into, table_changes
     from picsure_dictionary_etl_spark.streaming.cdf_source import (
         _CdfStreamReader,
         _check_supported,
@@ -1625,22 +1671,40 @@ def test_unsupported_seams_are_typed_plan_time_errors(spark, tmp_path):
     root = str(tmp_path / "dt")
     schema = T.StructType([
         T.StructField("id", T.StringType(), False),
-        # maps with NESTED keys stay out (the canonical entry sort
-        # needs a scalar ordering); scalar-keyed maps are REAL since r7
+        # maps with NESTED keys sort their entries by _order_rank
         T.StructField("m", T.MapType(
             T.ArrayType(T.LongType()), T.StringType()), True),
         T.StructField("_op", T.StringType(), False),
         T.StructField("_lsn", T.LongType(), False),
     ])
-    LakeTable.create(spark, root, schema=schema, key_cols=["id"],
-                     bucket_count=2)
-    with pytest.raises(NotImplementedError,
-                       match=r"m:map<array<bigint>,string>"):
-        _CdfStreamReader({"path": root})  # plan time, not first tie
+    t = LakeTable.create(spark, root, schema=schema, key_cols=["id"],
+                         bucket_count=2)
+    _CdfStreamReader({"path": root})  # plans
+    ev_schema = T.StructType([schema.fields[3], schema.fields[2],
+                              *schema.fields[:2]])
+    merge_into(t, spark.createDataFrame([
+        (1, "I", "a", {(1, 2): "x", (1,): "y", (1, None): "n"}),
+        (2, "I", "b", {(3,): "z"}),
+        (3, "I", "c", {}),
+    ], ev_schema), "m1")
+    v1 = t.current_version()
+    merge_into(t, spark.createDataFrame([
+        # same entries, another physical order: NOT a change
+        (4, "U", "a", {(1, None): "n", (1,): "y", (1, 2): "x"}),
+        (5, "U", "b", {(3,): "z", (3, None): "w"}),
+        (6, "U", "c", None),
+        # equal-LSN tie on a fresh key: the canonical map hash decides
+        (7, "I", "e", {(5,): "p", (): "q"}),
+        (7, "I", "e", {(5, 1): "p"}),
+    ], ev_schema), "m2")
+    cols = ["_change", "id", "m", "_lsn"]
+    _assert_feeds_match_oracle(
+        spark, t, [(v1, t.current_version()), (-1, t.current_version())], cols)
+    span = table_changes(t, v1, t.current_version())
+    assert {r[1] for r in _arrow_feed(span, cols)} == {"b", "c", "e"}
 
-    # deeper nesting (array-of-array, array-in-struct) is REAL since
-    # late r6 — it must PLAN cleanly; since r7 so do scalar-keyed maps
-    # at any depth
+    # deeper nesting (array-of-array, array-in-struct) and scalar-keyed
+    # maps inside arrays plan cleanly
     root2 = str(tmp_path / "dt2")
     schema2 = T.StructType([
         T.StructField("id", T.StringType(), False),
@@ -1666,7 +1730,8 @@ def test_unsupported_seams_are_typed_plan_time_errors(spark, tmp_path):
                      bucket_count=2)
     _CdfStreamReader({"path": root2b})  # plans fine: map-in-array is real
 
-    # nested KEY columns fail typed even though the TYPE is supported
+    # array KEY columns plan: the kernel sorts, groups and joins them
+    # by their _order_rank code
     root3 = str(tmp_path / "dt3")
     schema3 = T.StructType([
         T.StructField("k", T.ArrayType(T.LongType()), False),
@@ -1674,11 +1739,25 @@ def test_unsupported_seams_are_typed_plan_time_errors(spark, tmp_path):
         T.StructField("_op", T.StringType(), False),
         T.StructField("_lsn", T.LongType(), False),
     ])
-    LakeTable.create(spark, root3, schema=schema3, key_cols=["k"],
-                     bucket_count=2)
-    with pytest.raises(NotImplementedError, match=r"KEY columns.*k:array"):
-        _CdfStreamReader({"path": root3})
+    t3 = LakeTable.create(spark, root3, schema=schema3, key_cols=["k"],
+                          bucket_count=2)
+    _CdfStreamReader({"path": root3})
+    ev3 = T.StructType([schema3.fields[3], schema3.fields[2],
+                        *schema3.fields[:2]])
+    merge_into(t3, spark.createDataFrame([
+        (1, "I", [1, 2], "a"), (2, "I", [1], "b"), (3, "I", [1, None], "c"),
+        (4, "I", [], "d"), (5, "I", [2], "e"),
+    ], ev3), "k1")
+    v31 = t3.current_version()
+    merge_into(t3, spark.createDataFrame([
+        (6, "U", [1, 2], "a2"), (7, "D", [1], None), (8, "U", [1, None], "c"),
+        (9, "I", [3, 4], "tie-A"), (9, "I", [3, 4], "tie-B"), (10, "U", [], "d2"),
+    ], ev3), "k2")
+    _assert_feeds_match_oracle(
+        spark, t3, [(v31, t3.current_version()), (0, t3.current_version())],
+        ["_change", "k", "v", "_lsn"])
 
+    # map-typed KEY columns still fail typed: Spark cannot group on maps
     root3m = str(tmp_path / "dt3m")
     schema3m = T.StructType([
         T.StructField("k", T.MapType(T.StringType(), T.LongType()), False),

@@ -282,7 +282,6 @@ def test_mixed_policy_mor_equals_cow_hypothesis(spark, tmp_path):
                             rel_files=snap.all_files())
             live = resolve_live(
                 raw, TRANSCRIPT_KEY, payload,
-                policy=snap.properties.get("update_policy", "row"),
                 schema=snap.schema,
             )
             got = {(r["conv_id"], r["turn_idx"]): (r["text"], r["role"])
@@ -965,14 +964,12 @@ def test_clone_fieldwise_table_preserves_policy(spark, tmp_path):
         update_policy="coalesce")
     row = resolve_live(
         c.read(), ["id"], ["a", "b"],
-        policy=c.current().properties.get("update_policy", "row"),
         schema=c.current().schema,
     ).collect()[0]
     assert (row["a"], row["b"]) == ("a1", "b0")
     # source untouched
     srow = resolve_live(
         t.read(), ["id"], ["a", "b"],
-        policy=t.current().properties.get("update_policy", "row"),
         schema=t.current().schema,
     ).collect()[0]
     assert (srow["a"], srow["b"]) == ("a0", "b0")

@@ -20,6 +20,7 @@ from picsure_dictionary_etl_spark.streaming.lake_sink import (
     LakeTableSinkDataSource,
     with_bucket,
 )
+from tests.cdf_oracle import spark_plane_changes
 
 TS = datetime.datetime(2024, 1, 1, 12, 0, 0)
 PAYLOAD = ["role", "text", "tool", "ts"]
@@ -175,6 +176,20 @@ def _assert_struct_key_placement(spark, tmp_path):
         n_rows += got[0]["count"]
     assert n_rows == 40
 
+    # the change feed groups and joins the struct key by its order rank
+    from picsure_dictionary_etl_spark.streaming.cdf_source import (
+        LakeChangeFeedDataSource,
+    )
+
+    spark.dataSource.register(LakeChangeFeedDataSource)
+    t = LakeTable.load(spark, root)
+    cur = t.current_version()
+    got = {tuple(r) for r in table_changes(t, 0, cur).collect()}
+    assert got == {tuple(r) for r in spark_plane_changes(t, 0, cur).collect()}
+    assert len(got) == 40
+    feed = spark.read.format("lake_cdf").option("path", root).load()
+    assert {tuple(r) for r in feed.collect()} == got
+
 
 def test_sink_composes_with_merge_and_cdf(spark, tmp_path):
     """Sink appends interleave with engine merge_into commits (shared
@@ -203,7 +218,7 @@ def test_sink_composes_with_merge_and_cdf(spark, tmp_path):
         ("c1", 0, "a v2", 3), ("c2", 0, "b", 2), ("c3", 0, "c", 4)}
 
     cur = t.current_version()
-    want = {tuple(r) for r in table_changes(t, 0, cur)
+    want = {tuple(r) for r in spark_plane_changes(t, 0, cur)
             .select("_change", "conv_id", "text", "_lsn").collect()}
     batch = {tuple(r) for r in
              spark.read.format("lake_cdf").option("path", root).load()

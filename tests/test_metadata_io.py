@@ -71,6 +71,26 @@ def test_runner_on_non_posix_commit_point(spark, tmp_path):
     assert r2.watermark() == 1
     assert r2.state().count() == 1
 
+    # the change feed plans through the table's own MetadataIO: the
+    # consumer bootstraps, then reads one commit's diff
+    from picsure_dictionary_etl_spark.lake.consume import ChangeFeedConsumer
+    from tests.cdf_oracle import spark_plane_changes
+
+    c = ChangeFeedConsumer(r2.table, os.path.join(cfg.table_root, "_consumer"))
+    b = c.poll()
+    assert {tuple(r) for r in b.df.collect()} == {
+        ("I", "c9", 0, "user", "hi", None, None, 1)}
+    b.ack()
+    r2.apply_batch(_events(spark, [
+        (2, "U", "c9", 0, "user", "hi again", None, None),
+        (3, "I", "c8", 1, "user", "new", None, None)]), "b2")
+    b = c.poll()
+    want = spark_plane_changes(r2.table, b.from_version, b.to_version)
+    assert {tuple(r) for r in b.df.collect()} == {tuple(r) for r in want.collect()}
+    assert len(want.collect()) == 2
+    b.ack()
+    assert c.poll() is None
+
 
 def test_concurrent_commit_detected(spark, tmp_path):
     """Two live writers racing the same version: the second claim is a

@@ -43,7 +43,6 @@ def test_model_stress_random_op_interleavings(spark, tmp_path):
                         rel_files=snap.all_files())
         live = resolve_live(
             raw, TRANSCRIPT_KEY, payload,
-            policy=snap.properties.get("update_policy", "row"),
             schema=snap.schema,
         )
         return {(r["conv_id"], r["turn_idx"]): (r["text"], r["role"])

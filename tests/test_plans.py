@@ -178,9 +178,10 @@ def test_point_lookup_pushes_key_filter(spark, tmp_path):
 
 def test_cdf_reads_only_changed_buckets(spark, tmp_path):
     """table_changes must be O(change): a commit touching ONE bucket
-    diffs only that bucket's files on both sides — never the full
-    snapshots (the r3 scale-killer). The changed-bucket set is a
-    metadata-only manifest diff, so unchanged buckets produce zero IO."""
+    plans tasks over only that bucket's files on both sides — never the
+    full snapshots. The changed-bucket set is a metadata-only manifest
+    diff, so unchanged buckets produce zero IO. (The reads run on
+    executors, so the test checks the planned tasks' file lists.)"""
     from picsure_dictionary_etl_spark.cdc.envelope import (
         TRANSCRIPT_KEY,
         change_event_schema,
@@ -188,6 +189,10 @@ def test_cdf_reads_only_changed_buckets(spark, tmp_path):
     )
     from picsure_dictionary_etl_spark.lake.merge import merge_into, table_changes
     from picsure_dictionary_etl_spark.lake.table import LakeTable
+    from picsure_dictionary_etl_spark.streaming.cdf_source import (
+        _plan_cols,
+        _span_tasks,
+    )
 
     t = LakeTable.create(
         spark, str(tmp_path / "t"), schema=transcript_table_schema(),
@@ -216,33 +221,21 @@ def test_cdf_reads_only_changed_buckets(spark, tmp_path):
     forbidden = (set(snap1.all_files()) | set(snap2.all_files())) - allowed
     assert forbidden  # the guard below must actually guard something
 
-    read: list[str] = []
-    orig = t._read_files
+    keys, payload, dtypes, _ = _plan_cols(snap2)
+    tasks = _span_tasks(t.root, keys, payload, dtypes, snap1, snap2)
+    assert len(tasks) == 1
+    read = {f for p in tasks for f in (*p.old_files, *p.new_files)}
+    assert read, "CDF plans no files at all"
+    assert read <= allowed
+    assert not read & forbidden
 
-    def spy(snap, rel_files):
-        read.extend(rel_files)
-        return orig(snap, rel_files)
-
-    t._read_files = spy
-    try:
-        out = {(r["_change"], r["conv_id"], r["turn_idx"]): r["text"]
-               for r in table_changes(t, v1, v2).collect()}
-    finally:
-        t._read_files = orig
-
+    out = {(r["_change"], r["conv_id"], r["turn_idx"]): r["text"]
+           for r in table_changes(t, v1, v2).collect()}
     assert out == {("U", "c7", 2): "edited"}
-    assert read, "CDF read no files at all"
-    assert set(read) <= allowed
-    assert not set(read) & forbidden
 
     # self-diff stays a zero-IO no-op
-    read.clear()
-    t._read_files = spy
-    try:
-        assert table_changes(t, v2, v2).count() == 0
-    finally:
-        t._read_files = orig
-    assert read == []
+    assert _span_tasks(t.root, keys, payload, dtypes, snap2, snap2) == []
+    assert table_changes(t, v2, v2).count() == 0
 
 
 def test_keyed_pivot_skips_distinct_keys_job(spark):

@@ -74,7 +74,7 @@ DTYPES = {"id": "string", "s": "string", "l": "bigint", "d": "double",
 PAYLOAD = ["s", "l", "d", "b", "dt", "ts", "bin", "dec", "wdec"]
 
 
-def test_vectorized_tie_hash_is_bit_equal_to_scalar_twin(spark):
+def test_tie_hash_matches_spark(spark):
     """Every flat payload type, all rows tied: `_tie_col` (pandas ->
     arrow -> numpy hash) equals F.xxhash64 on the same values."""
     df = _frame()
@@ -101,7 +101,7 @@ def test_no_ties_pays_no_hash():
     assert (out == 0).all()
 
 
-def test_nested_payload_falls_back_to_scalar_twin(spark, tmp_path):
+def test_nested_payload_tie_hash_matches_spark(spark, tmp_path):
     """Nested payloads take the same vector path — no scalar fallback
     is left. A map column hashes as the engine's canonical key-sorted
     entry array; a nested column that only post-evolution files carry

@@ -148,8 +148,8 @@ def test_nested_parity(spark):
     """array / struct / map at depth: element chaining with null
     elements skipped, empty vs null values, struct fields under null
     rows, map entries in arbitrary physical order (the hash chains
-    them key-sorted), map-in-map and maps inside arrays — whole and
-    sliced."""
+    them key-sorted), map-in-map, maps inside arrays and maps keyed by
+    arrays or structs — whole and sliced."""
     rng = random.Random(424242)
     n = 600
 
@@ -166,6 +166,21 @@ def test_nested_parity(spark):
 
     def nl(gen, p=0.15):
         return lambda: None if rng.random() < p else gen()
+
+    def norm(v):
+        # Spark's key equality: -0.0 == 0.0, NaN == NaN
+        if isinstance(v, float):
+            return "nan" if v != v else v + 0.0
+        if isinstance(v, (list, tuple)):
+            return tuple(norm(x) for x in v)
+        if isinstance(v, dict):
+            return tuple((k, norm(x)) for k, x in v.items())
+        return v
+
+    def nested_entries(kgen, vgen, k=5):
+        # nested keys dedup by Spark's equality, not Python's
+        return list({norm(key): (key, vgen()) for key in
+                     (kgen() for _ in range(rng.randrange(k)))}.values())
 
     def text():
         return rng.choice(["", "k", "é漢", "x" * rng.randrange(1, 40)])
@@ -201,6 +216,20 @@ def test_nested_parity(spark):
          nl(lambda: lst(nl(lambda: entries(
              lambda: decimal.Decimal(rng.randrange(-999, 999)).scaleb(-2),
              nl(lng)))))),
+        # nested map keys: entries sort by _order_rank (null elements
+        # lowest, shorter prefix first, fields in order)
+        (pa.map_(pa.list_(pa.int64()), pa.int64()),
+         "map<array<bigint>,bigint>",
+         nl(lambda: nested_entries(
+             lambda: lst(nl(lambda: rng.randrange(-3, 3)), 4), nl(lng)))),
+        (pa.map_(pa.struct([("a", pa.string()), ("b", pa.list_(pa.int64())),
+                            ("c", pa.float64())]), pa.string()),
+         "map<struct<a:string,b:array<bigint>,c:double>,string>",
+         nl(lambda: nested_entries(
+             lambda: {"a": nl(lambda: rng.choice(["", "k", "z"]))(),
+                      "b": nl(lambda: lst(nl(lambda: rng.randrange(-2, 2)), 3))(),
+                      "c": nl(lambda: rng.choice([0.0, -0.0, nan, 1.5]))()},
+             nl(text)))),
     ]
     for typ, dtype, gen in cols:
         arr = pa.array([gen() for _ in range(n)], typ)
@@ -226,12 +255,10 @@ def test_all_null_column_leaves_hash_unchanged():
 
 
 def test_unsupported_type_raises_typed():
-    """Map keys must be scalar: the canonical form key-sorts entries."""
-    arr = pa.array(
-        [[([1, 2], 3)]], pa.map_(pa.list_(pa.int64()), pa.int64())
-    )
+    """A type outside the surface (here ``variant``) raises before any
+    work."""
     with pytest.raises(UnsupportedVectorType):
-        spark_xxhash64_vec([arr], ["map<array<bigint>,bigint>"])
+        spark_xxhash64_vec([pa.array([b"\x00"])], ["variant"])
 
 
 def test_wide_decimal_parity(spark):
