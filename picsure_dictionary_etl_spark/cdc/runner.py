@@ -49,7 +49,6 @@ class RunnerConfig:
     dead_letter_dir: str | None = None
     lineage_path: str | None = None  # JSONL, one line per commit
     bucket_count: int = 16
-    merge_mode: str = "mor"  # 'mor' (append deltas, compact lazily) | 'cow'
     # UPDATE SET semantics for every batch this runner applies:
     # 'row' (whole-row LWW) | 'coalesce' (D7 partial updates) |
     # 'blank_preserve' (D6). Non-row policies ride the same MOR path
@@ -58,7 +57,7 @@ class RunnerConfig:
     # the winners BEFORE resolution, so blank strings read as
     # "unspecified" under coalesce too (D6-ish) for normalized columns.
     update_policy: str = "row"
-    # mor: max files per bucket before inline compaction. Scaled by the
+    # Max files per bucket before inline compaction. Scaled by the
     # salt factor internally (salting writes `salt_partitions` files per
     # bucket per batch — a raw file count would trigger compaction churn).
     compact_threshold: int = 8
@@ -203,7 +202,6 @@ class CdcRunner:
             self.table,
             valid,
             batch_id,
-            mode=self.config.merge_mode,
             compact_threshold=self.config.compact_threshold * (salt or 1),
             compact_target_bytes=self.config.compact_target_bytes,
             salt_partitions=salt,
@@ -223,9 +221,11 @@ class CdcRunner:
             result.metrics["vacuum"] = self.table.vacuum(
                 keep_snapshots=self.config.vacuum_keep_snapshots
             )
-        if dead_obs is not None and not result.metrics.get("skipped_duplicate_batch"):
+        if not result.metrics.get("skipped_duplicate_batch"):
             try:
-                result.metrics["dead_letter_rows"] = int(dead_obs.get["dead_rows"] or 0)
+                if dead_rows is None:  # no DLQ write: read it post-commit
+                    dead_rows = int(dead_obs.get["dead_rows"] or 0)
+                result.metrics["dead_letter_rows"] = dead_rows
             except Exception:
                 pass  # empty batch: no action touched the observed node
         result.metrics["commit_seconds"] = round(time.monotonic() - t0, 4)
@@ -272,9 +272,9 @@ class CdcRunner:
         """Current live table (payload columns, no system columns).
 
         Merge-on-read resolution: LWW across base+delta files, tombstones
-        dropped — idempotent on copy-on-write/compacted data. Tables
-        holding field-wise (``_pu``-tagged) deltas resolve with the
-        mixed field-wise reduce."""
+        dropped — idempotent on compacted data. Tables holding field-wise
+        (``_pu``-tagged) deltas resolve with the mixed field-wise
+        reduce."""
         snap = self.table.current()
         keys = snap.key_cols
         from picsure_dictionary_etl_spark.lake.merge import (

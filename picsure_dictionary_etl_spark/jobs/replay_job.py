@@ -52,7 +52,6 @@ def main() -> None:
     ap.add_argument("--table", required=True, help="lake table root")
     ap.add_argument("--lsn-step", type=int, required=True, help="micro-batch LSN range width")
     ap.add_argument("--bucket-count", type=int, default=32)
-    ap.add_argument("--merge-mode", choices=["mor", "cow"], default="mor")
     ap.add_argument("--compact-threshold", type=int, default=8)
     ap.add_argument("--salt-partitions", type=int, default=None)
     ap.add_argument("--dead-letter-dir", default=None)
@@ -79,7 +78,6 @@ def main() -> None:
             dead_letter_dir=args.dead_letter_dir,
             lineage_path=args.lineage,
             bucket_count=args.bucket_count,
-            merge_mode=args.merge_mode,
             compact_threshold=args.compact_threshold,
             salt_partitions=args.salt_partitions,
         ),

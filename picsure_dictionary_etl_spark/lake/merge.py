@@ -16,21 +16,16 @@ Reference parity: natural-key array-batch upsert D1
 on last-writer-wins by max LSN), delete path H4
 (``concept/ConceptController.java:119-143``).
 
-Two physical strategies (Iceberg's copy-on-write vs merge-on-read):
+One physical write, merge-on-read (Iceberg's MOR): append the
+LWW-reduced winner rows (including 'D' tombstones) as per-bucket *delta
+files*; reads resolve LWW across base+delta files; buckets whose file
+count exceeds ``compact_threshold`` are compacted (LWW rewrite,
+tombstones dropped) inside the same commit. Write cost is proportional
+to the *batch*, not the table — the sustained-throughput design for a
+10^10-event replay. Compaction is amortized O(table/threshold); a batch
+load that wants fully rewritten buckets runs :func:`optimize` after it.
 
-* **cow** — read the touched buckets, re-reduce union(target, winners),
-  rewrite those buckets. Best read performance; write cost is
-  proportional to touched-bucket size. Right for low-frequency batch
-  loads.
-* **mor** (default for the streaming runner) — append the LWW-reduced
-  winner rows (including 'D' tombstones) as per-bucket *delta files*;
-  reads resolve LWW across base+delta files; buckets whose file count
-  exceeds ``compact_threshold`` are compacted (LWW rewrite, tombstones
-  dropped) inside the same commit. Write cost is proportional to the
-  *batch*, not the table — the sustained-throughput design for a
-  10^10-event replay. Compaction is amortized O(table/threshold).
-
-Common stages (all JVM-side codegen; zero Python on the hot path):
+Stages (all JVM-side codegen; zero Python on the hot path):
 
 1. **Batch LWW reduce** — ``groupBy(keys).agg(max_by(struct(payload), lsn))``
    (sort-based aggregate: struct buffers aren't hash-mutable, but still
@@ -38,8 +33,9 @@ Common stages (all JVM-side codegen; zero Python on the hot path):
    by ``combine_first``: single-shuffle bucket-first (default), or
    map-side-combine-first when skew salting engages — the partial
    aggregate then collapses hot-key storms *before* the shuffle.
-2. **Bucket pruning** — winners' distinct ``xxhash64(bucket_by) % n``
-   decides which buckets are touched; everything else carries over.
+2. **Bucket-local deltas** — each winner lands in its
+   ``xxhash64(bucket_by) % n`` bucket's delta files; untouched buckets
+   carry over by reference.
 3. **Atomic commit** with watermark/batch-id properties (exactly-once).
 """
 
@@ -226,7 +222,7 @@ def resolve_live(
     schema=None,
 ) -> DataFrame:
     """Merge-on-read resolution: LWW across base+delta rows, tombstones
-    dropped. Idempotent on already-resolved (cow/compacted) data.
+    dropped. Idempotent on already-resolved (compacted) data.
 
     Dispatch: if the rows carry the ``_pu`` marker column the table has
     (or had) field-wise deltas, and resolution runs the MIXED field-wise
@@ -283,21 +279,21 @@ def lww_winners_fieldwise(
     event came after the key's latest delete — a tombstone resets every
     field, so pre-delete values can't leak into a reinserted row.
     Unspecified-everywhere fields come out null (preserved against the
-    target by the COW resolve, which unions the full target rows in).
+    target at read time, where the stored rows resolve with the delta).
 
     Still ONE map-side-combinable groupBy: per column a
     ``max_by(struct(lsn, value), specified ? lsn : null)`` aggregate
     (Spark's max_by ignores null orderings), plus the delete-boundary
-    max. Output carries ``_del_lsn`` so a second reduce over
-    union(target, winners) keeps respecting the boundary.
+    max. Output carries ``_del_lsn`` so a second reduce over stored
+    base+delta rows keeps respecting the boundary.
 
     ``full_row_col`` names a boolean column marking rows as partial
-    (true) vs FULL (null/false — compacted bases, row-policy deltas,
-    COW targets). Full rows specify *every* field at their LSN — nulls
-    included — so a committed null can never be resurrected by an older
-    version's non-null value, and mixed row-policy/field-wise histories
-    resolve correctly in ONE aggregate (the MOR field-wise read path
-    and the COW re-reduce both use this).
+    (true) vs FULL (null/false — compacted bases, row-policy deltas).
+    Full rows specify *every* field at their LSN — nulls included — so
+    a committed null can never be resurrected by an older version's
+    non-null value, and mixed row-policy/field-wise histories resolve
+    correctly in ONE aggregate (the field-wise read path and compaction
+    both use this).
 
     Reference parity: selective-field upsert D7
     (``consent/ConsentController.java:170-189`` — ``Optional.ifPresent``
@@ -352,7 +348,6 @@ def merge_into(
     table: LakeTable,
     source: DataFrame,
     batch_id: str,
-    mode: str = "mor",
     compact_threshold: int = 8,
     salt_partitions: int | None = None,
     extra_lineage: dict[str, Any] | None = None,
@@ -382,24 +377,23 @@ def merge_into(
       whitespace) string fields also preserve the target
       (``facet/FacetLoaderService.java:168-174`` ``defaultIfBlank``).
 
-    Non-row policies run in EITHER physical mode. Under ``mor`` the
-    field-wise winner rows append as per-bucket deltas tagged
-    ``_pu=true`` and carrying ``_del_lsn`` (the table schema evolves
-    once, additively, to hold both system columns) — O(batch) writes,
-    the sustained-throughput shape for a 10^10-event partial-update
-    stream; reads and compaction resolve with the MIXED field-wise
-    reduce (see :func:`lww_winners_fieldwise`). Under ``cow`` the
-    touched buckets re-reduce field-wise at write time. Either way the
-    policy cannot express "set field to null" — inherent to the
-    semantics, same as the reference's ``Optional``-guarded setters.
-    The latest non-row policy is recorded as the table property
-    ``update_policy`` and governs read-time resolution.
+    Non-row policies append their field-wise winner rows as per-bucket
+    deltas tagged ``_pu=true`` and carrying ``_del_lsn`` (the table
+    schema evolves once, additively, to hold both system columns) —
+    O(batch) writes, the sustained-throughput shape for a 10^10-event
+    partial-update stream; reads and compaction resolve with the MIXED
+    field-wise reduce (see :func:`lww_winners_fieldwise`). The policy
+    cannot express "set field to null" — inherent to the semantics,
+    same as the reference's ``Optional``-guarded setters. The latest
+    non-row policy is recorded as the table property ``update_policy``.
 
     ``matched_only`` (D11): only keys LIVE in the target are touched —
     unmatched (or deleted) source keys are dropped, never inserted or
     resurrected (the reference's update-only endpoints return 404
-    instead of creating). Forces COW (needs the target key set at
-    write time).
+    instead of creating). The winners are semi-joined against the live
+    keys of the buckets they touch, and the survivors append as
+    ordinary deltas: one extra pass over the batch, never a table scan.
+    ``winners`` in the metrics then counts the matched keys.
 
     ``combine_first`` picks the reduce's shuffle shape; ``None`` (auto)
     = True iff salting is engaged:
@@ -426,13 +420,9 @@ def merge_into(
 
     if update_policy not in ("row", "coalesce", "blank_preserve"):
         raise ValueError(f"unknown update_policy {update_policy!r}")
-    if matched_only:
-        mode = "cow"
-    if update_policy != "row" and mode == "mor":
+    if update_policy != "row":
         # field-wise deltas persist the delete boundary and the partial
         # marker; additive, metadata-only, idempotent
-        from pyspark.sql import types as T
-
         snap_cols = {f.name for f in snap.schema.fields}
         need = [
             f
@@ -512,29 +502,37 @@ def merge_into(
             policy=update_policy, schema=snap.schema,
         ).withColumn(PU_COL, F.lit(True))
 
+    cached = None
+    if matched_only:
+        # the touched buckets must be known before the write (only their
+        # live keys join), so persist the winners and collect their
+        # distinct bucket ids (<= bucket_count rows). Tombstoned keys
+        # resolve to no live row, so a deleted key is never resurrected.
+        cached = winners.persist()
+        touched = [r[0] for r in cached.select(BUCKET_COL).distinct().collect()]
+        target = _read_raw(table, snap, keys, payload, bucket_ids=touched)
+        live_keys = resolve_live(target, keys, payload, schema=snap.schema).select(*keys)
+        winners = cached.join(live_keys, keys, "left_semi")
+
     # conflict-count lineage, piggybacked on the write job (no extra
     # action): winners = distinct keys surviving the in-batch LWW
-    # reduce; conflicts = superseded duplicates the reduce suppressed
+    # reduce (and the matched_only join); conflicts = superseded
+    # duplicates the reduce suppressed
     wobs = Observation(f"winners-{batch_id}")
     winners = winners.observe(wobs, F.count(F.lit(1)).alias("winners"))
 
     salt = [F.pmod(F.xxhash64(*keys), F.lit(salt_partitions))] if salt_partitions else None
     version = snap.version + 1
 
-    sizes_hint: dict[str, int] = {}
-    if mode == "cow":
-        appends, replaces, compacted = _cow_write(
-            table, snap, winners, keys, payload, salt, version,
-            update_policy=update_policy, matched_only=matched_only,
-        )
-    elif mode == "mor":
-        appends, replaces, compacted, sizes_hint = _mor_write(
-            table, snap, winners, keys, payload, salt, version, compact_threshold,
-            write_repartition=bool(salt) or combine_first,
-            compact_target_bytes=compact_target_bytes,
-        )
-    else:
-        raise ValueError(f"unknown merge mode {mode!r}")
+    # the semi-join drops the _bucket partitioning, so matched_only
+    # writes repartition like the salted and combine-first plans
+    appends, replaces, compacted, sizes_hint = _mor_write(
+        table, snap, winners, keys, payload, salt, version, compact_threshold,
+        write_repartition=matched_only or bool(salt) or combine_first,
+        compact_target_bytes=compact_target_bytes,
+    )
+    if cached is not None:
+        cached.unpersist()
 
     changed = sorted({int(b) for b in (*appends, *replaces)})
     if not changed:
@@ -557,9 +555,8 @@ def merge_into(
     per_bucket = _bucket_row_counts(table, written)
     metrics: dict[str, Any] = {
         "batch_id": batch_id,
-        "mode": mode,
         "buckets_touched": len(changed),
-        "buckets_compacted": compacted if mode == "mor" else changed,
+        "buckets_compacted": compacted,
         "buckets_total": snap.bucket_count,
         "rows_written": sum(per_bucket.values()) if per_bucket else winners_n,
         "per_bucket_rows": per_bucket,
@@ -602,65 +599,6 @@ def _read_raw(table, snap, keys, payload, rel_files=None, bucket_ids=None, df=No
         *keys, *payload, F.col(OP_COL), F.col(LSN_COL).cast("long"),
         *[F.col(c) for c in extras],
     )
-
-
-def _cow_write(
-    table, snap, winners, keys, payload, salt, version,
-    update_policy="row", matched_only=False,
-):
-    """Copy-on-write: union touched buckets with winners, re-reduce,
-    rewrite those buckets.
-
-    Touched buckets must be known up front (they decide which target
-    files join the union), so COW pays one extra batch pass: persist
-    winners, collect the distinct bucket set (≤ bucket_count rows), then
-    rewrite. Returns ({}, replaces, changed).
-
-    The re-reduce is the MIXED field-wise reduce whenever this batch is
-    partial OR the target carries field-wise history (``_pu`` in
-    schema): target rows enter as FULL rows — raw MOR versions of a key
-    row-resolve among themselves by LSN, so a field a newer row-policy
-    update set to null can never be resurrected by an older version's
-    value. ``matched_only`` semi-joins winners against the target's
-    LIVE key set, so deleted keys are not resurrected and unmatched
-    rows never insert."""
-    winners = winners.persist()
-    changed = sorted(r[0] for r in winners.select(BUCKET_COL).distinct().collect())
-    if not changed:
-        winners.unpersist()
-        return {}, {}, []
-    target = _read_raw(table, snap, keys, payload, bucket_ids=changed)
-    src = winners.drop(BUCKET_COL)
-    if matched_only:
-        live_keys = resolve_live(target, keys, payload, schema=snap.schema).select(*keys)
-        src = src.join(live_keys, keys, "left_semi")
-    fieldwise = update_policy != "row" or PU_COL in target.columns
-    if fieldwise:
-        # align both sides on the full system-column set; resolve_live
-        # then dispatches to the mixed reduce (PU_COL present) — the
-        # same code path MOR reads and compaction use
-        for c, dtype in ((DEL_LSN_COL, "long"), (PU_COL, "boolean")):
-            if c not in target.columns:
-                target = target.withColumn(c, F.lit(None).cast(dtype))
-            if c not in src.columns:
-                src = src.withColumn(
-                    c,
-                    F.lit(update_policy != "row" if c == PU_COL else None).cast(dtype),
-                )
-    combined = target.unionByName(src)
-    live = resolve_live(combined, keys, payload, schema=snap.schema)
-    live = live.withColumn(BUCKET_COL, bucket_expr(snap.bucket_by, snap.bucket_count))
-    # every CHANGED bucket must be replaced even when it resolved to
-    # ZERO live rows (a batch that deletes a bucket's last keys): the
-    # dynamic-partition writer emits no dir for an empty bucket, and a
-    # missing `replaces` entry would keep the old files — the delete
-    # would silently vanish
-    replaces = {str(b): [] for b in changed}
-    replaces.update(
-        table.write_data_files(live, version, write_partitions=salt, sort_cols=keys)
-    )
-    winners.unpersist()
-    return {}, replaces, changed
 
 
 def _should_compact(
@@ -792,9 +730,9 @@ def _mor_write(
             resolve_live(base, keys, payload, schema=snap.schema)
             .withColumn(BUCKET_COL, bucket_expr(snap.bucket_by, snap.bucket_count))
         )
-        # same zero-live-rows guard as the COW path: a compacted bucket
-        # whose keys all died must swap to an EMPTY file list, not keep
-        # its pre-compaction files
+        # zero-live-rows guard: a compacted bucket whose keys all died
+        # must swap to an EMPTY file list, not keep its pre-compaction
+        # files (the dynamic-partition writer emits no dir for it)
         replaces = {str(b): [] for b in to_compact}
         replaces.update(
             table.write_data_files(

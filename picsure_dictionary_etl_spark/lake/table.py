@@ -21,11 +21,12 @@ needs from a table format:
   reference's ``update_info`` stamp (``schema.sql:152-155``) and its
   re-POST-is-a-no-op contract (README.md:285-288), made airtight.
 * **Hash-bucket layout for MERGE pruning.** Rows are bucketed by
-  ``xxhash64(key) % bucket_count``; a MERGE only reads and rewrites the
-  buckets its source keys touch. At 100 TB with (say) 1024 buckets a
-  micro-batch touching 5% of conversations rewrites ~5% of the table,
-  not all of it. (Iceberg equivalent: ``PARTITIONED BY bucket(N, conv_id)``
-  + copy-on-write MERGE with partition pruning.)
+  ``xxhash64(key) % bucket_count``; a MERGE appends delta files only to
+  the buckets its source keys touch, and compaction rewrites only those.
+  At 100 TB with (say) 1024 buckets a micro-batch touching 5% of
+  conversations never reads or rewrites the other 95%. (Iceberg
+  equivalent: ``PARTITIONED BY bucket(N, conv_id)`` + merge-on-read
+  MERGE with partition pruning.)
 * **Additive schema evolution.** The manifest stores the authoritative
   schema; old data files simply lack new columns and read back as nulls
   (Parquet readers fill missing top-level columns). ``evolve_schema``
@@ -541,7 +542,7 @@ class LakeTable:
         ``sort_cols`` sorts rows WITHIN each write task before the
         parquet encode (Iceberg write-ordering): row groups get narrow
         key min/max stats, so key-filtered scans skip row groups —
-        used by compaction/COW where the sort cost amortizes over many
+        used by compaction where the sort cost amortizes over many
         reads (hot-path delta appends stay unsorted).
         """
         rel = self._commit_dir(version, subdir)
@@ -580,8 +581,8 @@ class LakeTable:
         bucket_count: int | None = None,
     ) -> Snapshot:
         """Produce snapshot N+1: ``appends`` extend a bucket's file list
-        (merge-on-read deltas); ``replaces`` swap it wholesale (copy-on-
-        write / compaction). One atomic pointer swap commits everything.
+        (merge-on-read deltas); ``replaces`` swap it wholesale
+        (compaction, rebucket). One atomic pointer swap commits everything.
         ``prev`` lets a single-writer caller that already holds the
         current snapshot skip the re-read (the manifest's file map is
         O(table) JSON — and a remote round trip on catalog commit

@@ -234,31 +234,16 @@ def apply_fhir_updates(
     (ref, key). Returns the reference's logMetrics counters."""
     from picsure_dictionary_etl_spark.lake.merge import LSN_COL, OP_COL, merge_into
 
-    from picsure_dictionary_etl_spark.lake.merge import _payload_cols, resolve_live
-
     desc = studies.select(
         "ref",
         F.col("description"),
         F.lit("U").alias(OP_COL),
         F.lit(lsn).cast("long").alias(LSN_COL),
     )
-    # count the DISTINCT datasets that actually match (matched_only
-    # drops the rest; the reference's logMetrics adds each existing
-    # refId to a set) — a dim-table-sized semi-join, not a big scan
-    snap = dataset_table.current()
-    existing = resolve_live(
-        dataset_table.read(), snap.key_cols, _payload_cols(snap)
-    ).select(*snap.key_cols)
-    datasets_updated = (
-        desc.join(existing, snap.key_cols, "left_semi")
-        .select(*snap.key_cols).distinct().count()
-    )
     r1 = merge_into(
         dataset_table, desc, f"{batch_id}-desc",
         update_policy="blank_preserve", matched_only=True,
     )
-    if r1.metrics.get("skipped_duplicate_batch"):
-        datasets_updated = 0  # redelivery is a committed no-op
     meta = dataset_metadata_updates(studies, url_to_key_map).select(
         "ref", "key", "value",
         F.lit("U").alias(OP_COL),
@@ -266,6 +251,9 @@ def apply_fhir_updates(
     )
     r2 = merge_into(metadata_table, meta, f"{batch_id}-meta", update_policy="coalesce")
     return {
-        "datasets_updated": datasets_updated,
+        # the merge's winners are the DISTINCT matched datasets (the
+        # reference's logMetrics adds each existing refId to a set); a
+        # redelivery or an all-unmatched batch reports none
+        "datasets_updated": r1.metrics.get("winners", 0),
         "metadata_updated": r2.metrics.get("winners", 0),
     }

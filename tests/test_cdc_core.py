@@ -8,7 +8,14 @@ import pytest
 from picsure_dictionary_etl_spark.cdc.generator import change_events, expected_final_state
 from picsure_dictionary_etl_spark.cdc.normalize import normalize_events, split_dead_letter
 from picsure_dictionary_etl_spark.cdc.runner import CdcRunner, RunnerConfig
-from picsure_dictionary_etl_spark.lake.merge import LSN_COL
+from picsure_dictionary_etl_spark.lake.merge import LSN_COL, optimize
+
+# the runner tests read their final state from both layouts a table can
+# hold: "mor" leaves the inline-compaction layout (deltas over bases);
+# "cow" also compacts every bucket (optimize, threshold 1), so the state
+# is read from rewritten, resolved bases — the layout a copy-on-write
+# merge leaves
+LAYOUTS = pytest.mark.parametrize("compact", [True, False], ids=["cow", "mor"])
 
 
 def _oracle_frame(spark, events_df):
@@ -32,8 +39,8 @@ def _assert_state_equal(state_df, oracle_pdf, extra_cols=()):
         pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_replay_matches_oracle(spark, tmp_path, mode):
+@LAYOUTS
+def test_replay_matches_oracle(spark, tmp_path, compact):
     events = change_events(
         spark, 4000, n_convs=40, turns_per_conv=20, delete_ratio=0.1,
         hot_fraction=0.3, malformed_ratio=0.02,
@@ -45,13 +52,15 @@ def test_replay_matches_oracle(spark, tmp_path, mode):
             dead_letter_dir=str(tmp_path / "dlq"),
             lineage_path=str(tmp_path / "lineage.jsonl"),
             bucket_count=8,
-            merge_mode=mode,
             compact_threshold=3,
         ),
     )
     results = runner.replay(events, lsn_step=1000)
     assert len(results) == 4
     assert runner.watermark() == 3999
+    if compact:
+        optimize(runner.table, compact_threshold=1)
+        assert all(len(f) == 1 for f in runner.table.current().files.values())
 
     _assert_state_equal(runner.state(), _oracle_frame(spark, events))
 
@@ -62,9 +71,8 @@ def test_replay_matches_oracle(spark, tmp_path, mode):
     assert len(lines) == 4
     assert all("per_bucket_rows" in l and "rows_in" in l for l in lines)
     assert lines[0]["dead_letter_rows"] > 0
-    if mode == "mor":
-        # threshold 3 over 4 batches forces at least one inline compaction
-        assert any(l.get("buckets_compacted") for l in lines[1:])
+    # threshold 3 over 4 batches forces at least one inline compaction
+    assert any(l.get("buckets_compacted") for l in lines[1:])
 
 
 def test_exactly_once_redelivery(spark, tmp_path):
@@ -87,15 +95,20 @@ def test_exactly_once_redelivery(spark, tmp_path):
     pd.testing.assert_frame_equal(state1, state2, check_dtype=False)
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_resume_from_checkpoint(spark, tmp_path, mode):
+@LAYOUTS
+def test_resume_from_checkpoint(spark, tmp_path, compact):
     """Kill mid-replay and restart: final state identical to one-shot."""
     events = change_events(spark, 2000, n_convs=20, delete_ratio=0.08)
     root = str(tmp_path / "t")
-    cfg = dict(table_root=root, bucket_count=4, merge_mode=mode, compact_threshold=3)
+    cfg = dict(table_root=root, bucket_count=4, compact_threshold=3)
     r1 = CdcRunner(spark, RunnerConfig(**cfg))
     r1.replay(events, lsn_step=500, max_lsn=999)  # "crash" after 2 batches
     assert r1.watermark() == 999
+    if compact:
+        # a maintenance commit between crash and restart keeps the
+        # watermark the restart resumes from
+        optimize(r1.table, compact_threshold=1)
+        assert r1.watermark() == 999
 
     r2 = CdcRunner(spark, RunnerConfig(**cfg))  # fresh process
     r2.replay(events, lsn_step=500)  # resumes from watermark
@@ -179,40 +192,22 @@ def _one_key_table(spark, tmp_path, name):
     )
 
 
-def test_cow_delete_of_buckets_last_key_sticks(spark, tmp_path):
-    """Regression (hypothesis-found): a COW batch that deletes a
-    bucket's LAST live key must swap the bucket to an empty file list —
-    the dynamic-partition writer emits no dir for an empty bucket, and
-    a missing replaces entry used to keep the old files alive."""
-    from picsure_dictionary_etl_spark.cdc.envelope import change_event_schema
-    from picsure_dictionary_etl_spark.lake.merge import merge_into, resolve_live
-
-    t = _one_key_table(spark, tmp_path, "cowdel")
-    ev = lambda rows: spark.createDataFrame(rows, change_event_schema())  # noqa: E731
-    merge_into(t, ev([(1, "I", "c0", 0, "user", "a", None, None)]), "b0", mode="cow")
-    merge_into(t, ev([(2, "I", "c0", 0, "user", "b", None, None),
-                      (3, "D", "c0", 0, None, None, None, None)]), "b1", mode="cow")
-    live = resolve_live(t.read(), ["conv_id", "turn_idx"],
-                        ["role", "text", "tool", "ts"])
-    assert live.count() == 0
-    assert t.current().files == {}  # the bucket's file list is gone
-
-
 def test_mor_compaction_of_fully_deleted_bucket_sticks(spark, tmp_path):
-    """Same guard on the MOR compaction path: a bucket whose keys all
-    died by compaction time must not resurrect its pre-compaction
-    files when the compacted output is empty."""
+    """Regression (hypothesis-found): a bucket whose keys all died by
+    compaction time must swap to an empty file list — the
+    dynamic-partition writer emits no dir for an empty bucket, and a
+    missing replaces entry would keep its pre-compaction files alive."""
     from picsure_dictionary_etl_spark.cdc.envelope import change_event_schema
     from picsure_dictionary_etl_spark.lake.merge import merge_into, resolve_live
 
     t = _one_key_table(spark, tmp_path, "mordel")
     ev = lambda rows: spark.createDataFrame(rows, change_event_schema())  # noqa: E731
     merge_into(t, ev([(1, "I", "c0", 0, "user", "a", None, None)]), "b0",
-               mode="mor", compact_threshold=2)
+               compact_threshold=2)
     # tombstone delta + threshold breach in one batch -> compaction of a
     # bucket that resolves to empty
     merge_into(t, ev([(2, "D", "c0", 0, None, None, None, None)]), "b1",
-               mode="mor", compact_threshold=1)
+               compact_threshold=1)
     live = resolve_live(t.read(), ["conv_id", "turn_idx"],
                         ["role", "text", "tool", "ts"])
     assert live.count() == 0

@@ -67,10 +67,8 @@ def test_changed_rule_remaps_only_that_facet(spark, concepts):
     assert ("\\study_a\\lab\\glucose\\", "glucose") in got
 
 
-def test_end_to_end_with_dictionary_pipeline(spark):
-    nodes, _ = load_column_meta_dictionary(
-        spark, "/root/reference/src/test/resources/columnMeta.csv", ["demographics"]
-    )
+def test_end_to_end_with_dictionary_pipeline(spark, column_meta_csv):
+    nodes, _ = load_column_meta_dictionary(spark, column_meta_csv, ["demographics"])
     rules = {
         "demographics": FacetRule(
             "demographics", [[Expression("exactly", "demographics", 0)]]
@@ -78,5 +76,5 @@ def test_end_to_end_with_dictionary_pipeline(spark):
     }
     leaves = nodes.filter(nodes.is_leaf)
     mappings, _, report = load_facets(leaves, rules)
-    # every demographics leaf maps (14 leaves of the 15-node golden tree)
+    # every demographics leaf maps (14 leaves of the 15-node tree)
     assert report["mapping_counts"]["demographics"] == leaves.count() == 14

@@ -211,11 +211,11 @@ def test_fieldwise_property_hypothesis(spark):
     check()
 
 
-def test_mixed_policy_mor_equals_cow_hypothesis(spark, tmp_path):
+def test_mixed_policy_mor_matches_oracle_hypothesis(spark, tmp_path):
     """Property: a stream of batches with MIXED update policies (row /
-    coalesce per batch) produces the identical final state under
-    mode='mor' (field-wise _pu deltas + compaction) and mode='cow'
-    (write-time re-reduce), both matching a sequential oracle."""
+    coalesce per batch) — field-wise _pu deltas interleaved with
+    row-policy deltas and inline compaction — resolves to the state of
+    a sequential oracle."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
@@ -224,7 +224,12 @@ def test_mixed_policy_mor_equals_cow_hypothesis(spark, tmp_path):
         change_event_schema,
         transcript_table_schema,
     )
-    from picsure_dictionary_etl_spark.lake.merge import merge_into, resolve_live
+    from picsure_dictionary_etl_spark.lake.merge import (
+        _payload_cols,
+        _read_raw,
+        merge_into,
+        resolve_live,
+    )
     from picsure_dictionary_etl_spark.lake.table import LakeTable
 
     event = st.tuples(
@@ -244,16 +249,11 @@ def test_mixed_policy_mor_equals_cow_hypothesis(spark, tmp_path):
               suppress_health_check=[HealthCheck.too_slow])
     def check(batches):
         counter[0] += 1
-        roots = {
-            m: str(tmp_path / f"mix-{counter[0]}-{m}") for m in ("mor", "cow")
-        }
-        tables = {
-            m: LakeTable.create(
-                spark, r, schema=transcript_table_schema(),
-                key_cols=TRANSCRIPT_KEY, bucket_by=["conv_id"], bucket_count=2,
-            )
-            for m, r in roots.items()
-        }
+        t = LakeTable.create(
+            spark, str(tmp_path / f"mix-{counter[0]}"),
+            schema=transcript_table_schema(),
+            key_cols=TRANSCRIPT_KEY, bucket_by=["conv_id"], bucket_count=2,
+        )
         state, lsn = {}, 0
         for bi, (policy, seq) in enumerate(batches):
             rows = []
@@ -270,23 +270,16 @@ def test_mixed_policy_mor_equals_cow_hypothesis(spark, tmp_path):
                     state[key] = (text if text is not None else cur[0],
                                   role if role is not None else cur[1])
             df = spark.createDataFrame(rows, change_event_schema())
-            for m, t in tables.items():
-                merge_into(t, df, f"b{bi}", mode=m, update_policy=policy,
-                           compact_threshold=2)
-        for m, t in tables.items():
-            snap = t.current()
-            from picsure_dictionary_etl_spark.lake.merge import _payload_cols, _read_raw
-
-            payload = _payload_cols(snap)
-            raw = _read_raw(t, snap, TRANSCRIPT_KEY, payload,
-                            rel_files=snap.all_files())
-            live = resolve_live(
-                raw, TRANSCRIPT_KEY, payload,
-                schema=snap.schema,
-            )
-            got = {(r["conv_id"], r["turn_idx"]): (r["text"], r["role"])
-                   for r in live.collect()}
-            assert got == state, f"mode={m}: {got} != {state}"
+            merge_into(t, df, f"b{bi}", update_policy=policy,
+                       compact_threshold=2)
+        snap = t.current()
+        payload = _payload_cols(snap)
+        raw = _read_raw(t, snap, TRANSCRIPT_KEY, payload,
+                        rel_files=snap.all_files())
+        live = resolve_live(raw, TRANSCRIPT_KEY, payload, schema=snap.schema)
+        got = {(r["conv_id"], r["turn_idx"]): (r["text"], r["role"])
+               for r in live.collect()}
+        assert got == state, f"{got} != {state}"
 
     check()
 

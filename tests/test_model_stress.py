@@ -1,5 +1,5 @@
 """Model-based stress: a deterministic random interleaving of merges
-(mor/cow x row/coalesce), redeliveries, rollbacks, truncates, and
+(bucket-first/combine-first shuffle x row/coalesce), redeliveries, rollbacks, truncates, and
 vacuums, checked against a pure-Python oracle AFTER EVERY operation
 (state + watermark snapshot per table version). Wider sweeps (4 seeds
 x 40 ops) ran clean in round 3; this pins one seed at 25 ops."""
@@ -89,20 +89,20 @@ def test_model_stress_random_op_interleavings(spark, tmp_path):
         if op == "merge":
             bid += 1
             rows = rand_events(rng.randint(1, 8))
-            mode = rng.choice(["mor", "cow"])
+            combine_first = rng.choice([False, True])
             policy = rng.choice(["row", "row", "coalesce"])
             df = spark.createDataFrame(rows, change_event_schema())
-            r = merge_into(table, df, f"b{bid}", mode=mode,
+            r = merge_into(table, df, f"b{bid}", combine_first=combine_first,
                            update_policy=policy, compact_threshold=3)
             apply_oracle(rows, policy)
             watermark = max(watermark, max(x[0] for x in rows))
             versions[r.snapshot.version] = (dict(state), watermark)
-            last_batch = (df, f"b{bid}", mode, policy)
-            trail.append(f"merge:{mode}:{policy}")
+            last_batch = (df, f"b{bid}", combine_first, policy)
+            trail.append(f"merge:{combine_first}:{policy}")
         elif op == "redeliver" and last_batch is not None:
-            df, b, mode, policy = last_batch
-            r = merge_into(table, df, b, mode=mode, update_policy=policy,
-                           compact_threshold=3)
+            df, b, combine_first, policy = last_batch
+            r = merge_into(table, df, b, combine_first=combine_first,
+                           update_policy=policy, compact_threshold=3)
             assert r.metrics.get("skipped_duplicate_batch")
             trail.append("redeliver")
         elif op == "rollback":

@@ -17,16 +17,19 @@ from picsure_dictionary_etl_spark.cdc.envelope import (
     change_event_schema,
     transcript_table_schema,
 )
-from picsure_dictionary_etl_spark.lake.merge import merge_into, resolve_live
+from picsure_dictionary_etl_spark.lake.merge import merge_into, optimize, resolve_live
 from picsure_dictionary_etl_spark.lake.table import LakeTable
 
 TS1 = datetime.datetime(2025, 1, 1, 12, 0, 0)
 TS2 = datetime.datetime(2025, 2, 2, 8, 30, 0)
 PAYLOAD = ["role", "text", "tool", "ts"]
 
-# every semantic test runs under BOTH physical strategies: cow re-reduces
-# at write time; mor appends _pu-tagged field-wise deltas resolved at read
-MODES = pytest.mark.parametrize("mode", ["cow", "mor"])
+# every semantic test runs on BOTH layouts a reader can meet: "mor"
+# leaves each batch as _pu-tagged field-wise deltas resolved at read;
+# "cow" compacts after every merge (optimize, threshold 1), so the next
+# merge and the read meet rewritten, resolved bases — the layout a
+# copy-on-write merge leaves
+LAYOUTS = pytest.mark.parametrize("compact", [True, False], ids=["cow", "mor"])
 
 
 def _table(spark, tmp_path):
@@ -55,6 +58,12 @@ def _state(table):
     }
 
 
+def _merge(table, df, batch_id, compact, **kw):
+    merge_into(table, df, batch_id, **kw)
+    if compact:
+        optimize(table, compact_threshold=1)
+
+
 def _seed(spark, table):
     full = _events(
         spark,
@@ -66,8 +75,8 @@ def _seed(spark, table):
     merge_into(table, full, "seed")
 
 
-@MODES
-def test_coalesce_preserves_unspecified_fields(spark, tmp_path, mode):
+@LAYOUTS
+def test_coalesce_preserves_unspecified_fields(spark, tmp_path, compact):
     t = _table(spark, tmp_path)
     _seed(spark, t)
     partial = _events(
@@ -79,15 +88,15 @@ def test_coalesce_preserves_unspecified_fields(spark, tmp_path, mode):
             (4, "U", "c2", 0, None, "orphan", None, None),
         ],
     )
-    merge_into(t, partial, "b2", update_policy="coalesce", mode=mode)
+    _merge(t, partial, "b2", compact, update_policy="coalesce")
     s = _state(t)
     assert s[("c1", 0)] == ("user", "hello-edited", None, TS1)
     assert s[("c1", 1)] == ("assistant", "hi", "search", TS1)
     assert s[("c2", 0)] == (None, "orphan", None, None)
 
 
-@MODES
-def test_blank_preserve_keeps_target_on_blank_strings(spark, tmp_path, mode):
+@LAYOUTS
+def test_blank_preserve_keeps_target_on_blank_strings(spark, tmp_path, compact):
     t = _table(spark, tmp_path)
     _seed(spark, t)
     partial = _events(
@@ -97,7 +106,7 @@ def test_blank_preserve_keeps_target_on_blank_strings(spark, tmp_path, mode):
             (3, "U", "c1", 1, "", "   ", "calc", TS2),
         ],
     )
-    merge_into(t, partial, "b2", update_policy="blank_preserve", mode=mode)
+    _merge(t, partial, "b2", compact, update_policy="blank_preserve")
     s = _state(t)
     assert s[("c1", 1)] == ("assistant", "hi", "calc", TS2)
 
@@ -112,14 +121,23 @@ def test_matched_only_never_inserts(spark, tmp_path):
             (4, "I", "c9", 9, "user", "should-not-appear", None, TS2),
         ],
     )
-    merge_into(t, batch, "b2", update_policy="coalesce", matched_only=True)
+    r = merge_into(t, batch, "b2", update_policy="coalesce", matched_only=True)
     s = _state(t)
     assert s[("c1", 0)] == ("user", "updated", None, TS1)
     assert ("c9", 9) not in s
+    # a delta sized to the matched winner: one row, never the touched
+    # bucket's other seeded key
+    assert r.metrics["winners"] == 1 and r.metrics["rows_written"] == 1, r.metrics
+    # an all-unmatched batch commits no files
+    files = t.current().files
+    r = merge_into(t, _events(spark, [(5, "U", "c7", 0, None, "x", None, None)]),
+                   "b3", update_policy="coalesce", matched_only=True)
+    assert r.snapshot.files == files and not r.metrics.get("winners")
+    assert _state(t) == s
 
 
-@MODES
-def test_delete_resets_fields_within_batch(spark, tmp_path, mode):
+@LAYOUTS
+def test_delete_resets_fields_within_batch(spark, tmp_path, compact):
     t = _table(spark, tmp_path)
     _seed(spark, t)
     batch = _events(
@@ -131,45 +149,45 @@ def test_delete_resets_fields_within_batch(spark, tmp_path, mode):
             (11, "I", "c1", 0, None, "fresh", None, None),
         ],
     )
-    merge_into(t, batch, "b2", update_policy="coalesce", mode=mode)
+    _merge(t, batch, "b2", compact, update_policy="coalesce")
     s = _state(t)
     assert s[("c1", 0)] == (None, "fresh", None, None)
 
 
-@MODES
-def test_delete_across_batches_then_partial_insert(spark, tmp_path, mode):
+@LAYOUTS
+def test_delete_across_batches_then_partial_insert(spark, tmp_path, compact):
     t = _table(spark, tmp_path)
     _seed(spark, t)
     merge_into(t, _events(spark, [(10, "D", "c1", 0, None, None, None, None)]), "b2")
     assert ("c1", 0) not in _state(t)
-    merge_into(
+    _merge(
         t,
         _events(spark, [(11, "I", "c1", 0, None, "reborn", None, None)]),
         "b3",
+        compact,
         update_policy="coalesce",
-        mode=mode,
     )
     s = _state(t)
     # the committed delete removed the row; the partial insert starts clean
     assert s[("c1", 0)] == (None, "reborn", None, None)
 
 
-@MODES
-def test_partial_batch_redelivery_is_noop(spark, tmp_path, mode):
+@LAYOUTS
+def test_partial_batch_redelivery_is_noop(spark, tmp_path, compact):
     t = _table(spark, tmp_path)
     _seed(spark, t)
     partial = _events(spark, [(3, "U", "c1", 0, None, "edited", None, None)])
-    merge_into(t, partial, "b2", update_policy="coalesce", mode=mode)
+    _merge(t, partial, "b2", compact, update_policy="coalesce")
     v1 = t.current().version
     s1 = _state(t)
-    r = merge_into(t, partial, "b2", update_policy="coalesce", mode=mode)
+    r = merge_into(t, partial, "b2", update_policy="coalesce")
     assert r.metrics.get("skipped_duplicate_batch")
     assert t.current().version == v1
     assert _state(t) == s1
 
 
-@MODES
-def test_multiple_partials_per_key_in_one_batch(spark, tmp_path, mode):
+@LAYOUTS
+def test_multiple_partials_per_key_in_one_batch(spark, tmp_path, compact):
     t = _table(spark, tmp_path)
     _seed(spark, t)
     batch = _events(
@@ -180,7 +198,7 @@ def test_multiple_partials_per_key_in_one_batch(spark, tmp_path, mode):
             (5, "U", "c1", 0, None, None, "web", None),
         ],
     )
-    merge_into(t, batch, "b2", update_policy="coalesce", mode=mode)
+    _merge(t, batch, "b2", compact, update_policy="coalesce")
     s = _state(t)
     # each field independently from its own latest specifier
     assert s[("c1", 0)] == ("admin", "v3", "web", TS1)
@@ -202,8 +220,8 @@ def test_matched_only_does_not_resurrect_deleted_key(spark, tmp_path):
     assert ("c1", 0) not in _state(t)
 
 
-@MODES
-def test_row_null_out_not_resurrected_by_later_partial(spark, tmp_path, mode):
+@LAYOUTS
+def test_row_null_out_not_resurrected_by_later_partial(spark, tmp_path, compact):
     """ADVICE r2 (medium): a field a ROW-policy update set to null must
     stay null when a later field-wise batch touches the same bucket —
     raw MOR versions of a key must row-resolve among themselves, never
@@ -215,18 +233,18 @@ def test_row_null_out_not_resurrected_by_later_partial(spark, tmp_path, mode):
         t,
         _events(spark, [(5, "U", "c1", 1, "assistant", "hi", None, TS1)]),
         "null-out",
-        mode="mor",
     )
     assert _state(t)[("c1", 1)] == ("assistant", "hi", None, TS1)
     # later coalesce batch touches ANOTHER key in the same small table;
-    # every key in a touched bucket is re-reduced — (c1,1).tool must not
-    # resurrect to "search" from the pre-null-out version
-    merge_into(
+    # every key in a touched bucket is re-reduced at read (and, compacted,
+    # at rewrite) — (c1,1).tool must not resurrect to "search" from the
+    # pre-null-out version
+    _merge(
         t,
         _events(spark, [(6, "U", "c1", 0, None, "edited", None, None)]),
         "partial",
+        compact,
         update_policy="coalesce",
-        mode=mode,
     )
     s = _state(t)
     assert s[("c1", 1)] == ("assistant", "hi", None, TS1)
@@ -249,14 +267,12 @@ def test_mor_fieldwise_writes_are_batch_sized_and_compaction_resolves(spark, tmp
             _events(spark, [(lsn, "U", "c1", 0, *field_updates)]),
             f"p{i}",
             update_policy="coalesce",
-            mode="mor",
             compact_threshold=3,
         )
-        assert r.metrics["mode"] == "mor"
         if not r.metrics.get("buckets_compacted"):
             # O(batch) writes: a 1-event partial batch appends 1 winner
-            # row — never the touched bucket's full contents (COW would
-            # rewrite both seeded keys)
+            # row — never the touched bucket's full contents (a bucket
+            # rewrite would write both seeded keys)
             assert r.metrics["rows_written"] == 1, r.metrics
     s = _state(t)
     assert s[("c1", 0)] == ("adm", "e4", "web", TS2)
@@ -285,7 +301,6 @@ def test_runner_partial_update_stream(spark, tmp_path):
         update_policy="coalesce"))
     res = rp.apply_batch(_events(spark, [
         (2, "U", "c1", 0, None, "edited", None, None)]), "p1")
-    assert res.metrics["mode"] == "mor"
     assert res.metrics["rows_written"] == 1  # delta, not bucket rewrite
     rows = {(x["conv_id"], x["turn_idx"]): x for x in rp.state().collect()}
     row = rows[("c1", 0)]
@@ -340,7 +355,6 @@ def test_blank_stored_by_coalesce_survives_policy_flip(spark, tmp_path):
         _events(spark, [(3, "U", "c1", 0, None, "", None, None)]),
         "blank-it",
         update_policy="coalesce",  # '' IS specified under coalesce
-        mode="mor",
     )
     assert _state(t)[("c1", 0)][1] == ""
     # a blank_preserve batch elsewhere flips the table's latest policy
@@ -349,7 +363,6 @@ def test_blank_stored_by_coalesce_survives_policy_flip(spark, tmp_path):
         _events(spark, [(4, "U", "c1", 1, None, None, "calc", None)]),
         "other-key",
         update_policy="blank_preserve",
-        mode="mor",
     )
     s = _state(t)
     assert s[("c1", 0)][1] == "", "committed blank resurrected to the older value"
@@ -396,29 +409,30 @@ def test_normalize_runs_before_fieldwise_reduce(spark, tmp_path):
     assert row["text"] == "hi"
 
 
-@MODES
-def test_blank_preserve_treats_tabs_newlines_as_blank(spark, tmp_path, mode):
+@LAYOUTS
+def test_blank_preserve_treats_tabs_newlines_as_blank(spark, tmp_path, compact):
     """Java isBlank semantics: tab/newline-only strings are 'not
     provided' under blank_preserve (F.trim strips only spaces)."""
     t = _table(spark, tmp_path)
     _seed(spark, t)
-    merge_into(t, _events(spark, [
+    _merge(t, _events(spark, [
         (3, "U", "c1", 1, "\t\n", None, "calc", TS2)]),
-        "b2", update_policy="blank_preserve", mode=mode)
+        "b2", compact, update_policy="blank_preserve")
     s = _state(t)
     assert s[("c1", 1)] == ("assistant", "hi", "calc", TS2)
 
 
 def test_equal_lsn_ties_resolve_deterministically(spark, tmp_path):
     """A source stamping one LSN per multi-statement transaction: ties
-    break by a content hash, so mor and cow (different shuffle
-    encounter orders) agree, and re-running agrees with itself."""
+    break by a content hash, so the two shuffle shapes (bucket-first
+    and combine-first: different encounter orders) agree, and
+    re-running agrees with itself."""
     winners = set()
-    for i, mode in enumerate(["mor", "cow", "mor"]):
+    for i, combine_first in enumerate([False, True, False]):
         t = _table(spark, tmp_path / f"tie{i}")
         merge_into(t, _events(spark, [
             (1, "I", "c1", 0, "user", "A", None, None),
             (1, "I", "c1", 0, "user", "B", None, None),  # same LSN
-        ]), "b1", mode=mode)
+        ]), "b1", combine_first=combine_first)
         winners.add(_state(t)[("c1", 0)][1])
     assert len(winners) == 1, f"nondeterministic tie: {winners}"
