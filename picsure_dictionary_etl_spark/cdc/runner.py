@@ -290,22 +290,10 @@ class CdcRunner:
 
     def conversation(self, conv_id: str) -> DataFrame:
         """Serving-path point lookup: one conversation's live turns in
-        turn order, reading only the bucket ``conv_id`` hashes to (plus
-        row-group skipping inside it) — never a table scan."""
-        snap = self.table.current()
-        from picsure_dictionary_etl_spark.lake.merge import (
-            _payload_cols,
-            _read_raw,
-            resolve_live,
-        )
-
-        payload = _payload_cols(snap)
-        raw = _read_raw(
-            self.table, snap, snap.key_cols, payload,
-            df=self.table.read_keys([conv_id], snap),
-        )
-        live = resolve_live(raw, snap.key_cols, payload, schema=snap.schema)
-        return live.select(*snap.key_cols, *payload).orderBy("turn_idx")
+        turn order — :meth:`LakeTable.read_keys` on the current snapshot,
+        a driver-side read of the one bucket ``conv_id`` hashes to. No
+        Spark job runs until an action on the result."""
+        return self.table.read_keys([conv_id])
 
     # ---------- internals ----------
 

@@ -502,7 +502,7 @@ def merge_into(
             policy=update_policy, schema=snap.schema,
         ).withColumn(PU_COL, F.lit(True))
 
-    cached = None
+    cached = touched = None
     if matched_only:
         # the touched buckets must be known before the write (only their
         # live keys join), so persist the winners and collect their
@@ -510,9 +510,10 @@ def merge_into(
         # resolve to no live row, so a deleted key is never resurrected.
         cached = winners.persist()
         touched = [r[0] for r in cached.select(BUCKET_COL).distinct().collect()]
-        target = _read_raw(table, snap, keys, payload, bucket_ids=touched)
-        live_keys = resolve_live(target, keys, payload, schema=snap.schema).select(*keys)
-        winners = cached.join(live_keys, keys, "left_semi")
+        if touched:
+            target = _read_raw(table, snap, keys, payload, bucket_ids=touched)
+            live_keys = resolve_live(target, keys, payload, schema=snap.schema).select(*keys)
+            winners = cached.join(live_keys, keys, "left_semi")
 
     # conflict-count lineage, piggybacked on the write job (no extra
     # action): winners = distinct keys surviving the in-batch LWW
@@ -524,13 +525,17 @@ def merge_into(
     salt = [F.pmod(F.xxhash64(*keys), F.lit(salt_partitions))] if salt_partitions else None
     version = snap.version + 1
 
-    # the semi-join drops the _bucket partitioning, so matched_only
-    # writes repartition like the salted and combine-first plans
-    appends, replaces, compacted, sizes_hint = _mor_write(
-        table, snap, winners, keys, payload, salt, version, compact_threshold,
-        write_repartition=matched_only or bool(salt) or combine_first,
-        compact_target_bytes=compact_target_bytes,
-    )
+    if touched == []:
+        # no winner at all: nothing to write, no job to run
+        appends, replaces, compacted, sizes_hint = {}, {}, [], {}
+    else:
+        # the semi-join drops the _bucket partitioning, so matched_only
+        # writes repartition like the salted and combine-first plans
+        appends, replaces, compacted, sizes_hint = _mor_write(
+            table, snap, winners, keys, payload, salt, version, compact_threshold,
+            write_repartition=matched_only or bool(salt) or combine_first,
+            compact_target_bytes=compact_target_bytes,
+        )
     if cached is not None:
         cached.unpersist()
 
@@ -583,18 +588,15 @@ def merge_into(
     return MergeResult(snap2, metrics)
 
 
-def _read_raw(table, snap, keys, payload, rel_files=None, bucket_ids=None, df=None):
+def _read_raw(table, snap, keys, payload, rel_files=None, bucket_ids=None):
     """Raw (unresolved) table rows with every system column the schema
-    carries — ``_del_lsn``/``_pu`` null-fill on pre-evolution files.
-    ``df`` lets a caller supply an already-pruned scan (point lookups)
-    and reuse just the system-column projection."""
+    carries — ``_del_lsn``/``_pu`` null-fill on pre-evolution files."""
     extras = _system_extras(snap)
-    if df is None:
-        df = (
-            table._read_files(snap, rel_files)
-            if rel_files is not None
-            else table.read_buckets(bucket_ids, snap)
-        )
+    df = (
+        table._read_files(snap, rel_files)
+        if rel_files is not None
+        else table.read_buckets(bucket_ids, snap)
+    )
     return df.select(
         *keys, *payload, F.col(OP_COL), F.col(LSN_COL).cast("long"),
         *[F.col(c) for c in extras],

@@ -462,40 +462,95 @@ class LakeTable:
     def read_keys(
         self, bucket_key_values: list, snapshot: Snapshot | None = None
     ) -> DataFrame:
-        """Point-lookup read: raw rows for the given ``bucket_by``
-        values, touching ONLY the buckets they hash to — at 100 TB this
-        reads a handful of bucket directories instead of the table
-        (within each file, key-sorted row groups let parquet skip
-        further). ``bucket_key_values`` is a list of values (single
-        bucket column) or tuples (composite).
+        """Point lookup: the LIVE rows (key and payload columns, ordered
+        by the key columns) whose ``bucket_by`` columns equal one of
+        ``bucket_key_values`` — a list of values for a single bucket
+        column, of tuples for a composite one.
 
-        The bucket ids are computed by the same JVM xxhash64 expression
-        the writer used (a bounded collect over len(values) literals),
-        and the final equality filter runs on the pruned scan."""
+        Runs on the driver, with no Spark job until an action on the
+        result: the values hash to their buckets with the numpy XXH64
+        (bit-equal to the writer's ``bucket_expr``), pyarrow reads only
+        those buckets' files with an ``in`` filter per flat bucket
+        column (key-sorted row groups are skipped, only matching rows
+        materialize), the rows match exact tuples (nested columns by
+        their order-rank code, after the read) and resolve with the
+        change feed's LWW kernel. The result is a DataFrame over the
+        resolved Arrow table. A ``bucket_by`` type outside the hash's
+        surface raises :class:`UnsupportedVectorType` before any read."""
+        import pandas as pd
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+
+        from picsure_dictionary_etl_spark.lake.merge import PU_COL, _system_extras
+        from picsure_dictionary_etl_spark.streaming.cdf_source import (
+            _plan_cols,
+            _read_bucket,
+            _resolve_live_pd,
+            _resolve_live_pd_fieldwise,
+            _tie_arrow,
+            _to_arrow_batches,
+        )
+        from picsure_dictionary_etl_spark.streaming.xxhash_vec import (
+            UnsupportedVectorType,
+            _order_rank,
+            _parse_type,
+            _type_supported,
+            pmod_buckets,
+            spark_xxhash64_vec,
+        )
+
         snap = snapshot or self.current()
+        keys, payload, dtypes, _ = _plan_cols(snap)
         cols = snap.bucket_by
+        bad = [f"{c}:{dtypes[c]}" for c in cols if not _type_supported(dtypes[c])]
+        if bad:
+            raise UnsupportedVectorType(
+                f"read_keys: no xxhash64 path for bucket_by column(s) {bad}"
+            )
         vals = [
-            v if isinstance(v, (list, tuple)) else (v,) for v in bucket_key_values
+            tuple(v) if len(cols) > 1 else (v,) for v in bucket_key_values
         ]
-        kdf = self.spark.createDataFrame(
-            vals, T.StructType([snap.schema[c] for c in cols])
+        want = [
+            pa.array([v[i] for v in vals], type=to_arrow_type(snap.schema[c].dataType))
+            for i, c in enumerate(cols)
+        ]
+        buckets = sorted(set(pmod_buckets(
+            spark_xxhash64_vec(want, [dtypes[c] for c in cols]), snap.bucket_count
+        ).tolist()))
+        tds = {c: _parse_type(dtypes[c]) for c in cols}
+        flat = [i for i, c in enumerate(cols) if tds[c][0] in ("scalar", "decimal")]
+        extras = _system_extras(snap)
+        raw = _read_bucket(
+            self.root,
+            [f for b in buckets for f in snap.files.get(str(b), [])],
+            keys + payload + ["_op", "_lsn"] + extras,
+            dtypes,
+            filters=[(cols[i], "in", want[i].to_pylist()) for i in flat] or None,
         )
-        buckets = sorted(
-            r[0]
-            for r in kdf.select(
-                bucket_expr(cols, snap.bucket_count).alias("b")
-            ).distinct().collect()
+        if len(raw) and (len(cols) > 1 or not flat):
+            # exact tuples: rank the wanted and the read values together
+            # (Spark's ordering, nested columns included), match codes
+            n = len(vals)
+            ranks = [
+                _order_rank(
+                    pa.concat_arrays([w, _tie_arrow(raw[c], dtypes[c]).cast(w.type)]),
+                    tds[c],
+                )
+                for c, w in zip(cols, want)
+            ]
+            hit = pd.MultiIndex.from_arrays([r[n:] for r in ranks]).isin(
+                pd.MultiIndex.from_arrays([r[:n] for r in ranks])
+            )
+            raw = raw[hit]
+        resolve = _resolve_live_pd_fieldwise if PU_COL in extras else _resolve_live_pd
+        # the kernel sorts by key then _lsn, so its rows come out key-ordered
+        live = resolve(raw, keys, payload, dtypes)
+        out = T.StructType([snap.schema[c] for c in keys + payload])
+        tbl = pa.Table.from_batches(
+            list(_to_arrow_batches(live, out, dtypes)),
+            schema=to_arrow_schema(out),
         )
-        scan = self.read_buckets(buckets, snap)
-        # per-column In() filters push into the parquet scan, so the
-        # key-sorted row groups inside each bucket file are skipped too
-        # (a semi-join alone never reaches PushedFilters); for composite
-        # bucket keys the exact tuple match follows as a semi-join
-        for i, c in enumerate(cols):
-            scan = scan.filter(F.col(c).isin([v[i] for v in vals]))
-        if len(cols) == 1:
-            return scan
-        return scan.join(F.broadcast(kdf.distinct()), on=cols, how="left_semi")
+        return self.spark.createDataFrame(tbl, schema=out)
 
     def _read_files(self, snap: Snapshot, rel_files: list[str]) -> DataFrame:
         if not rel_files:
@@ -568,6 +623,14 @@ class LakeTable:
                 for fn in self.fs.list_names(bdir)
                 if fn.endswith(".parquet")
             )
+        if not files:
+            # no row survived (an all-unmatched matched_only batch, one
+            # wholly at or below the watermark): the writer left only
+            # its _SUCCESS marker, so drop the attempt dir now
+            attempt = os.path.join(self.root, *rel.split("/")[:2])
+            for f in self.fs.list_files_recursive(attempt):
+                self.fs.delete(f)
+            self.fs.cleanup_empty_dirs(attempt)
         return files
 
     def commit(

@@ -16,6 +16,15 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical memory in whole GiB (at least 1g, at
+    most 24g): in local mode the driver JVM also hosts the executors,
+    and the other half stays for the Python workers and the page
+    cache."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, phys // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "picsure-dictionary-etl-spark",
     master: str | None = None,
@@ -60,7 +69,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -121,7 +121,13 @@ class _BucketTask(InputPartition):
     new_extras: list[str] = field(default_factory=list)
 
 
-def _read_bucket(root: str, rel_files: list[str], cols: list[str], dtypes):
+def _read_bucket(root: str, rel_files: list[str], cols: list[str], dtypes,
+                 filters=None):
+    """Read ``cols`` of a bucket's files into one pandas frame (columns
+    an older file lacks read null). ``filters`` is handed to
+    ``pq.read_table`` as is (DNF tuples, e.g. ``[("conv_id", "in",
+    [...])]``): pyarrow skips row groups whose statistics exclude it and
+    materializes only the matching rows."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -158,9 +164,11 @@ def _read_bucket(root: str, rel_files: list[str], cols: list[str], dtypes):
     frames = []
     for rel in rel_files:
         if fs is None:
-            tbl = pq.read_table(os.path.join(base, rel))
+            tbl = pq.read_table(os.path.join(base, rel), filters=filters)
         else:
-            tbl = pq.read_table(posixpath.join(base, rel), filesystem=fs)
+            tbl = pq.read_table(
+                posixpath.join(base, rel), filesystem=fs, filters=filters
+            )
         keep = [c for c in cols if c in tbl.column_names]
         frames.append(tbl.select(keep).to_pandas(types_mapper=mapper))
     if not frames:

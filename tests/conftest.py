@@ -50,3 +50,21 @@ def column_meta_csv(tmp_path):
     p = tmp_path / "columnMeta.csv"
     p.write_text(DEMOGRAPHICS_COLUMN_META)
     return str(p)
+
+
+@pytest.fixture
+def bucket_reads(monkeypatch):
+    """Records ``(files, filters)`` of every driver-side bucket read
+    (``cdf_source._read_bucket``, which point lookups hand their files
+    and pushed key filters to)."""
+    from picsure_dictionary_etl_spark.streaming import cdf_source
+
+    calls = []
+    real = cdf_source._read_bucket
+
+    def spy(root, rel_files, cols, dtypes, filters=None):
+        calls.append((list(rel_files), filters))
+        return real(root, rel_files, cols, dtypes, filters=filters)
+
+    monkeypatch.setattr(cdf_source, "_read_bucket", spy)
+    return calls

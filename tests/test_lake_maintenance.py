@@ -325,10 +325,10 @@ def test_history_and_rollback_replay(spark, tmp_path):
     assert r.table.history()[-1]["version"] == 6
 
 
-def test_point_lookup_reads_one_bucket(spark, tmp_path):
+def test_point_lookup_reads_one_bucket(spark, tmp_path, bucket_reads):
     """read_keys / CdcRunner.conversation touch only the bucket the key
-    hashes to — verified against the full-scan answer AND by the scan's
-    input-file set being a strict subset."""
+    hashes to — verified against the full-scan answer AND by the read
+    file set being a strict subset of the table's."""
     events = change_events(spark, 4000, n_convs=40, delete_ratio=0.05)
     r = CdcRunner(spark, RunnerConfig(table_root=str(tmp_path / "t"),
                                       bucket_count=16))
@@ -345,9 +345,11 @@ def test_point_lookup_reads_one_bucket(spark, tmp_path):
         k: v for k, v in full.items() if k[0] == conv
     }
     # pruning: the point lookup reads strictly fewer files than a scan
-    all_files = set(r.table.read().inputFiles())
-    point_files = set(r.table.read_keys([conv]).inputFiles())
-    assert point_files and point_files < all_files
+    all_files = set(r.table.current().all_files())
+    bucket_reads.clear()
+    r.table.read_keys([conv])
+    [(point_files, _filters)] = bucket_reads
+    assert point_files and set(point_files) < all_files
 
 
 def test_should_compact_trigger_matrix():

@@ -9,6 +9,7 @@ fields, 404 instead of insert) and
 """
 
 import datetime
+import os
 
 import pytest
 
@@ -128,11 +129,21 @@ def test_matched_only_never_inserts(spark, tmp_path):
     # a delta sized to the matched winner: one row, never the touched
     # bucket's other seeded key
     assert r.metrics["winners"] == 1 and r.metrics["rows_written"] == 1, r.metrics
-    # an all-unmatched batch commits no files
+    # an all-unmatched batch commits no files and leaves no data dir
     files = t.current().files
+    data = tmp_path / "t" / "data"
+    dirs = set(os.listdir(data))
     r = merge_into(t, _events(spark, [(5, "U", "c7", 0, None, "x", None, None)]),
                    "b3", update_policy="coalesce", matched_only=True)
     assert r.snapshot.files == files and not r.metrics.get("winners")
+    assert set(os.listdir(data)) == dirs
+    # neither does a batch wholly at or below the watermark, in either
+    # write shape
+    for bid, only in (("b4", False), ("b5", True)):
+        r = merge_into(t, _events(spark, [(2, "U", "c1", 0, None, "old", None, None)]),
+                       bid, update_policy="coalesce", matched_only=only)
+        assert r.snapshot.files == files and r.metrics["rows_in"] == 0
+        assert set(os.listdir(data)) == dirs
     assert _state(t) == s
 
 

@@ -143,17 +143,17 @@ def test_mixed_resolve_is_single_shuffle(spark):
     assert "Join" not in plan
 
 
-def test_point_lookup_pushes_key_filter(spark, tmp_path):
-    """read_keys must reach the parquet scan as an In() filter — that's
-    what turns key-sorted row groups into skipped IO, on top of the
-    bucket-level file pruning."""
+def test_point_lookup_pushes_key_filter(spark, tmp_path, bucket_reads):
+    """read_keys hands the parquet reader only the buckets its keys hash
+    to, with an `in` filter on the key — what turns key-sorted row
+    groups into skipped IO, on top of the bucket-level file pruning."""
     from picsure_dictionary_etl_spark.cdc.envelope import (
         TRANSCRIPT_KEY,
         change_event_schema,
         transcript_table_schema,
     )
     from picsure_dictionary_etl_spark.lake.merge import merge_into
-    from picsure_dictionary_etl_spark.lake.table import LakeTable
+    from picsure_dictionary_etl_spark.lake.table import LakeTable, bucket_expr
 
     t = LakeTable.create(
         spark, str(tmp_path / "t"), schema=transcript_table_schema(),
@@ -162,16 +162,28 @@ def test_point_lookup_pushes_key_filter(spark, tmp_path):
     rows = [(i + 1, "I", f"c{i % 20}", i % 7, "user", "x", None, None)
             for i in range(200)]
     merge_into(t, spark.createDataFrame(rows, change_event_schema()), "b0")
+    snap = t.current()
+
+    def bucket_files(*convs):
+        # the writer's placement, computed by the JVM expression
+        ids = sorted({r[0] for r in spark.createDataFrame(
+            [(c,) for c in convs], "conv_id string"
+        ).select(bucket_expr(["conv_id"], 8)).collect()})
+        return [f for b in ids for f in snap.files[str(b)]]
+
     # conv c3 appears at i = 3, 23, 43, ... (10 events) over distinct
     # turn_idx values i % 7 — LWW keeps one row per (conv, turn) key
     expect = len({i % 7 for i in range(3, 200, 20)})
     q = t.read_keys(["c3"])
-    # Catalyst rewrites a 1-value isin to EqualTo; either form must
-    # reach the scan's PushedFilters
-    assert_pushed_filters(q, "EqualTo(conv_id,c3)")
+    files = bucket_files("c3")
+    assert bucket_reads == [(files, [("conv_id", "in", ["c3"])])]
+    assert files and set(files) < set(snap.all_files())
     assert q.count() == expect
+    bucket_reads.clear()
     q2 = t.read_keys(["c3", "c4"])
-    assert_pushed_filters(q2, "In(conv_id, [c3,c4])")
+    assert bucket_reads == [
+        (bucket_files("c3", "c4"), [("conv_id", "in", ["c3", "c4"])])
+    ]
     expect2 = expect + len({i % 7 for i in range(4, 200, 20)})
     assert q2.count() == expect2
 

@@ -80,3 +80,16 @@ def test_spark_submit_pyfiles_replay_and_resume(spark, tmp_path):
     r2 = _submit(job, events_path, table, lineage)
     assert r2["batches_applied"] == 0
     assert r2["watermark"] == 1999
+
+
+def test_session_driver_memory_fits_the_host(spark):
+    """The default ``spark.driver.memory`` is derived from the host's
+    physical memory (at most half of it, capped at 24g);
+    ``SPARK_GRAFT_DRIVER_MEM`` still overrides it."""
+    from picsure_dictionary_etl_spark.session import default_driver_memory
+
+    phys_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    gib = int(default_driver_memory().rstrip("g"))
+    assert 1 <= gib <= min(24, max(1, phys_gib / 2))
+    want = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
+    assert spark.conf.get("spark.driver.memory") == want
