@@ -7,6 +7,9 @@ resumes with a fresh process each time, and finally checks:
 * the completed table's live state EXACTLY equals an independent
   DuckDB LWW oracle over the staged events,
 * no wedged claims (every resume makes progress),
+* every batch's dead-letter directory holds exactly its slice's
+  malformed events, once (the merge writes them in its own write job
+  and moves them out before the commit),
 * vacuum removes every orphan the kills left behind.
 
 Usage: python BENCH/chaos.py [--events 2000000] [--kills 10]
@@ -48,7 +51,8 @@ from picsure_dictionary_etl_spark.cdc.runner import CdcRunner, RunnerConfig
 spark = get_spark("chaos", master="local[8]", shuffle_partitions=16)
 events = spark.read.parquet({events!r})
 r = CdcRunner(spark, RunnerConfig(table_root={root!r}, bucket_count=16,
-                                  compact_threshold=3, vacuum_every=None))
+                                  compact_threshold=3, vacuum_every=None,
+                                  dead_letter_dir={dlq!r}))
 r.replay(events, lsn_step={step}, max_lsn={n_events})
 print("REPLAY_DONE", flush=True)
 """
@@ -71,13 +75,15 @@ def main() -> None:
     wd = tempfile.mkdtemp(prefix="chaos_")
     events, posix_root = os.path.join(wd, "events"), os.path.join(wd, "table")
     root = f"file:{posix_root}" if args.uri else posix_root
+    posix_dlq = os.path.join(wd, "dlq")
+    dlq = f"file:{posix_dlq}" if args.uri else posix_dlq
     subprocess.run(
         [sys.executable, "-c",
          STAGE.format(repo=REPO, n_events=args.events, events=events)],
         check=True, stderr=subprocess.DEVNULL,
     )
 
-    code = WORKER.format(repo=REPO, events=events, root=root,
+    code = WORKER.format(repo=REPO, events=events, root=root, dlq=dlq,
                          step=args.step, n_events=args.events)
     # observation only — the engine itself never touches the POSIX path
     # in --uri mode
@@ -133,10 +139,29 @@ WITH valid AS (
     AND turn_idx IS NOT NULL AND turn_idx >= 0 AND _lsn IS NOT NULL AND _op IN ('I','U','D')
 ), w AS (SELECT conv_id, turn_idx, arg_max(_op, _lsn) op FROM valid GROUP BY 1,2)
 SELECT count(*) FROM w WHERE op <> 'D' ''').fetchone()[0]
+# dead letters: per batch directory, its rows against the slice's
+# malformed events (multiset of key, op, lsn); no batch left out
+import os
+bad = '''(SELECT conv_id, turn_idx, _op, _lsn FROM '{events}/*.parquet'
+  WHERE NOT coalesce(conv_id IS NOT NULL AND lower(trim(conv_id)) <> 'null'
+    AND trim(conv_id) <> '' AND turn_idx IS NOT NULL AND turn_idx >= 0
+    AND _lsn IS NOT NULL AND _op IN ('I','U','D'), false))'''
+dl_rows, dl_ok = 0, True
+for b in sorted(os.listdir({posix_dlq!r})):
+    lo, hi = b[len("lsn-"):].rsplit("-", 1)
+    got = f"(SELECT conv_id, turn_idx, _op, _lsn FROM '{posix_dlq}/{{b}}/*.parquet')"
+    want_b = f"(SELECT * FROM {{bad}} WHERE _lsn > {{lo}} AND _lsn <= {{hi}})"
+    diff = duckdb.sql(f"SELECT count(*) FROM ((SELECT * FROM {{got}} EXCEPT ALL SELECT * FROM {{want_b}})"
+                      f" UNION ALL (SELECT * FROM {{want_b}} EXCEPT ALL SELECT * FROM {{got}}))").fetchone()[0]
+    dl_ok &= diff == 0
+    dl_rows += duckdb.sql(f"SELECT count(*) FROM {{got}}").fetchone()[0]
+dl_want = duckdb.sql(f"SELECT count(*) FROM {{bad}}").fetchone()[0]
 gc = r.table.vacuum(keep_snapshots=2)
 print("CHECK " + json.dumps({{"engine_rows": n, "oracle_rows": want,
-                              "match": n == want, "vacuum": gc}}), flush=True)
-""".format(repo=REPO, root=root, events=events)],
+                              "dead_letter_rows": dl_rows, "oracle_dead_letters": dl_want,
+                              "match": n == want and dl_ok and dl_rows == dl_want,
+                              "vacuum": gc}}), flush=True)
+""".format(repo=REPO, root=root, events=events, posix_dlq=posix_dlq)],
         capture_output=True, text=True, check=True,
     )
     line = next(l for l in check.stdout.splitlines() if l.startswith("CHECK "))
@@ -152,7 +177,7 @@ print("CHECK " + json.dumps({{"engine_rows": n, "oracle_rows": want,
     import shutil
 
     shutil.rmtree(wd, ignore_errors=True)
-    assert res["match"], "final state diverged from the oracle"
+    assert res["match"], "final state or dead letters diverged from the oracle"
 
 
 if __name__ == "__main__":

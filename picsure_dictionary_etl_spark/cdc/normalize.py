@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from picsure_dictionary_etl_spark.lake.expr_memo import memo_exprs
 from picsure_dictionary_etl_spark.lake.merge import LSN_COL, OP_COL
 
 # DuckDB twin of normalize_text_udf (keep in lockstep with the UDF!).
@@ -59,18 +60,30 @@ def null_sentinels(col: Column) -> Column:
     return F.when(F.lower(F.trim(col)).isin("", "null"), F.lit(None)).otherwise(col)
 
 
+def _event_preds() -> tuple[Column, Column]:
+    """(valid, dead): the structural validity of a change event and its
+    complement, where a NULL validity counts as dead. Built once per
+    session (:mod:`..lake.expr_memo`)."""
+
+    def build():
+        valid = (
+            F.col("conv_id").isNotNull()
+            & (F.lower(F.trim(F.col("conv_id"))) != "null")
+            & (F.trim(F.col("conv_id")) != "")
+            & F.col("turn_idx").isNotNull()
+            & (F.col("turn_idx") >= 0)
+            & F.col(LSN_COL).isNotNull()
+            & F.col(OP_COL).isin("I", "U", "D")
+        )
+        return valid, ~F.coalesce(valid, F.lit(False))
+
+    return memo_exprs(("event_preds",), build)
+
+
 def valid_event_pred() -> Column:
     """Structural validity of a change event. Kept as a single reusable
     predicate so the engine, the tests, and the DuckDB oracle agree."""
-    return (
-        F.col("conv_id").isNotNull()
-        & (F.lower(F.trim(F.col("conv_id"))) != "null")
-        & (F.trim(F.col("conv_id")) != "")
-        & F.col("turn_idx").isNotNull()
-        & (F.col("turn_idx") >= 0)
-        & F.col(LSN_COL).isNotNull()
-        & F.col(OP_COL).isin("I", "U", "D")
-    )
+    return _event_preds()[0]
 
 
 # Oracle twin of valid_event_pred (DuckDB SQL).
@@ -81,23 +94,41 @@ VALID_EVENT_SQL = (
 )
 
 
+_NORMALIZED = {
+    "role": lambda: F.lower(F.trim(null_sentinels(F.col("role")))),
+    "tool": lambda: null_sentinels(F.col("tool")),
+    "text": lambda: normalize_text_udf(F.col("text")),
+}
+
+
 def normalize_events(df: DataFrame) -> DataFrame:
     """Vectorized normalize: sentinel nulls on role/tool, text cleanup
-    via the Arrow UDF. Column set is preserved (including any additive
-    schema-evolution columns, which pass through untouched)."""
-    out = df
-    if "role" in df.columns:
-        out = out.withColumn("role", F.lower(F.trim(null_sentinels(F.col("role")))))
-    if "tool" in df.columns:
-        out = out.withColumn("tool", null_sentinels(F.col("tool")))
-    if "text" in df.columns:
-        out = out.withColumn("text", normalize_text_udf(F.col("text")))
-    return out
+    via the Arrow UDF, as one ``withColumns`` projection built once per
+    column set (:mod:`..lake.expr_memo`). Column set is preserved
+    (including any additive schema-evolution columns, which pass
+    through untouched)."""
+    present = tuple(c for c in _NORMALIZED if c in df.columns)
+    if not present:
+        return df
+    return df.withColumns(
+        memo_exprs(
+            ("normalize", present),
+            lambda: {c: _NORMALIZED[c]() for c in present},
+        )
+    )
 
 
 def split_dead_letter(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(valid, dead_letter) — malformed rows leave the main flow but are
     never dropped silently (reference: error registry + error CSV,
-    ``loading/ColumnMetaErrorWriter.java:21-38``)."""
-    pred = valid_event_pred()
-    return df.filter(pred), df.filter(~F.coalesce(pred, F.lit(False)))
+    ``loading/ColumnMetaErrorWriter.java:21-38``).
+
+    ``CdcRunner`` does not run this split as its own pass: it hands
+    ``valid_event_pred()`` to ``merge_into(dead_letters=...)``, whose
+    one write job routes the dead rows, unreduced and unnormalized, to
+    the reserved bucket ``-1`` and moves those files to the batch's
+    dead-letter directory. Those files hold the table's columns, with
+    any the event lacks null-filled; this function keeps the event's
+    own columns."""
+    valid, dead = _event_preds()
+    return df.filter(valid), df.filter(dead)

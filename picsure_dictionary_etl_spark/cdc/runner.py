@@ -32,7 +32,7 @@ from picsure_dictionary_etl_spark.cdc.envelope import (
     TRANSCRIPT_KEY,
     transcript_table_schema,
 )
-from picsure_dictionary_etl_spark.cdc.normalize import normalize_events, split_dead_letter
+from picsure_dictionary_etl_spark.cdc.normalize import normalize_events, valid_event_pred
 from picsure_dictionary_etl_spark.lake.merge import (
     LSN_COL,
     OP_COL,
@@ -137,7 +137,8 @@ class CdcRunner:
     def apply_batch(
         self, events: DataFrame, batch_id: str, watermark_lsn: int | None = None
     ) -> MergeResult:
-        """Normalize → dead-letter split → schema-evolve → MERGE → lineage.
+        """Schema-evolve → MERGE (dead-letter split, LWW, normalize, one
+        write job) → lineage.
 
         Idempotent: redelivering the same ``batch_id`` is a committed
         no-op (the exactly-once gate lives inside ``merge_into``).
@@ -150,66 +151,37 @@ class CdcRunner:
 
         self._evolve_for(events)
 
+        # Malformed rows must never vanish silently (reference: error
+        # registry always on, loading/ColumnMetaErrorWriter.java:21-38).
         # Validity only reads key/op/lsn fields, which normalize never
-        # touches — so the dead-letter split runs on raw events and the
-        # (pure, per-row) normalize runs AFTER the LWW reduce, over
-        # winners only: the vectorized-UDF volume drops by the duplicate
-        # factor at identical final state.
-        # Drop counts ride an in-plan observation (no extra job, no
-        # local-only footer reads — works for URI DLQ dirs too):
-        # malformed rows must never vanish silently (reference: error
-        # registry always on, loading/ColumnMetaErrorWriter.java:21-38)
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        from picsure_dictionary_etl_spark.cdc.normalize import valid_event_pred
-
-        dead_obs = Observation(f"dead-{batch_id}")
-        events = events.observe(
-            dead_obs,
-            F.sum(
-                F.when(~F.coalesce(valid_event_pred(), F.lit(False)), 1).otherwise(0)
-            ).alias("dead_rows"),
+        # touches, so merge_into splits the raw events: the dead rows
+        # skip the watermark, the reduce and normalize and ride the
+        # merge's own write job as bucket -1, whose files move to
+        # <dead_letter_dir>/<batch_id> (replacing a redelivery's) before
+        # the commit. They hold the table's columns, any the event lacks
+        # null-filled. Their count is observed on that write and
+        # committed in the lineage. Normalize runs AFTER the LWW reduce,
+        # over winners only: the vectorized-UDF volume drops by the
+        # duplicate factor at identical final state.
+        dl_path = (
+            os.path.join(self.config.dead_letter_dir, batch_id)
+            if self.config.dead_letter_dir
+            else None
         )
-        valid, dead = split_dead_letter(events)
-
-        dead_rows: int | None = None
-        if self.config.dead_letter_dir:
-            dl_path = os.path.join(self.config.dead_letter_dir, batch_id)
-            # Dead letters are written before the commit; on a replayed
-            # batch the overwrite keeps them exactly-once per batch id.
-            dead.write.mode("overwrite").parquet(dl_path)
-            try:
-                # The write above is an action over the observed plan, so
-                # the real count is available NOW — stamp it into the
-                # committed lineage instead of a placeholder 0.
-                dead_rows = int(dead_obs.get["dead_rows"] or 0)
-            except Exception:
-                dead_rows = None
-
         salt = self.config.salt_partitions or self._auto_salt_active
-        extra_lineage: dict = {
-            "salt_partitions": salt,
-            "combine_first": self._auto_combine_active,
-        }
-        if dead_rows is not None:
-            # Only committed when observed pre-commit; when no DLQ dir is
-            # configured the count first materializes inside merge_into's
-            # own actions, so it rides the post-commit metrics instead of
-            # lying "0" in durable snapshot history.
-            extra_lineage["dead_letter_rows"] = dead_rows
         result = merge_into(
             self.table,
-            valid,
+            events,
             batch_id,
             compact_threshold=self.config.compact_threshold * (salt or 1),
             compact_target_bytes=self.config.compact_target_bytes,
             salt_partitions=salt,
-            extra_lineage=extra_lineage,
+            extra_lineage={"salt_partitions": salt, "combine_first": self._auto_combine_active},
             watermark_lsn=watermark_lsn,
             post_reduce_transform=normalize_events if self.config.normalize else None,
             update_policy=self.config.update_policy,
             combine_first=self._auto_combine_active,
+            dead_letters=(valid_event_pred(), dl_path),
         )
         self._maybe_adapt_salt(result.metrics)
         self._maybe_adapt_combine(result.metrics)
@@ -221,13 +193,6 @@ class CdcRunner:
             result.metrics["vacuum"] = self.table.vacuum(
                 keep_snapshots=self.config.vacuum_keep_snapshots
             )
-        if not result.metrics.get("skipped_duplicate_batch"):
-            try:
-                if dead_rows is None:  # no DLQ write: read it post-commit
-                    dead_rows = int(dead_obs.get["dead_rows"] or 0)
-                result.metrics["dead_letter_rows"] = dead_rows
-            except Exception:
-                pass  # empty batch: no action touched the observed node
         result.metrics["commit_seconds"] = round(time.monotonic() - t0, 4)
         rows = result.metrics.get("rows_in") or 0
         if rows and result.metrics["commit_seconds"]:
@@ -258,9 +223,10 @@ class CdcRunner:
         lo = self.watermark()
         from pyspark.sql import functions as F
 
+        lsn = F.col(LSN_COL)
         while lo < max_lsn:
             hi = min(lo + lsn_step, max_lsn)
-            batch = events.filter((F.col(LSN_COL) > lo) & (F.col(LSN_COL) <= hi))
+            batch = events.filter((lsn > lo) & (lsn <= hi))
             batch_id = f"lsn-{lo}-{hi}"
             # watermark advances to the *range end* so a restarted runner
             # re-slices identical LSN ranges (identical batch ids)

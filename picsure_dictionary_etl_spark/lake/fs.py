@@ -96,13 +96,65 @@ class HadoopDataFS:
         self._fs.delete(self._path(path), False)
 
     def cleanup_empty_dirs(self, dirpath: str) -> None:
-        pass  # object stores have no empty dirs; Hadoop FS tolerates them
+        # deepest-first removal of dirs with no file beneath them,
+        # ``dirpath`` included, best-effort like the POSIX twin (object
+        # stores list no empty dirs, so there is nothing to remove)
+        root = self._path(dirpath)
+        if not self._fs.exists(root):
+            return
+        root = self._fs.makeQualified(root)  # the form listStatus returns
+        dirs, nonempty, todo = [], set(), [root]
+        while todo:
+            d = todo.pop()
+            dirs.append(d)
+            for st in self._fs.listStatus(d):
+                if st.isDirectory():
+                    todo.append(st.getPath())
+                else:
+                    nonempty.add(d.toString())
+        # a dir is non-empty if any descendant holds a file: children
+        # come after their parents in ``dirs``, so walk it backwards
+        for d in reversed(dirs):
+            if d.toString() in nonempty and not d.isRoot():
+                nonempty.add(d.getParent().toString())
+        for d in reversed(dirs):
+            if d.toString() not in nonempty:
+                try:
+                    self._fs.delete(d, False)
+                except Exception:
+                    pass
 
     def exists(self, path: str) -> bool:
         return self._fs.exists(self._path(path))
 
     def size(self, path: str) -> int:
         return int(self._fs.getFileStatus(self._path(path)).getLen())
+
+
+def move_dir(spark, src: str, dst: str) -> None:
+    """Make ``dst`` hold what directory ``src`` held: remove ``dst``,
+    then move ``src`` there (a rename on one filesystem, a copy and
+    delete across two). A missing ``src`` leaves ``dst`` removed."""
+    if not is_uri(src) and not is_uri(dst):
+        import shutil
+
+        shutil.rmtree(dst, ignore_errors=True)
+        if os.path.isdir(src):
+            os.makedirs(os.path.dirname(dst) or ".", exist_ok=True)
+            shutil.move(src, dst)
+        return
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+    s, d = jvm.org.apache.hadoop.fs.Path(src), jvm.org.apache.hadoop.fs.Path(dst)
+    sfs, dfs = s.getFileSystem(conf), d.getFileSystem(conf)
+    dfs.delete(d, True)
+    if not sfs.exists(s):
+        return
+    dfs.mkdirs(d.getParent())
+    if sfs.getUri().equals(dfs.getUri()):
+        if not sfs.rename(s, d):
+            raise OSError(f"could not move {src} to {dst}")
+    else:
+        jvm.org.apache.hadoop.fs.FileUtil.copy(sfs, s, dfs, d, True, conf)
 
 
 def arrow_fs_and_base(root: str):

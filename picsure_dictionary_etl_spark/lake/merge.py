@@ -25,7 +25,9 @@ to the *batch*, not the table — the sustained-throughput design for a
 10^10-event replay. Compaction is amortized O(table/threshold); a batch
 load that wants fully rewritten buckets runs :func:`optimize` after it.
 
-Stages (all JVM-side codegen; zero Python on the hot path):
+Stages (JVM-side codegen, except a caller's ``post_reduce_transform``:
+the CDC runner's normalize runs its Arrow-batched pandas UDF over the
+winners, in the reduce/write stage):
 
 1. **Batch LWW reduce** — ``groupBy(keys).agg(max_by(struct(payload), lsn))``
    (sort-based aggregate: struct buffers aren't hash-mutable, but still
@@ -35,8 +37,13 @@ Stages (all JVM-side codegen; zero Python on the hot path):
    aggregate then collapses hot-key storms *before* the shuffle.
 2. **Bucket-local deltas** — each winner lands in its
    ``xxhash64(bucket_by) % n`` bucket's delta files; untouched buckets
-   carry over by reference.
+   carry over by reference. Dead letters, when asked for, share this
+   write as bucket ``-1`` and move out before the commit.
 3. **Atomic commit** with watermark/batch-id properties (exactly-once).
+
+The unresolved Column trees of a merge (alignment, bucket tag,
+observations, the LWW aggregate) are built once per table and source
+shape and reused on every batch (:mod:`.expr_memo`).
 """
 
 from __future__ import annotations
@@ -49,6 +56,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from picsure_dictionary_etl_spark.lake.expr_memo import ByIdentity, memo_exprs
 from picsure_dictionary_etl_spark.lake.table import (
     BUCKET_COL,
     ConcurrentCommitError,
@@ -91,6 +99,7 @@ def lww_winners(
     key_cols: list[str],
     payload_cols: list[str],
     carry_cols: list[str] | None = None,
+    schema: T.StructType | None = None,
 ) -> DataFrame:
     """Per-key last-writer-wins reduce by max LSN.
 
@@ -105,6 +114,8 @@ def lww_winners(
     ``carry_cols`` are key-functional columns (e.g. the bucket id)
     added to the groupBy so an existing partitioning on them satisfies
     the aggregate's distribution — Catalyst then skips the exchange.
+    ``schema`` types the payload columns; ``source.schema`` (one plan
+    analysis) when None.
 
     Ties on ``_lsn`` (a source stamping one LSN per multi-statement
     transaction) break deterministically by a payload hash
@@ -116,13 +127,36 @@ def lww_winners(
     batching contract).
     """
     carry = carry_cols or []
-    winner = F.max_by(
-        F.struct(*payload_cols, OP_COL), _lsn_order(payload_cols, source.schema)
-    ).alias("_w")
-    out = source.groupBy(*carry, *key_cols).agg(winner, F.max(LSN_COL).alias(LSN_COL))
-    return out.select(*carry, *key_cols,
-                      *[F.col(f"_w.{c}").alias(c) for c in payload_cols],
-                      F.col(f"_w.{OP_COL}").alias(OP_COL), LSN_COL)
+    aggs, out = _lww_exprs(key_cols, payload_cols, carry, schema or source.schema)
+    return source.groupBy(*carry, *key_cols).agg(*aggs).select(*out)
+
+
+def _lww_exprs(key_cols, payload_cols, carry, schema: T.StructType):
+    """(aggregates, projection) of :func:`lww_winners`, built once per
+    shape (:mod:`.expr_memo`). Only map-typed payload columns change
+    the tree (:func:`_lsn_order` canonicalizes them), so only their
+    types enter the key."""
+    maps = tuple(
+        (f.name, f.dataType.json())
+        for f in schema.fields
+        if f.name in payload_cols and _contains_map(f.dataType)
+    )
+
+    def build():
+        winner = F.max_by(
+            F.struct(*payload_cols, OP_COL), _lsn_order(payload_cols, schema)
+        ).alias("_w")
+        aggs = (winner, F.max(LSN_COL).alias(LSN_COL))
+        out = (
+            *carry, *key_cols,
+            *[F.col(f"_w.{c}").alias(c) for c in payload_cols],
+            F.col(f"_w.{OP_COL}").alias(OP_COL), LSN_COL,
+        )
+        return aggs, out
+
+    return memo_exprs(
+        ("lww", tuple(key_cols), tuple(payload_cols), tuple(carry), maps), build
+    )
 
 
 def _contains_map(dt) -> bool:
@@ -357,6 +391,7 @@ def merge_into(
     matched_only: bool = False,
     combine_first: bool | None = None,
     compact_target_bytes: int = 64 * 1024 * 1024,
+    dead_letters: tuple[F.Column, str | None] | None = None,
 ) -> MergeResult:
     """Apply one change batch with exactly-once semantics.
 
@@ -409,7 +444,26 @@ def merge_into(
       partition), then Catalyst's (bucket, keys) exchange carries only
       winners, and the write repartitions winners onto (bucket, salt).
       Two shuffles, but both skew-proof and the second is winner-sized.
+
+    ``dead_letters=(predicate, path)`` routes source rows for which
+    ``predicate`` is not true (malformed events) out of the merge
+    without a pass of their own: they skip the watermark filter, the
+    reduce and ``post_reduce_transform``, and ride the merge's own
+    write job (its dynamic-partition write) as the reserved bucket ``-1``.
+    Before the commit, those files move into ``path``, replacing what an
+    earlier delivery of the batch left there; they hold the table's
+    columns (keys, payload, ``_op``, ``_lsn``; the field-wise system
+    columns null), with any the source lacks null-filled. ``path=None``
+    drops them. Either way their count, observed on the write job, is
+    committed as ``dead_letter_rows`` in the lineage. Cannot combine
+    with ``matched_only`` (its semi-join would drop them): that fails
+    with ``ValueError`` before anything runs.
     """
+    if dead_letters is not None and matched_only:
+        raise ValueError(
+            "merge_into: dead_letters cannot combine with matched_only "
+            "(the live-key semi-join would drop the dead rows)"
+        )
     # ONE manifest read serves the whole merge (single-writer
     # discipline: it cannot change underneath us) — the applied-batch
     # check, watermark, schema, and the final commit all derive from
@@ -436,34 +490,15 @@ def merge_into(
             snap = table.evolve_schema(need)
     keys = snap.key_cols
     payload = _payload_cols(snap)
-
-    src_cols = set(source.columns)
-    aligned = source.select(
-        *keys,
-        *[
-            (F.col(c) if c in src_cols else F.lit(None).cast(snap.schema[c].dataType)).alias(c)
-            for c in payload
-        ],
-        F.col(OP_COL),
-        F.col(LSN_COL).cast("long"),
-    )
-
-    wm_prev = int(snap.properties.get("watermark_lsn", -1))
-    if wm_prev >= 0:
-        aligned = aligned.filter(F.col(LSN_COL) > F.lit(wm_prev))
-
-    obs = Observation(f"merge-{batch_id}")
-    aligned = aligned.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_in"),
-        F.sum(F.when(F.col(OP_COL) == OP_DELETE, 1).otherwise(0)).alias("deletes_in"),
-        F.min(LSN_COL).alias("min_lsn"),
-        F.max(LSN_COL).alias("max_lsn"),
-    )
+    pred, dl_path = dead_letters if dead_letters is not None else (None, None)
+    x = _merge_exprs(snap, source.schema, pred)
 
     if combine_first is None:
         combine_first = bool(salt_partitions)
 
+    # One projection aligns the source to the table's columns and tags
+    # each row with its bucket — or, with dead letters, with bucket -1
+    # when it fails the predicate.
     # Single-shuffle plan (combine_first=False): repartition once on the
     # bucket id, then group by (_bucket, keys) — HashPartitioning(_bucket)
     # satisfies the aggregate's ClusteredDistribution(_bucket, keys), so
@@ -471,13 +506,35 @@ def merge_into(
     # the same partitioning. combine_first=True skips the explicit
     # repartition so Catalyst plans a map-side partial aggregate before
     # its own exchange (hot-key storm absorption; see docstring).
-    bucketed = aligned.withColumn(
-        BUCKET_COL, bucket_expr(snap.bucket_by, snap.bucket_count)
-    )
+    tagged = source.select(*x.aligned)
+    dobs = Observation(f"dead-{batch_id}")
+    dead = None
+    if dl_path is not None:
+        # Dead rows branch off before the exchange: their scan tasks run
+        # in the write stage, so a commit is two jobs (map, write). Also
+        # shuffling them made a third job (a map stage of their own) for
+        # the same commit time.
+        dead = tagged.filter(x.dead_rows).observe(dobs, x.dead_count)
+    elif pred is not None:
+        # counted, not kept: the count rides the merge's own write
+        tagged = tagged.observe(dobs, x.dead_count)
     if not combine_first:
-        bucketed = bucketed.repartition(F.col(BUCKET_COL))
+        tagged = tagged.repartition(x.bucket)
+
+    wm_prev = int(snap.properties.get("watermark_lsn", -1))
+    cond = x.valid_rows if pred is not None else None
+    if wm_prev >= 0:
+        above = x.lsn > wm_prev
+        cond = above if cond is None else cond & above
+    bucketed = tagged.filter(cond) if cond is not None else tagged
+
+    obs = Observation(f"merge-{batch_id}")
+    bucketed = bucketed.observe(obs, *x.observed)
+
     if update_policy == "row":
-        winners = lww_winners(bucketed, keys, payload, carry_cols=[BUCKET_COL])
+        winners = lww_winners(
+            bucketed, keys, payload, carry_cols=[BUCKET_COL], schema=x.schema
+        )
         if post_reduce_transform is not None:
             # Normalization is per-row pure and key/LSN-preserving, so
             # it commutes with whole-ROW LWW — running it on winners
@@ -501,6 +558,10 @@ def merge_into(
             src, keys, payload, carry_cols=[BUCKET_COL],
             policy=update_policy, schema=snap.schema,
         ).withColumn(PU_COL, F.lit(True))
+        if dead is not None:
+            dead = dead.withColumns(
+                {DEL_LSN_COL: F.lit(None).cast("long"), PU_COL: F.lit(None).cast("boolean")}
+            )
 
     cached = touched = None
     if matched_only:
@@ -520,7 +581,12 @@ def merge_into(
     # reduce (and the matched_only join); conflicts = superseded
     # duplicates the reduce suppressed
     wobs = Observation(f"winners-{batch_id}")
-    winners = winners.observe(wobs, F.count(F.lit(1)).alias("winners"))
+    winners = winners.observe(wobs, x.winners_count)
+    if dead is not None:
+        # dead rows skip the watermark filter, the reduce and normalize,
+        # and share the write job: its dynamic-partition write lays them
+        # out as bucket -1, which write_data_files moves to dl_path
+        winners = winners.unionByName(dead)
 
     salt = [F.pmod(F.xxhash64(*keys), F.lit(salt_partitions))] if salt_partitions else None
     version = snap.version + 1
@@ -535,10 +601,16 @@ def merge_into(
             table, snap, winners, keys, payload, salt, version, compact_threshold,
             write_repartition=matched_only or bool(salt) or combine_first,
             compact_target_bytes=compact_target_bytes,
+            divert={str(DEAD_BUCKET): dl_path} if dl_path is not None else None,
         )
     if cached is not None:
         cached.unpersist()
 
+    dead_metric = (
+        {"dead_letter_rows": int(dobs.get["dead_letter_rows"] or 0)}
+        if pred is not None
+        else {}
+    )
     changed = sorted({int(b) for b in (*appends, *replaces)})
     if not changed:
         props = table.exactly_once_props(
@@ -547,9 +619,10 @@ def merge_into(
             prev_properties=snap.properties,
         )
         snap2 = table.commit(
-            {}, {}, props, {"batch_id": batch_id, "empty_batch": True}, prev=snap
+            {}, {}, props,
+            {"batch_id": batch_id, "empty_batch": True, **dead_metric}, prev=snap,
         )
-        return MergeResult(snap2, {"batch_id": batch_id, "rows_in": 0})
+        return MergeResult(snap2, {"batch_id": batch_id, "rows_in": 0, **dead_metric})
 
     if update_policy != "row":
         extra_lineage = {**(extra_lineage or {}), "update_policy": update_policy}
@@ -568,6 +641,7 @@ def merge_into(
         "winners": winners_n,
         "lww_conflicts": max(0, (m.get("rows_in") or 0) - winners_n),
         **m,
+        **dead_metric,
         **(extra_lineage or {}),
     }
     # explicit None checks: a legitimate max_lsn of 0 must still advance
@@ -586,6 +660,81 @@ def merge_into(
         appends, replaces, props, metrics, prev=snap, file_sizes_hint=sizes_hint
     )
     return MergeResult(snap2, metrics)
+
+
+DEAD_BUCKET = -1  # the write partition dead letters take (never a bucket id)
+
+
+@dataclass(frozen=True)
+class _MergeExprs:
+    """The unresolved trees one ``merge_into`` shape needs, built once
+    per shape by :func:`_merge_exprs`."""
+
+    schema: T.StructType  # of the aligned rows (without _bucket)
+    aligned: tuple  # keys, payload (missing ones null), _op, _lsn, _bucket tag
+    bucket: F.Column
+    lsn: F.Column
+    valid_rows: F.Column
+    dead_rows: F.Column
+    dead_count: F.Column
+    observed: tuple
+    winners_count: F.Column
+
+
+def _merge_exprs(snap: Snapshot, src_schema: T.StructType, pred) -> _MergeExprs:
+    """Key: the table schema, key and bucket layout, the source's
+    columns and types, and the dead-letter predicate (by identity).
+    The update policy shapes the reduce, not these trees; a field-wise
+    policy evolves the table schema, which is in the key."""
+    src = {f.name: f for f in src_schema.fields}
+
+    def build() -> _MergeExprs:
+        table_schema = snap.schema
+        keys, payload = snap.key_cols, _payload_cols(snap)
+        fields = [
+            src[c] if c in src else table_schema[c] for c in (*keys, *payload)
+        ] + [src.get(OP_COL, table_schema[OP_COL]), T.StructField(LSN_COL, T.LongType())]
+        bucket = F.col(BUCKET_COL)
+        tag = bucket_expr(snap.bucket_by, snap.bucket_count)
+        if pred is not None:
+            tag = F.when(pred, tag).otherwise(F.lit(DEAD_BUCKET))  # NULL fails too
+        dead_rows = bucket == DEAD_BUCKET
+        lsn = F.col(LSN_COL)
+        one = F.lit(1)
+        return _MergeExprs(
+            schema=T.StructType(fields),
+            aligned=(
+                *[F.col(k) for k in keys],
+                *[
+                    (F.col(c) if c in src else F.lit(None).cast(table_schema[c].dataType)).alias(c)
+                    for c in payload
+                ],
+                F.col(OP_COL),
+                lsn.cast("long").alias(LSN_COL),
+                tag.alias(BUCKET_COL),
+            ),
+            bucket=bucket,
+            lsn=lsn,
+            valid_rows=bucket >= 0,
+            dead_rows=dead_rows,
+            dead_count=F.sum(F.when(dead_rows, 1).otherwise(0)).alias("dead_letter_rows"),
+            observed=(
+                F.count(one).alias("rows_in"),
+                F.sum(F.when(F.col(OP_COL) == OP_DELETE, 1).otherwise(0)).alias("deletes_in"),
+                F.min(LSN_COL).alias("min_lsn"),
+                F.max(LSN_COL).alias("max_lsn"),
+            ),
+            winners_count=F.count(one).alias("winners"),
+        )
+
+    return memo_exprs(
+        (
+            "merge", snap.schema_json, tuple(snap.key_cols), tuple(snap.bucket_by),
+            snap.bucket_count, src_schema.json(),
+            ByIdentity(pred) if pred is not None else None,
+        ),
+        build,
+    )
 
 
 def _read_raw(table, snap, keys, payload, rel_files=None, bucket_ids=None):
@@ -675,6 +824,7 @@ def _mor_write(
     table, snap, winners, keys, payload, salt, version, threshold,
     write_repartition=False,
     compact_target_bytes: int = 64 * 1024 * 1024,
+    divert: dict[str, str] | None = None,
 ):
     """Merge-on-read: ONE pass over the batch — winner rows (including
     'D' tombstones, and ``_pu``-tagged field-wise partials) stream
@@ -687,10 +837,11 @@ def _mor_write(
 
     Returns (appends, replaces, compacted_bucket_ids, new_file_sizes) —
     the last is the trigger's memoized stat cache, handed to
-    ``commit()`` so no new file is ever statted twice."""
+    ``commit()`` so no new file is ever statted twice. ``divert`` is
+    handed to ``write_data_files`` (the dead letters' bucket)."""
     appends = table.write_data_files(
         winners, version, write_partitions=salt, subdir="delta",
-        repartition=write_repartition,
+        repartition=write_repartition, divert=divert,
     )
 
     to_compact = []

@@ -50,6 +50,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from picsure_dictionary_etl_spark.lake.expr_memo import memo_exprs
+from picsure_dictionary_etl_spark.lake.fs import move_dir
 from picsure_dictionary_etl_spark.lake.metadata_io import MetadataIO, PosixMetadataIO
 
 META_DIR = "_meta"
@@ -192,9 +194,14 @@ def bucket_expr(bucket_by: list[str], bucket_count: int) -> F.Column:
     """Deterministic bucket id: pmod(xxhash64(bucket cols), n).
 
     xxhash64 is a JVM-side codegen'd expression — no Python in the
-    partitioning path.
+    partitioning path. Built once per layout (:mod:`.expr_memo`).
     """
-    return F.pmod(F.xxhash64(*[F.col(c) for c in bucket_by]), F.lit(bucket_count)).cast("int")
+    return memo_exprs(
+        ("bucket_expr", tuple(bucket_by), bucket_count),
+        lambda: F.pmod(
+            F.xxhash64(*[F.col(c) for c in bucket_by]), F.lit(bucket_count)
+        ).cast("int"),
+    )
 
 
 class LakeTable:
@@ -584,6 +591,7 @@ class LakeTable:
         subdir: str | None = None,
         repartition: bool = True,
         sort_cols: list[str] | None = None,
+        divert: dict[str, str] | None = None,
     ) -> dict[str, list[str]]:
         """Write ``df`` (must carry ``_bucket``) as immutable data files for
         commit ``version``; return bucket -> repo-relative file list.
@@ -599,6 +607,11 @@ class LakeTable:
         key min/max stats, so key-filtered scans skip row groups —
         used by compaction where the sort cost amortizes over many
         reads (hot-path delta appends stay unsorted).
+        ``divert`` maps ``_bucket`` values outside the table's layout
+        (the merge's dead letters, ``-1``) to a directory: that
+        partition's files move there, replacing what it held (or the
+        directory is removed when the write left no such partition),
+        and stay out of the returned file map.
         """
         rel = self._commit_dir(version, subdir)
         out = os.path.join(self.root, rel)
@@ -618,15 +631,20 @@ class LakeTable:
                 continue
             b = entry.split("=", 1)[1]
             bdir = os.path.join(out, entry)
+            if b in (divert or {}):
+                continue
             files[b] = sorted(
                 f"{rel}/{entry}/{fn}"
                 for fn in self.fs.list_names(bdir)
                 if fn.endswith(".parquet")
             )
+        for b, dst in (divert or {}).items():
+            move_dir(self.spark, os.path.join(out, f"{BUCKET_COL}={b}"), dst)
         if not files:
             # no row survived (an all-unmatched matched_only batch, one
-            # wholly at or below the watermark): the writer left only
-            # its _SUCCESS marker, so drop the attempt dir now
+            # wholly at or below the watermark or wholly diverted): the
+            # writer left only its _SUCCESS marker, so drop the attempt
+            # dir now
             attempt = os.path.join(self.root, *rel.split("/")[:2])
             for f in self.fs.list_files_recursive(attempt):
                 self.fs.delete(f)

@@ -147,6 +147,21 @@ def test_matched_only_never_inserts(spark, tmp_path):
     assert _state(t) == s
 
 
+def test_matched_only_rejects_dead_letters_at_plan_time(spark, tmp_path):
+    """The live-key semi-join would drop the dead rows, so the
+    combination fails typed before any job runs or anything commits."""
+    from picsure_dictionary_etl_spark.cdc.normalize import valid_event_pred
+
+    t = _table(spark, tmp_path)
+    _seed(spark, t)
+    v = t.current_version()
+    batch = _events(spark, [(3, "U", "c1", 0, None, "x", None, None)])
+    with pytest.raises(ValueError, match="matched_only"):
+        merge_into(t, batch, "b2", matched_only=True,
+                   dead_letters=(valid_event_pred(), str(tmp_path / "dlq" / "b2")))
+    assert t.current_version() == v and not (tmp_path / "dlq").exists()
+
+
 @LAYOUTS
 def test_delete_resets_fields_within_batch(spark, tmp_path, compact):
     t = _table(spark, tmp_path)

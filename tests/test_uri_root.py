@@ -69,6 +69,27 @@ def test_file_uri_vacuum_gc(spark, tmp_path):
     assert all(f.endswith(".parquet") for f in on_disk)  # side-files GC'd
 
 
+def test_file_uri_all_unmatched_batch_leaves_data_dir_as_it_was(spark, tmp_path):
+    """A write that keeps no row removes its attempt directory through
+    the Hadoop data plane too, not only its files; vacuum then leaves
+    no empty directory behind either."""
+    from picsure_dictionary_etl_spark.lake.merge import merge_into
+
+    root = f"file:{tmp_path}/m"
+    r = CdcRunner(spark, RunnerConfig(table_root=root, bucket_count=2, normalize=False))
+    r.apply_batch(_ev(spark, [(1, "I", "c1", 0, "user", "hi", None, None)]), "b1")
+    data = str(tmp_path / "m" / "data")
+    before = sorted(os.walk(data))
+    m = merge_into(r.table, _ev(spark, [(2, "U", "c7", 0, None, "x", None, None)]),
+                   "b2", matched_only=True).metrics
+    assert not m.get("winners")
+    assert sorted(os.walk(data)) == before
+
+    r.table.truncate()
+    r.table.vacuum(keep_snapshots=1)
+    assert not os.path.exists(data)
+
+
 def test_file_uri_fieldwise_partial_updates(spark, tmp_path):
     """Field-wise MOR deltas (schema evolution + _pu tagging +
     compaction) through the Hadoop data plane on a file: root."""
