@@ -17,8 +17,16 @@ The source is staged as lsn-ordered numbered files and paced with
 ``maxFilesPerTrigger``, so one run spans many micro-batches (the
 interesting kill surface).
 
+Kills are timed from progress, not from process start: each attempt
+waits for its first new manifest commit (JVM start and the first epoch
+take 10-25 s on a 4-core host, and the whole stream a few seconds
+more), then kills 0-3 s later, so every kill lands between or inside
+later epochs, commits and (with ``--optimizeevery``) inline
+compactions. ``kills_after_commit`` counts the kills that landed on an
+attempt which had already committed.
+
 Usage: python BENCH/sink_chaos.py [--events 1000000] [--kills 8]
-       [--files 20] [--files-per-trigger 2] [--uri]
+       [--files 20] [--files-per-trigger 2] [--optimizeevery N] [--uri]
 ``--uri`` roots the table at a ``file://`` URI: executors write
 through pyarrow.fs and the JVM-less commit runs the POSIX-delegated
 atomic claims — the r7 URI plane under SIGKILL.
@@ -96,20 +104,18 @@ import json, sys
 sys.path.insert(0, {repo!r})
 import duckdb
 from picsure_dictionary_etl_spark.session import get_spark
-from picsure_dictionary_etl_spark.lake.merge import resolve_live
 from picsure_dictionary_etl_spark.lake.table import LakeTable
 spark = get_spark("sink-chaos-check", master="local[8]", shuffle_partitions=16)
 t = LakeTable.load(spark, {root!r})
-live = resolve_live(t.read(), ["conv_id", "turn_idx"],
-                    ["role", "text", "tool", "ts"])
-n = live.count()
-want = duckdb.sql('''
-WITH w AS (SELECT conv_id, turn_idx, arg_max(_op, _lsn) op
+# every live key with its winning lsn, against the oracle's
+got = {{tuple(r) for r in t.live().select("conv_id", "turn_idx", "_lsn").collect()}}
+want = set(duckdb.sql('''
+WITH w AS (SELECT conv_id, turn_idx, arg_max(_op, _lsn) op, max(_lsn) l
            FROM '{events}/*.parquet' GROUP BY 1, 2)
-SELECT count(*) FROM w WHERE op <> 'D' ''').fetchone()[0]
+SELECT conv_id, turn_idx, l FROM w WHERE op <> 'D' ''').fetchall())
 gc = t.vacuum(keep_snapshots=2)
-print("CHECK " + json.dumps({{"engine_rows": n, "oracle_rows": want,
-                              "match": n == want, "vacuum": gc}}), flush=True)
+print("CHECK " + json.dumps({{"engine_rows": len(got), "oracle_rows": len(want),
+                              "match": got == want, "vacuum": gc}}), flush=True)
 """
 
 
@@ -125,10 +131,12 @@ def main() -> None:
                          "cadence during the soak — kills then land "
                          "around optimize commits too, exercising the "
                          "crashed-claim recovery under fire")
-    ap.add_argument("--kill-min", type=float, default=20.0,
-                    help="earliest kill after worker start (s)")
-    ap.add_argument("--kill-max", type=float, default=70.0,
-                    help="latest kill after worker start (s)")
+    ap.add_argument("--kill-min", type=float, default=0.0,
+                    help="earliest kill after the attempt's first new "
+                         "commit (s)")
+    ap.add_argument("--kill-max", type=float, default=3.0,
+                    help="latest kill after the attempt's first new "
+                         "commit (s)")
     ap.add_argument("--uri", action="store_true",
                     help="root the sink table at a file:// URI "
                          "(pyarrow.fs data plane + POSIX-delegated "
@@ -158,22 +166,27 @@ def main() -> None:
         except FileNotFoundError:
             return -1
 
-    kills, attempts, progression = 0, 0, []
+    kills, attempts, progression, after_commit = 0, 0, [], 0
     done = False
     while not done and attempts < args.kills * 4:
         attempts += 1
+        v0 = version()
         proc = subprocess.Popen([sys.executable, "-c", code],
                                 stdout=subprocess.PIPE,
                                 stderr=subprocess.DEVNULL, text=True)
         if kills < args.kills:
-            # JVM+session start is ~15-25 s with first-epoch JIT on
-            # top: spread kills 20-70 s so they land INSIDE epochs and
-            # commits, not just in startup
+            # wait for this attempt's first commit, then kill a random
+            # moment later: inside the next epochs, never in startup
+            deadline = time.time() + 300
+            while proc.poll() is None and version() == v0 and time.time() < deadline:
+                time.sleep(0.05)
             time.sleep(rng.uniform(args.kill_min, args.kill_max))
             if proc.poll() is None:
+                committed = version() > v0
                 proc.send_signal(signal.SIGKILL)
                 proc.wait()
                 kills += 1
+                after_commit += committed
             else:
                 done = "SINK_DONE" in (proc.stdout.read() or "")
         else:
@@ -192,8 +205,8 @@ def main() -> None:
     line = next(l for l in check.stdout.splitlines() if l.startswith("CHECK "))
     res = json.loads(line[len("CHECK "):])
     summary = {
-        "events": args.events, "kills": kills, "resume_attempts": attempts,
-        "files": args.files, "files_per_trigger": args.files_per_trigger,
+        "events": args.events, "kills": kills, "kills_after_commit": after_commit,
+        "resume_attempts": attempts, "files": args.files, "files_per_trigger": args.files_per_trigger,
         "version_progression": progression, "uri_root": args.uri,
         "optimize_every": args.optimizeevery, **res,
     }

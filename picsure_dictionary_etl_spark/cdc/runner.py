@@ -235,24 +235,12 @@ class CdcRunner:
         return results
 
     def state(self) -> DataFrame:
-        """Current live table (payload columns, no system columns).
-
-        Merge-on-read resolution: LWW across base+delta files, tombstones
-        dropped — idempotent on compacted data. Tables holding field-wise
-        (``_pu``-tagged) deltas resolve with the mixed field-wise
-        reduce."""
+        """Current live table (key and payload columns, no system
+        columns): :meth:`LakeTable.live`, bucket by bucket, no shuffle."""
         snap = self.table.current()
-        keys = snap.key_cols
-        from picsure_dictionary_etl_spark.lake.merge import (
-            _payload_cols,
-            _read_raw,
-            resolve_live,
-        )
+        from picsure_dictionary_etl_spark.lake.merge import _payload_cols
 
-        payload = _payload_cols(snap)
-        raw = _read_raw(self.table, snap, keys, payload, rel_files=snap.all_files())
-        live = resolve_live(raw, keys, payload, schema=snap.schema)
-        return live.select(*keys, *payload)
+        return self.table.live(snap).select(*snap.key_cols, *_payload_cols(snap))
 
     def conversation(self, conv_id: str) -> DataFrame:
         """Serving-path point lookup: one conversation's live turns in

@@ -179,6 +179,27 @@ def arrow_fs_and_base(root: str):
         ) from None
 
 
+def write_parquet(root: str, rel: str, tbl) -> int:
+    """Write one zstd parquet data file at ``<root>/<rel>`` from a
+    JVM-less process (POSIX fast path, or pyarrow.fs for URI roots) and
+    return its byte size. The sink's executor appends and every
+    compaction write through here."""
+    import posixpath
+
+    import pyarrow.parquet as pq
+
+    afs, base = arrow_fs_and_base(root)
+    if afs is None:
+        full = os.path.join(base, rel)
+        os.makedirs(os.path.dirname(full), exist_ok=True)
+        pq.write_table(tbl, full, compression="zstd")
+        return os.path.getsize(full)
+    full = posixpath.join(base, rel)
+    afs.create_dir(posixpath.dirname(full), recursive=True)
+    pq.write_table(tbl, full, filesystem=afs, compression="zstd")
+    return int(afs.get_file_info(full).size)
+
+
 class ArrowFsDataFS:
     """URI roots reached from JVM-less Python processes — the
     datasource sink's driver-side commit/abort callbacks and any other

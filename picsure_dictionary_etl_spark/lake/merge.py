@@ -25,9 +25,13 @@ to the *batch*, not the table — the sustained-throughput design for a
 10^10-event replay. Compaction is amortized O(table/threshold); a batch
 load that wants fully rewritten buckets runs :func:`optimize` after it.
 
-Stages (JVM-side codegen, except a caller's ``post_reduce_transform``:
-the CDC runner's normalize runs its Arrow-batched pandas UDF over the
-winners, in the reduce/write stage):
+Table-level resolves (reads, compaction, ``matched_only``, rebucket)
+run bucket-local, one task per bucket, on the change feed's pandas LWW
+kernel (:meth:`LakeTable.live`, :func:`_compact_buckets`).
+
+Stages of a merge (JVM-side codegen for stages 1-2, except a caller's
+``post_reduce_transform``: the CDC runner's normalize runs its
+Arrow-batched pandas UDF over the winners, in the reduce/write stage):
 
 1. **Batch LWW reduce** — ``groupBy(keys).agg(max_by(struct(payload), lsn))``
    (sort-based aggregate: struct buffers aren't hash-mutable, but still
@@ -39,7 +43,9 @@ winners, in the reduce/write stage):
    ``xxhash64(bucket_by) % n`` bucket's delta files; untouched buckets
    carry over by reference. Dead letters, when asked for, share this
    write as bucket ``-1`` and move out before the commit.
-3. **Atomic commit** with watermark/batch-id properties (exactly-once).
+3. **Compaction**, amortized-rare: a touched bucket the candidate rule
+   selects is rewritten as one base, in one more job (no shuffle).
+4. **Atomic commit** with watermark/batch-id properties (exactly-once).
 
 The unresolved Column trees of a merge (alignment, bucket tag,
 observations, the LWW aggregate) are built once per table and source
@@ -49,6 +55,7 @@ shape and reused on every batch (:mod:`.expr_memo`).
 from __future__ import annotations
 
 import os
+import uuid
 from dataclasses import dataclass
 from typing import Any
 
@@ -255,8 +262,10 @@ def resolve_live(
     payload_cols: list[str],
     schema=None,
 ) -> DataFrame:
-    """Merge-on-read resolution: LWW across base+delta rows, tombstones
-    dropped. Idempotent on already-resolved (compacted) data.
+    """Merge-on-read resolution on the Spark plane: LWW across
+    base+delta rows, tombstones dropped. Idempotent on already-resolved
+    (compacted) data. Tables resolve with :meth:`LakeTable.live`; this
+    is the independent reference that kernel is tested against.
 
     Dispatch: if the rows carry the ``_pu`` marker column the table has
     (or had) field-wise deltas, and resolution runs the MIXED field-wise
@@ -572,8 +581,7 @@ def merge_into(
         cached = winners.persist()
         touched = [r[0] for r in cached.select(BUCKET_COL).distinct().collect()]
         if touched:
-            target = _read_raw(table, snap, keys, payload, bucket_ids=touched)
-            live_keys = resolve_live(target, keys, payload, schema=snap.schema).select(*keys)
+            live_keys = table.live(snap, buckets=touched).select(*keys)
             winners = cached.join(live_keys, keys, "left_semi")
 
     # conflict-count lineage, piggybacked on the write job (no extra
@@ -598,7 +606,7 @@ def merge_into(
         # the semi-join drops the _bucket partitioning, so matched_only
         # writes repartition like the salted and combine-first plans
         appends, replaces, compacted, sizes_hint = _mor_write(
-            table, snap, winners, keys, payload, salt, version, compact_threshold,
+            table, snap, winners, salt, version, compact_threshold,
             write_repartition=matched_only or bool(salt) or combine_first,
             compact_target_bytes=compact_target_bytes,
             divert={str(DEAD_BUCKET): dl_path} if dl_path is not None else None,
@@ -737,21 +745,6 @@ def _merge_exprs(snap: Snapshot, src_schema: T.StructType, pred) -> _MergeExprs:
     )
 
 
-def _read_raw(table, snap, keys, payload, rel_files=None, bucket_ids=None):
-    """Raw (unresolved) table rows with every system column the schema
-    carries — ``_del_lsn``/``_pu`` null-fill on pre-evolution files."""
-    extras = _system_extras(snap)
-    df = (
-        table._read_files(snap, rel_files)
-        if rel_files is not None
-        else table.read_buckets(bucket_ids, snap)
-    )
-    return df.select(
-        *keys, *payload, F.col(OP_COL), F.col(LSN_COL).cast("long"),
-        *[F.col(c) for c in extras],
-    )
-
-
 def _should_compact(
     n_files: int,
     threshold: int,
@@ -793,14 +786,10 @@ def _should_compact(
 def _bucket_file_bytes(
     table, rel_files: list[str], snap=None, stat_cache: dict | None = None
 ) -> int | None:
-    """Total bytes of a file set. Committed files resolve from the
-    manifest's ``file_sizes`` (recorded at commit time — METADATA, zero
-    filesystem round trips); only files the manifest doesn't know yet
-    (this batch's just-written deltas, pre-upgrade manifests) fall back
-    to a data-plane stat (POSIX stat locally, FileStatus on Hadoop
-    roots), memoized into ``stat_cache`` so each new file is statted at
-    most ONCE per commit (the cache is then handed to ``commit()`` so
-    it never re-stats them either). Returns None when a fallback stat
+    """Total bytes of a file set: committed files from the manifest's
+    ``file_sizes`` (metadata, no filesystem round trip); others (this
+    batch's fresh deltas) by one data-plane stat each, memoized into
+    ``stat_cache``, which ``commit()`` then reuses. None when a stat
     fails — the trigger then degrades to pure count."""
     known = snap.file_sizes if snap is not None else {}
     cache = stat_cache if stat_cache is not None else {}
@@ -820,8 +809,104 @@ def _bucket_file_bytes(
         return None
 
 
+def _compact_candidates(
+    table,
+    snap: Snapshot,
+    files_by_bucket: dict[str, list[str]],
+    threshold: int,
+    target_bytes: int,
+    limit: int | None = None,
+    stat_cache: dict | None = None,
+) -> list[str]:
+    """The one candidate rule of every compaction: the buckets of
+    ``files_by_bucket`` (bucket -> all its files, committed and just
+    written) the count+bytes trigger selects, in bucket order, at most
+    ``limit``. Metadata-only (see :func:`_bucket_file_bytes`). A
+    one-file bucket is never a candidate, and one over 4x the
+    threshold always is, without byte math."""
+    cache = stat_cache if stat_cache is not None else {}
+    out: list[str] = []
+    for b in sorted(files_by_bucket, key=int):
+        if limit is not None and len(out) >= limit:
+            break
+        files = files_by_bucket[b]
+        n = len(files)
+        if n <= 1:
+            continue
+        base = [f for f in files if "/delta/" not in f]
+        delta = [f for f in files if "/delta/" in f]
+        if n > 4 * threshold or _should_compact(
+            n, threshold, _bucket_file_bytes(table, base, snap, cache),
+            _bucket_file_bytes(table, delta, snap, cache), target_bytes,
+        ):
+            out.append(b)
+    return out
+
+
+def _live_schema(snap: Snapshot) -> T.StructType:
+    """A resolved live row, the shape a compacted base holds: keys,
+    payload (schema order), the winner's ``_op``, ``_lsn``."""
+    return T.StructType(
+        [snap.schema[c] for c in (*snap.key_cols, *_payload_cols(snap), OP_COL, LSN_COL)]
+    )
+
+
+def _compact_buckets(table, snap: Snapshot, files_by_bucket: dict[str, list[str]], version: int):
+    """The one compaction kernel: ``(replaces, new file sizes)`` of
+    commit ``version`` for ``files_by_bucket``. Per bucket: resolve its
+    files like :meth:`LakeTable.live` (keeping the winner's ``_op``;
+    field-wise history collapses into full rows) and write the live rows
+    as ONE key-ordered zstd base under an attempt-unique
+    ``data/c<version>-<attempt>/base/_bucket=<b>/``; no live row left
+    swaps the bucket to an explicit EMPTY list. With a Spark session
+    this is one job of one task per bucket; without one (the sink's
+    commit worker) a loop in-process."""
+    import pyarrow as pa
+
+    from picsure_dictionary_etl_spark.streaming.cdf_source import (
+        _plan_cols,
+        _resolve_files,
+        _to_arrow_batches,
+    )
+
+    root, rel_dir = table.root, table._commit_dir(version, "base")
+    keys, payload, dtypes, _ = _plan_cols(snap)
+    extras, out = _system_extras(snap), _live_schema(snap)
+    items = sorted(files_by_bucket.items(), key=lambda kv: int(kv[0]))
+
+    def compact(bucket: str, files: list[str]):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from picsure_dictionary_etl_spark.lake.fs import write_parquet
+
+        live = _resolve_files(root, files, keys, payload, dtypes, extras, keep_op=True)
+        if live.empty:
+            return bucket, None, 0
+        tbl = pa.Table.from_batches(
+            list(_to_arrow_batches(live, out, dtypes)), schema=to_arrow_schema(out)
+        )
+        rel = f"{rel_dir}/{BUCKET_COL}={bucket}/part-00000-{uuid.uuid4().hex}.zstd.parquet"
+        return bucket, rel, write_parquet(root, rel, tbl)
+
+    if table.spark is None:
+        results = [compact(b, files) for b, files in items]
+    else:
+        res = pa.schema([("b", pa.string()), ("rel", pa.string()), ("size", pa.int64())])
+
+        def run(batches):
+            for batch in batches:
+                for i in batch.column(0).to_pylist():
+                    yield pa.RecordBatch.from_pylist([dict(zip(res.names, compact(*items[i])))], res)
+
+        n = len(items)
+        df = table.spark.range(n, numPartitions=n).mapInArrow(run, "b string, rel string, size long")
+        results = [tuple(r) for r in df.collect()]
+    replaces = {b: [rel] if rel else [] for b, rel, _ in results}
+    return replaces, {rel: size for _, rel, size in results if rel}
+
+
 def _mor_write(
-    table, snap, winners, keys, payload, salt, version, threshold,
+    table, snap, winners, salt, version, threshold,
     write_repartition=False,
     compact_target_bytes: int = 64 * 1024 * 1024,
     divert: dict[str, str] | None = None,
@@ -830,74 +915,36 @@ def _mor_write(
     'D' tombstones, and ``_pu``-tagged field-wise partials) stream
     straight into per-bucket delta files via the dynamic-partition
     writer; the touched-bucket set falls out of the write result (no
-    pruning pre-pass, no cache). Buckets whose file count then exceeds
-    the threshold are compacted from the just-written files in a
-    second, amortized-rare job; compaction output is fully-resolved
-    FULL rows (the ``_pu``/``_del_lsn`` history collapses).
+    pruning pre-pass, no cache). Touched buckets the candidate rule
+    selects are compacted (:func:`_compact_buckets`) from their files
+    plus the fresh deltas in a second, amortized-rare job; a batch that
+    compacts nothing runs no second job and reads no manifest.
 
     Returns (appends, replaces, compacted_bucket_ids, new_file_sizes) —
-    the last is the trigger's memoized stat cache, handed to
-    ``commit()`` so no new file is ever statted twice. ``divert`` is
-    handed to ``write_data_files`` (the dead letters' bucket)."""
+    the last holds the trigger's memoized stats and the compacted
+    bases' sizes, handed to ``commit()`` so no new file is ever
+    statted twice. ``divert`` is handed to ``write_data_files`` (the
+    dead letters' bucket)."""
     appends = table.write_data_files(
         winners, version, write_partitions=salt, subdir="delta",
         repartition=write_repartition, divert=divert,
     )
-
-    to_compact = []
+    files = {b: snap.files.get(b, []) + fl for b, fl in appends.items()}
     new_sizes: dict[str, int] = {}
-    for b in appends:
-        existing = snap.files.get(b, [])
-        n = len(existing) + len(appends[b])
-        if n > 4 * threshold:
-            to_compact.append(int(b))  # forced by the cap: skip byte math
-            continue
-        if n == 1 and not existing:
-            # one fresh file: merging is a no-op and early-compacting
-            # would double the initial load's write amplification
-            continue
-        # sizes: committed files from the manifest (metadata-only),
-        # just-written deltas via one memoized stat each — never a HEAD
-        # sweep over the table's existing files. Fresh buckets are NOT
-        # exempt: a big initial load (salted multi-file deltas over the
-        # early-bytes target) compacts immediately — resolved, sorted,
-        # tombstone-free — instead of serving raw deltas until the
-        # count threshold catches up.
-        base = [f for f in existing if "/delta/" not in f]
-        delta = [f for f in existing if "/delta/" in f] + list(appends[b])
-        if _should_compact(
-            n,
-            threshold,
-            _bucket_file_bytes(table, base, snap, new_sizes),
-            _bucket_file_bytes(table, delta, snap, new_sizes),
-            compact_target_bytes,
-        ):
-            to_compact.append(int(b))
+    to_compact = _compact_candidates(
+        table, snap, files, threshold, compact_target_bytes, stat_cache=new_sizes
+    )
     replaces: dict[str, list[str]] = {}
     if to_compact:
-        # existing snapshot files + the fresh deltas for those buckets
-        rel_files = [f for b in to_compact for f in snap.files.get(str(b), [])]
-        rel_files += [f for b in to_compact for f in appends[str(b)]]
-        base = _read_raw(table, snap, keys, payload, rel_files=rel_files)
-        live = (
-            resolve_live(base, keys, payload, schema=snap.schema)
-            .withColumn(BUCKET_COL, bucket_expr(snap.bucket_by, snap.bucket_count))
+        replaces, sizes = _compact_buckets(
+            table, snap, {b: files[b] for b in to_compact}, version
         )
-        # zero-live-rows guard: a compacted bucket whose keys all died
-        # must swap to an EMPTY file list, not keep its pre-compaction
-        # files (the dynamic-partition writer emits no dir for it)
-        replaces = {str(b): [] for b in to_compact}
-        replaces.update(
-            table.write_data_files(
-                live, version, write_partitions=salt, subdir="base", sort_cols=keys
-            )
-        )
+        new_sizes.update(sizes)
         for b in to_compact:
-            # superseded deltas become unreferenced files (GC'able)
-            appends.pop(str(b), None)
-        # superseded deltas' entries in new_sizes are harmless: commit()
-        # prunes sizes to the referenced file set
-    return appends, replaces, to_compact, new_sizes
+            # superseded deltas become unreferenced files (GC'able);
+            # commit() prunes their entries from the sizes
+            appends.pop(b)
+    return appends, replaces, [int(b) for b in to_compact], new_sizes
 
 
 def merge_into_concurrent(
@@ -955,60 +1002,41 @@ def optimize(
     """Standalone bucket compaction — the Delta ``OPTIMIZE`` analog.
 
     ``merge_into`` compacts inline, but only buckets IT touches; a
-    table fed by the streaming sink (append-only deltas, never
-    compacts) or one that stopped ingesting accumulates per-bucket
-    delta files forever. ``optimize`` selects buckets by the SAME
-    count+bytes trigger the merge path uses (:func:`_should_compact` —
-    metadata-only: counts from the manifest file lists, bytes from the
-    manifest's recorded ``file_sizes``), resolves their live state
-    (policy-aware, tombstones collapse), and rewrites each as a
-    key-sorted base in ONE Spark job over only those buckets' files.
-    Zero-live-row buckets swap to explicit empty file lists (the
-    ``replaces`` guard). Returns the new snapshot, or None when no
-    bucket qualifies — a no-op decision that costs zero data IO.
+    table fed by the streaming sink (append-only deltas) or one that
+    stopped ingesting accumulates per-bucket delta files forever.
+    ``optimize`` selects buckets by the one count+bytes candidate rule
+    (:func:`_compact_candidates`, metadata-only) and runs the
+    per-bucket compaction kernel (:func:`_compact_buckets`) over them
+    in ONE Spark job of one task per selected bucket, with no shuffle:
+    each task resolves its bucket's live state (policy-aware,
+    tombstones collapse) and writes one key-sorted base through pyarrow
+    (roots resolve through ``arrow_fs_and_base``, as the change feed's
+    do). Returns the new snapshot, or None when no bucket qualifies — a
+    no-op decision that costs zero data IO.
+
+    Memory bound: one bucket is one pandas frame in one Python worker.
+    A bucket beyond a worker's memory fails its task, so the job fails
+    and nothing commits (finished tasks' files are orphans ``vacuum``
+    collects); :func:`rebucket` to more buckets is the remedy.
 
     Compaction changes no live row: ``table_changes`` across the
     boundary is empty (the CDF planner sees changed file LISTS, the
     value diff is empty — tested). ``buckets`` restricts the candidate
     set (operational partial runs on huge tables)."""
     snap = table.current()
-    keys, payload = snap.key_cols, _payload_cols(snap)
-    cand = (
-        {str(b) for b in buckets} & set(snap.files)
+    files = (
+        {str(b): snap.files[str(b)] for b in buckets if str(b) in snap.files}
         if buckets is not None
-        else set(snap.files)
+        else snap.files
     )
-    cache: dict[str, int] = {}
-    to_compact: list[int] = []
-    for b in sorted(cand, key=int):
-        files = snap.files[b]
-        n = len(files)
-        if n <= 1:
-            continue  # a single base: merging is a no-op
-        if n > 4 * compact_threshold:
-            to_compact.append(int(b))  # forced by the cap: skip byte math
-            continue
-        base = [f for f in files if "/delta/" not in f]
-        delta = [f for f in files if "/delta/" in f]
-        if _should_compact(
-            n,
-            compact_threshold,
-            _bucket_file_bytes(table, base, snap, cache),
-            _bucket_file_bytes(table, delta, snap, cache),
-            compact_target_bytes,
-        ):
-            to_compact.append(int(b))
+    to_compact = _compact_candidates(
+        table, snap, files, compact_threshold, compact_target_bytes
+    )
     if not to_compact:
         return None
-    rel_files = [f for b in to_compact for f in snap.files[str(b)]]
-    raw = _read_raw(table, snap, keys, payload, rel_files=rel_files)
-    live = resolve_live(raw, keys, payload, schema=snap.schema).withColumn(
-        BUCKET_COL, bucket_expr(snap.bucket_by, snap.bucket_count)
-    )
     version = snap.version + 1
-    replaces = {str(b): [] for b in to_compact}
-    replaces.update(
-        table.write_data_files(live, version, subdir="base", sort_cols=keys)
+    replaces, sizes = _compact_buckets(
+        table, snap, {b: files[b] for b in to_compact}, version
     )
     return table.commit(
         {}, replaces, None,
@@ -1017,9 +1045,9 @@ def optimize(
             # data dirs are attempt-unique, so only the id lets the
             # retry take the claim over instead of dying forever
             "batch_id": f"optimize-v{version}",
-            "optimize": {"buckets": to_compact},
+            "optimize": {"buckets": [int(b) for b in to_compact]},
         },
-        prev=snap,
+        prev=snap, file_sizes_hint=sizes,
     )
 
 
@@ -1031,28 +1059,28 @@ def rebucket(table: LakeTable, new_bucket_count: int) -> "Snapshot":
 
     One-time O(table) rewrite, exactly like Iceberg's
     ``rewrite_data_files`` after a partition-spec change: resolve the
-    live state (policy-aware), re-hash under the new count, write
-    key-sorted bases, and commit a snapshot that REPLACES every old
-    bucket (explicit ``[]`` entries — the empty-bucket guard — so no
-    stale file list survives) with the new layout. Exactly-once
-    bookkeeping (watermark, applied batches) carries through untouched;
-    merges after the commit read the new ``bucket_count`` from the
-    snapshot, so nothing else changes. Rebucketing changes no live row:
-    ``table_changes`` across the boundary is empty (tested)."""
+    live state bucket-locally under the OLD layout
+    (:meth:`LakeTable.live`, policy-aware), re-hash it under the new
+    count with ``bucket_expr``, write key-sorted bases through Spark,
+    and commit a snapshot that REPLACES every old bucket (explicit
+    ``[]`` entries — the empty-bucket guard — so no stale file list
+    survives) with the new layout. Exactly-once bookkeeping (watermark,
+    applied batches) carries through untouched; merges after the commit
+    read the new ``bucket_count`` from the snapshot, so nothing else
+    changes. Rebucketing changes no live row: ``table_changes`` across
+    the boundary is empty (tested)."""
     snap = table.current()
     if new_bucket_count == snap.bucket_count:
         return snap
     if new_bucket_count < 1:
         raise ValueError(f"bucket_count must be >= 1, got {new_bucket_count}")
-    keys, payload = snap.key_cols, _payload_cols(snap)
-    raw = _read_raw(table, snap, keys, payload, rel_files=snap.all_files())
-    live = resolve_live(raw, keys, payload, schema=snap.schema).withColumn(
+    live = table.live(snap).withColumn(
         BUCKET_COL, bucket_expr(snap.bucket_by, new_bucket_count)
     )
     version = snap.version + 1
     replaces = {b: [] for b in snap.files}
     replaces.update(
-        table.write_data_files(live, version, subdir="base", sort_cols=keys)
+        table.write_data_files(live, version, subdir="base", sort_cols=snap.key_cols)
     )
     return table.commit(
         {}, replaces, None,

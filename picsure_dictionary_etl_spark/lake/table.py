@@ -406,7 +406,18 @@ class LakeTable:
     def read(self, snapshot: Snapshot | None = None) -> DataFrame:
         """Current table state as a DataFrame (system columns included)."""
         snap = snapshot or self.current()
-        return self._read_files(snap, snap.all_files())
+        paths = [os.path.join(self.root, f) for f in snap.all_files()]
+        if not paths:
+            return self.spark.createDataFrame([], snap.schema)
+        # recursiveFileLookup=true disables partition-directory inference —
+        # we hand Spark leaf files from several commit dirs; the explicit
+        # manifest schema fills columns missing from pre-evolution files
+        # with nulls (additive schema evolution).
+        return (
+            self.spark.read.schema(snap.schema)
+            .option("recursiveFileLookup", "true")
+            .parquet(*paths)
+        )
 
     def read_version(self, version: int) -> DataFrame:
         """Time travel: the table as of snapshot ``version`` (manifests
@@ -461,10 +472,49 @@ class LakeTable:
         at-or-before ``ts`` — ``SELECT ... TIMESTAMP AS OF``."""
         return self.read_version(self.version_at_timestamp(ts))
 
-    def read_buckets(self, bucket_ids: list[int], snapshot: Snapshot | None = None) -> DataFrame:
+    def live(
+        self, snapshot: Snapshot | None = None, buckets: list[int] | None = None
+    ) -> DataFrame:
+        """The LIVE rows of ``snapshot`` (default: current), of
+        ``buckets`` only when given: key, payload, ``_op`` and ``_lsn``
+        columns, the shape a compacted base holds. One Spark job of one
+        task per non-empty bucket and no shuffle, as every row lives in
+        exactly one bucket: each task reads its bucket's files with
+        pyarrow and resolves them with the change feed's LWW kernel
+        (field-wise when the snapshot carries ``_pu``), rows key-ordered.
+        Types outside the kernel's surface fail typed before any job.
+
+        Memory bound: one bucket is one pandas frame (all its files' raw
+        rows, plus the resolve's sort) in one Python worker. A bucket
+        beyond a worker's memory fails its task, and with it the job;
+        :func:`~.merge.rebucket` to more buckets is the remedy."""
+        from picsure_dictionary_etl_spark.lake.merge import _live_schema, _system_extras
+        from picsure_dictionary_etl_spark.streaming.cdf_source import (
+            _check_supported,
+            _plan_cols,
+            _resolve_files,
+            _to_arrow_batches,
+        )
+
         snap = snapshot or self.current()
-        files = [f for b in bucket_ids for f in snap.files.get(str(b), [])]
-        return self._read_files(snap, files)
+        _check_supported(self.root, snap)
+        keys, payload, dtypes, _ = _plan_cols(snap)
+        extras = _system_extras(snap)
+        out = _live_schema(snap)
+        wanted = snap.files if buckets is None else {str(b) for b in buckets}
+        files = [fl for b, fl in snap.files.items() if b in wanted and fl]
+        root = self.root
+
+        def run(batches):
+            for batch in batches:
+                for i in batch.column(0).to_pylist():
+                    live = _resolve_files(
+                        root, files[i], keys, payload, dtypes, extras, keep_op=True
+                    )
+                    yield from _to_arrow_batches(live, out, dtypes)
+
+        n = len(files)
+        return self.spark.range(n, numPartitions=max(n, 1)).mapInArrow(run, out)
 
     def read_keys(
         self, bucket_key_values: list, snapshot: Snapshot | None = None
@@ -558,20 +608,6 @@ class LakeTable:
             schema=to_arrow_schema(out),
         )
         return self.spark.createDataFrame(tbl, schema=out)
-
-    def _read_files(self, snap: Snapshot, rel_files: list[str]) -> DataFrame:
-        if not rel_files:
-            return self.spark.createDataFrame([], snap.schema)
-        paths = [os.path.join(self.root, f) for f in rel_files]
-        # recursiveFileLookup=true disables partition-directory inference —
-        # we hand Spark leaf files from several commit dirs; the explicit
-        # manifest schema fills columns missing from pre-evolution files
-        # with nulls (additive schema evolution).
-        return (
-            self.spark.read.schema(snap.schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(*paths)
-        )
 
     # ---------- writes ----------
 

@@ -32,7 +32,6 @@ from picsure_dictionary_etl_spark.lake.merge import (
     OP_COL,
     MergeResult,
     merge_into,
-    resolve_live,
 )
 from picsure_dictionary_etl_spark.lake.table import LakeTable
 
@@ -99,7 +98,7 @@ def refresh_concepts(table: LakeTable, nodes: DataFrame, batch_id: str) -> Merge
     """Apply one dictionary load: upsert changed/new concepts, delete
     vanished ones, no-op on identical re-loads."""
     gen = table.watermark() + 1
-    live = resolve_live(table.read(), CONCEPT_KEY, PAYLOAD_COLS)
+    live = table.live()
 
     src = nodes.select("concept_path", *PAYLOAD_COLS)
     src_h = src.withColumn("_h", _row_hash())

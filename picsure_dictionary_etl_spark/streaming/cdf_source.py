@@ -116,7 +116,7 @@ class _BucketTask(InputPartition):
     new_files: list[str]
     # system columns beyond (_op,_lsn) present in each side's snapshot
     # schema; '_pu' present <=> that side resolves FIELD-WISE (mirrors
-    # resolve_live's dispatch + _read_raw's _system_extras per snapshot)
+    # the reference resolve_live's dispatch, by _system_extras per snapshot)
     old_extras: list[str] = field(default_factory=list)
     new_extras: list[str] = field(default_factory=list)
 
@@ -160,6 +160,9 @@ def _read_bucket(root: str, rel_files: list[str], cols: list[str], dtypes,
         ):
             return pd.ArrowDtype(t)
         return None
+    # Spark writes naive INT96 (UTC), pyarrow writers tz-aware micros:
+    # one type, or a bucket mixing both concatenates to object dtype
+    utc = pa.timestamp("us", tz="UTC")
     fs, base = arrow_fs_and_base(root)
     frames = []
     for rel in rel_files:
@@ -169,8 +172,11 @@ def _read_bucket(root: str, rel_files: list[str], cols: list[str], dtypes,
             tbl = pq.read_table(
                 posixpath.join(base, rel), filesystem=fs, filters=filters
             )
-        keep = [c for c in cols if c in tbl.column_names]
-        frames.append(tbl.select(keep).to_pandas(types_mapper=mapper))
+        tbl = tbl.select([c for c in cols if c in tbl.column_names])
+        for i, c in enumerate(tbl.column_names):
+            if dtypes.get(c) == "timestamp" and tbl.schema.field(i).type != utc:
+                tbl = tbl.set_column(i, c, tbl.column(i).cast(utc))
+        frames.append(tbl.to_pandas(types_mapper=mapper))
     if not frames:
         return pd.DataFrame(columns=cols)
     df = pd.concat(frames, ignore_index=True)
@@ -253,7 +259,7 @@ def _resolve_live_pd(df, keys: list[str], payload: list[str], dtypes,
     """Row-policy LWW twin of :func:`~..lake.merge.resolve_live`: winner
     per key by (_lsn, xxhash64(payload..., _op)); tombstone winners drop.
     ``keep_op=True`` additionally returns the winner's ``_op`` (the
-    compacted-base shape the Spark ``optimize`` writes)."""
+    compacted-base shape every compaction writes)."""
     out_cols = keys + payload + ["_lsn"] + (["_op"] if keep_op else [])
     if df.empty:
         return df.iloc[0:0].reindex(columns=out_cols)
@@ -812,13 +818,17 @@ def _span_tasks(root, keys, payload, dtypes, snap_from, snap_to):
     ]
 
 
-def _resolve_side(p: _BucketTask, rel_files, extras):
-    cols = p.keys + p.payload + ["_op", "_lsn"] + list(extras)
-    raw = _read_bucket(p.root, rel_files, cols, p.dtypes)
+def _resolve_files(root, rel_files, keys, payload, dtypes, extras,
+                   keep_op: bool = False):
+    """Live rows of one bucket's files: :func:`_read_bucket`, then the
+    row or field-wise LWW kernel (``'_pu' in extras`` picks field-wise).
+    Key-ordered, as the kernel sorts by key before it picks winners."""
+    cols = keys + payload + ["_op", "_lsn"] + list(extras)
+    raw = _read_bucket(root, rel_files, cols, dtypes)
     resolve = (
         _resolve_live_pd_fieldwise if "_pu" in extras else _resolve_live_pd
     )
-    return resolve(raw, p.keys, p.payload, p.dtypes)
+    return resolve(raw, keys, payload, dtypes, keep_op=keep_op)
 
 
 def _read_span_partition(partition: _BucketTask, out_schema):
@@ -827,8 +837,9 @@ def _read_span_partition(partition: _BucketTask, out_schema):
     RecordBatches."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    old = _resolve_side(partition, partition.old_files, partition.old_extras)
-    new = _resolve_side(partition, partition.new_files, partition.new_extras)
+    p = partition
+    old = _resolve_files(p.root, p.old_files, p.keys, p.payload, p.dtypes, p.old_extras)
+    new = _resolve_files(p.root, p.new_files, p.keys, p.payload, p.dtypes, p.new_extras)
     pa_schema = to_arrow_schema(out_schema)
     pa_types = {f.name: f.type for f in pa_schema}
     diff = _diff_states_pd(

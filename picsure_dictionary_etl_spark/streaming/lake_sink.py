@@ -17,9 +17,11 @@ Semantics — an append-only CDC ingest (the MOR fast path):
 * **Rows append as per-bucket delta files**; readers resolve LWW at
   read time exactly like every other MOR write. No LWW reduce runs in
   the sink (a Python datasource writer cannot shuffle), so one key may
-  appear in several epochs' files — ``resolve_live`` picks the winner
-  by ``(_lsn, tie-hash)`` regardless. Compaction happens on the next
-  ``merge_into`` touching the bucket, or via table maintenance.
+  appear in several epochs' files — the read-time resolve picks the
+  winner by ``(_lsn, tie-hash)`` regardless. Compaction happens on the
+  next ``merge_into`` touching the bucket, via ``optimize()``, or
+  inline every N epochs with ``.option("optimizeevery", N)``; all three
+  run the same per-bucket compaction kernel.
 * **Bucket placement is exact**: if the stream carries a ``_bucket``
   column (add it JVM-side with :func:`with_bucket` — also enables the
   one-shuffle-per-epoch repartition), the sink trusts it; otherwise
@@ -78,6 +80,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from picsure_dictionary_etl_spark.lake.fs import is_uri
 from picsure_dictionary_etl_spark.lake.table import (
     BUCKET_COL,
     META_DIR,
@@ -101,10 +104,7 @@ class _SinkCommit(WriterCommitMessage):
     rows: int = 0
     max_lsn: int | None = None
     dropped_stale: int = 0
-
-
-def _is_uri(root: str) -> bool:
-    return "://" in root or root.startswith("file:")
+    version: int = -1  # table version the task saw (abort's lower bound)
 
 
 def _read_meta_text(root: str, *rel: str) -> str:
@@ -122,15 +122,15 @@ def _read_meta_text(root: str, *rel: str) -> str:
 _WM_CACHE: dict = {}
 
 
-def _current_watermark(root: str) -> int:
+def _current_watermark(root: str) -> tuple[int, int]:
+    """``(version, watermark)`` of the table's current snapshot."""
     v = int(_read_meta_text(root, VERSION_FILE).strip())
     hit = _WM_CACHE.get(root)
     if hit is not None and hit[0] == v:
-        return hit[1]
+        return hit
     snap = Snapshot.from_json(_read_meta_text(root, f"snap-{v:08d}.json"))
-    wm = int(snap.properties.get("watermark_lsn", -1))
-    _WM_CACHE[root] = (v, wm)
-    return wm
+    _WM_CACHE[root] = (v, int(snap.properties.get("watermark_lsn", -1)))
+    return _WM_CACHE[root]
 
 
 class _LakeSinkWriter(DataSourceStreamArrowWriter):
@@ -146,7 +146,7 @@ class _LakeSinkWriter(DataSourceStreamArrowWriter):
                 "lake sink supports append output only; use "
                 "LakeTable.truncate() + append for a full rewrite"
             )
-        self.is_uri = _is_uri(raw)
+        self.is_uri = is_uri(raw)
         if self.is_uri:
             # URI roots: executors write parquet through pyarrow.fs and
             # read the watermark the same way (the lake_cdf pattern).
@@ -318,32 +318,14 @@ class _LakeSinkWriter(DataSourceStreamArrowWriter):
             spark_xxhash64_vec(cols, self.bucket_dtypes), self.bucket_count
         )
 
-    def _write_parquet(self, rel: str, tbl) -> int:
-        """Write one parquet data file at ``<root>/<rel>`` (POSIX fast
-        path or pyarrow.fs for URI roots) and return its byte size."""
-        import pyarrow.parquet as pq
-
-        if self.is_uri:
-            import posixpath
-
-            from picsure_dictionary_etl_spark.lake.fs import arrow_fs_and_base
-
-            afs, abase = arrow_fs_and_base(self.root)
-            full = posixpath.join(abase, rel)
-            afs.create_dir(posixpath.dirname(full), recursive=True)
-            pq.write_table(tbl, full, filesystem=afs, compression="zstd")
-            return int(afs.get_file_info(full).size)
-        full = os.path.join(self.root, rel)
-        os.makedirs(os.path.dirname(full), exist_ok=True)
-        pq.write_table(tbl, full, compression="zstd")
-        return os.path.getsize(full)
-
     def write(self, iterator):
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        wm = _current_watermark(self.root)
+        from picsure_dictionary_etl_spark.lake.fs import write_parquet
+
+        seen, wm = _current_watermark(self.root)
         per_bucket: dict[int, list] = {}
         rows = 0
         dropped = 0
@@ -399,7 +381,7 @@ class _LakeSinkWriter(DataSourceStreamArrowWriter):
                     sorted_tbl.slice(lo, hi - lo)
                 )
         if not per_bucket:
-            return _SinkCommit(dropped_stale=dropped)
+            return _SinkCommit(dropped_stale=dropped, version=seen)
         # attempt-unique dir per task: racing/replayed attempts can
         # never clobber committed files (the engine's data-dir rule)
         rel_dir = f"data/s-{uuid.uuid4().hex[:8]}/delta"
@@ -410,11 +392,11 @@ class _LakeSinkWriter(DataSourceStreamArrowWriter):
                 f"{rel_dir}/{BUCKET_COL}={b}/"
                 f"part-00000-{uuid.uuid4().hex}.zstd.parquet"
             )
-            sizes[rel] = self._write_parquet(rel, pa.concat_tables(tables))
+            sizes[rel] = write_parquet(self.root, rel, pa.concat_tables(tables))
             files[str(b)] = [rel]
         return _SinkCommit(
             files=files, sizes=sizes, rows=rows,
-            max_lsn=max_lsn, dropped_stale=dropped,
+            max_lsn=max_lsn, dropped_stale=dropped, version=seen,
         )
 
     # ---------- driver side ----------
@@ -425,8 +407,6 @@ class _LakeSinkWriter(DataSourceStreamArrowWriter):
         crashed commit's leftover); None when absent or torn."""
         path = os.path.join(t.root, META_DIR, f"snap-{version:08d}.json")
         try:
-            from picsure_dictionary_etl_spark.lake.table import Snapshot
-
             return Snapshot.from_json(t.io.read_text(path))
         except Exception:
             return None
@@ -514,93 +494,30 @@ class _LakeSinkWriter(DataSourceStreamArrowWriter):
 
     def _auto_optimize(self, t, snap, force_commit: bool = False) -> None:
         """Inline bounded compaction, every ``optimizeevery`` non-empty
-        epochs: select buckets with the engine's count+bytes trigger
-        (metadata-only — manifest file lists + recorded sizes), resolve
-        each candidate's live state with the VECTORIZED pandas twins the
-        ``lake_cdf`` executor path certifies (bit-equal LWW ties,
-        field-wise markers, delete boundaries), rewrite it as one
-        key-sorted base, and commit a ``replaces`` snapshot (empty
-        buckets get the explicit ``[]`` guard).
-
-        Scale shape: the commit worker has no Spark session, so this is
-        single-process BY DESIGN — bounded to ``optimizemaxbuckets``
-        buckets per cadence (default 8), each bounded by the trigger's
-        target bytes; a backlog drains over subsequent cadences. The
-        parallel path for bulk debt remains the external
-        :func:`~..lake.merge.optimize` Spark job. Crash between the
-        epoch commit and this one re-triggers next epoch (the counter
-        property only resets in THIS commit); the retry-stable batch id
-        lets a crashed claim be taken over, exactly like optimize()."""
-        import pyarrow as pa
-
+        epochs: the engine's one candidate rule (metadata-only) picks at
+        most ``optimizemaxbuckets`` buckets (a backlog drains over the
+        following cadences), and the one compaction kernel of
+        ``optimize()`` rewrites them before one ``replaces`` commit —
+        in-process, bucket after bucket, as the commit worker has no
+        Spark session. A crash between the epoch commit and this one
+        re-triggers next epoch (the counter property only resets in THIS
+        commit); the retry-stable batch id lets a crashed claim be taken
+        over, exactly like optimize()."""
         from picsure_dictionary_etl_spark.lake.merge import (
-            _bucket_file_bytes,
-            _payload_cols,
-            _should_compact,
-        )
-        from picsure_dictionary_etl_spark.streaming.cdf_source import (
-            _read_bucket,
-            _resolve_live_pd,
-            _resolve_live_pd_fieldwise,
-            _to_arrow_batches,
+            _compact_buckets,
+            _compact_candidates,
         )
 
-        threshold, target = self.optimize_threshold, self.optimize_target_bytes
-        cache: dict = {}
-        cands: list[str] = []
-        for b in sorted(snap.files, key=int):
-            if len(cands) >= self.optimize_max_buckets:
-                break  # bounded per cadence — backlog drains next time
-            fl = snap.files[b]
-            n = len(fl)
-            if n <= 1:
-                continue
-            if n > 4 * threshold:
-                cands.append(b)
-                continue
-            base = [f for f in fl if "/delta/" not in f]
-            delta = [f for f in fl if "/delta/" in f]
-            if _should_compact(
-                n, threshold,
-                _bucket_file_bytes(t, base, snap, cache),
-                _bucket_file_bytes(t, delta, snap, cache),
-                target,
-            ):
-                cands.append(b)
+        cands = _compact_candidates(
+            t, snap, snap.files, self.optimize_threshold,
+            self.optimize_target_bytes, limit=self.optimize_max_buckets,
+        )
         if not cands and not force_commit:
             return  # counter stays >= N: re-check next epoch (cheap)
-        from pyspark.sql import types as T
-
-        schema = snap.schema
-        names = [f.name for f in schema.fields]
-        dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
-        keys, payload = snap.key_cols, _payload_cols(snap)
-        fieldwise = PU_COL in names
         version = snap.version + 1
-        rel_dir = f"data/o{version:08d}-{uuid.uuid4().hex[:8]}/base"
-        replaces: dict[str, list[str]] = {}
-        sizes: dict[str, int] = {}
-        out_schema = T.StructType(
-            [schema[n] for n in keys + payload + ["_op", "_lsn"]]
+        replaces, sizes = _compact_buckets(
+            t, snap, {b: snap.files[b] for b in cands}, version
         )
-        for b in cands:
-            pdf = _read_bucket(self.root, snap.files[b], names, dtypes)
-            resolve = (
-                _resolve_live_pd_fieldwise if fieldwise else _resolve_live_pd
-            )
-            live = resolve(pdf, keys, payload, dtypes, keep_op=True)
-            if live.empty:
-                replaces[b] = []  # zero live rows: explicit empty guard
-                continue
-            live = live.sort_values(keys, kind="stable")
-            batches = list(_to_arrow_batches(live, out_schema, dtypes))
-            tbl = pa.Table.from_batches(batches)
-            rel = (
-                f"{rel_dir}/{BUCKET_COL}={b}/"
-                f"part-00000-{uuid.uuid4().hex}.zstd.parquet"
-            )
-            sizes[rel] = self._write_parquet(rel, tbl)
-            replaces[b] = [rel]
         t.commit(
             {}, replaces, {"sink_commits_since_optimize": 0},
             {
@@ -615,31 +532,25 @@ class _LakeSinkWriter(DataSourceStreamArrowWriter):
         self._commit(messages, f"sink-{self.sinkid}-{batchId}", epoch=batchId)
 
     def abort(self, messages, batchId: int) -> None:
-        # written files are unreferenced by any manifest — orphans that
-        # vacuum GCs; best-effort eager cleanup here
-        if self.is_uri:
-            import posixpath
-
-            from picsure_dictionary_etl_spark.lake.fs import arrow_fs_and_base
-
-            afs, abase = arrow_fs_and_base(self.root)
-
-            def _rm(rel):
-                afs.delete_file(posixpath.join(abase, rel))
-        else:
-
-            def _rm(rel):
-                os.remove(os.path.join(self.root, rel))
-
-        for m in messages:
-            if m is None:
-                continue
-            for fl in m.files.values():
-                for rel in fl:
-                    try:
-                        _rm(rel)
-                    except Exception:
-                        pass
+        """Best-effort eager cleanup of the epoch's files (``vacuum``
+        collects the rest). Spark also aborts epochs whose commit LANDED
+        when a later step raised, so a file is deleted only when no
+        snapshot committed since its task read the table references it."""
+        msgs = [m for m in messages if m is not None and m.files]
+        if not msgs:
+            return
+        t = LakeTable(None, self.root)
+        doomed = {rel for m in msgs for fl in m.files.values() for rel in fl}
+        try:
+            for v in range(min(m.version for m in msgs) + 1, t.current_version() + 1):
+                doomed -= set(t.snapshot(v).all_files())
+        except Exception:
+            return
+        for rel in doomed:
+            try:
+                t.fs.delete(os.path.join(t.root, rel))
+            except Exception:
+                pass
 
 
 class _LakeBatchWriter(DataSourceArrowWriter):
@@ -696,7 +607,7 @@ def with_bucket(df, root: str, repartition: bool = False):
 
     from picsure_dictionary_etl_spark.lake.table import bucket_expr
 
-    r = root.rstrip("/") if _is_uri(root) else os.path.abspath(root)
+    r = root.rstrip("/") if is_uri(root) else os.path.abspath(root)
     # driver-side with a live session: any scheme the session's Hadoop
     # layer reaches works here (the sink itself gates the commit point)
     snap = LakeTable(df.sparkSession, r).current()

@@ -226,7 +226,6 @@ def test_mixed_policy_mor_matches_oracle_hypothesis(spark, tmp_path):
     )
     from picsure_dictionary_etl_spark.lake.merge import (
         _payload_cols,
-        _read_raw,
         merge_into,
         resolve_live,
     )
@@ -274,8 +273,7 @@ def test_mixed_policy_mor_matches_oracle_hypothesis(spark, tmp_path):
                        compact_threshold=2)
         snap = t.current()
         payload = _payload_cols(snap)
-        raw = _read_raw(t, snap, TRANSCRIPT_KEY, payload,
-                        rel_files=snap.all_files())
+        raw = t.read(snap)
         live = resolve_live(raw, TRANSCRIPT_KEY, payload, schema=snap.schema)
         got = {(r["conv_id"], r["turn_idx"]): (r["text"], r["role"])
                for r in live.collect()}

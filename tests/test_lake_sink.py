@@ -767,3 +767,49 @@ def test_sink_with_map_payload_and_inline_optimize(spark, tmp_path):
 
     assert state(t) == state(t2)
     assert {s[0] for s in state(t)} == {"a", "e"}  # b deleted
+
+
+def test_abort_after_landed_commit_keeps_committed_files(spark, tmp_path, monkeypatch):
+    """Spark aborts an epoch whenever the commit call raises, also when
+    the epoch's manifest commit already LANDED and a later step failed
+    (here a forced auto-optimize failure). The abort must not delete
+    files a committed snapshot references — the next epoch would die
+    on FileNotFoundError over a corrupt table. An epoch whose commit
+    never landed still has its files cleaned up."""
+    from picsure_dictionary_etl_spark.streaming.lake_sink import _LakeSinkWriter
+
+    root = _mk_table(spark, tmp_path, buckets=2)
+    w = _LakeSinkWriter({"path": root, "optimizeevery": "1"},
+                        change_event_schema(), False)
+
+    def boom(self, t, snap, force_commit=False):
+        raise RuntimeError("post-commit failure")
+
+    monkeypatch.setattr(_LakeSinkWriter, "_auto_optimize", boom)
+
+    def task(rows):
+        return [w.write(iter(_ev(spark, rows).toArrow().to_batches()))]
+
+    epochs = [
+        [(1, "I", "c1", 0, "user", "a", None, TS),
+         (2, "I", "c2", 0, "user", "b", None, TS)],
+        [(3, "U", "c1", 0, "user", "a2", None, TS)],
+    ]
+    for epoch, rows in enumerate(epochs):
+        msgs = task(rows)
+        with pytest.raises(RuntimeError, match="post-commit"):
+            w._commit(msgs, f"sink-{w.sinkid}-{epoch}", epoch=epoch)
+        w.abort(msgs, epoch)
+    t = LakeTable.load(spark, root)
+    assert t.current_version() == 2
+    for v in range(t.current_version() + 1):
+        for f in t.snapshot(v).all_files():
+            assert os.path.exists(os.path.join(root, f)), (v, f)
+    assert _state(spark, root) == {("c1", 0, "a2", 3), ("c2", 0, "b", 2)}
+
+    # a task whose epoch never committed: abort removes its files
+    msgs = task([(4, "U", "c2", 0, "user", "b2", None, TS)])
+    files = [f for m in msgs for fl in m.files.values() for f in fl]
+    assert files and all(os.path.exists(os.path.join(root, f)) for f in files)
+    w.abort(msgs, 2)
+    assert not any(os.path.exists(os.path.join(root, f)) for f in files)

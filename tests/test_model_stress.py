@@ -13,7 +13,6 @@ from picsure_dictionary_etl_spark.cdc.envelope import (
 )
 from picsure_dictionary_etl_spark.lake.merge import (
     _payload_cols,
-    _read_raw,
     merge_into,
     resolve_live,
 )
@@ -39,8 +38,7 @@ def test_model_stress_random_op_interleavings(spark, tmp_path):
     def engine_state():
         snap = table.current()
         payload = _payload_cols(snap)
-        raw = _read_raw(table, snap, TRANSCRIPT_KEY, payload,
-                        rel_files=snap.all_files())
+        raw = table.read(snap)
         live = resolve_live(
             raw, TRANSCRIPT_KEY, payload,
             schema=snap.schema,

@@ -128,9 +128,10 @@ def test_fieldwise_reduce_is_single_shuffle(spark):
 
 
 def test_mixed_resolve_is_single_shuffle(spark):
-    """The MOR field-wise READ path (mixed full/partial resolve) is
-    still one aggregate: the full-row ordering branch adds a per-column
-    CASE, never a join or second exchange."""
+    """The reference field-wise resolve (``resolve_live``'s mixed
+    full/partial reduce, the Spark-plane oracle the bucket-local kernel
+    is tested against) is still one aggregate: the full-row ordering
+    branch adds a per-column CASE, never a join or second exchange."""
     from picsure_dictionary_etl_spark.lake.merge import lww_winners_fieldwise
 
     df = _cdc_frame(spark).withColumn("_pu", F.col("_lsn") % 2 == 1)
