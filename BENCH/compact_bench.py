@@ -12,6 +12,14 @@ resident set of the driver process and all its descendants (the JVM and
 its Python workers), and as the largest single descendant; both are
 read-only samples, so short spikes between samples are missed.
 
+Skewed mode (``--hot-fraction F --salt S``): the events send a fraction
+F to two hot conversations (``conv-0``, ``conv-1``), and the measured
+operation is, in place of ``optimize()``, one salted ``merge_into``
+(``salt_partitions=S``, ``compact_threshold`` = the delta count) of 4,000
+events all on those two conversations: it appends one more delta to
+their buckets and so compacts exactly those hot buckets inline, the
+path whose base writes ``salt_partitions`` spreads over S tasks.
+
 Parent-against-change: ``--repo A --repo B`` runs the checkouts in
 alternating worker processes (``--pairs`` rounds, ``--runs`` optimize
 calls each) and reports per checkout the quartiles of the warm runs'
@@ -22,6 +30,9 @@ reported on its own).
 Usage:
     python BENCH/compact_bench.py --repo /path/to/parent --repo . \\
         --label parent --label change --out BENCH/compact_bench_results.json
+    python BENCH/compact_bench.py --repo /path/to/parent --repo . \\
+        --label parent --label change --hot-fraction 0.5 --salt 4 \\
+        --out BENCH/compact_bench_skew_results.json
 """
 
 from __future__ import annotations
@@ -115,7 +126,13 @@ def worker(args) -> dict:
         spark, os.path.join(tmp, "src"), schema=transcript_table_schema(),
         key_cols=TRANSCRIPT_KEY, bucket_by=["conv_id"], bucket_count=args.buckets,
     )
-    events = change_events(spark, args.events, n_convs=2000, seed=42)
+    events = change_events(
+        spark, args.events, n_convs=2000, hot_fraction=args.hot_fraction, seed=42
+    )
+    # the skewed mode's probe: every event on the two hot conversations
+    probe = change_events(
+        spark, 4000, n_convs=2000, hot_fraction=1.0, start_lsn=args.events, seed=43
+    )
     step = args.events // args.deltas
     for i in range(args.deltas):
         batch = events.filter((F.col("_lsn") >= i * step) & (F.col("_lsn") < (i + 1) * step))
@@ -131,12 +148,28 @@ def worker(args) -> dict:
         t = LakeTable.load(spark, root)
         with PeakRss() as mem:
             t0 = time.perf_counter()
-            out = optimize(t)
+            if args.salt:
+                res = merge_into(t, probe, "probe", compact_threshold=args.deltas,
+                                 salt_partitions=args.salt)
+                out = res.snapshot
+            else:
+                out = optimize(t)
             secs = time.perf_counter() - t0
+        if args.salt:
+            hot = res.metrics["buckets_compacted"]
+            assert hot and len(hot) < args.buckets, hot
+            live = resolve_live(t.read(), TRANSCRIPT_KEY, _payload_cols(out))
+            runs.append({"op_s": round(secs, 3), "compacted_buckets": hot,
+                         "base_files": sum(len(out.files[str(b)]) for b in hot),
+                         "live_rows": live.count(),
+                         "peak_rss_tree_mb": round(mem.total_kb / 1024, 1),
+                         "peak_rss_one_child_mb": round(mem.single_kb / 1024, 1)})
+            shutil.rmtree(root)
+            continue
         assert out is not None and len(out.lineage["optimize"]["buckets"]) == args.buckets
         rows = spark.read.parquet(*[os.path.join(root, f) for f in out.all_files()]).count()
         assert rows == live_rows, (rows, live_rows)  # bases hold exactly the live rows
-        runs.append({"optimize_s": round(secs, 3),
+        runs.append({"op_s": round(secs, 3),
                      "peak_rss_tree_mb": round(mem.total_kb / 1024, 1),
                      "peak_rss_one_child_mb": round(mem.single_kb / 1024, 1)})
         shutil.rmtree(root)
@@ -160,6 +193,10 @@ def main():
     ap.add_argument("--buckets", type=int, default=8)
     ap.add_argument("--deltas", type=int, default=10)
     ap.add_argument("--cores", type=int, default=4)
+    ap.add_argument("--hot-fraction", type=float, default=0.0,
+                    help="share of events on two hot conversations")
+    ap.add_argument("--salt", type=int, default=0,
+                    help="time a salted inline-compacting merge instead of optimize()")
     ap.add_argument("--tmp", default=None, help="scratch directory for the tables")
     ap.add_argument("--out", default=None)
     ap.add_argument("--worker", action="store_true", help=argparse.SUPPRESS)
@@ -175,13 +212,16 @@ def main():
             cmd = [sys.executable, os.path.abspath(__file__), "--worker", "--repo", repo,
                    "--runs", str(args.runs), "--events", str(args.events),
                    "--buckets", str(args.buckets), "--deltas", str(args.deltas),
-                   "--cores", str(args.cores)] + (["--tmp", args.tmp] if args.tmp else [])
+                   "--cores", str(args.cores), "--hot-fraction", str(args.hot_fraction),
+                   "--salt", str(args.salt)] + (["--tmp", args.tmp] if args.tmp else [])
             out = subprocess.run(cmd, capture_output=True, text=True, check=True)
             raw[lab].append(json.loads(out.stdout.strip().splitlines()[-1]))
             print(lab, raw[lab][-1]["runs"], file=sys.stderr)
     report = {
         "setup": {"events": args.events, "buckets": args.buckets,
                   "delta_files_per_bucket": args.deltas, "cores": args.cores,
+                  "hot_fraction": args.hot_fraction, "salt_partitions": args.salt,
+                  "operation": "salted merge_into" if args.salt else "optimize()",
                   "rounds": args.pairs, "runs_per_round": args.runs},
         "host": {"cpus": os.cpu_count()},
     }
@@ -190,8 +230,8 @@ def main():
         # (Python worker start, codegen); the rest run warm
         warm = [r for w in raw[lab] for r in w["runs"][1:]]
         report[lab] = {
-            "optimize_s_warm": _quartiles([r["optimize_s"] for r in warm]),
-            "optimize_s_first_run": [w["runs"][0]["optimize_s"] for w in raw[lab]],
+            "op_s_warm": _quartiles([r["op_s"] for r in warm]),
+            "op_s_first_run": [w["runs"][0]["op_s"] for w in raw[lab]],
             "peak_rss_tree_mb_warm": _quartiles([r["peak_rss_tree_mb"] for r in warm]),
             "peak_rss_one_child_mb_warm": _quartiles([r["peak_rss_one_child_mb"] for r in warm]),
             "live_rows": raw[lab][0]["live_rows"],

@@ -26,8 +26,10 @@ to the *batch*, not the table — the sustained-throughput design for a
 load that wants fully rewritten buckets runs :func:`optimize` after it.
 
 Table-level resolves (reads, compaction, ``matched_only``, rebucket)
-run bucket-local, one task per bucket, on the change feed's pandas LWW
-kernel (:meth:`LakeTable.live`, :func:`_compact_buckets`).
+scan the table's files through Spark, group the rows by bucket and
+resolve each bucket in one Python task with the change feed's pandas
+LWW kernel (:func:`_live_rows`, behind :meth:`LakeTable.live` and
+:func:`_compact_buckets`).
 
 Stages of a merge (JVM-side codegen for stages 1-2, except a caller's
 ``post_reduce_transform``: the CDC runner's normalize runs its
@@ -43,8 +45,8 @@ Arrow-batched pandas UDF over the winners, in the reduce/write stage):
    ``xxhash64(bucket_by) % n`` bucket's delta files; untouched buckets
    carry over by reference. Dead letters, when asked for, share this
    write as bucket ``-1`` and move out before the commit.
-3. **Compaction**, amortized-rare: a touched bucket the candidate rule
-   selects is rewritten as one base, in one more job (no shuffle).
+3. **Compaction**, amortized-rare: the touched buckets the candidate
+   rule selects are rewritten as bases, in one more job.
 4. **Atomic commit** with watermark/batch-id properties (exactly-once).
 
 The unresolved Column trees of a merge (alignment, bucket tag,
@@ -497,6 +499,11 @@ def merge_into(
         ]
         if need:
             snap = table.evolve_schema(need)
+    # compaction and matched_only resolve with the pandas LWW kernel:
+    # a type it cannot take fails here, before any file is written
+    from picsure_dictionary_etl_spark.streaming.cdf_source import _check_types
+
+    _check_types(table.root, snap)
     keys = snap.key_cols
     payload = _payload_cols(snap)
     pred, dl_path = dead_letters if dead_letters is not None else (None, None)
@@ -851,58 +858,100 @@ def _live_schema(snap: Snapshot) -> T.StructType:
     )
 
 
-def _compact_buckets(table, snap: Snapshot, files_by_bucket: dict[str, list[str]], version: int):
-    """The one compaction kernel: ``(replaces, new file sizes)`` of
-    commit ``version`` for ``files_by_bucket``. Per bucket: resolve its
-    files like :meth:`LakeTable.live` (keeping the winner's ``_op``;
-    field-wise history collapses into full rows) and write the live rows
-    as ONE key-ordered zstd base under an attempt-unique
-    ``data/c<version>-<attempt>/base/_bucket=<b>/``; no live row left
-    swaps the bucket to an explicit EMPTY list. With a Spark session
-    this is one job of one task per bucket; without one (the sink's
-    commit worker) a loop in-process."""
+def _bucket_resolver(snap: Snapshot):
+    """``(cols, dtypes, resolve)``: the raw columns a bucket is read
+    with, their Spark types, and ``resolve(frame) -> pyarrow.Table``,
+    the change feed's LWW kernel over one bucket's raw rows (field-wise
+    when the snapshot carries ``_pu``): its live rows, key-ordered, in
+    the :func:`_live_schema` shape."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from picsure_dictionary_etl_spark.streaming.cdf_source import (
         _plan_cols,
-        _resolve_files,
+        _resolve_frame,
         _to_arrow_batches,
     )
 
-    root, rel_dir = table.root, table._commit_dir(version, "base")
     keys, payload, dtypes, _ = _plan_cols(snap)
-    extras, out = _system_extras(snap), _live_schema(snap)
-    items = sorted(files_by_bucket.items(), key=lambda kv: int(kv[0]))
+    extras, live = _system_extras(snap), _live_schema(snap)
+    arrow = to_arrow_schema(live)
 
-    def compact(bucket: str, files: list[str]):
-        from pyspark.sql.pandas.types import to_arrow_schema
+    def resolve(raw):
+        rows = _resolve_frame(raw, keys, payload, dtypes, extras, keep_op=True)
+        return pa.Table.from_batches(list(_to_arrow_batches(rows, live, dtypes)), arrow)
 
-        from picsure_dictionary_etl_spark.lake.fs import write_parquet
+    return [*keys, *payload, OP_COL, LSN_COL, *extras], dtypes, resolve
 
-        live = _resolve_files(root, files, keys, payload, dtypes, extras, keep_op=True)
-        if live.empty:
-            return bucket, None, 0
-        tbl = pa.Table.from_batches(
-            list(_to_arrow_batches(live, out, dtypes)), schema=to_arrow_schema(out)
-        )
-        rel = f"{rel_dir}/{BUCKET_COL}={bucket}/part-00000-{uuid.uuid4().hex}.zstd.parquet"
-        return bucket, rel, write_parquet(root, rel, tbl)
 
-    if table.spark is None:
-        results = [compact(b, files) for b, files in items]
-    else:
-        res = pa.schema([("b", pa.string()), ("rel", pa.string()), ("size", pa.int64())])
+def _live_rows(
+    table, snap: Snapshot, rel_files: list[str], bucket_count: int | None = None
+) -> DataFrame:
+    """The live rows of ``rel_files`` with their ``_bucket`` under a
+    layout of ``bucket_count`` buckets (default: the snapshot's). One
+    Spark scan reads the files through the session's Hadoop FileSystem,
+    so every root Spark writes works (``hdfs:``/``s3a:`` too); the raw
+    rows group by bucket (a shuffle that spills) and each bucket
+    resolves in one Python task (:func:`_bucket_resolver`). Types
+    outside the kernel's surface fail typed before any job.
 
-        def run(batches):
-            for batch in batches:
-                for i in batch.column(0).to_pylist():
-                    yield pa.RecordBatch.from_pylist([dict(zip(res.names, compact(*items[i])))], res)
+    Memory bound: one bucket is one pandas frame in one Python worker;
+    :func:`rebucket`, which resolves under the NEW layout, is the
+    remedy for a bucket beyond it."""
+    import pyarrow as pa
 
-        n = len(items)
-        df = table.spark.range(n, numPartitions=n).mapInArrow(run, "b string, rel string, size long")
-        results = [tuple(r) for r in df.collect()]
-    replaces = {b: [rel] if rel else [] for b, rel, _ in results}
-    return replaces, {rel: size for _, rel, size in results if rel}
+    from picsure_dictionary_etl_spark.streaming.cdf_source import _arrow_frame, _check_types
+
+    _check_types(table.root, snap)
+    cols, dtypes, resolve = _bucket_resolver(snap)
+
+    def run(key, tbl):
+        out = resolve(_arrow_frame(tbl, cols, dtypes))
+        return out.append_column(BUCKET_COL, pa.array([key[0].as_py()] * out.num_rows, pa.int32()))
+
+    n = bucket_count or snap.bucket_count
+    raw = table.read(snap, files=rel_files).select(
+        *cols, bucket_expr(snap.bucket_by, n).alias(BUCKET_COL)
+    )
+    out = [*_live_schema(snap).fields, T.StructField(BUCKET_COL, T.IntegerType())]
+    return raw.groupBy(BUCKET_COL).applyInArrow(run, T.StructType(out))
+
+
+def _compact_buckets(
+    table, snap: Snapshot, files_by_bucket: dict[str, list[str]], version: int,
+    salt: list | None = None, bucket_count: int | None = None,
+):
+    """The one compaction kernel: ``(replaces, new file sizes)`` of
+    commit ``version``, each bucket of ``files_by_bucket`` rewritten as
+    a key-ordered base of its live rows (field-wise history collapsed
+    into full rows) under an attempt-unique ``data/c<version>-<attempt>/base/``,
+    and an explicit EMPTY list for a bucket with no live row left. With
+    a Spark session: one job over :func:`_live_rows`, written through
+    Spark (over ``salt`` tasks per bucket when given; ``bucket_count``
+    re-hashes for :func:`rebucket`). Without one (the sink's commit
+    worker): each bucket read with pyarrow, resolved and written as one
+    zstd file in-process."""
+    replaces: dict[str, list[str]] = {b: [] for b in files_by_bucket}
+    if table.spark is not None:
+        files = [f for fl in files_by_bucket.values() for f in fl]
+        replaces.update(table.write_data_files(
+            _live_rows(table, snap, files, bucket_count), version,
+            write_partitions=salt, subdir="base", repartition=False,
+            sort_cols=snap.key_cols,
+        ))
+        return replaces, {}
+    from picsure_dictionary_etl_spark.lake.fs import write_parquet
+    from picsure_dictionary_etl_spark.streaming.cdf_source import _read_bucket
+
+    cols, dtypes, resolve = _bucket_resolver(snap)
+    rel_dir, sizes = table._commit_dir(version, "base"), {}
+    for b, files in sorted(files_by_bucket.items(), key=lambda kv: int(kv[0])):
+        tbl = resolve(_read_bucket(table.root, files, cols, dtypes))
+        if tbl.num_rows:
+            rel = f"{rel_dir}/{BUCKET_COL}={b}/part-00000-{uuid.uuid4().hex}.zstd.parquet"
+            sizes[rel] = write_parquet(table.root, rel, tbl)
+            replaces[b] = [rel]
+    return replaces, sizes
 
 
 def _mor_write(
@@ -916,9 +965,10 @@ def _mor_write(
     straight into per-bucket delta files via the dynamic-partition
     writer; the touched-bucket set falls out of the write result (no
     pruning pre-pass, no cache). Touched buckets the candidate rule
-    selects are compacted (:func:`_compact_buckets`) from their files
-    plus the fresh deltas in a second, amortized-rare job; a batch that
-    compacts nothing runs no second job and reads no manifest.
+    selects are compacted (:func:`_compact_buckets`, its base writes
+    spread over ``salt`` like the deltas') from their files plus the
+    fresh deltas in a second, amortized-rare job; a batch that compacts
+    nothing runs no second job and reads no manifest.
 
     Returns (appends, replaces, compacted_bucket_ids, new_file_sizes) —
     the last holds the trigger's memoized stats and the compacted
@@ -937,7 +987,7 @@ def _mor_write(
     replaces: dict[str, list[str]] = {}
     if to_compact:
         replaces, sizes = _compact_buckets(
-            table, snap, {b: files[b] for b in to_compact}, version
+            table, snap, {b: files[b] for b in to_compact}, version, salt=salt
         )
         new_sizes.update(sizes)
         for b in to_compact:
@@ -1006,13 +1056,12 @@ def optimize(
     stopped ingesting accumulates per-bucket delta files forever.
     ``optimize`` selects buckets by the one count+bytes candidate rule
     (:func:`_compact_candidates`, metadata-only) and runs the
-    per-bucket compaction kernel (:func:`_compact_buckets`) over them
-    in ONE Spark job of one task per selected bucket, with no shuffle:
-    each task resolves its bucket's live state (policy-aware,
-    tombstones collapse) and writes one key-sorted base through pyarrow
-    (roots resolve through ``arrow_fs_and_base``, as the change feed's
-    do). Returns the new snapshot, or None when no bucket qualifies — a
-    no-op decision that costs zero data IO.
+    compaction kernel (:func:`_compact_buckets`) over them in ONE Spark
+    job: a scan of only those buckets' files, grouped by bucket, each
+    bucket's live state resolved (policy-aware, tombstones collapse) in
+    one Python task and written back as a key-sorted base. Returns the
+    new snapshot, or None when no bucket qualifies — a no-op decision
+    that costs zero data IO.
 
     Memory bound: one bucket is one pandas frame in one Python worker.
     A bucket beyond a worker's memory fails its task, so the job fails
@@ -1058,29 +1107,27 @@ def rebucket(table: LakeTable, new_bucket_count: int) -> "Snapshot":
     fat for a single compaction task).
 
     One-time O(table) rewrite, exactly like Iceberg's
-    ``rewrite_data_files`` after a partition-spec change: resolve the
-    live state bucket-locally under the OLD layout
-    (:meth:`LakeTable.live`, policy-aware), re-hash it under the new
-    count with ``bucket_expr``, write key-sorted bases through Spark,
-    and commit a snapshot that REPLACES every old bucket (explicit
-    ``[]`` entries — the empty-bucket guard — so no stale file list
-    survives) with the new layout. Exactly-once bookkeeping (watermark,
-    applied batches) carries through untouched; merges after the commit
-    read the new ``bucket_count`` from the snapshot, so nothing else
-    changes. Rebucketing changes no live row: ``table_changes`` across
-    the boundary is empty (tested)."""
+    ``rewrite_data_files`` after a partition-spec change: scan every
+    raw row, re-hash it under the new count, resolve each NEW bucket
+    (:func:`_compact_buckets` with ``bucket_count``, policy-aware),
+    write key-sorted bases, and commit a snapshot that REPLACES every
+    old bucket (explicit ``[]`` entries — the empty-bucket guard — so
+    no stale file list survives) with the new layout. The re-hash is a
+    Spark shuffle that spills, and the resolve holds one bucket of the
+    NEW layout per Python worker, so a table whose buckets outgrew
+    worker memory rebuckets to a count whose buckets fit. Exactly-once
+    bookkeeping (watermark, applied batches) carries through untouched;
+    merges after the commit read the new ``bucket_count`` from the
+    snapshot, so nothing else changes. Rebucketing changes no live row:
+    ``table_changes`` across the boundary is empty (tested)."""
     snap = table.current()
     if new_bucket_count == snap.bucket_count:
         return snap
     if new_bucket_count < 1:
         raise ValueError(f"bucket_count must be >= 1, got {new_bucket_count}")
-    live = table.live(snap).withColumn(
-        BUCKET_COL, bucket_expr(snap.bucket_by, new_bucket_count)
-    )
     version = snap.version + 1
-    replaces = {b: [] for b in snap.files}
-    replaces.update(
-        table.write_data_files(live, version, subdir="base", sort_cols=snap.key_cols)
+    replaces, _ = _compact_buckets(
+        table, snap, snap.files, version, bucket_count=new_bucket_count
     )
     return table.commit(
         {}, replaces, None,

@@ -403,10 +403,14 @@ class LakeTable:
 
     # ---------- reads ----------
 
-    def read(self, snapshot: Snapshot | None = None) -> DataFrame:
-        """Current table state as a DataFrame (system columns included)."""
+    def read(
+        self, snapshot: Snapshot | None = None, files: list[str] | None = None
+    ) -> DataFrame:
+        """Current table state as a DataFrame (system columns included),
+        unresolved; ``files`` (table-relative) scans only those."""
         snap = snapshot or self.current()
-        paths = [os.path.join(self.root, f) for f in snap.all_files()]
+        rel = snap.all_files() if files is None else files
+        paths = [os.path.join(self.root, f) for f in rel]
         if not paths:
             return self.spark.createDataFrame([], snap.schema)
         # recursiveFileLookup=true disables partition-directory inference —
@@ -477,44 +481,20 @@ class LakeTable:
     ) -> DataFrame:
         """The LIVE rows of ``snapshot`` (default: current), of
         ``buckets`` only when given: key, payload, ``_op`` and ``_lsn``
-        columns, the shape a compacted base holds. One Spark job of one
-        task per non-empty bucket and no shuffle, as every row lives in
-        exactly one bucket: each task reads its bucket's files with
-        pyarrow and resolves them with the change feed's LWW kernel
-        (field-wise when the snapshot carries ``_pu``), rows key-ordered.
-        Types outside the kernel's surface fail typed before any job.
+        columns, the shape a compacted base holds. A Spark scan grouped
+        by bucket, each bucket resolved in one Python task by the change
+        feed's LWW kernel (:func:`~.merge._live_rows`).
 
         Memory bound: one bucket is one pandas frame (all its files' raw
         rows, plus the resolve's sort) in one Python worker. A bucket
         beyond a worker's memory fails its task, and with it the job;
         :func:`~.merge.rebucket` to more buckets is the remedy."""
-        from picsure_dictionary_etl_spark.lake.merge import _live_schema, _system_extras
-        from picsure_dictionary_etl_spark.streaming.cdf_source import (
-            _check_supported,
-            _plan_cols,
-            _resolve_files,
-            _to_arrow_batches,
-        )
+        from picsure_dictionary_etl_spark.lake.merge import _live_rows
 
         snap = snapshot or self.current()
-        _check_supported(self.root, snap)
-        keys, payload, dtypes, _ = _plan_cols(snap)
-        extras = _system_extras(snap)
-        out = _live_schema(snap)
         wanted = snap.files if buckets is None else {str(b) for b in buckets}
-        files = [fl for b, fl in snap.files.items() if b in wanted and fl]
-        root = self.root
-
-        def run(batches):
-            for batch in batches:
-                for i in batch.column(0).to_pylist():
-                    live = _resolve_files(
-                        root, files[i], keys, payload, dtypes, extras, keep_op=True
-                    )
-                    yield from _to_arrow_batches(live, out, dtypes)
-
-        n = len(files)
-        return self.spark.range(n, numPartitions=max(n, 1)).mapInArrow(run, out)
+        files = [f for b, fl in snap.files.items() if b in wanted for f in fl]
+        return _live_rows(self, snap, files).drop(BUCKET_COL)
 
     def read_keys(
         self, bucket_key_values: list, snapshot: Snapshot | None = None
@@ -538,12 +518,11 @@ class LakeTable:
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
-        from picsure_dictionary_etl_spark.lake.merge import PU_COL, _system_extras
+        from picsure_dictionary_etl_spark.lake.merge import _system_extras
         from picsure_dictionary_etl_spark.streaming.cdf_source import (
             _plan_cols,
             _read_bucket,
-            _resolve_live_pd,
-            _resolve_live_pd_fieldwise,
+            _resolve_frame,
             _tie_arrow,
             _to_arrow_batches,
         )
@@ -599,9 +578,8 @@ class LakeTable:
                 pd.MultiIndex.from_arrays([r[:n] for r in ranks])
             )
             raw = raw[hit]
-        resolve = _resolve_live_pd_fieldwise if PU_COL in extras else _resolve_live_pd
         # the kernel sorts by key then _lsn, so its rows come out key-ordered
-        live = resolve(raw, keys, payload, dtypes)
+        live = _resolve_frame(raw, keys, payload, dtypes, extras)
         out = T.StructType([snap.schema[c] for c in keys + payload])
         tbl = pa.Table.from_batches(
             list(_to_arrow_batches(live, out, dtypes)),

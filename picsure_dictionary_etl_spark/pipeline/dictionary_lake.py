@@ -98,11 +98,12 @@ def refresh_concepts(table: LakeTable, nodes: DataFrame, batch_id: str) -> Merge
     """Apply one dictionary load: upsert changed/new concepts, delete
     vanished ones, no-op on identical re-loads."""
     gen = table.watermark() + 1
-    live = table.live()
+    # both branches below read the live (key, hash) pairs: cached, the
+    # table resolves once per refresh instead of once per branch
+    live_h = table.live().select("concept_path", _row_hash().alias("_h")).persist()
 
     src = nodes.select("concept_path", *PAYLOAD_COLS)
     src_h = src.withColumn("_h", _row_hash())
-    live_h = live.select("concept_path", _row_hash().alias("_h"))
 
     # D9: drop rows whose (key, hash) already exist — identical re-POST
     # reduces to an empty batch
@@ -110,7 +111,7 @@ def refresh_concepts(table: LakeTable, nodes: DataFrame, batch_id: str) -> Merge
 
     # H5: live keys missing from this load are deleted
     vanished = (
-        live.select("concept_path")
+        live_h.select("concept_path")
         .join(src.select("concept_path"), "concept_path", "left_anti")
         .select(
             "concept_path",
@@ -123,7 +124,10 @@ def refresh_concepts(table: LakeTable, nodes: DataFrame, batch_id: str) -> Merge
         .unionByName(vanished.withColumn(OP_COL, F.lit("D")))
         .withColumn(LSN_COL, F.lit(gen).cast("long"))
     )
-    return merge_into(table, batch, batch_id, watermark_lsn=gen)
+    try:
+        return merge_into(table, batch, batch_id, watermark_lsn=gen)
+    finally:
+        live_h.unpersist()
 
 
 def refresh_from_csv(

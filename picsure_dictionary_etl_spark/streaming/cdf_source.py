@@ -129,8 +129,33 @@ def _read_bucket(root: str, rel_files: list[str], cols: list[str], dtypes,
     [...])]``): pyarrow skips row groups whose statistics exclude it and
     materializes only the matching rows."""
     import pandas as pd
-    import pyarrow as pa
     import pyarrow.parquet as pq
+
+    fs, base = arrow_fs_and_base(root)
+    frames = []
+    for rel in rel_files:
+        if fs is None:
+            tbl = pq.read_table(os.path.join(base, rel), filters=filters)
+        else:
+            tbl = pq.read_table(
+                posixpath.join(base, rel), filesystem=fs, filters=filters
+            )
+        frames.append(_arrow_frame(tbl, cols, dtypes))
+    if not frames:
+        return pd.DataFrame(columns=cols)
+    df = pd.concat(frames, ignore_index=True)
+    for c in cols:  # additive schema evolution: older files lack the col
+        if c not in df.columns:
+            df[c] = None
+    return df[cols]
+
+
+def _arrow_frame(tbl, cols: list[str], dtypes):
+    """The ``cols`` of a pyarrow Table that ``tbl`` carries, as the
+    pandas frame the LWW kernel takes — from a parquet file
+    (:func:`_read_bucket`) or from a Spark scan's Arrow batches."""
+    import pandas as pd
+    import pyarrow as pa
 
     # nullable pandas dtypes keep parquet NULL distinct from a real NaN
     # double (plain float64 collapses both to nan — the tie-break and
@@ -160,30 +185,15 @@ def _read_bucket(root: str, rel_files: list[str], cols: list[str], dtypes,
         ):
             return pd.ArrowDtype(t)
         return None
-    # Spark writes naive INT96 (UTC), pyarrow writers tz-aware micros:
-    # one type, or a bucket mixing both concatenates to object dtype
+    # Spark writes naive INT96 (UTC), pyarrow writers tz-aware micros,
+    # Spark's Arrow batches carry the session zone: one type, or a
+    # bucket mixing them concatenates to object dtype
     utc = pa.timestamp("us", tz="UTC")
-    fs, base = arrow_fs_and_base(root)
-    frames = []
-    for rel in rel_files:
-        if fs is None:
-            tbl = pq.read_table(os.path.join(base, rel), filters=filters)
-        else:
-            tbl = pq.read_table(
-                posixpath.join(base, rel), filesystem=fs, filters=filters
-            )
-        tbl = tbl.select([c for c in cols if c in tbl.column_names])
-        for i, c in enumerate(tbl.column_names):
-            if dtypes.get(c) == "timestamp" and tbl.schema.field(i).type != utc:
-                tbl = tbl.set_column(i, c, tbl.column(i).cast(utc))
-        frames.append(tbl.to_pandas(types_mapper=mapper))
-    if not frames:
-        return pd.DataFrame(columns=cols)
-    df = pd.concat(frames, ignore_index=True)
-    for c in cols:  # additive schema evolution: older files lack the col
-        if c not in df.columns:
-            df[c] = None
-    return df[cols]
+    tbl = tbl.select([c for c in cols if c in tbl.column_names])
+    for i, c in enumerate(tbl.column_names):
+        if dtypes.get(c) == "timestamp" and tbl.schema.field(i).type != utc:
+            tbl = tbl.set_column(i, c, tbl.column(i).cast(utc))
+    return tbl.to_pandas(types_mapper=mapper)
 
 
 def _tie_arrow(s, t: str):
@@ -703,11 +713,16 @@ def _version_at_or_before(root: str, ts) -> int:
 
 
 def _check_supported(root: str, snap: Snapshot) -> None:
-    """Typed plan-time checks: unresolvable root schemes, column types
-    outside the hash's surface and unorderable (map-typed) keys fail
-    when the feed is planned — never mid-batch on the first equal-LSN
-    tie."""
+    """Typed plan-time checks of a feed: unresolvable root schemes, then
+    :func:`_check_types` — never mid-batch on the first equal-LSN tie."""
     arrow_fs_and_base(root)  # raises NotImplementedError on unknown schemes
+    _check_types(root, snap)
+
+
+def _check_types(root: str, snap: Snapshot) -> None:
+    """Typed plan-time check that the pandas LWW kernel can resolve the
+    table: column types outside the tie hash's surface and unorderable
+    (map-typed) keys raise ``NotImplementedError``."""
     bad = [
         f"{f.name}:{f.dataType.simpleString()}"
         for f in snap.schema.fields
@@ -716,7 +731,7 @@ def _check_supported(root: str, snap: Snapshot) -> None:
     ]
     if bad:
         raise NotImplementedError(
-            f"change feed supports column types {sorted(SUPPORTED_TYPES)}, "
+            f"the LWW kernel supports column types {sorted(SUPPORTED_TYPES)}, "
             f"decimal(p,s) at any precision, and array/struct/map nesting "
             f"at any depth over those (map KEYS must not contain a map); "
             f"table {root} carries unsupported column(s) {bad}"
@@ -729,7 +744,7 @@ def _check_supported(root: str, snap: Snapshot) -> None:
     ]
     if map_keys:
         raise NotImplementedError(
-            f"change feed: KEY columns must be orderable (Spark cannot "
+            f"LWW kernel: KEY columns must be orderable (Spark cannot "
             f"group on maps); table {root} keys on {map_keys}"
         )
 
@@ -825,6 +840,12 @@ def _resolve_files(root, rel_files, keys, payload, dtypes, extras,
     Key-ordered, as the kernel sorts by key before it picks winners."""
     cols = keys + payload + ["_op", "_lsn"] + list(extras)
     raw = _read_bucket(root, rel_files, cols, dtypes)
+    return _resolve_frame(raw, keys, payload, dtypes, extras, keep_op=keep_op)
+
+
+def _resolve_frame(raw, keys, payload, dtypes, extras, keep_op: bool = False):
+    """Live rows of one bucket's raw rows: the row or field-wise LWW
+    kernel (``'_pu' in extras`` picks field-wise), key-ordered."""
     resolve = (
         _resolve_live_pd_fieldwise if "_pu" in extras else _resolve_live_pd
     )

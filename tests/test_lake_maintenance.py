@@ -498,6 +498,49 @@ def test_rebucket_preserves_state_and_bookkeeping(spark, tmp_path):
     assert rebucket(t, 16).version == t.current().version
 
 
+def test_rebucket_resolves_per_new_bucket(spark, tmp_path):
+    """rebucket() resolves each bucket of the NEW layout, not the old
+    one: a one-bucket table (the whole table one pandas frame when read)
+    rebuckets to 8 with every resolve group, and so every Python task's
+    frame, one new bucket; the live state is the reference's."""
+    from pyspark.sql import functions as F
+
+    from picsure_dictionary_etl_spark.cdc.envelope import (
+        TRANSCRIPT_KEY,
+        change_event_schema,
+        transcript_table_schema,
+    )
+    from picsure_dictionary_etl_spark.lake.merge import (
+        _live_rows,
+        _payload_cols,
+        merge_into,
+        rebucket,
+        resolve_live,
+    )
+    from picsure_dictionary_etl_spark.lake.table import BUCKET_COL, LakeTable, bucket_expr
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "rb1"), schema=transcript_table_schema(),
+        key_cols=TRANSCRIPT_KEY, bucket_by=["conv_id"], bucket_count=1,
+    )
+    ev = change_event_schema()
+    for b in range(3):
+        merge_into(t, spark.createDataFrame(
+            [(b * 100 + i + 1, "D" if i % 7 == 0 else "U", f"c{i % 40}", i % 3,
+              "user", f"t{b}-{i}", None, None) for i in range(90)], ev), f"b{b}")
+    snap = t.current()
+    live = _live_rows(t, snap, snap.all_files(), bucket_count=8)
+    # each row carries the bucket of the new layout it was resolved in
+    assert live.filter(F.col(BUCKET_COL) != bucket_expr(["conv_id"], 8)).count() == 0
+    assert live.select(BUCKET_COL).distinct().count() > 1
+    ref = resolve_live(t.read(), TRANSCRIPT_KEY, _payload_cols(snap))
+    want = {(r["conv_id"], r["turn_idx"], r["text"]) for r in ref.collect()}
+    out = rebucket(t, 8)
+    assert len(out.files) > 1 and all(len(fl) == 1 for fl in out.files.values())
+    got = {(r["conv_id"], r["turn_idx"], r["text"]) for r in t.live().collect()}
+    assert got == want
+
+
 def test_rebucket_crashed_claim_is_taken_over(spark, tmp_path):
     """A rebucket killed between manifest claim and pointer swap must be
     retryable: the retry-stable batch id makes the orphan claim a

@@ -251,3 +251,61 @@ def test_hadoop_io_local_scheme_delegates_to_posix(spark, tmp_path):
     io_stuck._fs = _StuckFs()
     with pytest.raises(OSError, match="still exists"):
         io_stuck.remove(f"{m}/VERSION")
+
+
+def test_hadoop_only_root_resolves_and_compacts(spark, tmp_path):
+    """A root only Spark's Hadoop layer reaches (``viewfs:``, which
+    pyarrow cannot open): inline compaction, ``optimize``,
+    ``matched_only``, ``state()`` and ``rebucket`` all resolve through
+    Spark scans, and each state equals the reference resolve."""
+    import pytest
+    from pyspark.sql import types as T
+
+    from picsure_dictionary_etl_spark.lake.fs import arrow_fs_and_base
+    from picsure_dictionary_etl_spark.lake.merge import (
+        merge_into,
+        optimize,
+        rebucket,
+        resolve_live,
+    )
+
+    mount = f"lake{abs(hash(str(tmp_path)))}"
+    spark._jsc.hadoopConfiguration().set(
+        f"fs.viewfs.mounttable.{mount}.link./t", f"file://{tmp_path}"
+    )
+    root = f"viewfs://{mount}/t/tbl"
+    with pytest.raises(NotImplementedError):
+        arrow_fs_and_base(root)
+    schema = T.StructType([
+        T.StructField("k", T.StringType(), False),
+        T.StructField("v", T.LongType(), True),
+        T.StructField("_op", T.StringType(), False),
+        T.StructField("_lsn", T.LongType(), False),
+    ])
+    t = LakeTable.create(spark, root, schema=schema, key_cols=["k"], bucket_count=2)
+    src = "k string, v long, _op string, _lsn long"
+
+    def check():
+        got = {tuple(r) for r in t.live().select("k", "v").collect()}
+        ref = {tuple(r) for r in resolve_live(t.read(), ["k"], ["v"]).select("k", "v").collect()}
+        assert got == ref and got
+
+    compacted = []
+    for i in range(3):
+        rows = [(f"k{j}", i * 10 + j, "D" if j % 5 == 0 else "U", i * 100 + j) for j in range(20)]
+        m = merge_into(t, spark.createDataFrame(rows, src), f"b{i}", compact_threshold=2).metrics
+        compacted += m["buckets_compacted"]
+    assert compacted  # a bucket past the threshold compacted inline
+    check()
+    merge_into(t, spark.createDataFrame([(f"k{j}", 7, "U", 1000 + j) for j in range(4)], src), "b3")
+    assert optimize(t, compact_threshold=1) is not None
+    check()
+    m = merge_into(t, spark.createDataFrame(
+        [("k1", 999, "U", 2000), ("new", 1, "U", 2001)], src), "m", matched_only=True).metrics
+    assert m["winners"] == 1
+    check()
+    assert rebucket(t, 3).bucket_count == 3
+    check()
+    r = CdcRunner(spark, RunnerConfig(table_root=root, bucket_count=3,
+                                      normalize=False, metadata_io=t.io))
+    assert r.state().count() == t.live().count()
