@@ -1,8 +1,20 @@
 """Crash-injection soak for the exactly-once commit point.
 
-Repeatedly SIGKILLs a replay subprocess at random moments (including
-inside the claim→swap window the round-3 commit protocol introduced),
-resumes with a fresh process each time, and finally checks:
+Repeatedly SIGKILLs a replay subprocess and resumes with a fresh
+process each time. Kills are aimed from what the table shows, not
+wall time. Each attempt draws its aim: its FIRST commit (the resume
+commit, which takes over a crashed claim or redoes a crashed
+compaction: a double crash), the commit after it, or its next
+compaction. The kill comes uniform(0, 1.2 x the longest observed
+span to the pointer swap) after the aimed commit's first new
+``data/c<v>-*`` directory (or, for a compaction, its first new
+``base/`` directory), so kills spread over the write, compaction and
+claim->swap tail on any host; the first attempt lets commits land
+until one has compacted, to time both spans. At each kill the
+results record where the commit stood on disk (``kills_by_phase``:
+``before_write``, ``write``, ``compaction`` = a new ``c<v+1>-*/base``
+no snapshot references, ``claim_swap`` = a ``snap-<v+1>.json`` this
+attempt wrote above VERSION, ``after_swap``). Finally it checks:
 
 * the completed table's live state EXACTLY equals an independent
   DuckDB LWW oracle over the staged events,
@@ -13,7 +25,7 @@ resumes with a fresh process each time, and finally checks:
 * vacuum removes every orphan the kills left behind.
 
 Usage: python BENCH/chaos.py [--events 2000000] [--kills 10]
-       [--step 100000]
+       [--step 100000] [--uri]
 Writes BENCH/chaos_results.json and prints a summary.
 """
 
@@ -96,21 +108,91 @@ def main() -> None:
         except FileNotFoundError:
             return -1
 
-    kills, attempts, progression = 0, 0, []
+    def commit_files(v: int) -> dict[str, int]:
+        """Commit ``v``'s data dirs and claim, each with its mtime."""
+        out = {}
+        for rel, pre in (("data", f"c{v:08d}-"), ("_meta", f"snap-{v:08d}.json")):
+            try:
+                names = os.listdir(os.path.join(posix_root, rel))
+            except FileNotFoundError:
+                continue
+            for n in names:
+                if n.startswith(pre):
+                    full = os.path.join(posix_root, rel, n)
+                    try:
+                        out[full] = os.stat(full).st_mtime_ns
+                    except FileNotFoundError:
+                        pass
+        return out
+
+    def new_files(v: int, before: dict[str, int]) -> set[str]:
+        """Commit ``v``'s files this attempt wrote (a resumed commit
+        finds the crashed attempt's dirs and claim already there)."""
+        return {p for p, m in commit_files(v).items() if before.get(p) != m}
+
+    def phase(v: int, before: dict[str, int]) -> str:
+        """Where this attempt's commit ``v`` stood, by the filesystem."""
+        if version() >= v:
+            return "after_swap"
+        new = new_files(v, before)
+        if any(p.endswith(".json") for p in new):
+            return "claim_swap"
+        if any(os.path.isdir(os.path.join(p, "base")) for p in new):
+            return "compaction"
+        return "write" if new else "before_write"
+
+    # longest observed span from a commit's first new data dir ("write")
+    # or first new compacted base ("base") to its pointer swap (s)
+    spans = {"write": 0.0, "base": 0.0}
+
+    def watch(proc, v: int, before: dict[str, int], stop: str) -> dict:
+        """Poll commit ``v`` until ``stop`` ("write" or "base") shows,
+        it swaps or the process exits; return when each was seen."""
+        seen, deadline = {}, time.time() + 300
+        while proc.poll() is None and time.time() < deadline:
+            now, new = time.time(), new_files(v, before)
+            if new:
+                seen.setdefault("write", now)
+            if any(os.path.isdir(os.path.join(p, "base")) for p in new):
+                seen.setdefault("base", now)
+            if version() >= v:
+                for k in set(seen) & set(spans):
+                    spans[k] = max(spans[k], now - seen[k])
+                seen["swap"] = now
+            if stop in seen or "swap" in seen:
+                break
+            time.sleep(0.02)
+        return seen
+
+    kills, attempts, progression, kill_log = 0, 0, [], []
     done = False
     while not done and attempts < args.kills * 4:
         attempts += 1
+        v = max(version(), 0) + 1  # the first attempt creates v0 itself
+        before = commit_files(v)
         proc = subprocess.Popen([sys.executable, "-c", code],
                                 stdout=subprocess.PIPE,
                                 stderr=subprocess.DEVNULL, text=True)
         if kills < args.kills:
-            # let it run a random slice (spanning JVM start through
-            # several commits — some kills land mid-claim/mid-write)
-            time.sleep(rng.uniform(8.0, 30.0))
+            # aim at this attempt's first commit (the resume commit),
+            # the one after it, or its first compaction; until a
+            # compacting commit has been timed, let commits land
+            aim = rng.choice(["first", "next", "compaction"]) if spans["base"] else "time"
+            anchor = "base" if aim == "compaction" else "write"
+            landed = 0
+            while proc.poll() is None:
+                ready = {"next": landed, "time": spans["base"]}.get(aim, True)
+                if "swap" not in watch(proc, v, before, anchor if ready else "swap"):
+                    break  # at the aimed commit's anchor (or the process exited)
+                landed, v, before = landed + 1, v + 1, commit_files(v + 1)
+            time.sleep(rng.uniform(0.0, 1.2 * spans[anchor]))
             if proc.poll() is None:
                 proc.send_signal(signal.SIGKILL)
                 proc.wait()
                 kills += 1
+                kill_log.append({"aim": aim, "aimed_version": v,
+                                 "phase": phase(v, before),
+                                 "version_at_kill": version()})
             else:
                 done = "REPLAY_DONE" in (proc.stdout.read() or "")
         else:
@@ -156,8 +238,11 @@ for b in sorted(os.listdir({posix_dlq!r})):
     dl_ok &= diff == 0
     dl_rows += duckdb.sql(f"SELECT count(*) FROM {{got}}").fetchone()[0]
 dl_want = duckdb.sql(f"SELECT count(*) FROM {{bad}}").fetchone()[0]
+first_compaction = next((h["version"] for h in r.table.history()
+                         if (h["lineage"] or {{}}).get("buckets_compacted")), None)
 gc = r.table.vacuum(keep_snapshots=2)
 print("CHECK " + json.dumps({{"engine_rows": n, "oracle_rows": want,
+                              "first_compaction_version": first_compaction,
                               "dead_letter_rows": dl_rows, "oracle_dead_letters": dl_want,
                               "match": n == want and dl_ok and dl_rows == dl_want,
                               "vacuum": gc}}), flush=True)
@@ -169,7 +254,15 @@ print("CHECK " + json.dumps({{"engine_rows": n, "oracle_rows": want,
     summary = {
         "events": args.events, "kills": kills, "resume_attempts": attempts,
         "uri_root": bool(args.uri),
-        "version_progression": progression, **res,
+        "version_progression": progression,
+        "commit_span_s": {k: round(t, 3) for k, t in spans.items()},
+        "kills_by_phase": {p: sum(k["phase"] == p for k in kill_log)
+                           for p in ("before_write", "write", "compaction",
+                                     "claim_swap", "after_swap")},
+        "kills_by_aim": {a: sum(k["aim"] == a for k in kill_log)
+                         for a in ("time", "first", "next", "compaction")},
+        "kill_log": kill_log,
+        **res,
     }
     with open(os.path.join(HERE, "chaos_results.json"), "w") as f:
         json.dump(summary, f, indent=2)

@@ -15,6 +15,8 @@ semantics, and no per-row Python anywhere on the hot path.
 
 __version__ = "0.1.0"
 
+# First: every worker that unpickles a package function installs the patch.
+from picsure_dictionary_etl_spark import _zipcache  # noqa: F401
 from picsure_dictionary_etl_spark.session import get_spark  # noqa: F401
 from picsure_dictionary_etl_spark.lake.table import (  # noqa: F401,E402
     ConcurrentCommitError,
