@@ -23,7 +23,13 @@ take 10-25 s on a 4-core host, and the whole stream a few seconds
 more), then kills 0-3 s later, so every kill lands between or inside
 later epochs, commits and (with ``--optimizeevery``) inline
 compactions. ``kills_after_commit`` counts the kills that landed on an
-attempt which had already committed.
+attempt which had already committed. Each kill also records where the
+next commit stood on disk (``kills_by_phase``: ``claim_swap`` = a
+``snap-<v+1>.json`` this attempt wrote above VERSION, ``compaction`` =
+an inline compaction's new ``c<v+1>-*`` directory, ``epoch`` =
+neither: executor writes, the epoch commit's planning, or between
+epochs), and the check lists the compaction commits
+(``compaction_versions``).
 
 Usage: python BENCH/sink_chaos.py [--events 1000000] [--kills 8]
        [--files 20] [--files-per-trigger 2] [--optimizeevery N] [--uri]
@@ -113,9 +119,11 @@ want = set(duckdb.sql('''
 WITH w AS (SELECT conv_id, turn_idx, arg_max(_op, _lsn) op, max(_lsn) l
            FROM '{events}/*.parquet' GROUP BY 1, 2)
 SELECT conv_id, turn_idx, l FROM w WHERE op <> 'D' ''').fetchall())
+compactions = [h["version"] for h in t.history() if "optimize" in (h["lineage"] or {{}})]
 gc = t.vacuum(keep_snapshots=2)
 print("CHECK " + json.dumps({{"engine_rows": len(got), "oracle_rows": len(want),
-                              "match": got == want, "vacuum": gc}}), flush=True)
+                              "match": got == want, "compaction_versions": compactions,
+                              "vacuum": gc}}), flush=True)
 """
 
 
@@ -166,11 +174,30 @@ def main() -> None:
         except FileNotFoundError:
             return -1
 
-    kills, attempts, progression, after_commit = 0, 0, [], 0
+    def on_disk() -> set[str]:
+        """The table's data directories and metadata files."""
+        out = set()
+        for rel in ("data", "_meta"):
+            try:
+                out |= {f"{rel}/{n}" for n in os.listdir(os.path.join(root, rel))}
+            except FileNotFoundError:
+                pass
+        return out
+
+    def phase(v: int, before: set[str]) -> str:
+        """Where commit ``v + 1`` stood at a kill, by what this attempt wrote."""
+        new = on_disk() - before
+        if f"_meta/snap-{v + 1:08d}.json" in new:
+            return "claim_swap"
+        if any(n.startswith(f"data/c{v + 1:08d}-") for n in new):
+            return "compaction"
+        return "epoch"
+
+    kills, attempts, progression, after_commit, kill_log = 0, 0, [], 0, []
     done = False
     while not done and attempts < args.kills * 4:
         attempts += 1
-        v0 = version()
+        v0, before = version(), on_disk()
         proc = subprocess.Popen([sys.executable, "-c", code],
                                 stdout=subprocess.PIPE,
                                 stderr=subprocess.DEVNULL, text=True)
@@ -187,6 +214,8 @@ def main() -> None:
                 proc.wait()
                 kills += 1
                 after_commit += committed
+                v = version()
+                kill_log.append({"version_at_kill": v, "phase": phase(v, before)})
             else:
                 done = "SINK_DONE" in (proc.stdout.read() or "")
         else:
@@ -208,7 +237,10 @@ def main() -> None:
         "events": args.events, "kills": kills, "kills_after_commit": after_commit,
         "resume_attempts": attempts, "files": args.files, "files_per_trigger": args.files_per_trigger,
         "version_progression": progression, "uri_root": args.uri,
-        "optimize_every": args.optimizeevery, **res,
+        "optimize_every": args.optimizeevery,
+        "kills_by_phase": {p: sum(k["phase"] == p for k in kill_log)
+                           for p in ("epoch", "compaction", "claim_swap")},
+        "kill_log": kill_log, **res,
     }
     suffix = "_uri" if args.uri else ""
     if args.optimizeevery:

@@ -246,7 +246,9 @@ class CdcRunner:
         """Serving-path point lookup: one conversation's live turns in
         turn order — :meth:`LakeTable.read_keys` on the current snapshot,
         a driver-side read of the one bucket ``conv_id`` hashes to. No
-        Spark job runs until an action on the result."""
+        Spark job runs until an action on the result. A root pyarrow
+        cannot open (``viewfs:``, ``s3a:``) raises
+        ``NotImplementedError``."""
         return self.table.read_keys([conv_id])
 
     # ---------- internals ----------

@@ -1172,7 +1172,10 @@ def table_changes(
     within a layout, so only buckets whose manifest FILE LIST differs
     become tasks; a span across a rebucket collapses to ONE global task.
     Columns added by schema evolution read null on the older side.
-    Unsupported column types and map-typed keys fail typed here."""
+    Unsupported column types and map-typed keys fail typed here, and so
+    does a root pyarrow cannot open (``viewfs:``, ``s3a:``, ``hdfs:``
+    without libhdfs): the tasks read with pyarrow, and the feed has no
+    Spark-plane fallback."""
     from picsure_dictionary_etl_spark.streaming.cdf_source import (
         _plan_cols,
         _read_span_partition,

@@ -506,18 +506,24 @@ class LakeTable:
 
         Runs on the driver, with no Spark job until an action on the
         result: the values hash to their buckets with the numpy XXH64
-        (bit-equal to the writer's ``bucket_expr``), pyarrow reads only
-        those buckets' files with an ``in`` filter per flat bucket
-        column (key-sorted row groups are skipped, only matching rows
-        materialize), the rows match exact tuples (nested columns by
-        their order-rank code, after the read) and resolve with the
-        change feed's LWW kernel. The result is a DataFrame over the
-        resolved Arrow table. A ``bucket_by`` type outside the hash's
-        surface raises :class:`UnsupportedVectorType` before any read."""
+        (bit-equal to the writer's ``bucket_expr``), one Arrow scan
+        reads only those buckets' files with an ``in`` filter per flat
+        bucket column (key-sorted row groups are skipped, only matching
+        rows materialize) and converts to pandas once, the rows match
+        exact tuples (nested columns by their order-rank code, after
+        the read) and resolve with the change feed's LWW kernel. The
+        result is a DataFrame over the resolved Arrow table. A
+        ``bucket_by`` type outside the hash's surface raises
+        :class:`UnsupportedVectorType` before any read.
+
+        A root pyarrow cannot open (``viewfs:``, ``s3a:``, ``hdfs:``
+        without libhdfs) raises ``NotImplementedError`` before any job
+        or file read; there is no Spark-plane fallback."""
         import pandas as pd
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
+        from picsure_dictionary_etl_spark.lake.fs import arrow_fs_and_base
         from picsure_dictionary_etl_spark.lake.merge import _system_extras
         from picsure_dictionary_etl_spark.streaming.cdf_source import (
             _plan_cols,
@@ -535,6 +541,7 @@ class LakeTable:
             spark_xxhash64_vec,
         )
 
+        arrow_fs_and_base(self.root)  # a root pyarrow cannot open fails here
         snap = snapshot or self.current()
         keys, payload, dtypes, _ = _plan_cols(snap)
         cols = snap.bucket_by

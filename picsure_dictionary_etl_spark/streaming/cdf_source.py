@@ -16,10 +16,12 @@ bounded batch read::
   buckets whose manifest FILE LISTS differ become tasks (a commit
   touching 1 of 1024 buckets plans 1 task). A span across a rebucket
   collapses to one global task.
-* **Each task reads only its bucket's files** (old + new list) with
-  pyarrow, resolves both sides and diffs them vectorized (pandas/numpy
-  masks over an index-only key join), and yields ``pyarrow.RecordBatch``
-  chunks — a columnar pipeline end to end, no driver collects.
+* **Each task works in proportion to the change**: one Arrow scan
+  reads its bucket's ``old ∪ new`` files once; only keys with a row in
+  a file on one side of the span can change (files are immutable), so
+  the other keys' rows drop in Arrow, before pandas. Each side
+  resolves its kept rows, the two diff vectorized (an index-only key
+  join) into ``pyarrow.RecordBatch`` chunks; no driver collects.
 * **LWW parity is bit-exact**: rows order by ``(_lsn, xxhash64(payload
   ..., _op))`` with :mod:`.xxhash_vec`'s XXH64, hashed only inside
   equal-LSN tie groups, so ties pick the winner the engine's merge and
@@ -121,33 +123,69 @@ class _BucketTask(InputPartition):
     new_extras: list[str] = field(default_factory=list)
 
 
-def _read_bucket(root: str, rel_files: list[str], cols: list[str], dtypes,
+def _scan_bucket(root: str, rel_files: list[str], cols: list[str], dtypes,
                  filters=None):
-    """Read ``cols`` of a bucket's files into one pandas frame (columns
-    an older file lacks read null). ``filters`` is handed to
-    ``pq.read_table`` as is (DNF tuples, e.g. ``[("conv_id", "in",
-    [...])]``): pyarrow skips row groups whose statistics exclude it and
-    materializes only the matching rows."""
-    import pandas as pd
+    """``(table, file_ids)``: ``cols`` of a bucket's files in ONE Arrow
+    scan typed by the Spark schema (Spark's INT96 and pyarrow's
+    tz-aware timestamps both read as UTC micros, a column an older file
+    lacks reads null), and each row's index into ``rel_files``.
+    ``filters`` (DNF tuples, e.g. ``[("conv_id", "in", [...])]``) keeps
+    the scan's row-group pruning: groups whose statistics exclude it
+    are skipped and only matching rows materialize."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 
     fs, base = arrow_fs_and_base(root)
-    frames = []
-    for rel in rel_files:
-        if fs is None:
-            tbl = pq.read_table(os.path.join(base, rel), filters=filters)
-        else:
-            tbl = pq.read_table(
-                posixpath.join(base, rel), filesystem=fs, filters=filters
-            )
-        frames.append(_arrow_frame(tbl, cols, dtypes))
-    if not frames:
-        return pd.DataFrame(columns=cols)
-    df = pd.concat(frames, ignore_index=True)
-    for c in cols:  # additive schema evolution: older files lack the col
-        if c not in df.columns:
-            df[c] = None
-    return df[cols]
+    join = os.path.join if fs is None else posixpath.join
+    paths = [join(base, rel) for rel in rel_files]
+    types = {"_op": "string", "_lsn": "bigint", "_del_lsn": "bigint", "_pu": "boolean", **dtypes}
+    schema = pa.schema([(c, _arrow_type(_parse_type(types[c]))) for c in cols])
+    scan = ds.dataset(paths, schema=schema, format="parquet", filesystem=fs).scanner(
+        columns=cols, use_threads=False,
+        # no file: no filter to bind (an empty ``in`` list types as null)
+        filter=pq.filters_to_expression(filters) if filters and paths else None,
+    )
+    index = {path: i for i, path in enumerate(paths)}
+    batches, ids = [], [np.empty(0, dtype=np.int32)]
+    for tagged in scan.scan_batches():
+        batches.append(tagged.record_batch)
+        ids.append(np.full(tagged.record_batch.num_rows, index[tagged.fragment.path], np.int32))
+    return pa.Table.from_batches(batches, schema), np.concatenate(ids)
+
+
+def _read_bucket(root: str, rel_files: list[str], cols: list[str], dtypes,
+                 filters=None):
+    """``cols`` of a bucket's files as the one pandas frame the LWW
+    kernel takes: one :func:`_scan_bucket` pass (``filters`` prunes
+    row groups), one pandas conversion."""
+    return _arrow_frame(_scan_bucket(root, rel_files, cols, dtypes, filters)[0], cols, dtypes)
+
+
+def _arrow_type(td):
+    """The Arrow type a Spark type descriptor (:func:`_parse_type`)
+    reads and hashes as: Spark's own mapping, timestamps UTC micros."""
+    import pyarrow as pa
+
+    if td[0] == "decimal":
+        return pa.decimal128(td[1], td[2])
+    if td[0] == "array":
+        return pa.list_(_arrow_type(td[1]))
+    if td[0] == "map":
+        return pa.map_(_arrow_type(td[1]), _arrow_type(td[2]))
+    if td[0] == "struct":
+        return pa.struct([(name, _arrow_type(f)) for name, f in td[1]])
+    return {
+        "string": pa.string(), "binary": pa.binary(),
+        "long": pa.int64(), "bigint": pa.int64(),
+        "integer": pa.int32(), "int": pa.int32(),
+        "short": pa.int16(), "smallint": pa.int16(),
+        "byte": pa.int8(), "tinyint": pa.int8(),
+        "boolean": pa.bool_(), "double": pa.float64(),
+        "float": pa.float32(), "date": pa.date32(),
+        "timestamp": pa.timestamp("us", tz="UTC"), "timestamp_ntz": pa.timestamp("us"),
+    }[td[1]]
 
 
 def _arrow_frame(tbl, cols: list[str], dtypes):
@@ -213,21 +251,11 @@ def _tie_arrow(s, t: str):
         return _as_arrow(s, None)
     if td[0] == "decimal":
         return pa.array(
-            [None if v is None or v is pd.NA else v for v in s],
-            type=pa.decimal128(td[1], td[2]),
+            [None if v is None or v is pd.NA else v for v in s], type=_arrow_type(td)
         )
-    flat = {
-        "string": pa.string(), "binary": pa.binary(),
-        "long": pa.int64(), "bigint": pa.int64(),
-        "integer": pa.int32(), "int": pa.int32(),
-        "short": pa.int16(), "smallint": pa.int16(),
-        "byte": pa.int8(), "tinyint": pa.int8(),
-        "boolean": pa.bool_(), "double": pa.float64(),
-        "float": pa.float32(), "date": pa.date32(),
-    }
     if td[1] in ("timestamp", "timestamp_ntz"):
         return pa.array(s)  # keep the source unit/tz (the hash converts)
-    return pa.array(s, type=flat[td[1]])
+    return pa.array(s, type=_arrow_type(td))
 
 
 def _key_codes(df, keys: list[str], dtypes):
@@ -484,45 +512,41 @@ def _col_same(o, n, t: str, pa_type=None):
     return (na_o & na_n) | (~na_o & ~na_n & np.asarray(eq, dtype=bool))
 
 
+def _key_ids(df, keys: list[str], dtypes):
+    """One int64 id per row of ``df``, equal exactly where the rows'
+    keys are: each key's factorize codes (a null key is a regular code,
+    so null matches null; a nested key enters as its ``_order_rank``)
+    packed into one integer, re-densified before the product of the
+    code spaces could overflow."""
+    import numpy as np
+    import pandas as pd
+
+    df, sk = _key_codes(df, keys, dtypes)
+    ids, space = np.zeros(len(df), dtype=np.int64), 1
+    for k in sk:
+        codes, uniques = pd.factorize(df[k], use_na_sentinel=False)
+        card = max(len(uniques), 1)
+        if space * card > 2**62:
+            ids, dense = pd.factorize(ids)
+            space = len(dense)
+        ids, space = ids * card + codes, space * card
+    return ids
+
+
 def _merge_indices(old, new, keys: list[str], dtypes):
     """Outer-join the two states on the key columns, returning only
     POSITIONAL indices (io, i_n; -1 = absent on that side). The join
-    runs on ONE packed int64 code column (factorize over both sides;
-    a nested key enters as its ``_order_rank`` over both sides), so no
-    payload column is ever copied into a merged frame — output
-    materialization later is O(changes), not O(rows). Falls back to a
-    direct multi-column key merge on the (astronomically rare) bucket
-    whose per-key code-space product overflows int64."""
+    runs on ONE :func:`_key_ids` column over both sides, so no payload
+    column is ever copied into a merged frame — output materialization
+    later is O(changes), not O(rows)."""
     import numpy as np
     import pandas as pd
 
     n_o, n_n = len(old), len(new)
-    both_sides, keys = _key_codes(
-        pd.concat([old[keys], new[keys]], ignore_index=True), keys, dtypes
-    )
-    old, new = both_sides.iloc[:n_o], both_sides.iloc[n_o:]
-    ko = np.zeros(n_o, dtype=np.int64)
-    kn = np.zeros(n_n, dtype=np.int64)
-    space = 1
-    for k in keys:
-        both = both_sides[k]
-        # use_na_sentinel=False: a null key is a regular code, so NA
-        # keys match each other — same as pandas' merge-on-keys
-        codes, uniques = pd.factorize(both, use_na_sentinel=False)
-        card = max(len(uniques), 1)
-        space *= card
-        if space > 2**62:
-            break
-        ko = ko * card + codes[:n_o]
-        kn = kn * card + codes[n_o:]
-    if space > 2**62:  # fallback: still index-only, just multi-column
-        lo = old[keys].assign(_io=np.arange(n_o, dtype=np.int64))
-        ln = new[keys].assign(_in=np.arange(n_n, dtype=np.int64))
-        m = lo.merge(ln, on=keys, how="outer")
-    else:
-        lo = pd.DataFrame({"_jk": ko, "_io": np.arange(n_o, dtype=np.int64)})
-        ln = pd.DataFrame({"_jk": kn, "_in": np.arange(n_n, dtype=np.int64)})
-        m = lo.merge(ln, on="_jk", how="outer")
+    ids = _key_ids(pd.concat([old[keys], new[keys]], ignore_index=True), keys, dtypes)
+    lo = pd.DataFrame({"_jk": ids[:n_o], "_io": np.arange(n_o, dtype=np.int64)})
+    ln = pd.DataFrame({"_jk": ids[n_o:], "_in": np.arange(n_n, dtype=np.int64)})
+    m = lo.merge(ln, on="_jk", how="outer")
     io = m["_io"].astype("Int64").to_numpy(dtype="int64", na_value=-1)
     i_n = m["_in"].astype("Int64").to_numpy(dtype="int64", na_value=-1)
     return io, i_n
@@ -833,16 +857,6 @@ def _span_tasks(root, keys, payload, dtypes, snap_from, snap_to):
     ]
 
 
-def _resolve_files(root, rel_files, keys, payload, dtypes, extras,
-                   keep_op: bool = False):
-    """Live rows of one bucket's files: :func:`_read_bucket`, then the
-    row or field-wise LWW kernel (``'_pu' in extras`` picks field-wise).
-    Key-ordered, as the kernel sorts by key before it picks winners."""
-    cols = keys + payload + ["_op", "_lsn"] + list(extras)
-    raw = _read_bucket(root, rel_files, cols, dtypes)
-    return _resolve_frame(raw, keys, payload, dtypes, extras, keep_op=keep_op)
-
-
 def _resolve_frame(raw, keys, payload, dtypes, extras, keep_op: bool = False):
     """Live rows of one bucket's raw rows: the row or field-wise LWW
     kernel (``'_pu' in extras`` picks field-wise), key-ordered."""
@@ -853,25 +867,37 @@ def _resolve_frame(raw, keys, payload, dtypes, extras, keep_op: bool = False):
 
 
 def _read_span_partition(partition: _BucketTask, out_schema):
-    """Executor read of one span task (shared by every feed reader):
-    resolve each side's live state, vectorized diff, yield arrow
-    RecordBatches."""
+    """Executor read of one span task (shared by every feed reader), in
+    proportion to the change. Data files are immutable, so only a key
+    with a row in a CHANGED file (one on exactly one side of the span)
+    can change: one :func:`_scan_bucket` pass reads ``old ∪ new``, the
+    rows of every other key drop in Arrow before the payload converts
+    to pandas, each side resolves over its own files' rows, and the two
+    live states diff vectorized into Arrow RecordBatches. A bootstrap,
+    compaction or rebucket span changes every file, so there every key
+    is touched and this is the full diff."""
+    import numpy as np
     from pyspark.sql.pandas.types import to_arrow_schema
 
     p = partition
-    old = _resolve_files(p.root, p.old_files, p.keys, p.payload, p.dtypes, p.old_extras)
-    new = _resolve_files(p.root, p.new_files, p.keys, p.payload, p.dtypes, p.new_extras)
-    pa_schema = to_arrow_schema(out_schema)
-    pa_types = {f.name: f.type for f in pa_schema}
-    diff = _diff_states_pd(
-        old,
-        new,
-        partition.keys,
-        partition.payload,
-        partition.dtypes,
-        pa_types,
-    )
-    yield from _to_arrow_batches(diff, out_schema, partition.dtypes)
+    olds, news = set(p.old_files), set(p.new_files)
+    files = p.old_files + [f for f in p.new_files if f not in olds]
+    base = p.keys + p.payload + ["_op", "_lsn"]
+    cols = base + [c for c in ("_del_lsn", "_pu") if c in p.old_extras + p.new_extras]
+    tbl, file_ids = _scan_bucket(p.root, files, cols, p.dtypes)
+    in_old = np.array([f in olds for f in files], dtype=bool)[file_ids]
+    in_new = np.array([f in news for f in files], dtype=bool)[file_ids]
+    ids = _key_ids(_arrow_frame(tbl.select(p.keys), p.keys, p.dtypes), p.keys, p.dtypes)
+    touched = np.isin(ids, ids[in_old != in_new])
+
+    def side(rows, extras):  # one side's touched rows, converted once
+        raw = _arrow_frame(tbl.filter(touched & rows), base + extras, p.dtypes)
+        return _resolve_frame(raw, p.keys, p.payload, p.dtypes, extras)
+
+    old, new = side(in_old, p.old_extras), side(in_new, p.new_extras)
+    pa_types = {f.name: f.type for f in to_arrow_schema(out_schema)}
+    diff = _diff_states_pd(old, new, p.keys, p.payload, p.dtypes, pa_types)
+    yield from _to_arrow_batches(diff, out_schema, p.dtypes)
 
 
 class _CdfStreamReader(DataSourceStreamReader):

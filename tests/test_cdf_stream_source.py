@@ -1619,22 +1619,28 @@ def test_startingtimestamp_resolves_to_version_base(spark, tmp_path):
 
 
 
+def _canon(v):
+    """One Arrow-read value, hashable and comparable: naive datetimes,
+    maps (dicts or lists of key-value tuples) order-free, and a NaN
+    double as the string ``"NaN"`` (so NaN equals NaN, never null)."""
+    if isinstance(v, datetime.datetime):
+        return v.replace(tzinfo=None)
+    if isinstance(v, float) and v != v:
+        return "NaN"
+    if isinstance(v, dict):
+        return tuple(sorted(((k, _canon(x)) for k, x in v.items()), key=repr))
+    if isinstance(v, (list, tuple)):
+        items = tuple(_canon(x) for x in v)
+        # a map reads as a list of (key, value) tuples: order-free
+        is_map = isinstance(v, list) and v and isinstance(v[0], tuple)
+        return tuple(sorted(items, key=repr)) if is_map else items
+    return v
+
+
 def _arrow_feed(df, cols):
     """A feed DataFrame as a set of hashable rows, read through Arrow:
     maps whose keys are arrays or structs have no Python dict form."""
-    def c(v):
-        if isinstance(v, datetime.datetime):
-            return v.replace(tzinfo=None)
-        if isinstance(v, dict):
-            return tuple(sorted(((k, c(x)) for k, x in v.items()), key=repr))
-        if isinstance(v, (list, tuple)):
-            items = tuple(c(x) for x in v)
-            # a map reads as a list of (key, value) tuples: order-free
-            is_map = isinstance(v, list) and v and isinstance(v[0], tuple)
-            return tuple(sorted(items, key=repr)) if is_map else items
-        return v
-
-    return {tuple(c(v) for v in r.values())
+    return {tuple(_canon(v) for v in r.values())
             for r in df.select(*cols).toArrow().to_pylist()}
 
 
@@ -1782,3 +1788,213 @@ def test_unsupported_seams_are_typed_plan_time_errors(spark, tmp_path):
     reordered = T.StructType(list(reversed(good.fields)))
     with pytest.raises(ValueError, match="tie-break"):
         _CdfStreamReader({"path": ok_root}, schema=reordered)
+
+
+# ---------------------------------------------------------------------------
+# the key-scoped span kernel: each file read once, only touched keys diffed
+# ---------------------------------------------------------------------------
+
+NAN = float("nan")
+# six keys in ONE bucket; full rows, scores NaN, 1.0, 2.0, 3.0, NaN, null
+SCOPED_SEED = [(i + 1, "I", f"c{i}", 0, "user", f"t{i}", None, TS, sc)
+               for i, sc in enumerate([NAN, 1.0, 2.0, 3.0, NAN, None])]
+# steps after the seed, each changing a strict subset of the bucket's
+# keys: ("row"|"coalesce", events) merges under that update policy,
+# ("optimize"|"evolve", None) compacts or adds a ``model`` column
+SCOPED_CASES = {
+    # c1's only earlier row sits in the seed file, shared by both sides
+    "delete_of_shared_key": [
+        ("row", [(10, "D", "c1", 0, None, None, None, None, None)])],
+    # c2 is seeded at LSN 3: the redelivery ties it across two files
+    "equal_lsn_tie_shared_vs_added": [
+        ("row", [(3, "U", "c2", 0, "user", "tie", None, TS, 2.0)])],
+    "compaction_in_span": [
+        ("row", [(10, "U", "c1", 0, "user", "t1-v2", None, TS, 1.0)]),
+        ("optimize", None),
+        ("row", [(11, "U", "c3", 0, "user", "t3-v2", None, TS, 3.0)])],
+    "row_to_coalesce_with_new_column": [
+        ("evolve", None),
+        ("coalesce", [(10, "U", "c2", 0, None, None, None, None, None, "m-1"),
+                      (11, "U", "c3", 0, None, "t3-v2", None, None, None, None)])],
+    # NaN -> null and null -> NaN change; NaN -> NaN does not
+    "nan_vs_null_double": [
+        ("row", [(10, "U", "c4", 0, "user", "t4", None, TS, None),
+                 (11, "U", "c5", 0, "user", "t5", None, TS, NAN),
+                 (12, "U", "c0", 0, "user", "t0", None, TS, NAN)])],
+}
+
+
+def _kernel_feed(t, sv, ev_):
+    """``(rows, tasks, columns)`` of the span ``sv -> ev_`` from the
+    executor kernel run in-process on ``table_changes``' plan."""
+    from picsure_dictionary_etl_spark.streaming.cdf_source import (
+        _plan_cols,
+        _read_span_partition,
+        _span_tasks,
+    )
+
+    snap = t.snapshot(ev_)
+    keys, payload, dtypes, out = _plan_cols(snap)
+    tasks = _span_tasks(t.root, keys, payload, dtypes, t.snapshot(sv), snap)
+    rows = {tuple(_canon(v) for v in r.values())
+            for p in tasks for b in _read_span_partition(p, out) for r in b.to_pylist()}
+    return rows, tasks, out.names
+
+
+@pytest.mark.parametrize("case", sorted(SCOPED_CASES))
+def test_key_scoped_spans_match_spark_plane(spark, tmp_path, case):
+    """Spans whose changed files touch only some of a bucket's keys
+    (one bucket holds them all): the kernel resolves only those keys,
+    and every span of the history equals spark_plane_changes."""
+    from pyspark.sql import types as T
+
+    from picsure_dictionary_etl_spark.cdc.envelope import (
+        TRANSCRIPT_KEY,
+        transcript_table_schema,
+    )
+    from picsure_dictionary_etl_spark.lake.merge import merge_into, optimize
+
+    extra = [T.StructField("score", T.DoubleType(), True)]
+    t = LakeTable.create(
+        spark, str(tmp_path / case), schema=transcript_table_schema(extra),
+        key_cols=TRANSCRIPT_KEY, bucket_by=["conv_id"], bucket_count=1)
+    # watermark 0 lets a later batch redeliver an applied LSN (the tie)
+    merge_into(t, spark.createDataFrame(SCOPED_SEED, change_event_schema(extra)),
+               "seed", watermark_lsn=0)
+    for i, (kind, rows) in enumerate(SCOPED_CASES[case]):
+        if kind == "optimize":
+            optimize(t, compact_threshold=1)
+        elif kind == "evolve":
+            extra = extra + [T.StructField("model", T.StringType(), True)]
+            t.evolve_schema(extra[-1:])
+        else:
+            merge_into(t, spark.createDataFrame(rows, change_event_schema(extra)),
+                       f"b{i}", watermark_lsn=0, update_policy=kind)
+    cur, scoped = t.current_version(), 0
+    for sv in range(cur):
+        for ev_ in range(sv + 1, cur + 1):
+            got, tasks, cols = _kernel_feed(t, sv, ev_)
+            assert got == _arrow_feed(spark_plane_changes(t, sv, ev_), cols), (sv, ev_)
+            scoped += any(set(p.old_files) & set(p.new_files) for p in tasks)
+    assert scoped, "no span kept a file on both sides"
+
+
+def test_span_task_opens_each_file_once(spark, tmp_path, monkeypatch):
+    """One span task reads ``old ∪ new`` in one pass: each of its files,
+    the ones both sides share too, is opened exactly once."""
+    import collections
+    import posixpath
+
+    import pyarrow.fs as pafs
+
+    from picsure_dictionary_etl_spark.streaming import cdf_source
+
+    root = str(tmp_path / "once")
+    r = CdcRunner(spark, RunnerConfig(table_root=root, bucket_count=1, normalize=False))
+    for b in range(3):
+        r.apply_batch(_ev(spark, [(10 * b + i, "U", f"c{i}", 0, "user", f"t{b}", None, TS)
+                                  for i in range(1, 4 - b)]), f"b{b}")
+    t = LakeTable.load(spark, root)
+    local, opens = pafs.LocalFileSystem(), collections.Counter()
+
+    class Counting(pafs.FileSystemHandler):
+        def get_type_name(self):
+            return "counting"
+
+        def normalize_path(self, path):
+            return local.normalize_path(path)
+
+        def get_file_info(self, paths):
+            return local.get_file_info(paths)
+
+        def get_file_info_selector(self, selector):
+            return local.get_file_info(selector)
+
+        def open_input_file(self, path):
+            opens[path] += 1
+            return local.open_input_file(path)
+
+        def open_input_stream(self, path):
+            opens[path] += 1
+            return local.open_input_stream(path)
+
+        def _unused(self, *args):
+            raise NotImplementedError
+
+        create_dir = delete_dir = delete_dir_contents = delete_root_dir_contents = _unused
+        delete_file = move = copy_file = open_output_stream = open_append_stream = _unused
+
+    rd = cdf_source._CdfStreamReader({"path": root})
+    cur = t.current_version()
+    [task] = rd.partitions({"version": cur - 2}, {"version": cur})
+    assert set(task.old_files) & set(task.new_files)
+    monkeypatch.setattr(cdf_source, "arrow_fs_and_base",
+                        lambda root: (pafs.PyFileSystem(Counting()), root))
+    rows = [r for b in rd.read(task) for r in b.to_pylist()]
+    assert rows
+    assert sorted(opens) == sorted(posixpath.join(root, f)
+                                   for f in set(task.old_files) | set(task.new_files))
+    assert set(opens.values()) == {1}, opens
+
+
+def test_read_bucket_one_scan_equals_per_file_reads(spark, tmp_path):
+    """``_read_bucket`` reads a bucket in one Arrow scan. A Spark INT96
+    file that lacks a later evolution column and two nested columns,
+    beside a pyarrow file with tz-aware timestamps and those columns,
+    reads as each file converted on its own and concatenated (missing
+    columns null), with and without a pushed key filter."""
+    import os
+
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from picsure_dictionary_etl_spark.streaming.cdf_source import _arrow_frame, _read_bucket
+
+    spark.createDataFrame(
+        [("a", TS, 1, "I", 1), ("b", None, 2, "I", 2)],
+        "id string, ts timestamp, n bigint, _op string, _lsn bigint",
+    ).coalesce(1).write.parquet(str(tmp_path / "spark"))
+    [spark_file] = [f for f in os.listdir(tmp_path / "spark") if f.endswith(".parquet")]
+    int96 = pq.read_schema(str(tmp_path / "spark" / spark_file)).field("ts").type
+    assert int96 == pa.timestamp("ns")
+    utc = datetime.timezone.utc
+    pq.write_table(pa.table({
+        "id": ["a", "c"],
+        "ts": pa.array([TS.replace(tzinfo=utc), None], pa.timestamp("us", tz="UTC")),
+        "n": pa.array([3, None], pa.int64()),
+        "model": ["m-1", None],
+        "tags": pa.array([[1, None], None], pa.list_(pa.int64())),
+        "st": pa.array([{"x": 1}, None], pa.struct([("x", pa.int32())])),
+        "_op": ["U", "I"],
+        "_lsn": pa.array([3, 4], pa.int64()),
+    }), str(tmp_path / "new.parquet"))
+    files = [f"spark/{spark_file}", "new.parquet"]
+    dtypes = {"id": "string", "ts": "timestamp", "n": "bigint", "model": "string",
+              "tags": "array<bigint>", "st": "struct<x:int>", "_op": "string", "_lsn": "bigint"}
+    cols = list(dtypes)
+
+    def py(v):
+        if v is None or v is pd.NA or (isinstance(v, float) and v != v):
+            return None
+        if isinstance(v, pd.Timestamp):
+            return v.to_pydatetime()
+        if isinstance(v, dict):
+            return {k: py(x) for k, x in v.items()}
+        if isinstance(v, (list, np.ndarray)):
+            return [py(x) for x in v]
+        return v.item() if isinstance(v, np.generic) else v
+
+    for filters in (None, [("id", "in", ["a"])]):
+        got = _read_bucket(str(tmp_path), files, cols, dtypes, filters=filters)
+        want = pd.concat(
+            [_arrow_frame(pq.read_table(str(tmp_path / f), filters=filters), cols, dtypes)
+             for f in files], ignore_index=True)
+        assert list(got.columns) == cols
+        assert len(got) == len(want) == (4 if filters is None else 2)
+        for c in cols:
+            old = want[c] if c in want else pd.Series([None] * len(want))
+            assert [py(v) for v in got[c]] == [py(v) for v in old], c
+        assert str(got["ts"].dtype) == "datetime64[us, UTC]"
+        assert isinstance(got["tags"].dtype, pd.ArrowDtype)

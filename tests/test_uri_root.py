@@ -309,3 +309,38 @@ def test_hadoop_only_root_resolves_and_compacts(spark, tmp_path):
     r = CdcRunner(spark, RunnerConfig(table_root=root, bucket_count=3,
                                       normalize=False, metadata_io=t.io))
     assert r.state().count() == t.live().count()
+
+
+def test_hadoop_only_root_driver_reads_fail_typed(spark, tmp_path, bucket_reads):
+    """The reads that run pyarrow on the driver cannot open a root only
+    Hadoop reaches: ``read_keys``, ``CdcRunner.conversation()`` and
+    ``table_changes`` raise ``NotImplementedError`` before any Spark job
+    starts and before any bucket file is read."""
+    import pytest
+
+    from picsure_dictionary_etl_spark.cdc.envelope import TRANSCRIPT_KEY, transcript_table_schema
+    from picsure_dictionary_etl_spark.lake.merge import table_changes
+
+    mount = f"lake{abs(hash(str(tmp_path)))}"
+    spark._jsc.hadoopConfiguration().set(
+        f"fs.viewfs.mounttable.{mount}.link./t", f"file://{tmp_path}"
+    )
+    root = f"viewfs://{mount}/t/tbl"
+    t = LakeTable.create(spark, root, schema=transcript_table_schema(),
+                         key_cols=TRANSCRIPT_KEY, bucket_by=["conv_id"], bucket_count=2)
+    r = CdcRunner(spark, RunnerConfig(table_root=root, bucket_count=2,
+                                      normalize=False, metadata_io=t.io))
+    r.apply_batch(_ev(spark, [(1, "I", "c1", 0, "user", "hello", None, None)]), "b1")
+    v = t.current_version()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("hadoop-only-driver-reads", "must start no job")
+    try:
+        for read in (lambda: t.read_keys(["c1"]), lambda: r.conversation("c1"),
+                     lambda: table_changes(t, v - 1, v)):
+            with pytest.raises(NotImplementedError, match="pyarrow"):
+                read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("hadoop-only-driver-reads")) == []
+    assert bucket_reads == []
